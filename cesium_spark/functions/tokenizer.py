@@ -103,11 +103,20 @@ def toy_bpe_token_count(text_col: str = "text") -> Column:
         f"0, (a, x) -> a + x)")
 
 
+def ws_split(text: Column) -> Column:
+    """Lowercased split on ASCII whitespace, NULL as "": the 'ws'
+    convention's raw array (may hold "" pieces at the ends)."""
+    return F.split(F.lower(F.coalesce(text, F.lit(""))), r"[ \t\n\r\f]+")
+
+
+def ws_tokens(text: Column) -> Column:
+    """The 'ws' token array: ``ws_split`` without "" pieces."""
+    return F.filter(ws_split(text), lambda x: x != "")
+
+
 def ws_token_count(text_col: str = "text") -> Column:
     """Whitespace token count (the r1–r4 convention), NULL-safe."""
-    arr = F.split(F.lower(F.coalesce(F.col(text_col), F.lit(""))),
-                  r"[ \t\n\r\f]+")
-    return F.size(F.filter(arr, lambda x: x != ""))
+    return F.size(ws_tokens(F.col(text_col)))
 
 
 def token_count(text_col: str = "text",

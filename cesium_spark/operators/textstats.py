@@ -13,6 +13,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from cesium_spark.functions.tokenizer import TOKENIZERS, token_count, ws_split, ws_tokens
+
 STOPWORDS = ("the", "a", "of", "to", "and", "in", "for", "on", "with")
 
 # marker words per language for the n-gram/marker language-ID heuristic
@@ -31,27 +33,23 @@ def token_stats(docs: DataFrame, id_col: str = "doc_id",
     plus a BPE-ish subword estimate (≈ chars/4 heuristic, bounded below
     by word count). With ``tokenizer='toy_bpe'`` (r5 seam), n_tokens is
     the frozen-vocab greedy subword count and est_bpe_tokens IS that
-    exact count (no heuristic)."""
+    exact count (no heuristic). Any other name raises ``ValueError``."""
+    if tokenizer not in TOKENIZERS:
+        raise ValueError(
+            f"unknown tokenizer {tokenizer!r}; one of {TOKENIZERS}")
     n_chars = F.length(text_col)
     if tokenizer == "toy_bpe":
-        from cesium_spark.functions.tokenizer import token_count
         n_tokens = token_count(text_col, tokenizer)
-        return docs.select(
-            F.col(id_col),
-            n_tokens.alias("n_tokens"),
-            n_chars.alias("n_chars"),
-            (n_chars.cast("double") / n_tokens).alias("avg_token_len"),
-            n_tokens.cast("long").alias("est_bpe_tokens"))
-    toks = F.split(F.trim(F.col(text_col)), r"\s+")
-    n_tokens = F.size(toks)
+        est_bpe = n_tokens
+    else:
+        n_tokens = F.size(F.split(F.trim(F.col(text_col)), r"\s+"))
+        est_bpe = F.greatest(n_tokens, F.ceil(n_chars / F.lit(4)).cast("int"))
     return docs.select(
         F.col(id_col),
         n_tokens.alias("n_tokens"),
         n_chars.alias("n_chars"),
         (n_chars.cast("double") / n_tokens).alias("avg_token_len"),
-        F.greatest(n_tokens,
-                   F.ceil(n_chars / F.lit(4)).cast("int"))
-        .cast("long").alias("est_bpe_tokens"))
+        est_bpe.cast("long").alias("est_bpe_tokens"))
 
 
 def vocab_topk(docs: DataFrame, k: int, id_col: str = "doc_id",
@@ -626,9 +624,7 @@ def lexical_stats(docs: DataFrame, id_col: str = "doc_id",
     repeated-token whale collapses map-side — then a second shrinking
     two-phase aggregate on doc. Two hash exchanges, no join, no UDF.
     """
-    tok = F.explode(
-        F.split(F.lower(F.coalesce(F.col(text_col), F.lit(""))),
-                r"[ \t\n\r\f]+")).alias("__t")
+    tok = F.explode(ws_split(F.col(text_col))).alias("__t")
     counts = (docs
               .select(F.col(id_col), tok)
               .select(id_col, F.nullif(F.col("__t"), F.lit("")).alias("token"))
@@ -685,13 +681,8 @@ def lm_perplexity(docs: DataFrame, train_docs: DataFrame | None = None,
         raise ValueError(f"alpha must be > 0, got {alpha}")
     train = docs if train_docs is None else train_docs
 
-    def _toks(col):
-        arr = F.split(F.lower(F.coalesce(col, F.lit(""))),
-                      r"[ \t\n\r\f]+")
-        return F.filter(arr, lambda x: x != "")
-
     def _bigrams(df):
-        arr = _toks(F.col(text_col))
+        arr = ws_tokens(F.col(text_col))
         n = F.size(arr)
         pairs = F.arrays_zip(
             F.slice(arr, 1, F.greatest(n - 1, F.lit(0))).alias("w1"),
@@ -701,7 +692,7 @@ def lm_perplexity(docs: DataFrame, train_docs: DataFrame | None = None,
                  .select(id_col, F.col("__p.w1").alias("w1"),
                          F.col("__p.w2").alias("w2"))
 
-    uni = (train.select(F.explode(_toks(F.col(text_col))).alias("w1"))
+    uni = (train.select(F.explode(ws_tokens(F.col(text_col))).alias("w1"))
            .groupBy("w1").agg(F.count(F.lit(1)).alias("c1")))
     bi = (_bigrams(train).where(F.col("w1").isNotNull())
           .groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c12")))
@@ -763,9 +754,7 @@ def tfidf_topm(docs: DataFrame, m: int = 5, id_col: str = "doc_id",
     """
     if m < 1:
         raise ValueError(f"m must be >= 1, got {m}")
-    tok = F.explode(
-        F.split(F.lower(F.coalesce(F.col(text_col), F.lit(""))),
-                r"[ \t\n\r\f]+")).alias("__t")
+    tok = F.explode(ws_split(F.col(text_col))).alias("__t")
     counts = (docs
               .select(F.col(id_col), tok)
               .select(id_col,
@@ -838,12 +827,7 @@ def pmi_collocations(docs: DataFrame, min_count: int = 5, k: int = 20,
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
 
-    def _toks(col):
-        arr = F.split(F.lower(F.coalesce(col, F.lit(""))),
-                      r"[ \t\n\r\f]+")
-        return F.filter(arr, lambda x: x != "")
-
-    arr = _toks(F.col(text_col))
+    arr = ws_tokens(F.col(text_col))
     n = F.size(arr)
     pairs = F.arrays_zip(
         F.slice(arr, 1, F.greatest(n - 1, F.lit(0))).alias("w1"),
@@ -905,9 +889,7 @@ def feature_hash_vectors(docs: DataFrame, dim: int = 16,
     """
     if dim < 2:
         raise ValueError(f"dim must be >= 2, got {dim}")
-    arr = F.split(F.lower(F.coalesce(F.col(text_col), F.lit(""))),
-                  r"[ \t\n\r\f]+")
-    arr = F.filter(arr, lambda x: x != "")
+    arr = ws_tokens(F.col(text_col))
     t = docs.select(F.col(id_col),
                     F.explode_outer(arr).alias("__tok"))
     bucket = (F.conv(F.substring(
@@ -948,9 +930,7 @@ def zipf_fit(docs: DataFrame, max_rank: int = 100,
     if max_rank < 3:
         raise ValueError(f"max_rank must be >= 3, got {max_rank}")
     exploded = (docs.select(
-        F.explode(F.split(F.lower(F.coalesce(F.col(text_col),
-                                             F.lit(""))),
-                          r"[ \t\n\r\f]+")).alias("token"))
+        F.explode(ws_split(F.col(text_col))).alias("token"))
         .where(F.col("token") != ""))
     counts = (exploded.groupBy("token")
               .agg(F.count(F.lit(1)).alias("cnt")))
@@ -1052,9 +1032,7 @@ def yules_k(docs: DataFrame, id_col: str = "doc_id",
     exchanges, repeated-token whales collapse map-side, no join, no
     UDF.
     """
-    tok = F.explode(
-        F.split(F.lower(F.coalesce(F.col(text_col), F.lit(""))),
-                r"[ \t\n\r\f]+")).alias("__t")
+    tok = F.explode(ws_split(F.col(text_col))).alias("__t")
     counts = (docs
               .select(F.col(id_col), tok)
               .select(id_col,
@@ -1121,9 +1099,7 @@ def fightin_words(docs: DataFrame, group_col: str, group_a: str,
         raise ValueError("fightin_words: groups must differ")
     if alpha0 <= 0 or min_count < 1:
         raise ValueError("fightin_words: need alpha0 > 0, min_count >= 1")
-    tok = F.explode(
-        F.split(F.lower(F.coalesce(F.col(text_col), F.lit(""))),
-                r"[ \t\n\r\f]+")).alias("__t")
+    tok = F.explode(ws_split(F.col(text_col))).alias("__t")
     base = (docs
             .where(F.col(group_col).isin([group_a, group_b]))
             .select(F.col(group_col).alias("__g"), tok)
@@ -1189,9 +1165,8 @@ def jsd_halves(docs: DataFrame, id_col: str = "doc_id",
     # silently move the half boundary between runs)
     base = (docs
             .select(F.col(id_col),
-                    F.posexplode(F.split(
-                        F.lower(F.coalesce(F.col(text_col), F.lit(""))),
-                        r"[ \t\n\r\f]+")).alias("__rawpos", "__t"))
+                    F.posexplode(ws_split(F.col(text_col)))
+                    .alias("__rawpos", "__t"))
             .select(id_col, "__rawpos",
                     F.nullif(F.col("__t"), F.lit("")).alias("token")))
     w_doc = Window.partitionBy(id_col)

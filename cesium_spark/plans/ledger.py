@@ -9,6 +9,12 @@ are idempotent per partition (dynamic partition overwrite / Iceberg
 MERGE), so a crash between data-write and ledger-append only causes a
 harmless recompute of that partition — never duplication.
 
+Metric rows are buffered and written to ``_metrics`` in ONE append per
+pipeline pass (``flush_metrics``, from the pass's ``finally``), so a
+pass that raises still records them. A hard kill (SIGKILL, OOM) loses
+that pass's metric rows but never a ledger row: resume never reads
+``_metrics``.
+
 Checksum: sum over rows of crc32(concat of key/value string forms) —
 deterministic under any row order and partitioning, cheap (JVM-side),
 and sensitive to any value change; used by tests and the bench
@@ -19,8 +25,9 @@ from __future__ import annotations
 
 import time
 import uuid
+from datetime import datetime, timezone
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from cesium_spark.sources.table_io import TableIO
@@ -55,6 +62,7 @@ class Ledger:
     def __init__(self, io: TableIO):
         self.io = io
         self.spark = io.spark
+        self._metric_rows: list[tuple] = []
 
     def completed_units(self, stage: str) -> DataFrame:
         """(tier, window_date) units already finished by ANY run —
@@ -64,6 +72,15 @@ class Ledger:
         return (self.io.read(LEDGER_TABLE)
                 .where((F.col("stage") == stage) & (F.col("state") == "done"))
                 .select("tier", "window_date").distinct())
+
+    def done_units(self) -> set[tuple]:
+        """(stage, tier, window_date) of every unit finished by any run,
+        from one ledger scan: the pipeline's resume plan for a pass."""
+        if not self.io.exists(LEDGER_TABLE):
+            return set()
+        return {tuple(r) for r in self.io.read(LEDGER_TABLE)
+                .where(F.col("state") == "done")
+                .select("stage", "tier", "window_date").collect()}
 
     def pending(self, units: DataFrame, stage: str) -> DataFrame:
         """Resume planner: anti-join the work list against completed."""
@@ -86,11 +103,17 @@ class Ledger:
 
     def record_metric(self, run_id: str, stage: str, metric: str,
                       value: float) -> None:
-        row = self.spark.createDataFrame(
-            [(run_id, stage, metric, float(value))],
-            "run_id string, stage string, metric string, value double"
-        ).withColumn("updated_at", F.current_timestamp())
-        self.io.write(row, METRICS_TABLE, mode="append")
+        """Buffers one ``_metrics`` row until ``flush_metrics``."""
+        self._metric_rows.append((run_id, stage, metric, float(value),
+                                  datetime.now(timezone.utc)))
+
+    def flush_metrics(self) -> None:
+        """Appends the buffered metric rows to ``_metrics`` in one write."""
+        if self._metric_rows:
+            self.io.write(self.spark.createDataFrame(self._metric_rows,
+                                                     METRICS_SCHEMA),
+                          METRICS_TABLE, mode="append")
+            self._metric_rows = []
 
     def metrics(self) -> DataFrame:
         return self.io.read(METRICS_TABLE)

@@ -14,14 +14,18 @@ Scale shape (10^12 turns): every per-tier pass is
 Incremental runs therefore cost O(new windows), not O(table) — the
 batch-incremental formulation of continuous aggregates (SURVEY.md §2.10).
 
-Tier staging tradeoff: this pipeline runs tiers as SEPARATE stages on
-purpose — the ledger's resume/crash granularity is per (tier,
-window_date), and in the steady state each incremental pass touches a
-small pending slice where per-stage fixed cost is negligible. For BULK
-builds (initial backfill, full recompute), use
-``operators.rollup.rollup_features_multi``: all windowed tiers from ONE
-shuffle of the turn stream — at 10^12 turns, one exchange instead of
-three (bench.py's pipeline_body measures exactly that path).
+Tiers run as SEPARATE stages: the ledger's resume grain is (tier,
+window_date), and an incremental pass touches a small pending slice.
+For BULK builds use ``rollup.rollup_features_multi`` (all windowed tiers
+from ONE shuffle of the turn stream).
+
+Per pass, the Spark jobs are the data writes plus little bookkeeping:
+one scan of the ledger's done units, a checksum read-back and ledger
+append per pending tier, and one ``_metrics`` append in a ``finally``.
+Turn and input-row counts and the series' window dates are observed on
+the derive and rollup writes (``DataFrame.observe``, no extra job); a
+tier's pending dates are those dates minus its done units, so a
+finished tier starts no job (see plans.ledger for what a kill loses).
 """
 
 from __future__ import annotations
@@ -29,7 +33,7 @@ from __future__ import annotations
 import time
 from collections.abc import Iterable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from cesium_spark.codecs.chunks import compression_metrics, encode_chunks
@@ -64,85 +68,84 @@ def run_pipeline(
     feats = list(features) if features is not None else DEFAULT_FEATS
     report: dict = {"run_id": run_id, "stages": {}}
     t_start = time.monotonic()
+    try:
+        with StageTimer(ledger, run_id, "derive") as st:
+            seen_turns, seen_dates = Observation("turns"), Observation("dates")
+            series = derive_series(
+                transcripts.observe(seen_turns, F.count("*").alias("n")))
+            io.write(series.withColumn("window_date", F.col("ts").cast("date"))
+                     .observe(seen_dates, F.collect_set("window_date").alias("d")),
+                     SERIES_TABLE, mode="overwrite", partition_by=["window_date"])
+            series = io.read(SERIES_TABLE)
+        report["stages"]["derive"] = st.wall_ms
+        report["turns"] = turns = seen_turns.get["n"]
+        if fail_after_stage == "derive":
+            raise RuntimeError("injected failure after derive")
 
-    turns = transcripts.count()
-    report["turns"] = turns
+        series_dates = sorted(seen_dates.get["d"])
+        done = ledger.done_units()
+        for tier in tiers:
+            stage = f"rollup_{tier}"
+            with StageTimer(ledger, run_id, stage) as st:
+                dates = [d for d in series_dates if (stage, tier, d) not in done]
+                if not dates:
+                    report["stages"][stage] = {"skipped": True}
+                    continue
+                seen_in = Observation(stage)
+                slice_df = (series.where(F.col("window_date").isin(dates))
+                            .observe(seen_in, F.count("*").alias("n")))
+                feats_long = rollup_features(slice_df, tier, feats)
+                out = feats_long.withColumn(
+                    "window_date", F.col("window_start").cast("date"))
+                table = FEATURE_TABLE.format(tier=tier)
+                io.merge_overwrite_partitions(out, table,
+                                              partition_by=["window_date"])
 
-    with StageTimer(ledger, run_id, "derive") as st:
-        series = derive_series(transcripts)
-        io.write(series.withColumn("window_date", F.col("ts").cast("date")),
-                 SERIES_TABLE, mode="overwrite", partition_by=["window_date"])
-        series = io.read(SERIES_TABLE)
-    report["stages"]["derive"] = st.wall_ms
-    if fail_after_stage == "derive":
-        raise RuntimeError("injected failure after derive")
+                written = io.read(table).where(F.col("window_date").isin(dates))
+                per_unit = (
+                    content_checksum(
+                        written,
+                        ["conv_id", "channel", "window_start", "feature", "value"])
+                    .groupBy("window_date")
+                    .agg(F.count("*").alias("out_count"),
+                         F.sum("row_crc").alias("checksum"))
+                    .withColumn("tier", F.lit(tier))
+                    .withColumn("in_count", F.lit(seen_in.get["n"]))
+                    .select("tier", "window_date", "in_count", "out_count",
+                            "checksum"))
+                ledger.record_done(run_id, stage, per_unit, st.wall_ms)
+            report["stages"][stage] = st.wall_ms
+            if fail_after_stage == stage:
+                raise RuntimeError(f"injected failure after {stage}")
 
-    for tier in tiers:
-        stage = f"rollup_{tier}"
-        with StageTimer(ledger, run_id, stage) as st:
-            units = (series
-                     .select(F.col("window_date"))
-                     .distinct()
-                     .withColumn("tier", F.lit(tier)))
-            pending = ledger.pending(units, stage).cache()
-            n_pending = pending.count()
-            if n_pending == 0:
-                report["stages"][stage] = {"skipped": True}
-                continue
-            dates = [r["window_date"] for r in pending.collect()]
-            slice_df = series.where(F.col("window_date").isin(dates))
-            in_count = slice_df.count()
+        if compress:
+            stage = "compress"
+            with StageTimer(ledger, run_id, stage) as st:
+                chunks = encode_chunks(series)
+                io.write(chunks, CHUNKS_TABLE, mode="overwrite")
+                # measured bytes/point per blob kind → _metrics: retention
+                # sizing runs on the measured ratio, and the number guards
+                # the codec's Gorilla window-reuse divergence (see
+                # codecs.chunks.compression_metrics)
+                comp = compression_metrics(io.read(CHUNKS_TABLE)).collect()
+                report["compression"] = {}
+                for r in comp:
+                    ledger.record_metric(run_id, stage,
+                                         f"bytes_per_point_{r['kind']}",
+                                         r["bytes_per_point"])
+                    report["compression"][r["kind"]] = {
+                        "bytes_per_point": r["bytes_per_point"],
+                        "ratio_vs_raw": r["ratio_vs_raw"]}
+            report["stages"][stage] = st.wall_ms
 
-            feats_long = rollup_features(slice_df, tier, feats)
-            out = feats_long.withColumn(
-                "window_date", F.col("window_start").cast("date"))
-            table = FEATURE_TABLE.format(tier=tier)
-            io.merge_overwrite_partitions(out, table,
-                                          partition_by=["window_date"])
-
-            written = io.read(table).where(F.col("window_date").isin(dates))
-            per_unit = (
-                content_checksum(
-                    written,
-                    ["conv_id", "channel", "window_start", "feature", "value"])
-                .groupBy("window_date")
-                .agg(F.count("*").alias("out_count"),
-                     F.sum("row_crc").alias("checksum"))
-                .withColumn("tier", F.lit(tier))
-                .withColumn("in_count", F.lit(in_count))
-                .select("tier", "window_date", "in_count", "out_count",
-                        "checksum"))
-            ledger.record_done(run_id, stage, per_unit, st.wall_ms)
-        report["stages"][stage] = st.wall_ms
-        if fail_after_stage == stage:
-            raise RuntimeError(f"injected failure after {stage}")
-
-    if compress:
-        stage = "compress"
-        with StageTimer(ledger, run_id, stage) as st:
-            chunks = encode_chunks(series)
-            io.write(chunks, CHUNKS_TABLE, mode="overwrite")
-            # measured bytes/point per blob kind → _metrics: retention
-            # sizing runs on the measured ratio, and the number guards
-            # the codec's Gorilla window-reuse divergence (see
-            # codecs.chunks.compression_metrics)
-            comp = compression_metrics(io.read(CHUNKS_TABLE)).collect()
-            report["compression"] = {}
-            for r in comp:
-                ledger.record_metric(run_id, stage,
-                                     f"bytes_per_point_{r['kind']}",
-                                     r["bytes_per_point"])
-                report["compression"][r["kind"]] = {
-                    "bytes_per_point": r["bytes_per_point"],
-                    "ratio_vs_raw": r["ratio_vs_raw"]}
-        report["stages"][stage] = st.wall_ms
-
-    wall = time.monotonic() - t_start
-    report["wall_sec"] = wall
-    report["turns_per_sec"] = turns / wall if wall > 0 else float("nan")
-    ledger.record_metric(run_id, "pipeline", "turns", turns)
-    ledger.record_metric(run_id, "pipeline", "turns_per_sec",
-                         report["turns_per_sec"])
+        wall = time.monotonic() - t_start
+        report["wall_sec"] = wall
+        report["turns_per_sec"] = turns / wall if wall > 0 else float("nan")
+        ledger.record_metric(run_id, "pipeline", "turns", turns)
+        ledger.record_metric(run_id, "pipeline", "turns_per_sec",
+                             report["turns_per_sec"])
+    finally:
+        ledger.flush_metrics()
     return report
 
 

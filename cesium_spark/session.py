@@ -29,6 +29,23 @@ _WORKER_THREAD_ENV = {
 }
 
 
+def _host_defaults(meminfo: str = "/proc/meminfo") -> tuple[str, str]:
+    """(cpus, driver memory): ``SPARK_GRAFT_CPUS`` and
+    ``CESIUM_SPARK_DRIVER_MEM`` when set, else the CPUs this process may
+    run on and half the host's MemTotal (local mode runs the executors
+    in the driver JVM), in whole GiB from 1g to 48g; 48g if unreadable."""
+    cpus = (len(os.sched_getaffinity(0)) if hasattr(os, "sched_getaffinity")
+            else os.cpu_count() or 1)
+    try:
+        with open(meminfo) as fh:
+            kib = int(fh.read().split("MemTotal:")[1].split()[0])
+        gib = min(48, max(1, kib >> 21))
+    except (OSError, IndexError, ValueError):
+        gib = 48
+    return (os.environ.get("SPARK_GRAFT_CPUS") or str(cpus),
+            os.environ.get("CESIUM_SPARK_DRIVER_MEM") or f"{gib}g")
+
+
 def get_spark(
     master: str | None = None,
     app_name: str = "cesium_spark",
@@ -37,7 +54,7 @@ def get_spark(
 ) -> SparkSession:
     for k, v in _WORKER_THREAD_ENV.items():
         os.environ.setdefault(k, v)
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus, driver_mem = _host_defaults()
     inherit = master == "inherit"  # spark-submit owns --master
     if not inherit:
         master = master or f"local[{cpus}]"
@@ -61,7 +78,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        .config("spark.driver.memory", os.environ.get("CESIUM_SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_mem)
         .config("spark.ui.enabled", "false")
         # dynamic partition overwrite = idempotent window-level MERGE
         # emulation on the parquet backend (SURVEY.md §2.9)

@@ -224,7 +224,11 @@ def stateful_counter_rate(series_stream: DataFrame, tier: str = "1h",
         pdf = pdf[pdf["y"].notna()]
         if not len(pdf):
             return
-        yc = np.rint(pdf["y"].to_numpy(dtype=float) * g).astype(np.int64)
+        # half away from zero, as the batch F.round and DuckDB's round
+        # snap (np.rint rounds half to even: 62.5 -> 62, batch 63)
+        v = pdf["y"].to_numpy(dtype=float) * g
+        a = np.floor(np.abs(v))
+        yc = np.copysign(a + (np.abs(v) - a >= 0.5), v).astype(np.int64)
         if carry is None:
             prev = np.concatenate(([yc[0]], yc[:-1]))
             valid = np.ones(len(yc), dtype=bool)

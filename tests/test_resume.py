@@ -4,6 +4,8 @@ partitions skipped."""
 
 from __future__ import annotations
 
+import shutil
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -105,3 +107,70 @@ def test_pipeline_records_compression_metrics(spark, tiny_transcripts,
     got = dict(zip(rows["metric"], rows["value"]))
     for kind, rep in report["compression"].items():
         assert got[f"bytes_per_point_{kind}"] == rep["bytes_per_point"]
+
+
+# Spark jobs one resumed pass may start (rollup_1h done, rollup_1d and
+# compress pending): the data writes plus one ledger scan, the 1d
+# checksum read-back and ledger append, and one _metrics append (18
+# today; 41 when every metric was its own append and every count its own
+# job). A CI guard so bookkeeping jobs cannot creep back.
+RESUME_JOB_BUDGET = 24
+
+
+@pytest.fixture(scope="module")
+def crashed_root(spark, tiny_transcripts, tmp_path_factory):
+    """A table root left by a pass that died after rollup_1h."""
+    io = TableIO(spark, str(tmp_path_factory.mktemp("crashed") / "root"))
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_pipeline(io, tiny_transcripts, tiers=("1h", "1d"), features=FEATS,
+                     fail_after_stage="rollup_1h")
+    return io.root
+
+
+def _restore(snapshot, root):
+    shutil.rmtree(root, ignore_errors=True)
+    shutil.copytree(snapshot, root)
+
+
+def test_crashed_pass_flushes_metrics(spark, crashed_root):
+    """_metrics is written once per pass, from a finally: a pass that
+    raises still records the wall time of every stage it ran."""
+    m = Ledger(TableIO(spark, crashed_root)).metrics().toPandas()
+    walls = set(m.loc[m["metric"] == "wall_ms", "stage"])
+    assert {"derive", "rollup_1h"} <= walls
+    assert "rollup_1d" not in walls
+
+
+def test_resumed_pass_job_budget(spark, tiny_transcripts, crashed_root,
+                                 tmp_path):
+    root = str(tmp_path / "root")
+    _restore(crashed_root, root)
+    sc = spark.sparkContext
+    group = f"resume-budget-{tmp_path.name}"
+    sc.setJobGroup(group, "resumed run_pipeline pass")
+    try:
+        report = run_pipeline(TableIO(spark, root), tiny_transcripts,
+                              tiers=("1h", "1d"), features=FEATS)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert report["stages"]["rollup_1h"] == {"skipped": True}
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < jobs <= RESUME_JOB_BUDGET
+
+
+def test_second_pass_over_replaced_root(spark, tiny_transcripts,
+                                        crashed_root, tmp_path):
+    """Two resumed passes in one session, the crashed root copied back
+    over the table root between them, no clearCache: the second pass
+    must plan from the files now on disk, not from a frame cached by
+    the first pass (that read fails with FILE_NOT_EXIST)."""
+    root = str(tmp_path / "root")
+    sums = []
+    for _ in range(2):
+        _restore(crashed_root, root)
+        io = TableIO(spark, root)
+        report = run_pipeline(io, tiny_transcripts, tiers=("1h", "1d"),
+                              features=FEATS, compress=False)
+        assert report["stages"]["rollup_1h"] == {"skipped": True}
+        sums.append(_table_checksum(io, "features_1d"))
+    assert sums[0] == sums[1]

@@ -643,3 +643,31 @@ def test_stateful_counter_rate_crosses_batches(spark, tmp_path):
     assert (m["n_resets_x"] == m["n_resets_y"]).all()
     assert (m["n_x"] == m["n_y"]).all()
     assert int(got["n_resets"].sum()) == 1          # the planted reset
+
+
+def test_stateful_counter_rate_half_lattice_rounds_like_batch(spark, tmp_path):
+    """y=0.625 at grid=100 is 62.5 lattice units: the batch F.round
+    snaps it half away from zero to 63, and the streaming carry must
+    too (half to even would give 62 and an increase of 0.62)."""
+    from cesium_spark.operators.rates import counter_rate
+    from cesium_spark.streaming import stateful
+
+    pdf = pd.DataFrame({
+        "conv_id": "c", "channel": "v",
+        "turn_idx": np.arange(2, dtype=np.int32),
+        "ts": pd.Timestamp("2024-01-01") + pd.to_timedelta([0, 60], "s"),
+        "t": [0.0, 60.0], "y": [0.0, 0.625], "e": 1e-4})
+    src = str(tmp_path / "src")
+    spark.createDataFrame(pdf).coalesce(1).write.parquet(src)
+    stream = spark.readStream.schema(SERIES_SCHEMA).parquet(src)
+    out = stateful.stateful_counter_rate(stream, tier="1h", grid=100)
+    q = (out.writeStream.outputMode("append")
+         .option("checkpointLocation", str(tmp_path / "ckpt"))
+         .format("parquet").option("path", str(tmp_path / "out"))
+         .trigger(availableNow=True).start())
+    assert q.awaitTermination(240)
+
+    [got] = spark.read.parquet(str(tmp_path / "out")).collect()
+    [batch] = counter_rate(spark.createDataFrame(pdf), "1h", grid=100).collect()
+    assert batch["increase"] == 0.63
+    assert got["inc_units"] / 100.0 == batch["increase"]

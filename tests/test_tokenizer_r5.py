@@ -102,6 +102,16 @@ def test_token_stats_bpe_knob(spark):
     assert rw["n_tokens"] == 2
 
 
+def test_token_stats_rejects_unknown_tokenizer(spark):
+    """An unknown name raises, as token_count does, rather than counting
+    whitespace words under a BPE-looking label."""
+    from cesium_spark.operators.textstats import token_stats
+    docs = spark.createDataFrame(pd.DataFrame(
+        {"doc_id": [1], "text": ["the station"]}))
+    with pytest.raises(ValueError, match="unknown tokenizer 'toy-bpe'"):
+        token_stats(docs, tokenizer="toy-bpe")
+
+
 def test_mix_weights_bpe_knob(spark):
     from cesium_spark.operators.sampling import mix_weights
     docs = spark.createDataFrame(pd.DataFrame({
