@@ -224,9 +224,9 @@ def _phase_a_worker(master: str, input_path: str, out: str,
     # FIFO mix wall 33.0 s (tiers done 27.2, ls 29.9) vs FAIR 50.2 s
     # (ls improves to 21.9 but tiers balloons to 43.9). Round-robin
     # slot sharing starves the wide job, and the wide job — not LS —
-    # is the true critical path; per-section isolation runs (see
-    # tools/probe_scaling.py) show every section scales 0.90+ alone,
-    # so the FIFO mix's backfill already packs slots near-optimally.
+    # is the true critical path; per-section isolation runs show every
+    # section scales 0.90+ alone, so the FIFO mix's backfill already
+    # packs slots near-optimally.
     # Negative result kept on a knob: CESIUM_BENCH_SCHED=FAIR re-runs
     # the A/B; default stays FIFO.
     sched = os.environ.get("CESIUM_BENCH_SCHED", "FIFO")

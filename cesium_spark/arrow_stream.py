@@ -1,7 +1,7 @@
 """Shared mapInPandas group-streaming helper.
 
 ``stream_groups`` is the carry-buffer core of every streaming kernel in
-the engine (rollup_features, rollup_features_multi, encode_chunks): the
+the engine (rollup.rollup_wide, chunks.encode_chunks): the
 input iterator yields key-sorted Arrow batches, and groups may be split
 across batch boundaries. The trailing (possibly incomplete) group of
 each batch is held back in a LIST of frames and concatenated exactly

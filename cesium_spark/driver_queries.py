@@ -22,9 +22,8 @@ from cesium_spark.operators.fold import fold_moments
 from cesium_spark.operators.gapfill import gapfill
 from cesium_spark.operators.rollup import (
     moments_derived,
-    pivot_wide,
-    rollup_features,
     rollup_moments,
+    rollup_wide,
 )
 
 TS_FMT = "yyyy-MM-dd HH:mm:ss"
@@ -179,10 +178,9 @@ _ROLLUP_FEATS = ["n_epochs", "mean", "maximum", "minimum", "amplitude",
 
 def q_ts_rollup_1h_kernel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The exact kernel path through the driver oracle: hourly rollup of
-    all three derived channels, numpy kernels inside applyInPandas."""
+    all three derived channels, numpy kernels inside mapInPandas."""
     s = derive_series(events_transcripts(spark, sf_dir))
-    long = rollup_features(s, "1h", _ROLLUP_FEATS)
-    wide = pivot_wide(long, _ROLLUP_FEATS)
+    wide = rollup_wide(s, ["1h"], _ROLLUP_FEATS)
     return wide.select(
         "conv_id", "channel",
         F.date_format("window_start", TS_FMT).alias("window_start"),
@@ -493,16 +491,12 @@ FROM events GROUP BY 1
 
 def q_ts_rollup_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fused multi-tier rollup under the driver gate: 1h AND 1d feature
-    windows from ONE shuffle (rollup_features_multi), checked against a
+    windows from ONE shuffle (rollup_wide), checked against a
     per-tier DuckDB oracle union. Representation rules as the flagship
     query (skew +0.0 etc.)."""
-    from cesium_spark.operators.rollup import rollup_features_multi
-
     s = derive_series(events_transcripts(spark, sf_dir))
     feats = ["n_epochs", "mean", "maximum", "minimum", "std", "skew"]
-    long = rollup_features_multi(s, ["1h", "1d"], feats)
-    wide = (long.groupBy("conv_id", "channel", "tier", "window_start")
-            .pivot("feature", feats).agg(F.first("value")))
+    wide = rollup_wide(s, ["1h", "1d"], feats)
     return wide.select(
         "conv_id", "channel", "tier",
         F.date_format("window_start", TS_FMT).alias("window_start"),
@@ -853,9 +847,8 @@ def q_ts_features_with_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     # not double `==` (which would pass -0.0 vs 0.0 and any NaN pair —
     # exactly the cases summation-order differences produce)
     feats = ["maximum", "minimum", "range_per_turn", "mean", "std"]
-    wide = pivot_wide(rollup_features(s, "conv", feats, meta=meta), feats)
-    bare = pivot_wide(rollup_features(s, "conv", ["mean", "std"]),
-                      ["mean", "std"])
+    wide = rollup_wide(s, ["conv"], feats, meta=meta)
+    bare = rollup_wide(s, ["conv"], ["mean", "std"])
     bare = bare.select("conv_id", F.col("mean").alias("mean_bare"),
                        F.col("std").alias("std_bare"))
     out = with_meta(wide, meta).join(bare, "conv_id")
@@ -1396,7 +1389,7 @@ def q_ts_lomb_scargle_conv(spark: SparkSession, sf_dir: str) -> DataFrame:
     feats = ["freq1_freq", "freq1_amplitude1", "freq1_signif",
              "period_fast", "freq_varrat", "linear_trend",
              "n_epochs", "total_time"]
-    wide = pivot_wide(rollup_features(s, "conv", feats), feats)
+    wide = rollup_wide(s, ["conv"], feats)
     ev = _read(spark, sf_dir, "events")
     sec = F.col("ts").cast("double")
     facts = (ev.groupBy(F.col("user_id").cast("string").alias("conv_id"))
@@ -1458,7 +1451,7 @@ def q_ts_qso_conv(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = _value_series(spark, sf_dir)
     feats = ["qso_log_chi2_qsonu", "qso_log_chi2nuNULL_chi2nu",
              "n_epochs", "qso_capped"]
-    wide = pivot_wide(rollup_features(s, "conv", feats), feats)
+    wide = rollup_wide(s, ["conv"], feats)
     ev = _read(spark, sf_dir, "events")
     facts = (ev.groupBy(F.col("user_id").cast("string").alias("conv_id"))
              .agg(F.var_pop("value").alias("vp"), F.count("*").alias("cnt")))

@@ -45,6 +45,10 @@ _FEATURE_TO_PRODUCER: dict[str, str] = {}
 # graph-dep custom_functions + meta_features-as-inputs †, SURVEY.md §2.7)
 _CUSTOM: dict[str, tuple[Callable[..., float], list[str]]] = {}
 
+# feature names become columns of the exact kernel's wide output, next
+# to these keys (operators/rollup.rollup_wide)
+_KEY_COLS = ("conv_id", "channel", "tier", "window_start")
+
 # Shared intermediates a custom feature can declare as a named-parameter
 # dependency (≙ the reference's dask-graph nodes `lomb_model`,
 # `delta_t_hist`, `cads` †). Evaluated at most once per group: built-in
@@ -266,21 +270,30 @@ def register_custom(name: str, fn: Callable[..., float]) -> None:
                         lambda t, m, e, n_turns: (m.max() - m.min()) / n_turns)
 
     Overrides nothing built-in; re-registering a custom name replaces it.
+    The name becomes a column name, so it may not be a key column
+    (``conv_id``/``channel``/``tier``/``window_start``) nor contain a
+    quote, backtick or newline.
     """
     if name in _FEATURE_TO_PRODUCER:
         raise ValueError(f"{name} is a built-in feature")
+    if name in _KEY_COLS or any(c in name for c in "'\"`\n"):
+        raise ValueError(f"{name!r} cannot be a feature column name")
     params = list(inspect.signature(fn).parameters)
     _CUSTOM[name] = (fn, params[3:])
 
 
 def validate(names: Iterable[str],
              custom: dict | None = None) -> list[str]:
+    names = list(names)
+    if len(set(names)) < len(names):
+        dup = sorted({n for n in names if names.count(n) > 1})
+        raise ValueError(f"duplicate features: {dup}")
     cust = custom if custom is not None else _CUSTOM
     unknown = [n for n in names
                if n not in _FEATURE_TO_PRODUCER and n not in cust]
     if unknown:
         raise KeyError(f"unknown features: {unknown}")
-    return list(names)
+    return names
 
 
 def custom_snapshot(names: Iterable[str]) -> dict[str, tuple]:

@@ -3,27 +3,35 @@
 
 Two execution paths, by design (SURVEY.md §4.3):
 
-**Exact kernel path** (default; the correctness-bearing one): hash
-exchange on the group keys → per-partition sort → ``mapInPandas``
-streaming kernel over sorted Arrow batches → length-bucketed numpy
-feature kernels (``cesium_spark.functions.batched``, scalar fallback in
-``functions.registry``). Every window is a deterministic
-single-threaded numpy reduction over turn_idx-sorted rows — bit-for-bit
-identical at any Spark parallelism or partitioning. This is what the
-"rolled-up points match the reference bit-for-bit" bar requires: native
-float aggregation is partition-order dependent and can never satisfy it.
+**Exact kernel** (:func:`rollup_wide`; the correctness-bearing path):
+one hash exchange on (conv_id, channel[, date block]) → a per-partition
+sort on (keys, turn_idx) → ``mapInPandas`` streaming kernel over sorted
+Arrow batches → length-bucketed numpy feature kernels
+(``cesium_spark.functions.batched``, scalar fallback in
+``functions.registry``). Every 1m/1h/1d tier requested is served from
+that one shuffle: inside the kernel a stable ``lexsort`` on
+(group, window) cuts each tier's windows, so every window is one
+deterministic single-threaded numpy reduction over turn_idx-sorted rows
+— bit-for-bit identical at any Spark parallelism or partitioning, and
+whatever order ``ts`` runs in. This is what the "rolled-up points match
+the reference bit-for-bit" bar requires: native float aggregation is
+partition-order dependent and can never satisfy it. The kernel emits
+one row per window with one double column per feature; the long
+(feature, value) form of :func:`rollup_features` /
+:func:`rollup_features_multi` is :func:`unpivot_long` on top (a
+``stack``, no exchange).
 
 **Native moments path** (throughput/fold path): pure JVM two-phase
 aggregation of exactly-mergeable statistics (count, min, max, Σy, Σy²,
-Σy³, t extremes). Used for tier folding (1m→1h→1d, operators/fold.py)
-and metrics; mean/std/skew derived from moments are flagged inexact.
+Σy³, t extremes). Used for tier folding (1m→1h→1d→1w/1mo,
+operators/fold.py) and metrics; mean/std/skew derived from moments are
+flagged inexact. The calendar tiers (1w/1mo) live only here.
 
-Scale: groups are bounded by the window (a 1-minute slice of one
-conversation), so kernel memory is O(window), and the single shuffle is
-the hash exchange on (conv_id, channel, window_start) — map-side
-partials do not apply to opaque kernels, which is precisely why the
-algebraic subset also has the native path. AQE handles residual skew;
-whole-conversation ('conv' tier) Lomb–Scargle on Zipf-tailed lengths is
+Scale: a windowed-tier group is (conversation, channel,
+GROUP_SPAN_DAYS date block), so kernel memory is bounded by a few days
+of one conversation; map-side partials do not apply to opaque kernels,
+which is precisely why the algebraic subset also has the native path.
+Whole-conversation ('conv' tier) Lomb–Scargle on Zipf-tailed lengths is
 the known hot spot (SURVEY.md §4.4) — the nhist/qso kernels self-cap
 (documented) and the LS scan is Press–Rybicki O(n log n) with a
 deterministic thinning cap above FAST_MAX_N points.
@@ -42,6 +50,7 @@ from cesium_spark.arrow_stream import stream_groups
 from cesium_spark.functions.batched import compute_features_matrix
 from cesium_spark.functions.registry import (
     DEFAULT_FEATS,
+    _KEY_COLS,
     custom_snapshot,
     validate,
 )
@@ -56,19 +65,10 @@ TIERS = {"1m": "minute", "1h": "hour", "1d": "day",
 
 # windowed-tier group key = (conv, channel, floor(days/SPAN)): bounds a
 # whale conversation's group at SPAN days while amortizing per-group
-# Arrow/pandas fixed cost over ~SPAN days of windows (see rollup_features)
+# Arrow/pandas fixed cost over ~SPAN days of windows (see rollup_wide)
 GROUP_SPAN_DAYS = 4
 
-ROLLUP_SCHEMA = (
-    "conv_id string, channel string, window_start timestamp, "
-    "feature string, value double"
-)
-
-ROLLUP_MULTI_SCHEMA = (
-    "conv_id string, channel string, tier string, "
-    "window_start timestamp, feature string, value double"
-)
-
+# exact-kernel tiers -> numpy datetime64 truncation unit
 _TIER_NP_UNIT = {"1m": "m", "1h": "h", "1d": "D"}
 
 MOMENTS_SCHEMA_COLS = [
@@ -85,31 +85,51 @@ def _with_window(series: DataFrame, tier: str) -> DataFrame:
     raise ValueError(f"unknown tier {tier!r}; expected one of {list(TIERS)} or 'conv'")
 
 
-def rollup_features(series: DataFrame, tier: str,
-                    features: Iterable[str] | None = None,
-                    meta: DataFrame | None = None) -> DataFrame:
-    """Exact path: long-form features table
-    (conv_id, channel, tier, window_start, feature, value).
+def _kernel_tiers(tiers: Iterable[str]) -> list[str]:
+    tiers = list(tiers)
+    calendar = [t for t in tiers if t in TIERS and t not in _TIER_NP_UNIT]
+    if calendar:
+        raise ValueError(f"calendar tiers {calendar} have no exact kernel; "
+                         "use rollup_moments + fold_moments")
+    if tiers != ["conv"] and (not tiers or not set(tiers) <= set(_TIER_NP_UNIT)):
+        raise ValueError(f"tiers must be a subset of {list(_TIER_NP_UNIT)} "
+                         f"or ['conv'] alone, got {tiers!r}")
+    return tiers
 
-    Execution shape (round-2 redesign, measured 110s → 9s on the sf0.1
-    hourly rollup): one hash exchange on the group keys, a per-partition
-    sort on (keys, window_start, turn_idx), then ``mapInPandas`` streams
+
+def rollup_wide(series: DataFrame, tiers: Iterable[str],
+                features: Iterable[str] | None = None,
+                meta: DataFrame | None = None) -> DataFrame:
+    """Exact path: one row per (conv_id, channel, tier, window_start),
+    one double column per feature (NaN/NULL = degenerate window) — ≙
+    cesium's (feature, channel) MultiIndex output (assemble_featureset †).
+
+    ``tiers`` is any subset of 1m/1h/1d, all served from ONE shuffle
+    (the windows nest inside the (conv, channel, GROUP_SPAN_DAYS date
+    block) group), or ``["conv"]`` alone — whole conversations, one
+    group each.
+
+    Execution shape: one hash exchange on the group keys, a
+    per-partition sort on (keys, turn_idx), then ``mapInPandas`` streams
     whole Arrow batches (~64k rows spanning hundreds of groups) through
-    the kernel — window slices are contiguous runs, evaluated by the
-    length-bucketed batch kernels in functions/batched.py. This replaces
-    the round-1 ``groupBy().applyInPandas`` + per-window Python loop,
-    whose per-GROUP Arrow/pandas fixed cost and per-WINDOW dict dispatch
-    (~0.7 ms) dominated wall time on 1-3-point windows. Values are
-    UNCHANGED: each window is still one deterministic numpy reduction
-    over turn_idx-sorted data (SURVEY.md §4.3), pinned bitwise by
-    tests/test_batched_bitwise.py and the layer-2 oracle suite.
+    the kernel; the carry logic lives in arrow_stream.stream_groups, so
+    no window is evaluated from partial rows and memory is one batch +
+    one group. Per tier, window ids are numpy datetime64 truncations of
+    ``ts`` (≡ Spark's ``date_trunc`` in the session time zone, which
+    both sides see as local wall time), and a stable ``lexsort`` on
+    (group, window) makes each window a contiguous, still
+    turn_idx-ordered slice for the length-bucketed batch kernels in
+    functions/batched.py — values pinned bitwise by
+    tests/test_batched_bitwise.py, tests/test_rollup_multi.py and the
+    layer-2 oracle suite.
 
-    Skew policy (SURVEY.md §4.4): group size is bounded by conversation
-    length. Windowed tiers bound n by construction; the 'conv' tier on
-    Zipf-tailed lengths relies on (a) self-capping kernels (nhist and
-    qso thin deterministically above their documented caps; the LS scan
-    is FFT-based O(n log n)) and (b) the native moments path + fold for
-    exactly-mergeable statistics, which is the salted/partial route —
+    Skew policy (SURVEY.md §4.4): windowed tiers split a Zipf-tail
+    conversation spanning D days into D/GROUP_SPAN_DAYS parallel groups
+    (a ≤1d window never crosses a date block, so no value changes); the
+    block is 4 days, not 1, because per-group fixed cost dominates
+    ordinary conversations (measured 1.25x on the sf0.1 hourly rollup).
+    The 'conv' tier relies on (a) self-capping kernels and (b) the
+    native moments path + fold for exactly-mergeable statistics —
     salting the opaque exact kernel would change float summation order
     and break the bit-for-bit contract, so it is deliberately absent
     here. Residual partition skew is AQE's job.
@@ -119,210 +139,117 @@ def rollup_features(series: DataFrame, tier: str,
     onto the series before the kernel exchange; inside the kernel the
     dim values are handed to graph-dep custom features as named
     parameters (see registry.register_custom). For passthrough onto the
-    OUTPUT feature matrix use :func:`with_meta` on the wide view."""
-    feats = validate(list(features) if features is not None else DEFAULT_FEATS)
-    n_feats = len(feats)
+    OUTPUT feature matrix use :func:`with_meta`."""
+    tiers = _kernel_tiers(tiers)
+    feats = validate(features if features is not None else DEFAULT_FEATS)
     meta_cols = _checked_meta_cols(meta)
     # snapshot registered custom features into the kernel closure —
     # executors import the registry fresh and would see it empty
     custom = custom_snapshot(feats)
+    # registry names cannot hold a backtick, so quoting is safe; tier is
+    # NOT NULL as the F.lit tier of the long tables' parquet schema was
+    schema = ("conv_id string, channel string, tier string not null, "
+              "window_start timestamp, "
+              + ", ".join(f"`{f}` double" for f in feats))
 
     def process_rows(pdf: pd.DataFrame) -> pd.DataFrame:
-        """Rows arrive sorted by (group keys, window_start, turn_idx) —
-        the sortWithinPartitions below — so window slices are contiguous
-        runs and every slice is turn_idx-sorted, exactly the ordering
-        the determinism contract pins (SURVEY.md §4.3)."""
         conv = pdf["conv_id"].to_numpy()
         chan = pdf["channel"].to_numpy()
-        w = pdf["window_start"].to_numpy()
-        change = np.concatenate(([True],
-                                 (conv[1:] != conv[:-1])
-                                 | (chan[1:] != chan[:-1])
-                                 | (w[1:] != w[:-1])))
-        starts = np.flatnonzero(change)
-        ends = np.concatenate((starts[1:], [len(pdf)]))
+        gid = np.cumsum(np.concatenate(
+            ([True], (conv[1:] != conv[:-1]) | (chan[1:] != chan[:-1]))))
+        ts = pdf["ts"].to_numpy("datetime64[us]")
         t = pdf["t"].to_numpy(np.float64)
         y = pdf["y"].to_numpy(np.float64)
         e = pdf["e"].to_numpy(np.float64)
-        metas = None
-        if meta_cols:
-            metas = [{c: pdf[c].iloc[int(s)] for c in meta_cols}
-                     for s in starts]
-        # batched cross-window evaluation (functions/batched.py):
-        # bit-identical to a per-window compute_features loop (pinned by
-        # tests/test_batched_bitwise.py + the layer-2 oracle suite);
-        # windows of MANY groups share one length-bucketed numpy pass
-        values = compute_features_matrix(t, y, e, starts, ends, feats,
-                                         metas=metas,
-                                         custom=custom).ravel()
-        n_win = starts.size
-        return pd.DataFrame({
-            "conv_id": np.repeat(conv[starts], n_feats),
-            "channel": np.repeat(chan[starts], n_feats),
-            "window_start": np.repeat(w[starts], n_feats),
-            "feature": np.tile(np.asarray(feats, dtype=object), n_win),
-            "value": values,
-        })
+        outs = []
+        for tier in tiers:
+            if tier == "conv":
+                w = np.zeros(len(pdf), dtype="datetime64[us]")
+            else:
+                w = (ts.astype(f"datetime64[{_TIER_NP_UNIT[tier]}]")
+                     .astype("datetime64[us]"))
+            # stable: rows arrive turn_idx-sorted per group, so each
+            # window slice stays turn_idx-sorted even where ts steps back
+            order = np.lexsort((w, gid))
+            g, w = gid[order], w[order]
+            starts = np.flatnonzero(np.concatenate(
+                ([True], (g[1:] != g[:-1]) | (w[1:] != w[:-1]))))
+            ends = np.concatenate((starts[1:], [len(pdf)]))
+            head = order[starts]
+            metas = None
+            if meta_cols:
+                metas = [{c: pdf[c].iloc[int(i)] for c in meta_cols}
+                         for i in head]
+            values = compute_features_matrix(t[order], y[order], e[order],
+                                             starts, ends, feats,
+                                             metas=metas, custom=custom)
+            outs.append(pd.DataFrame({
+                "conv_id": conv[head], "channel": chan[head], "tier": tier,
+                "window_start": w[starts], **dict(zip(feats, values.T))}))
+        return outs[0] if len(outs) == 1 else pd.concat(outs, ignore_index=True)
 
     def kernel_stream(batches):
-        """mapInPandas body: one Arrow batch (~64k rows) amortizes the
-        Arrow/pandas fixed cost over HUNDREDS of groups — applyInPandas
-        pays it once per group, which dominated wall time on tiny
-        windows (measured 110s → 9s on the sf0.1 hourly rollup). The
-        carry logic lives in arrow_stream.stream_groups: the trailing
-        (possibly batch-split) group is held back as a LIST of frames
-        and concatenated once at its boundary, so no window is ever
-        evaluated from partial rows and a whale group spanning B
-        batches costs O(B), not O(B²); memory is one batch + one group
-        (bounded by GROUP_SPAN_DAYS of one conversation)."""
         yield from stream_groups(batches, keys, process_rows)
 
-    windowed = (
-        _with_window(series, tier)
-        # manual pre-UDF projection: Catalyst cannot prune through the
-        # opaque kernel (SURVEY.md §4.2)
-        .select("conv_id", "channel", "window_start", "turn_idx", "t", "y", "e")
-    )
+    keys = ["conv_id", "channel"]
+    windowed = series.select(*keys, "ts", "turn_idx", "t", "y", "e")
+    if tiers != ["conv"]:
+        keys.append("grp_date")
+        windowed = windowed.withColumn(
+            "grp_date", (F.datediff(F.col("ts"), F.lit("1970-01-01"))
+                         / F.lit(GROUP_SPAN_DAYS)).cast("int"))
     if meta_cols:
         # broadcast join: the dims table is one row per conversation —
         # tiny next to the turn stream — so no shuffle of the series
         windowed = windowed.join(
-            F.broadcast(meta.select("conv_id", *meta_cols)),
-            "conv_id", "left")
-    # Windowed tiers additionally group by a contiguous DATE BLOCK: a
-    # 1m/1h/1d window never crosses a date boundary (date_trunc
-    # alignment), so splitting a conversation at date-block boundaries
-    # cannot change any value, but a Zipf-tail conversation spanning D
-    # days splits into D/GROUP_SPAN_DAYS parallel groups instead of one
-    # straggler — the skew fix that matters at 10^12 turns (SURVEY.md
-    # §4.4). The block is GROUP_SPAN_DAYS (not 1): per-group fixed cost
-    # (Arrow + pandas + kernel dispatch) dominates for ordinary
-    # conversations, so fewer/bigger groups are faster (measured 1.25x
-    # on the sf0.1 hourly rollup at span 4 vs 1) while the worst-case
-    # group stays bounded at GROUP_SPAN_DAYS of ONE conversation. The
-    # 'conv' tier needs the whole series in one group (exact
-    # whole-series kernels).
-    keys = ["conv_id", "channel"]
-    if tier in TIERS:
-        windowed = windowed.withColumn(
-            "grp_date",
-            (F.datediff(F.col("window_start"), F.lit("1970-01-01"))
-             / F.lit(GROUP_SPAN_DAYS)).cast("int"))
-        keys.append("grp_date")
+            F.broadcast(meta.select("conv_id", *meta_cols)), "conv_id", "left")
 
-    # Explicit CPU-proportional partitioning for the kernel stage: AQE's
-    # byte-based coalescing sees a few MB of shuffle data and would
-    # collapse this to 1-2 reduce tasks, but the cost here is Python/
-    # numpy CPU per window, not bytes (measured 2x wall on local[32]
-    # when AQE coalesced the kernel exchange). A user-specified hash
-    # repartition on the exact group keys is preserved by AQE. 4x cores
-    # gives slot granularity for residual group-size skew. The per-
-    # partition sort makes group/window slices contiguous runs for the
-    # streaming kernel (one exchange + one local sort — the same
-    # shuffle the old groupBy paid, minus its per-group Arrow tax).
-    spark = series.sparkSession
-    n_parts = spark.sparkContext.defaultParallelism * 4
-    grouped = (
-        windowed
-        .repartition(n_parts, *keys)
-        .sortWithinPartitions(*keys, "window_start", "turn_idx")
-        .mapInPandas(kernel_stream, schema=ROLLUP_SCHEMA)
-        .withColumn("tier", F.lit(tier))
-        .select("conv_id", "channel", "tier", "window_start", "feature", "value")
-    )
-    return grouped
+    # Explicit CPU-proportional partitioning: AQE's byte-based coalescing
+    # sees a few MB of shuffle data and would collapse this to 1-2 reduce
+    # tasks, but the cost here is Python/numpy CPU per window, not bytes
+    # (measured 2x wall on local[32] when AQE coalesced the kernel
+    # exchange). A user-specified hash repartition on the exact group
+    # keys is preserved by AQE; 4x cores gives slot granularity for
+    # residual group-size skew.
+    n_parts = series.sparkSession.sparkContext.defaultParallelism * 4
+    return (windowed
+            .repartition(n_parts, *keys)
+            .sortWithinPartitions(*keys, "turn_idx")
+            .mapInPandas(kernel_stream, schema=schema))
+
+
+def rollup_features(series: DataFrame, tier: str,
+                    features: Iterable[str] | None = None,
+                    meta: DataFrame | None = None) -> DataFrame:
+    """Long-form features table (conv_id, channel, tier, window_start,
+    feature, value) of one tier: :func:`rollup_wide` melted by
+    :func:`unpivot_long` (no extra exchange)."""
+    return _long(rollup_wide(series, [tier], features, meta))
 
 
 def rollup_features_multi(series: DataFrame, tiers: Iterable[str],
                           features: Iterable[str] | None = None,
                           meta: DataFrame | None = None) -> DataFrame:
-    """ALL windowed tiers from ONE shuffle: long features table
-    (conv_id, channel, tier, window_start, feature, value) for every
-    tier in ``tiers`` (subset of 1m/1h/1d; the 'conv' tier needs whole
-    conversations — use :func:`rollup_features`).
-
-    Why this exists: 1m/1h/1d windows all NEST inside the
-    (conv, channel, GROUP_SPAN_DAYS date block) group, so one hash
-    exchange + one sorted scan can emit every tier — at 10^12 turns
-    that is one shuffle of the turn stream instead of three, and one
-    pass of kernel CPU amortized across tiers. Values are bit-identical
-    to per-tier :func:`rollup_features` calls (pinned by
-    tests/test_rollup_multi.py): the kernel derives each tier's window
-    ids by numpy datetime64 truncation, which equals Spark's UTC
-    ``date_trunc`` for post-epoch timestamps (the engine's domain)."""
+    """Long-form features of several windowed tiers (subset of
+    1m/1h/1d) from ONE shuffle — bit-identical to per-tier
+    :func:`rollup_features` calls (pinned by tests/test_rollup_multi.py);
+    the 'conv' tier goes through :func:`rollup_features`."""
     tiers = list(tiers)
-    bad = [t for t in tiers if t not in _TIER_NP_UNIT]
-    if bad:
-        raise ValueError(f"rollup_features_multi supports {list(_TIER_NP_UNIT)}; "
-                         f"got {bad} (run 'conv' via rollup_features)")
-    feats = validate(list(features) if features is not None else DEFAULT_FEATS)
-    n_feats = len(feats)
-    meta_cols = _checked_meta_cols(meta)
-    custom = custom_snapshot(feats)
-    tier_units = [(t, _TIER_NP_UNIT[t]) for t in tiers]
+    if "conv" in tiers:
+        raise ValueError("rollup_features_multi takes windowed tiers; "
+                         "run 'conv' via rollup_features")
+    return _long(rollup_wide(series, tiers, features, meta))
 
-    def process_rows(pdf: pd.DataFrame) -> pd.DataFrame:
-        conv = pdf["conv_id"].to_numpy()
-        chan = pdf["channel"].to_numpy()
-        ts64 = pdf["ts"].to_numpy("datetime64[us]")
-        grp_change = np.concatenate(([True],
-                                     (conv[1:] != conv[:-1])
-                                     | (chan[1:] != chan[:-1])))
-        t = pdf["t"].to_numpy(np.float64)
-        y = pdf["y"].to_numpy(np.float64)
-        e = pdf["e"].to_numpy(np.float64)
-        outs = []
-        for tier, unit in tier_units:
-            w = ts64.astype(f"datetime64[{unit}]")
-            change = grp_change.copy()
-            change[1:] |= w[1:] != w[:-1]
-            starts = np.flatnonzero(change)
-            ends = np.concatenate((starts[1:], [len(pdf)]))
-            metas = None
-            if meta_cols:
-                metas = [{c: pdf[c].iloc[int(s)] for c in meta_cols}
-                         for s in starts]
-            values = compute_features_matrix(t, y, e, starts, ends, feats,
-                                             metas=metas,
-                                             custom=custom).ravel()
-            n_win = starts.size
-            outs.append(pd.DataFrame({
-                "conv_id": np.repeat(conv[starts], n_feats),
-                "channel": np.repeat(chan[starts], n_feats),
-                "tier": tier,
-                "window_start": np.repeat(w[starts].astype("datetime64[us]"),
-                                          n_feats),
-                "feature": np.tile(np.asarray(feats, dtype=object), n_win),
-                "value": values,
-            }))
-        return pd.concat(outs, ignore_index=True)
 
-    def kernel_stream(batches):
-        # O(B)-carry group streaming (see rollup_features' kernel)
-        yield from stream_groups(
-            batches, ("conv_id", "channel", "grp_date"), process_rows)
-
-    cols = ["conv_id", "channel", "ts", "turn_idx", "t", "y", "e"]
-    windowed = series.select(*cols).withColumn(
-        "grp_date",
-        (F.datediff(F.col("ts"), F.lit("1970-01-01"))
-         / F.lit(GROUP_SPAN_DAYS)).cast("int"))
-    if meta_cols:
-        windowed = windowed.join(
-            F.broadcast(meta.select("conv_id", *meta_cols)), "conv_id", "left")
-    keys = ["conv_id", "channel", "grp_date"]
-    spark = series.sparkSession
-    n_parts = spark.sparkContext.defaultParallelism * 4
-    return (windowed
-            .repartition(n_parts, *keys)
-            .sortWithinPartitions(*keys, "ts", "turn_idx")
-            .mapInPandas(kernel_stream, schema=ROLLUP_MULTI_SCHEMA))
+def _long(wide: DataFrame) -> DataFrame:
+    return unpivot_long(wide, wide.columns[len(_KEY_COLS):])
 
 
 def pivot_wide(features_long: DataFrame, features: Iterable[str]) -> DataFrame:
-    """Wide view: one row per (conv, channel, tier, window), one column
-    per feature — ≙ cesium's (feature, channel) MultiIndex output
-    (assemble_featureset †)."""
+    """Wide view of a long features table: one row per (conv, channel,
+    tier, window), one column per feature — the shape
+    :func:`rollup_wide` emits directly, without this pivot's hash
+    aggregate."""
     return (
         features_long
         .groupBy("conv_id", "channel", "tier", "window_start")
@@ -332,8 +259,7 @@ def pivot_wide(features_long: DataFrame, features: Iterable[str]) -> DataFrame:
 
 
 def unpivot_long(wide: DataFrame, features: Iterable[str],
-                 key_cols: Iterable[str] = ("conv_id", "channel", "tier",
-                                            "window_start")) -> DataFrame:
+                 key_cols: Iterable[str] = _KEY_COLS) -> DataFrame:
     """Melt the wide feature matrix back to the long (feature, value)
     shape — the exact inverse of :func:`pivot_wide` over the same
     feature list, via the native ``stack`` table generator: a pure

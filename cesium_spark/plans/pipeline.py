@@ -8,7 +8,7 @@ per-partition MERGE, checkpoint-resume via the ledger, retention tiers.
 
 Scale shape (10^12 turns): every per-tier pass is
   one scan (partition-pruned to pending window_dates)
-  → one hash exchange on (conv_id, channel, window)
+  → one hash exchange on (conv_id, channel, date block)
   → kernels → dynamic-partition-overwrite of exactly the touched
     (tier, window_date) partitions.
 Incremental runs therefore cost O(new windows), not O(table) — the
@@ -16,8 +16,10 @@ batch-incremental formulation of continuous aggregates (SURVEY.md §2.10).
 
 Tiers run as SEPARATE stages: the ledger's resume grain is (tier,
 window_date), and an incremental pass touches a small pending slice.
-For BULK builds use ``rollup.rollup_features_multi`` (all windowed tiers
-from ONE shuffle of the turn stream).
+For BULK builds use ``rollup.rollup_wide`` (all windowed tiers from ONE
+shuffle of the turn stream, wide; ``rollup_features_multi`` is its long
+form). Each stage's ``rollup_features`` is the same kernel with one
+tier, melted to the long feature table by a ``stack`` (no exchange).
 
 Per pass, the Spark jobs are the data writes plus little bookkeeping:
 one scan of the ledger's done units, a checksum read-back and ledger

@@ -16,6 +16,7 @@ from cesium_spark.functions.registry import (
     LOMB_SCARGLE_FEATS,
     compute_features,
     register_custom,
+    validate,
 )
 
 
@@ -175,6 +176,20 @@ class TestRegistry:
         with pytest.raises(KeyError):
             compute_features(np.arange(3.0), np.arange(3.0),
                              np.full(3, 1e-4), ["nope"])
+
+    @pytest.mark.parametrize("name", ["conv_id", "channel", "tier",
+                                      "window_start", "a'b", 'a"b', "a`b",
+                                      "a\nb"])
+    def test_custom_name_must_be_a_column_name(self, name):
+        """Feature names become columns of rollup_wide's output."""
+        from cesium_spark.functions.registry import _CUSTOM
+        with pytest.raises(ValueError):
+            register_custom(name, lambda t, m, e: 0.0)
+        assert name not in _CUSTOM
+
+    def test_duplicate_feature_names_rejected(self):
+        with pytest.raises(ValueError, match="duplicate"):
+            validate(["mean", "std", "mean"])
 
     def test_custom_function(self, white_noise_irregular):
         t, m, e = white_noise_irregular

@@ -15,6 +15,9 @@ Counts pinned (and why they are the right shape at scale):
   corpus-stats aggregate (SinglePartition) broadcast back.
 - histogram fold path: 2 hash exchanges (rollup group-by + fold
   group-by), no join.
+- exact rollup kernel: 1 hash exchange (the kernel repartition); the
+  long form's ``stack`` adds none, and the flagship driver query stays
+  at ≤3 (two from derive) — no pivot round trip.
 """
 
 from __future__ import annotations
@@ -389,3 +392,26 @@ def test_theta_one_exchange(spark):
         "y": [(i * 3) % 11 for i in range(30)]}))
     s = _shape(theta_forecast(df, h=2))
     assert s["hash"] == 1 and not s["cartesian"]
+
+
+def test_rollup_kernel_one_exchange(series):
+    """rollup_wide and its long-form delegations plan ONE hash exchange:
+    the unpivot is a per-row ``stack``."""
+    from pyspark.sql import functions as F
+
+    from cesium_spark.operators.rollup import rollup_features, rollup_wide
+    s = series.withColumn("e", F.lit(1e-4))
+    for df in (rollup_wide(s, ["1h"], ["mean", "std"]),
+               rollup_features(s, "1h", ["mean", "std"]),
+               rollup_features(s, "conv", ["mean", "std"])):
+        shape = _shape(df)
+        assert shape["hash"] == 1 and shape["bcast"] == 0
+        assert not shape["cartesian"]
+
+
+def test_flagship_rollup_query_at_most_three_exchanges(spark):
+    """The driver entry (``ts_rollup_1h_kernel`` at sf0.001): derive's
+    two exchanges + the kernel's one — the pivot back from long form
+    must not creep back into the flagship query."""
+    import __spark_entry__ as entrymod
+    assert _shape(entrymod.entry(spark))["hash"] <= 3
