@@ -43,6 +43,11 @@ def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
+def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    _prep(spark)
+    return _read(spark, sf_dir, "events")
+
+
 def _nn(col):  # NaN → NULL (duckdb has no NaN in these pipelines)
     return F.when(F.isnan(col) | col.isNull(), F.lit(None)).otherwise(col)
 
@@ -71,10 +76,27 @@ def _bits(col: str):
         f"reflect('java.lang.Double', 'doubleToRawLongBits', {col})")
 
 
+# name -> (query, DuckDB oracle) in definition order; QUERIES and
+# ORACLE_SQL at the end of the module are views of it
+_REGISTRY: dict[str, tuple] = {}
+
+
+def oracle(fn, sql: str) -> str:
+    """Register query ``fn`` under its name minus ``q_`` with its
+    oracle ``sql``; returns ``sql`` so the oracle constant is bound in
+    the same statement. A second registration of a name raises."""
+    name = getattr(fn, "__name__", "")
+    if not name.startswith("q_"):
+        raise ValueError(f"oracle() needs a q_* query, got {fn!r}")
+    if name[2:] in _REGISTRY:
+        raise ValueError(f"query {name[2:]!r} is registered twice")
+    _REGISTRY[name[2:]] = (fn, sql)
+    return sql
+
+
 def events_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events → the authoritative transcript shape (input_hint)."""
-    _prep(spark)
-    ev = _read(spark, sf_dir, "events")
+    ev = _events(spark, sf_dir)
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     return ev.select(
         F.col("user_id").cast("string").alias("conv_id"),
@@ -141,8 +163,7 @@ _DD_CELL_SQL = f"""
 
 def _value_series(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events value column as a single-channel series (engine shape)."""
-    _prep(spark)
-    ev = _read(spark, sf_dir, "events")
+    ev = _events(spark, sf_dir)
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     sec = F.col("ts").cast("double")
     return ev.select(
@@ -156,6 +177,37 @@ def _value_series(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _tok_series(spark: SparkSession, sf_dir: str, *extra) -> DataFrame:
+    """Whitespace-token count of ``props`` per turn as the int64 series
+    (conv_id, turn_idx, t, *extra, y), t the turn index as double;
+    ``extra`` are further columns over ``events``. Oracle twin:
+    ``_tok_series_sql``."""
+    ev = _events(spark, sf_dir)
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    tok = F.size(F.split(F.trim(F.col("props")), r"\s+"))
+    return ev.select(
+        F.col("user_id").cast("string").alias("conv_id"),
+        (F.row_number().over(w) - 1).cast("int").alias("turn_idx"),
+        (F.row_number().over(w) - 1).cast("double").alias("t"),
+        *extra, tok.cast("long").alias("y"))
+
+
+def _tok_series_sql(*extra: str) -> str:
+    """DuckDB twin of ``_tok_series``: CTE ``s`` with the same columns,
+    ``extra`` SQL select items over ``events`` (window ``w`` in scope)
+    before ``y``."""
+    cols = "".join(f"{c},\n         " for c in extra)
+    return f"""
+WITH s AS (
+  SELECT cast(user_id AS varchar) AS conv_id,
+         row_number() OVER w - 1 AS turn_idx,
+         cast(row_number() OVER w - 1 AS double) AS t,
+         {cols}cast(len(string_split_regex(trim(props), '\\s+')) AS bigint) AS y
+  FROM events
+  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+)"""
+
+
 # ---------------------------------------------------------------------------
 # time-series engine queries
 # ---------------------------------------------------------------------------
@@ -166,10 +218,10 @@ def q_ts_derive_series(spark: SparkSession, sf_dir: str) -> DataFrame:
                     _r(F.col("t")).alias("t"), _r(F.col("y")).alias("y"))
 
 
-SQL_TS_DERIVE = _SERIES_SQL + """
+SQL_TS_DERIVE = oracle(q_ts_derive_series, _SERIES_SQL + """
 SELECT conv_id, channel, turn_idx, round(t, 6) + 0.0 AS t, round(y, 6) + 0.0 AS y
 FROM series
-"""
+""")
 
 
 _ROLLUP_FEATS = ["n_epochs", "mean", "maximum", "minimum", "amplitude",
@@ -195,7 +247,7 @@ def q_ts_rollup_1h_kernel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_TS_ROLLUP_1H = _SERIES_SQL + f"""
+SQL_TS_ROLLUP_1H = oracle(q_ts_rollup_1h_kernel, _SERIES_SQL + f"""
 SELECT conv_id, channel,
        strftime(date_trunc('hour', ts), '{DUCK_TS_FMT}') AS window_start,
        count(*) AS n_epochs,
@@ -211,7 +263,7 @@ SELECT conv_id, channel,
        round(median(y), 6) + 0.0 AS median
 FROM series
 GROUP BY 1, 2, 3
-"""
+""")
 
 
 def q_ts_rollup_1d_native(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -231,7 +283,7 @@ def q_ts_rollup_1d_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_TS_ROLLUP_1D = _VALUE_SERIES_SQL + f"""
+SQL_TS_ROLLUP_1D = oracle(q_ts_rollup_1d_native, _VALUE_SERIES_SQL + f"""
 SELECT conv_id,
        strftime(date_trunc('day', ts), '{DUCK_TS_FMT}') AS window_start,
        count(*) AS n_epochs,
@@ -243,7 +295,7 @@ SELECT conv_id,
        round(max(t) - min(t), 6) + 0.0 AS total_time
 FROM series
 GROUP BY 1, 2
-"""
+""")
 
 
 def q_ts_tier_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -259,7 +311,7 @@ def q_ts_tier_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_TS_TIER_FOLD = f"""
+SQL_TS_TIER_FOLD = oracle(q_ts_tier_fold, f"""
 SELECT cast(user_id AS varchar) AS conv_id,
        strftime(date_trunc('day', ts), '{DUCK_TS_FMT}') AS window_start,
        count(*) AS n_epochs,
@@ -267,7 +319,7 @@ SELECT cast(user_id AS varchar) AS conv_id,
        round(max(value), 6) + 0.0 AS y_max
 FROM events
 GROUP BY 1, 2
-"""
+""")
 
 
 def q_ts_gapfill_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -280,7 +332,7 @@ def q_ts_gapfill_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_TS_GAPFILL_1H = f"""
+SQL_TS_GAPFILL_1H = oracle(q_ts_gapfill_1h, f"""
 WITH b AS (
   SELECT cast(user_id AS varchar) AS conv_id,
          date_trunc('hour', ts) AS bucket,
@@ -305,12 +357,11 @@ SELECT conv_id, strftime(bucket, '{DUCK_TS_FMT}') AS bucket,
          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 6) + 0.0 AS y,
        y_obs IS NULL AS filled
 FROM j
-"""
+""")
 
 
 def q_ts_cad_probs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _read(spark, sf_dir, "events")
-    _prep(spark)
+    ev = _events(spark, sf_dir)
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     sec = F.col("ts").cast("double")
     gaps = (ev.withColumn("gap", sec - F.lag(sec).over(w))
@@ -320,7 +371,7 @@ def q_ts_cad_probs(spark: SparkSession, sf_dir: str) -> DataFrame:
                    .alias(f"cad_probs_{s}") for s in (60, 600, 3600)]))
 
 
-SQL_TS_CAD_PROBS = """
+SQL_TS_CAD_PROBS = oracle(q_ts_cad_probs, """
 WITH g AS (
   SELECT cast(user_id AS varchar) AS conv_id,
          epoch(ts) - lag(epoch(ts)) OVER w AS gap
@@ -332,12 +383,11 @@ SELECT conv_id,
        round(avg(CASE WHEN gap <= 3600 THEN 1.0 ELSE 0.0 END), 6) + 0.0 AS cad_probs_3600
 FROM g WHERE gap IS NOT NULL
 GROUP BY 1
-"""
+""")
 
 
 def q_ts_cadence_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _read(spark, sf_dir, "events")
-    _prep(spark)
+    ev = _events(spark, sf_dir)
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     sec = F.col("ts").cast("double")
     gaps = ev.withColumn("gap", sec - F.lag(sec).over(w)).withColumn("sec", sec)
@@ -348,7 +398,7 @@ def q_ts_cadence_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                  _r(F.percentile("gap", F.lit(0.5))).alias("cads_med")))
 
 
-SQL_TS_CADENCE_STATS = """
+SQL_TS_CADENCE_STATS = oracle(q_ts_cadence_stats, """
 WITH g AS (
   SELECT user_id, epoch(ts) AS sec,
          epoch(ts) - lag(epoch(ts)) OVER w AS gap
@@ -360,12 +410,11 @@ SELECT cast(user_id AS varchar) AS conv_id,
        round(avg(gap), 6) + 0.0 AS cads_avg,
        round(median(gap), 6) + 0.0 AS cads_med
 FROM g GROUP BY 1
-"""
+""")
 
 
 def q_ts_max_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _read(spark, sf_dir, "events")
-    _prep(spark)
+    ev = _events(spark, sf_dir)
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     sec = F.col("ts").cast("double")
     d = (ev.withColumn("dv", F.col("value") - F.lag("value").over(w))
@@ -376,7 +425,7 @@ def q_ts_max_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
                  .alias("max_slope")))
 
 
-SQL_TS_MAX_SLOPE = """
+SQL_TS_MAX_SLOPE = oracle(q_ts_max_slope, """
 WITH d AS (
   SELECT user_id,
          value - lag(value) OVER w AS dv,
@@ -387,12 +436,11 @@ SELECT cast(user_id AS varchar) AS conv_id,
        round(max(abs(dv / dt)), 6) + 0.0 AS max_slope
 FROM d WHERE dt IS NOT NULL AND dt > 0
 GROUP BY 1
-"""
+""")
 
 
 def q_ts_percent_beyond_1_std(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _read(spark, sf_dir, "events")
-    _prep(spark)
+    ev = _events(spark, sf_dir)
     wu = Window.partitionBy("user_id")
     mu = F.avg("value").over(wu)
     m2 = F.avg(F.col("value") * F.col("value")).over(wu) - mu * mu
@@ -403,7 +451,7 @@ def q_ts_percent_beyond_1_std(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(_r(F.avg("beyond")).alias("percent_beyond_1_std")))
 
 
-SQL_TS_PB1S = """
+SQL_TS_PB1S = oracle(q_ts_percent_beyond_1_std, """
 WITH s AS (
   SELECT user_id, value,
          avg(value) OVER w AS mu,
@@ -415,12 +463,11 @@ SELECT cast(user_id AS varchar) AS conv_id,
        round(avg(CASE WHEN abs(value - mu) > sd THEN 1.0 ELSE 0.0 END), 6) + 0.0
          AS percent_beyond_1_std
 FROM s GROUP BY 1
-"""
+""")
 
 
 def q_ts_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _read(spark, sf_dir, "events")
-    _prep(spark)
+    ev = _events(spark, sf_dir)
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     sec = F.col("ts").cast("double")
     gaps = ev.withColumn("new_sess",
@@ -432,7 +479,7 @@ def q_ts_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.count("*").alias("n_events")))
 
 
-SQL_TS_SESSIONIZE = """
+SQL_TS_SESSIONIZE = oracle(q_ts_sessionize, """
 WITH g AS (
   SELECT user_id,
          CASE WHEN epoch(ts) - lag(epoch(ts)) OVER w > 1800
@@ -443,12 +490,11 @@ SELECT cast(user_id AS varchar) AS conv_id,
        cast(sum(new_sess) + 1 AS bigint) AS n_sessions,
        count(*) AS n_events
 FROM g GROUP BY 1
-"""
+""")
 
 
 def q_ts_top3_per_type(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _read(spark, sf_dir, "events")
-    _prep(spark)
+    ev = _events(spark, sf_dir)
     w = (Window.partitionBy("event_type")
          .orderBy(F.desc("value"), F.asc("event_id")))
     return (ev.withColumn("rank", F.row_number().over(w))
@@ -457,14 +503,14 @@ def q_ts_top3_per_type(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "event_id", _r(F.col("value")).alias("value")))
 
 
-SQL_TS_TOP3 = """
+SQL_TS_TOP3 = oracle(q_ts_top3_per_type, """
 SELECT event_type,
        cast(row_number() OVER (PARTITION BY event_type
                                ORDER BY value DESC, event_id) AS bigint) AS rank,
        event_id, round(value, 6) + 0.0 AS value
 FROM events
 QUALIFY rank <= 3
-"""
+""")
 
 
 def q_ts_gorilla_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -479,14 +525,14 @@ def q_ts_gorilla_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                  _r0(F.round(F.sum("y"), 4)).alias("y_sum")))
 
 
-SQL_TS_GORILLA = """
+SQL_TS_GORILLA = oracle(q_ts_gorilla_roundtrip, """
 SELECT cast(user_id AS varchar) AS conv_id,
        count(*) AS n_points,
        round(min(value), 6) + 0.0 AS y_min,
        round(max(value), 6) + 0.0 AS y_max,
        round(sum(value), 4) + 0.0 AS y_sum
 FROM events GROUP BY 1
-"""
+""")
 
 
 def q_ts_rollup_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -509,7 +555,7 @@ def q_ts_rollup_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_TS_ROLLUP_MULTI = _SERIES_SQL + f"""
+SQL_TS_ROLLUP_MULTI = oracle(q_ts_rollup_multi, _SERIES_SQL + f"""
 , both_tiers AS (
   SELECT conv_id, channel, '1h' AS tier,
          date_trunc('hour', ts) AS w, y FROM series
@@ -529,7 +575,7 @@ SELECT conv_id, channel, tier,
        END AS skew
 FROM both_tiers
 GROUP BY 1, 2, 3, 4
-"""
+""")
 
 
 def q_ts_parse_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -605,7 +651,7 @@ def q_ts_parse_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
                     _r(F.col("score").cast("double")).alias("score")))
 
 
-SQL_TS_PARSE_CSV = """
+SQL_TS_PARSE_CSV = oracle(q_ts_parse_csv, """
 WITH src AS (
   SELECT user_id, CAST(epoch(ts) AS DOUBLE) AS t, value AS y,
          row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) - 1
@@ -625,7 +671,7 @@ SELECT 'u' || CAST(user_id AS varchar) AS conv_id,
        'grp' || CAST(user_id % 2 AS varchar) AS label,
        round(CAST(user_id AS DOUBLE) * 0.5 + 0.25, 6) + 0.0 AS score
 FROM src GROUP BY user_id
-"""
+""")
 
 
 def q_ts_stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -676,14 +722,14 @@ def q_ts_stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
                     _r(F.col("y_max")).alias("y_max")))
 
 
-SQL_TS_STREAM_STATEFUL = """
+SQL_TS_STREAM_STATEFUL = oracle(q_ts_stream_stateful, """
 SELECT cast(user_id AS varchar) AS conv_id,
        count(*) AS n,
        round(sum(value), 4) + 0.0 AS y_sum,
        round(min(value), 6) + 0.0 AS y_min,
        round(max(value), 6) + 0.0 AS y_max
 FROM events GROUP BY 1
-"""
+""")
 
 
 def q_ts_stream_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -734,7 +780,7 @@ def q_ts_stream_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
         _r0(F.round(F.col("y_sum"), 4)).alias("y_sum"))
 
 
-SQL_TS_STREAM_MOMENTS = f"""
+SQL_TS_STREAM_MOMENTS = oracle(q_ts_stream_moments, f"""
 WITH mx AS (SELECT max(ts) AS m FROM events),
 w AS (
   SELECT cast(user_id AS varchar) AS conv_id,
@@ -749,7 +795,7 @@ SELECT conv_id, strftime(ws, '{DUCK_TS_FMT}') AS window_start,
 FROM w, mx
 GROUP BY conv_id, ws, mx.m
 HAVING ws + INTERVAL 1 HOUR <= mx.m - INTERVAL 7000 SECONDS
-"""
+""")
 
 
 def q_ts_stream_ddsketch(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -795,7 +841,7 @@ def q_ts_stream_ddsketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("cnt").cast("long").alias("cnt"))
 
 
-SQL_TS_STREAM_DDSKETCH = f"""
+SQL_TS_STREAM_DDSKETCH = oracle(q_ts_stream_ddsketch, f"""
 WITH mx AS (SELECT max(ts) AS m FROM events),
 w AS (
   SELECT cast(user_id AS varchar) AS conv_id,
@@ -809,7 +855,7 @@ FROM w, mx
 WHERE y IS NOT NULL
 GROUP BY conv_id, ws, store, bkt, mx.m
 HAVING ws + INTERVAL 1 HOUR <= mx.m - INTERVAL 7000 SECONDS
-"""
+""")
 
 
 def q_ts_features_with_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -822,8 +868,7 @@ def q_ts_features_with_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cesium_spark.functions import registry
     from cesium_spark.operators.rollup import with_meta
 
-    _prep(spark)
-    ev = _read(spark, sf_dir, "events")
+    ev = _events(spark, sf_dir)
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     meta = (ev.withColumn("rn", F.row_number().over(w))
             .groupBy(F.col("user_id").cast("string").alias("conv_id"))
@@ -862,7 +907,7 @@ def q_ts_features_with_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
         (_bits("std") == _bits("std_bare")).alias("std_bitwise_stable"))
 
 
-SQL_TS_FEATURES_WITH_META = """
+SQL_TS_FEATURES_WITH_META = oracle(q_ts_features_with_meta, """
 WITH r AS (
   SELECT cast(user_id AS varchar) AS conv_id, event_type, value,
          row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
@@ -877,7 +922,7 @@ SELECT conv_id,
        TRUE AS mean_bitwise_stable,
        TRUE AS std_bitwise_stable
 FROM r GROUP BY 1
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -897,7 +942,7 @@ def q_rel_tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.count("*").alias("count_order")))
 
 
-SQL_REL_TPCH_Q1 = """
+SQL_REL_TPCH_Q1 = oracle(q_rel_tpch_q1, """
 SELECT l_returnflag, l_linestatus,
        round(sum(l_quantity), 2) + 0.0 AS sum_qty,
        round(sum(l_extendedprice), 2) + 0.0 AS sum_base_price,
@@ -907,7 +952,7 @@ SELECT l_returnflag, l_linestatus,
 FROM lineitem
 WHERE l_shipdate <= timestamp '1998-09-02 00:00:00'
 GROUP BY 1, 2
-"""
+""")
 
 
 def q_rel_nation_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -923,12 +968,12 @@ def q_rel_nation_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.count("*").alias("n_orders")))
 
 
-SQL_REL_NATION_REVENUE = """
+SQL_REL_NATION_REVENUE = oracle(q_rel_nation_revenue, """
 SELECT n_name, round(sum(o_totalprice), 2) + 0.0 AS revenue, count(*) AS n_orders
 FROM orders JOIN customer ON o_custkey = c_custkey
 JOIN nation ON c_nationkey = n_nationkey
 GROUP BY 1
-"""
+""")
 
 
 def q_rel_customers_without_orders(spark: SparkSession,
@@ -944,18 +989,17 @@ def q_rel_customers_without_orders(spark: SparkSession,
             .agg(F.count("*").alias("n_inactive")))
 
 
-SQL_REL_ANTI = """
+SQL_REL_ANTI = oracle(q_rel_customers_without_orders, """
 SELECT n_name, count(*) AS n_inactive
 FROM customer JOIN nation ON c_nationkey = n_nationkey
 WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
 GROUP BY 1
-"""
+""")
 
 
 def q_rel_rollup_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GROUP BY ROLLUP(event_type, day): hierarchical summaries."""
-    ev = _read(spark, sf_dir, "events")
-    _prep(spark)
+    ev = _events(spark, sf_dir)
     day = F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd").alias("day")
     return (ev.select("event_type", day, "value")
             .rollup("event_type", "day")
@@ -963,11 +1007,11 @@ def q_rel_rollup_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
                  _r0(F.round(F.sum("value"), 4)).alias("total")))
 
 
-SQL_REL_ROLLUP_SETS = """
+SQL_REL_ROLLUP_SETS = oracle(q_rel_rollup_sets, """
 SELECT event_type, strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,
        count(*) AS n, round(sum(value), 4) + 0.0 AS total
 FROM events GROUP BY ROLLUP(event_type, day)
-"""
+""")
 
 
 def q_rel_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -975,8 +1019,7 @@ def q_rel_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     values aren't cross-engine comparable, so the driver-checked output
     is the exact distinct count plus a boolean pinning the sketch within
     ±5% of it (rsd=0.02 → far tighter in practice)."""
-    ev = _read(spark, sf_dir, "events")
-    _prep(spark)
+    ev = _events(spark, sf_dir)
     return (ev.groupBy("event_type")
             .agg(F.countDistinct("user_id").alias("n_exact"),
                  F.approx_count_distinct("user_id", rsd=0.02).alias("n_approx"))
@@ -986,17 +1029,16 @@ def q_rel_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
                       / F.col("n_exact")) <= 0.05).alias("approx_ok")))
 
 
-SQL_REL_APPROX_DISTINCT = """
+SQL_REL_APPROX_DISTINCT = oracle(q_rel_approx_distinct, """
 SELECT event_type, count(DISTINCT user_id) AS n_exact, true AS approx_ok
 FROM events GROUP BY 1
-"""
+""")
 
 
 def q_rel_except_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multiset EXCEPT ALL coverage: per-user count of events surviving
     removal of one row per purchase event (bag difference semantics)."""
-    ev = _read(spark, sf_dir, "events")
-    _prep(spark)
+    ev = _events(spark, sf_dir)
     all_ids = ev.select("user_id")
     purch = ev.where(F.col("event_type") == "purchase").select("user_id")
     return (all_ids.exceptAll(purch)
@@ -1006,7 +1048,7 @@ def q_rel_except_all(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "n_nonpurchase"))
 
 
-SQL_REL_EXCEPT_ALL = """
+SQL_REL_EXCEPT_ALL = oracle(q_rel_except_all, """
 WITH d AS (
   SELECT user_id FROM events
   EXCEPT ALL
@@ -1014,7 +1056,7 @@ WITH d AS (
 )
 SELECT CAST(user_id AS VARCHAR) AS conv_id, count(*) AS n_nonpurchase
 FROM d GROUP BY 1
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -1027,13 +1069,13 @@ def q_doc_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("doc_id", "text_hash", "group_size", "is_canonical"))
 
 
-SQL_DOC_DEDUP_EXACT = """
+SQL_DOC_DEDUP_EXACT = oracle(q_doc_dedup_exact, """
 WITH h AS (SELECT doc_id, md5(text) AS text_hash FROM documents),
 g AS (SELECT text_hash, count(*) AS group_size, min(doc_id) AS canon
       FROM h GROUP BY 1)
 SELECT doc_id, h.text_hash, group_size, doc_id = canon AS is_canonical
 FROM h JOIN g ON h.text_hash = g.text_hash
-"""
+""")
 
 
 def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1041,12 +1083,12 @@ def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     return textstats.md5_fingerprint(_read(spark, sf_dir, "documents"))
 
 
-SQL_DOC_FINGERPRINT = """
+SQL_DOC_FINGERPRINT = oracle(q_doc_fingerprint, """
 SELECT doc_id,
        md5(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\\s]', '', 'g'),
                                '\\s+', ' ', 'g'))) AS fingerprint
 FROM documents
-"""
+""")
 
 
 def q_doc_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1058,7 +1100,7 @@ def q_doc_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                       "est_bpe_tokens")
 
 
-SQL_DOC_TOKEN_STATS = """
+SQL_DOC_TOKEN_STATS = oracle(q_doc_token_stats, """
 SELECT doc_id,
        cast(len(string_split_regex(trim(text), '\\s+')) AS bigint) AS n_tokens,
        cast(length(text) AS bigint) AS n_chars,
@@ -1067,7 +1109,7 @@ SELECT doc_id,
        cast(greatest(len(string_split_regex(trim(text), '\\s+')),
                      ceil(length(text) / 4.0)) AS bigint) AS est_bpe_tokens
 FROM documents
-"""
+""")
 
 
 def q_doc_vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1088,7 +1130,7 @@ def q_doc_vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_DOC_VOCAB_TOPK = r"""
+SQL_DOC_VOCAB_TOPK = oracle(q_doc_vocab_topk, r"""
 WITH tok AS (
   SELECT doc_id,
          unnest(string_split_regex(trim(lower(text)), '\s+')) AS token
@@ -1105,7 +1147,7 @@ SELECT row_number() OVER (ORDER BY cnt DESC, token) AS rank,
 FROM c
 ORDER BY cnt DESC, token
 LIMIT 50
-"""
+""")
 
 
 def q_doc_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1117,7 +1159,7 @@ def q_doc_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
                       _r(F.col("quality_score")).alias("quality_score"))
 
 
-SQL_DOC_QUALITY = """
+SQL_DOC_QUALITY = oracle(q_doc_quality, """
 WITH s AS (
   SELECT doc_id,
          cast(len(string_split_regex(trim(lower(text)), '\\s+')) AS double)
@@ -1138,7 +1180,7 @@ SELECT cast(doc_id AS bigint) AS doc_id,
              + (1.0 - least(n_punct / n_chars * 10.0, 1.0)) * 0.2, 6) + 0.0
          AS quality_score
 FROM s
-"""
+""")
 
 
 def q_doc_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1152,7 +1194,7 @@ def q_doc_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("id_a", "id_b", _r(F.col("jaccard")).alias("jaccard"))
 
 
-SQL_DOC_JACCARD = """
+SQL_DOC_JACCARD = oracle(q_doc_jaccard_pairs, """
 WITH tok0 AS (
   SELECT DISTINCT doc_id, source,
          unnest(string_split_regex(trim(lower(text)), '\\s+')) AS s
@@ -1179,7 +1221,7 @@ FROM inter
 JOIN sizes sa ON sa.doc_id = id_a
 JOIN sizes sb ON sb.doc_id = id_b
 WHERE i / (sa.sz + sb.sz - i) >= 0.2
-"""
+""")
 
 
 def q_doc_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1205,7 +1247,7 @@ def q_doc_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("doc_id", "cluster_id", "cluster_size"))
 
 
-SQL_DOC_DEDUP_CLUSTERS = """
+SQL_DOC_DEDUP_CLUSTERS = oracle(q_doc_dedup_clusters, """
 WITH RECURSIVE tok0 AS (
   SELECT DISTINCT doc_id, source,
          unnest(string_split_regex(trim(lower(text)), '\\s+')) AS s
@@ -1250,7 +1292,7 @@ lab AS (
 csz AS (SELECT cluster_id, count(*) AS cluster_size FROM lab GROUP BY 1)
 SELECT l.doc_id, l.cluster_id, c.cluster_size
 FROM lab l JOIN csz c USING (cluster_id)
-"""
+""")
 
 
 def q_emb_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1264,7 +1306,7 @@ def q_emb_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
                       _r0(F.round("cosine", 5)).alias("cosine"))
 
 
-SQL_EMB_COSINE_PAIRS = """
+SQL_EMB_COSINE_PAIRS = oracle(q_emb_cosine_pairs, """
 WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
 n AS (SELECT vec_id, v,
              sqrt(list_sum(list_transform(v, a -> a * a))) AS norm
@@ -1277,7 +1319,7 @@ p AS (
 )
 SELECT id_a, id_b, round(cosine, 5) + 0.0 AS cosine
 FROM p WHERE cosine >= 0.3
-"""
+""")
 
 
 def q_doc_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1286,7 +1328,7 @@ def q_doc_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("doc_id", "lang_pred", _r(F.col("lang_score")).alias("lang_score"))
 
 
-SQL_DOC_LANG_ID = """
+SQL_DOC_LANG_ID = oracle(q_doc_lang_id, """
 WITH c AS (
   SELECT doc_id,
          cast(len(string_split_regex(trim(lower(text)), '\\s+')) AS double) AS n,
@@ -1310,7 +1352,7 @@ scored AS (
 SELECT doc_id, lang AS lang_pred, round(score, 6) + 0.0 AS lang_score
 FROM scored
 QUALIFY row_number() OVER (PARTITION BY doc_id ORDER BY score DESC, lang) = 1
-"""
+""")
 
 
 def q_emb_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1321,7 +1363,7 @@ def q_emb_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("vec_id", _r0(F.round("cosine", 5)).alias("cosine"))
 
 
-SQL_EMB_COSINE_TOPK = """
+SQL_EMB_COSINE_TOPK = oracle(q_emb_cosine_topk, """
 WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
 x AS (
   SELECT e.vec_id,
@@ -1336,7 +1378,7 @@ x AS (
 )
 SELECT vec_id, round(dot / (na * nb), 5) + 0.0 AS cosine
 FROM x ORDER BY dot / (na * nb) DESC, vec_id LIMIT 10
-"""
+""")
 
 
 def q_multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1353,7 +1395,7 @@ def q_multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
                         F.col("n_frames").cast("long").alias("n_frames"))
 
 
-SQL_MULTIMODAL_META = """
+SQL_MULTIMODAL_META = oracle(q_multimodal_meta, """
 SELECT doc_id,
        ['image', 'audio', 'video'][(doc_id % 3) + 1] AS media_type,
        cast(octet_length(encode(text)) AS bigint) AS n_bytes,
@@ -1361,7 +1403,7 @@ SELECT doc_id,
        cast(16 + (octet_length(encode(text)) * 7) % 48 AS bigint) AS height,
        cast(1 + octet_length(encode(text)) % 30 AS bigint) AS n_frames
 FROM documents
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -1420,7 +1462,7 @@ def q_ts_lomb_scargle_conv(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_TS_LOMB_SCARGLE = """
+SQL_TS_LOMB_SCARGLE = oracle(q_ts_lomb_scargle_conv, """
 SELECT cast(user_id AS varchar) AS conv_id,
        count(*) AS n_epochs,
        (count(*) >= 4 AND var_pop(value) > 0
@@ -1432,7 +1474,7 @@ SELECT cast(user_id AS varchar) AS conv_id,
        TRUE AS amp_positive,
        TRUE AS trend_matches_ols
 FROM events GROUP BY 1
-"""
+""")
 
 
 def q_ts_qso_conv(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1471,14 +1513,14 @@ def q_ts_qso_conv(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_TS_QSO = """
+SQL_TS_QSO = oracle(q_ts_qso_conv, """
 SELECT cast(user_id AS varchar) AS conv_id,
        count(*) AS n_epochs,
        (count(*) >= 2 AND var_pop(value) > 0) AS qso_defined,
        count(*) > 1500 AS qso_capped,
        TRUE AS chi2null_consistent
 FROM events GROUP BY 1
-"""
+""")
 
 
 def q_doc_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1503,11 +1545,11 @@ def q_doc_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.col("n_shared_bands").cast("long").alias("n_shared_bands")))
 
 
-SQL_DOC_MINHASH_LSH = """
+SQL_DOC_MINHASH_LSH = oracle(q_doc_minhash_lsh, """
 SELECT doc_id AS id_a, doc_id + 100000 AS id_b,
        CAST(16 AS BIGINT) AS n_shared_bands
 FROM documents WHERE doc_id % 10 = 0
-"""
+""")
 
 
 def q_doc_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1530,9 +1572,9 @@ def q_doc_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
                     .cast("int").alias("perm_hamming")))
 
 
-SQL_DOC_SIMHASH = """
+SQL_DOC_SIMHASH = oracle(q_doc_simhash, """
 SELECT doc_id, CAST(0 AS INTEGER) AS perm_hamming FROM documents
-"""
+""")
 
 
 def q_doc_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1563,11 +1605,11 @@ def q_doc_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
                     .alias("n_shared_bands")))
 
 
-SQL_DOC_SIMHASH_PAIRS = """
+SQL_DOC_SIMHASH_PAIRS = oracle(q_doc_simhash_pairs, """
 SELECT doc_id AS id_a, doc_id + 100000 AS id_b,
        CAST(0 AS BIGINT) AS hamming, CAST(4 AS BIGINT) AS n_shared_bands
 FROM documents WHERE doc_id % 10 = 0
-"""
+""")
 
 
 def q_emb_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1617,6 +1659,9 @@ x AS (
 SELECT vec_id, round(dot / (na * nb), 5) + 0.0 AS cosine
 FROM x ORDER BY dot / (na * nb) DESC, vec_id LIMIT {k}
 """
+
+
+oracle(q_emb_lsh_topk, _lsh_topk_sql())
 
 
 def q_emb_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1683,6 +1728,9 @@ x AS (
 SELECT vec_id, round(dot / (na * nb), 5) + 0.0 AS cosine
 FROM x ORDER BY dot / (na * nb) DESC, vec_id LIMIT {k}
 """
+
+
+oracle(q_emb_ivf_topk, _ivf_topk_sql())
 
 
 def q_emb_ivf_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1767,7 +1815,7 @@ ORDER BY dot / (na * nb) DESC, vec_id LIMIT {k}
 """
 
 
-SQL_EMB_IVF_FILTERED = _ivf_filtered_sql()
+SQL_EMB_IVF_FILTERED = oracle(q_emb_ivf_filtered, _ivf_filtered_sql())
 
 
 def q_doc_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1801,9 +1849,9 @@ def q_doc_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
                                F.lit(True)).alias("dup_consistent")))
 
 
-SQL_DOC_WINNOWING = """
+SQL_DOC_WINNOWING = oracle(q_doc_winnowing, """
 SELECT doc_id, true AS bounds_ok, true AS dup_consistent FROM documents
-"""
+""")
 
 
 def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1826,7 +1874,7 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         *[F.col("feat")[i].cast("double").alias(f"f{i}") for i in range(8)])
 
 
-SQL_MULTIMODAL_FEATURES = """
+SQL_MULTIMODAL_FEATURES = oracle(q_multimodal_features, """
 WITH meta AS (
   SELECT doc_id, text, length(text) AS n,
          16 + (length(text) % 48) AS w,
@@ -1882,7 +1930,7 @@ SELECT doc_id, media_type,
        CAST(max(CASE WHEN colidx = 6 THEN fv END) AS DOUBLE) AS f6,
        CAST(max(CASE WHEN colidx = 7 THEN fv END) AS DOUBLE) AS f7
 FROM f GROUP BY 1, 2
-"""
+""")
 
 
 def q_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1904,7 +1952,7 @@ def q_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
         *[F.col("pix")[i].cast("double").alias(f"p{i}") for i in range(16)])
 
 
-SQL_MULTIMODAL_RESIZE = """
+SQL_MULTIMODAL_RESIZE = oracle(q_multimodal_resize, """
 WITH meta AS (
   SELECT doc_id, text, length(text) AS n,
          16 + (length(text) % 48) AS w,
@@ -1941,7 +1989,7 @@ SELECT doc_id,
        CAST(max(CASE WHEN p = 14 THEN fv END) AS DOUBLE) AS p14,
        CAST(max(CASE WHEN p = 15 THEN fv END) AS DOUBLE) AS p15
 FROM grp GROUP BY 1
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -1956,8 +2004,7 @@ def q_ts_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     no-match (NULL) semantics are certified against an independent
     implementation, not a replay of our own."""
     from cesium_spark.operators.asof import asof_join
-    _prep(spark)
-    ev = _read(spark, sf_dir, "events")
+    ev = _events(spark, sf_dir)
     left = (ev.where(F.col("event_type") == "click")
             .select("user_id", "event_id", "ts", "value"))
     right = (ev.where(F.col("event_type") == "purchase")
@@ -1976,7 +2023,7 @@ def q_ts_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_TS_ASOF_JOIN = f"""
+SQL_TS_ASOF_JOIN = oracle(q_ts_asof_join, f"""
 SELECT cast(l.user_id AS varchar) AS conv_id,
        l.event_id,
        strftime(l.ts, '{DUCK_TS_FMT}') AS ts,
@@ -1986,7 +2033,7 @@ SELECT cast(l.user_id AS varchar) AS conv_id,
 FROM (SELECT * FROM events WHERE event_type = 'click') l
 ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'purchase') r
   ON l.user_id = r.user_id AND l.ts >= r.ts
-"""
+""")
 
 
 def q_ts_gapfill_interp(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2011,7 +2058,7 @@ def q_ts_gapfill_interp(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # interpolation restated with the SAME window shapes and the SAME
 # arithmetic order (prev + (next - prev) * ((b - pb) / (nb - pb)))
-SQL_TS_GAPFILL_INTERP = f"""
+SQL_TS_GAPFILL_INTERP = oracle(q_ts_gapfill_interp, f"""
 WITH b AS (
   SELECT cast(user_id AS varchar) AS conv_id,
          date_trunc('hour', ts) AS bucket,
@@ -2053,7 +2100,7 @@ SELECT conv_id, strftime(bucket, '{DUCK_TS_FMT}') AS bucket,
               END) * 1e6 + 0.5) / 1e6 + 0.0 AS y,
        y_obs IS NULL AS filled
 FROM nb
-"""
+""")
 
 
 def q_ts_m4_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2074,7 +2121,7 @@ def q_ts_m4_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_TS_M4_1H = f"""{_VALUE_SERIES_SQL}
+SQL_TS_M4_1H = oracle(q_ts_m4_1h, f"""{_VALUE_SERIES_SQL}
 SELECT conv_id,
        strftime(date_trunc('hour', ts), '{DUCK_TS_FMT}') AS bucket,
        round(min(y), 6) + 0.0 AS y_min,
@@ -2086,7 +2133,7 @@ SELECT conv_id,
        count(*) AS n
 FROM series
 GROUP BY 1, 2
-"""
+""")
 
 
 _LTTB_M = 24
@@ -2152,7 +2199,7 @@ def q_ts_lttb(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_TS_LTTB = f"""{_VALUE_SERIES_SQL}
+SQL_TS_LTTB = oracle(q_ts_lttb, f"""{_VALUE_SERIES_SQL}
 SELECT conv_id,
        count(*) AS n_raw,
        least(count(*), {_LTTB_M}) AS n_out,
@@ -2162,7 +2209,7 @@ SELECT conv_id,
        TRUE AS one_per_bucket
 FROM series
 GROUP BY conv_id
-"""
+""")
 
 
 def q_ts_counter_rate_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2183,7 +2230,7 @@ def q_ts_counter_rate_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Restated on the exact 1e-2 value grid (r4 verdict item #2): cent
 # increments sum as int64, one terminal division — matching the
 # engine's grid=100 path bit-for-bit in any accumulation order.
-SQL_TS_COUNTER_RATE_1H = f"""{_VALUE_SERIES_SQL},
+SQL_TS_COUNTER_RATE_1H = oracle(q_ts_counter_rate_1h, f"""{_VALUE_SERIES_SQL},
 c AS (
   SELECT conv_id, ts, t, turn_idx,
          CAST(round(y * 100.0) AS BIGINT) AS yc
@@ -2208,7 +2255,7 @@ SELECT conv_id, strftime(bucket, '{DUCK_TS_FMT}') AS bucket,
 FROM d
 GROUP BY 1, 2
 HAVING count(inc) > 0
-"""
+""")
 
 
 def q_ts_quantiles_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2230,7 +2277,7 @@ def q_ts_quantiles_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_TS_QUANTILES_1D = f"""{_VALUE_SERIES_SQL}
+SQL_TS_QUANTILES_1D = oracle(q_ts_quantiles_1d, f"""{_VALUE_SERIES_SQL}
 SELECT conv_id,
        strftime(date_trunc('day', ts), '{DUCK_TS_FMT}') AS window_start,
        count(y) AS n,
@@ -2239,7 +2286,7 @@ SELECT conv_id,
        round(quantile_cont(y, 0.99), 6) + 0.0 AS p99
 FROM series
 GROUP BY 1, 2
-"""
+""")
 
 
 def q_ts_hll_tier_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2284,7 +2331,7 @@ def q_ts_hll_tier_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_TS_HLL_TIER_FOLD = f"""
+SQL_TS_HLL_TIER_FOLD = oracle(q_ts_hll_tier_fold, f"""
 SELECT cast(user_id AS varchar) AS conv_id,
        strftime(date_trunc('day', ts), '{DUCK_TS_FMT}') AS window_start,
        count(*) AS n,
@@ -2293,7 +2340,7 @@ SELECT cast(user_id AS varchar) AS conv_id,
        TRUE AS est_ok
 FROM events
 GROUP BY 1, 2
-"""
+""")
 
 
 def q_ts_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2339,7 +2386,7 @@ def q_ts_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_TS_STREAM_SESSIONS = f"""
+SQL_TS_STREAM_SESSIONS = oracle(q_ts_stream_sessions, f"""
 WITH mx AS (SELECT max(ts) AS m FROM events),
 g AS (
   SELECT cast(user_id AS varchar) AS conv_id, ts,
@@ -2361,7 +2408,7 @@ SELECT conv_id,
 FROM sid, mx
 GROUP BY conv_id, sess, mx.m
 HAVING max(ts) + INTERVAL 30 MINUTE <= mx.m - INTERVAL 7000 SECONDS
-"""
+""")
 
 
 def q_doc_redact_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2414,6 +2461,9 @@ FROM c
 """
 
 
+oracle(q_doc_redact_pii, _redact_sql())
+
+
 def q_doc_dedup_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate-cluster RESOLUTION: the doc_dedup_clusters labels plus
     the doc_quality score (quantized to 1e-6 — doc_quality proves
@@ -2440,7 +2490,7 @@ def q_doc_dedup_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
                       "is_canonical", "kept_id")
 
 
-SQL_DOC_DEDUP_RESOLVE = """
+SQL_DOC_DEDUP_RESOLVE = oracle(q_doc_dedup_resolve, """
 WITH RECURSIVE tok0 AS (
   SELECT DISTINCT doc_id, source,
          unnest(string_split_regex(trim(lower(text)), '\\s+')) AS s
@@ -2506,7 +2556,7 @@ SELECT doc_id, cluster_id, score,
        first_value(doc_id) OVER w AS kept_id
 FROM q
 WINDOW w AS (PARTITION BY cluster_id ORDER BY score DESC, doc_id)
-"""
+""")
 
 
 _PACK_CAP = 200
@@ -2529,7 +2579,7 @@ def q_doc_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
                       "bin_fill", "oversize")
 
 
-SQL_DOC_PACK = f"""
+SQL_DOC_PACK = oracle(q_doc_pack, f"""
 WITH RECURSIVE lens AS (
   SELECT source AS shard, doc_id,
          cast(len(string_split_regex(trim(text), '\\s+')) AS bigint)
@@ -2552,7 +2602,7 @@ rec AS (
 SELECT shard, doc_id, n_tokens, bin_id, bin_fill,
        n_tokens > {_PACK_CAP} AS oversize
 FROM rec
-"""
+""")
 
 
 def q_doc_pack_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2607,6 +2657,9 @@ SELECT shard, doc_id, n_tokens, bin_id, bin_fill,
        n_tokens > {_PACK_CAP_BPE} AS oversize
 FROM rec
 """
+
+
+oracle(q_doc_pack_bpe, _pack_bpe_sql())
 
 
 _BM25_TERMS = ("spark", "window", "hash")
@@ -2664,6 +2717,9 @@ FROM p, s
 """
 
 
+oracle(q_doc_bm25, _bm25_sql())
+
+
 # Prometheus-style log-spaced edges covering the events.value range
 # (0.01 … ~500 in the fixtures); the overflow bucket is part of the
 # contract even when empty at small SF.
@@ -2699,7 +2755,7 @@ def q_ts_histogram_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_TS_HISTOGRAM_FOLD = f"""{_VALUE_SERIES_SQL}
+SQL_TS_HISTOGRAM_FOLD = oracle(q_ts_histogram_fold, f"""{_VALUE_SERIES_SQL}
 SELECT conv_id,
        strftime(date_trunc('day', ts), '{DUCK_TS_FMT}') AS window_start,
        {_hist_bucket_sql('y')} AS bucket,
@@ -2707,7 +2763,7 @@ SELECT conv_id,
 FROM series
 WHERE y IS NOT NULL
 GROUP BY 1, 2, 3
-"""
+""")
 
 
 def _hist_quantile_sql_expr(q_lit: str, out: str) -> str:
@@ -2763,7 +2819,7 @@ def q_ts_histogram_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_TS_HISTOGRAM_QUANTILE = f"""{_VALUE_SERIES_SQL},
+SQL_TS_HISTOGRAM_QUANTILE = oracle(q_ts_histogram_quantile, f"""{_VALUE_SERIES_SQL},
 h AS (
   SELECT conv_id, date_trunc('day', ts) AS window_start,
          {_hist_bucket_sql('y')} AS bucket, count(*) AS cnt
@@ -2788,7 +2844,7 @@ SELECT q50.conv_id,
 FROM q50
 JOIN q90 ON q50.conv_id = q90.conv_id
         AND q50.window_start = q90.window_start
-"""
+""")
 
 
 _SPLIT_WEIGHTS = (("train", 0.8), ("val", 0.1), ("test", 0.1))
@@ -2824,6 +2880,9 @@ FROM documents
 """
 
 
+oracle(q_doc_hash_split, _hash_split_sql())
+
+
 # ---------------------------------------------------------------------------
 # round-4 session-3: ingest compaction, time-weighted aggregates,
 # incremental cagg refresh, SAX symbolization, EWMA smoothing
@@ -2835,8 +2894,7 @@ def q_ts_upsert_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     2; upsert_latest keeps exactly one row per event_id — the latest —
     via one partial-aggregating max_by exchange (no window, no sort).
     Full-value oracle: arg_max per column in DuckDB."""
-    _prep(spark)
-    ev = _read(spark, sf_dir, "events")
+    ev = _events(spark, sf_dir)
     base = ev.select(
         "event_id",
         F.col("user_id").cast("string").alias("conv_id"),
@@ -2857,7 +2915,7 @@ def q_ts_upsert_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("version").cast("int").alias("version"))
 
 
-SQL_TS_UPSERT_LATEST = f"""
+SQL_TS_UPSERT_LATEST = oracle(q_ts_upsert_latest, f"""
 WITH v AS (
   SELECT event_id, cast(user_id AS varchar) AS conv_id, ts,
          value AS y, 1 AS version
@@ -2873,7 +2931,7 @@ SELECT event_id,
        cast(max(version) AS int) AS version
 FROM v
 GROUP BY event_id
-"""
+""")
 
 
 def q_ts_twa_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2892,7 +2950,7 @@ def q_ts_twa_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n").cast("long").alias("n"))
 
 
-SQL_TS_TWA_1H = f"""{_VALUE_SERIES_SQL}
+SQL_TS_TWA_1H = oracle(q_ts_twa_1h, f"""{_VALUE_SERIES_SQL}
 , b AS (
   SELECT conv_id, date_trunc('hour', ts) AS bucket, t, turn_idx, y,
          lead(t) OVER w AS nt
@@ -2908,7 +2966,7 @@ SELECT conv_id, strftime(bucket, '{DUCK_TS_FMT}') AS bucket,
        count(*) AS n
 FROM b
 GROUP BY 1, 2
-"""
+""")
 
 
 def q_ts_caggs_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2936,7 +2994,7 @@ def q_ts_caggs_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         _r(F.col("t_max")).alias("t_max"))
 
 
-SQL_TS_CAGGS_INCREMENTAL = f"""{_VALUE_SERIES_SQL}
+SQL_TS_CAGGS_INCREMENTAL = oracle(q_ts_caggs_incremental, f"""{_VALUE_SERIES_SQL}
 SELECT conv_id,
        strftime(date_trunc('hour', ts), '{DUCK_TS_FMT}') AS window_start,
        count(*) AS n,
@@ -2947,7 +3005,7 @@ SELECT conv_id,
        round(max(t), 6) + 0.0 AS t_max
 FROM series
 GROUP BY 1, 2
-"""
+""")
 
 
 _SAX_W = 8
@@ -2969,7 +3027,7 @@ def q_ts_sax(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_points").cast("long").alias("n_points"))
 
 
-SQL_TS_SAX = f"""{_VALUE_SERIES_SQL}
+SQL_TS_SAX = oracle(q_ts_sax, f"""{_VALUE_SERIES_SQL}
 , ranked AS (
   SELECT conv_id, y,
          row_number() OVER (PARTITION BY conv_id ORDER BY t, turn_idx)
@@ -2990,7 +3048,7 @@ SELECT conv_id,
        max(n) AS n_points
 FROM paa
 GROUP BY conv_id
-"""
+""")
 
 
 _EWMA_ALPHA = 0.25
@@ -3019,7 +3077,7 @@ def q_ts_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
         r6.alias("y_smooth"))
 
 
-SQL_TS_EWMA = (
+SQL_TS_EWMA = oracle(q_ts_ewma,
     _VALUE_SERIES_SQL.replace("WITH series", "WITH RECURSIVE series", 1)
     + """
 , r AS (
@@ -3054,7 +3112,7 @@ def q_ts_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
           for k in range(1, _ACF_K + 1)])
 
 
-SQL_TS_ACF = f"""{_VALUE_SERIES_SQL}
+SQL_TS_ACF = oracle(q_ts_acf, f"""{_VALUE_SERIES_SQL}
 , lagged AS (
   SELECT conv_id, y,
          {', '.join(f'lag(y, {k}) OVER w AS lag{k}'
@@ -3067,7 +3125,7 @@ SELECT conv_id, count(*) AS n,
                   for k in range(1, _ACF_K + 1))}
 FROM lagged
 GROUP BY conv_id
-"""
+""")
 
 
 _ZSCORE_THRESHOLD = 2.0
@@ -3093,7 +3151,7 @@ def q_ts_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
         _r(F.col("z")).alias("z"))
 
 
-SQL_TS_ANOMALY = f"""{_VALUE_SERIES_SQL}
+SQL_TS_ANOMALY = oracle(q_ts_anomaly, f"""{_VALUE_SERIES_SQL}
 , b AS (
   SELECT conv_id, turn_idx, ts, y,
          dayofweek(ts) + 1 AS slot,
@@ -3111,7 +3169,7 @@ SELECT conv_id, turn_idx, strftime(ts, '{DUCK_TS_FMT}') AS ts,
 FROM b
 WHERE slot_std > 0
   AND abs((y - slot_mean) / slot_std) > {_ZSCORE_THRESHOLD}
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -3141,7 +3199,7 @@ def q_ts_rolling_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("roll_n").cast("long").alias("roll_n"))
 
 
-SQL_TS_ROLLING_1H = f"""{_VALUE_SERIES_SQL}
+SQL_TS_ROLLING_1H = oracle(q_ts_rolling_1h, f"""{_VALUE_SERIES_SQL}
 , b AS (
   SELECT conv_id, turn_idx, t, y,
          avg(y) OVER w AS roll_mean,
@@ -3159,7 +3217,7 @@ SELECT conv_id, turn_idx, round(t, 6) + 0.0 AS t, round(y, 6) + 0.0 AS y,
        round(roll_min, 6) + 0.0 AS roll_min,
        round(roll_max, 6) + 0.0 AS roll_max, roll_n
 FROM b
-"""
+""")
 
 
 _INCIDENT_MOD = 499
@@ -3175,8 +3233,7 @@ def q_ts_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     BroadcastNestedLoopJoin (quadratic at 10^12 points). Per-pair
     full-value oracle (the BETWEEN join restated directly)."""
     from cesium_spark.operators.intervals import interval_join
-    _prep(spark)
-    ev = _read(spark, sf_dir, "events")
+    ev = _events(spark, sf_dir)
     iv = ev.where(F.col("event_id") % _INCIDENT_MOD == 0).select(
         F.col("event_id").alias("incident_id"),
         F.col("ts").alias("lo"),
@@ -3191,7 +3248,7 @@ def q_ts_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_format("ts", TS_FMT).alias("ts"))
 
 
-SQL_TS_INTERVAL_JOIN = f"""
+SQL_TS_INTERVAL_JOIN = oracle(q_ts_interval_join, f"""
 WITH iv AS (
   SELECT event_id AS incident_id, ts AS lo, ts + INTERVAL 2 HOUR AS hi
   FROM events WHERE event_id % {_INCIDENT_MOD} = 0
@@ -3199,7 +3256,7 @@ WITH iv AS (
 SELECT iv.incident_id, e.event_id, e.user_id,
        strftime(e.ts, '{DUCK_TS_FMT}') AS ts
 FROM events e JOIN iv ON e.ts >= iv.lo AND e.ts < iv.hi
-"""
+""")
 
 
 _HEARTBEAT_S = 3600.0
@@ -3228,7 +3285,7 @@ _HEARTBEAT_US = int(round(_HEARTBEAT_S * 1e6))
 # as int64 lattice units, one terminal division to seconds — matching
 # the engine's t_grid=1_000_000 path bit-for-bit regardless of
 # partition count or accumulation order.
-SQL_TS_HEARTBEAT_1D = f"""{_VALUE_SERIES_SQL}
+SQL_TS_HEARTBEAT_1D = oracle(q_ts_heartbeat_1d, f"""{_VALUE_SERIES_SQL}
 , b AS (
   SELECT conv_id, date_trunc('day', ts) AS bucket,
          CAST(round(t * 1000000.0) AS BIGINT) AS tu,
@@ -3250,13 +3307,13 @@ SELECT conv_id, strftime(bucket, '{DUCK_TS_FMT}') AS bucket,
             AS BIGINT) AS n_gaps
 FROM b
 GROUP BY 1, 2
-"""
+""")
 
 
 _CUSUM_K, _CUSUM_H = 0.25, 4.0
 
 
-def q_ts_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_ts_cusum_changepoints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-sided CUSUM drift alarms (Page): S snapped to a 1e-4 grid
     with the engine-independent floor op before the h-threshold
     compare, so alarm membership is identical across engines despite
@@ -3274,7 +3331,7 @@ def q_ts_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("s_neg") + F.lit(0.0)).alias("s_neg"))
 
 
-SQL_TS_CUSUM = f"""{_VALUE_SERIES_SQL}
+SQL_TS_CUSUM_CHANGEPOINTS = oracle(q_ts_cusum_changepoints, f"""{_VALUE_SERIES_SQL}
 , z AS (
   SELECT *, avg(y) OVER p AS m, stddev_pop(y) OVER p AS sd
   FROM series WINDOW p AS (PARTITION BY conv_id)
@@ -3294,7 +3351,7 @@ SQL_TS_CUSUM = f"""{_VALUE_SERIES_SQL}
 SELECT conv_id, turn_idx, strftime(ts, '{DUCK_TS_FMT}') AS ts,
        round(y, 6) + 0.0 AS y, sp + 0.0 AS s_pos, sn + 0.0 AS s_neg
 FROM s WHERE sp > {_CUSUM_H} OR sn > {_CUSUM_H}
-"""
+""")
 
 
 _STRATA_FRACS = (("en", 0.5), ("de", 0.4), ("fr", 0.25), ("es", 0.1))
@@ -3329,6 +3386,9 @@ WHERE {bucket} < (CASE lang {cases} ELSE 0 END)
 """
 
 
+oracle(q_doc_stratified_sample, _stratified_sample_sql())
+
+
 # ---------------------------------------------------------------------------
 # round-4 session-5: state accounting, cross-channel correlation,
 # decontamination, repetition quality signals
@@ -3355,7 +3415,7 @@ def q_ts_state_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Restated on the exact µs integer grid (r4 verdict item #2), matching
 # the engine's t_grid=1_000_000 path: spans sum as int64 µs, one
 # terminal division to seconds.
-SQL_TS_STATE_AGG = f"""
+SQL_TS_STATE_AGG = oracle(q_ts_state_agg, f"""
 WITH t AS (
   SELECT cast(user_id AS varchar) AS conv_id, event_type AS state, ts,
          epoch_us(ts) AS su,
@@ -3374,7 +3434,7 @@ SELECT conv_id, strftime(date_trunc('day', ts), '{DUCK_TS_FMT}') AS bucket,
             AS BIGINT) AS n_closed
 FROM t
 GROUP BY 1, 2, 3
-"""
+""")
 
 
 _CORR_CH = ("latency", "tokens")
@@ -3396,7 +3456,7 @@ def q_ts_channel_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
         _r(F.col("mean_b")).alias("mean_b"))
 
 
-SQL_TS_CHANNEL_CORR = _SERIES_SQL + f"""
+SQL_TS_CHANNEL_CORR = oracle(q_ts_channel_corr, _SERIES_SQL + f"""
 , aligned AS (
   SELECT conv_id, turn_idx,
          max(CASE WHEN channel = '{_CORR_CH[0]}' THEN y END) AS ya,
@@ -3414,7 +3474,7 @@ SELECT conv_id, count(*) AS n_pairs,
 FROM aligned
 WHERE ya IS NOT NULL AND yb IS NOT NULL
 GROUP BY conv_id
-"""
+""")
 
 
 _CONTAM_MOD = 97
@@ -3456,7 +3516,7 @@ def q_doc_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_shingles"), F.col("n_hits"), F.col("contaminated"))
 
 
-SQL_DOC_CONTAMINATION = f"""
+SQL_DOC_CONTAMINATION = oracle(q_doc_contamination, f"""
 WITH ev AS (
   SELECT DISTINCT sh FROM ({_duck_shingles(
       f"(SELECT * FROM documents WHERE doc_id % {_CONTAM_MOD} = 0)",
@@ -3475,7 +3535,7 @@ SELECT d.doc_id,
        coalesce(h.n_hits, 0) > 0 AS contaminated
 FROM documents d LEFT JOIN hits h ON d.doc_id = h.doc_id
 WHERE d.doc_id % {_CONTAM_MOD} <> 0
-"""
+""")
 
 
 def q_doc_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3498,7 +3558,7 @@ def q_doc_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
         _r(F.col("top_gram_frac")).alias("top_gram_frac"))
 
 
-SQL_DOC_REPETITION = """
+SQL_DOC_REPETITION = oracle(q_doc_repetition, """
 WITH d AS (
   SELECT doc_id, length(text) AS n_chars,
          list_filter(string_split(text, chr(10)),
@@ -3544,7 +3604,7 @@ SELECT d.doc_id, d.n_chars, len(d.lines) AS n_lines,
                        / d.n_chars END, 6) + 0.0 AS top_gram_frac
 FROM d LEFT JOIN pl ON d.doc_id = pl.doc_id
        LEFT JOIN pg ON d.doc_id = pg.doc_id
-"""
+""")
 
 
 _HAMPEL_K, _HAMPEL_NSIGMA = 2, 3.0
@@ -3568,7 +3628,7 @@ def q_ts_hampel(spark: SparkSession, sf_dir: str) -> DataFrame:
         _r(F.col("y_clean")).alias("y_clean"))
 
 
-SQL_TS_HAMPEL = f"""{_VALUE_SERIES_SQL}
+SQL_TS_HAMPEL = oracle(q_ts_hampel, f"""{_VALUE_SERIES_SQL}
 , m AS (
   SELECT conv_id, turn_idx, t, y,
          median(y) OVER (PARTITION BY conv_id ORDER BY turn_idx
@@ -3592,7 +3652,7 @@ SELECT conv_id, turn_idx, round(t, 6) + 0.0 AS t, round(y, 6) + 0.0 AS y,
                        > floor({_HAMPEL_NSIGMA} * 1.4826 * mad * 1e6 + 0.5)
                   THEN med ELSE y END, 6) + 0.0 AS y_clean
 FROM d
-"""
+""")
 
 
 _HOLT_A, _HOLT_B = 0.5, 0.25
@@ -3618,7 +3678,7 @@ def q_ts_holt(spark: SparkSession, sf_dir: str) -> DataFrame:
         r6("residual").alias("residual"))
 
 
-SQL_TS_HOLT = (
+SQL_TS_HOLT = oracle(q_ts_holt,
     _VALUE_SERIES_SQL.replace("WITH series", "WITH RECURSIVE series", 1)
     + f"""
 , base AS (
@@ -3671,7 +3731,7 @@ def q_doc_vocab_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vocab_cum")
 
 
-SQL_DOC_VOCAB_NOVELTY = f"""
+SQL_DOC_VOCAB_NOVELTY = oracle(q_doc_vocab_novelty, f"""
 WITH bt AS (
   SELECT DISTINCT date_trunc('day', ts) AS bucket,
          unnest(string_split_regex(trim(lower(props)), '\\s+')) AS token
@@ -3695,7 +3755,7 @@ SELECT strftime(bucket, '{DUCK_TS_FMT}') AS bucket,
                              ROWS UNBOUNDED PRECEDING) AS bigint)
          AS vocab_cum
 FROM per
-"""
+""")
 
 
 def q_ts_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3706,8 +3766,7 @@ def q_ts_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     grid). All-integer until one terminal division; full-value
     oracle restates the distinct-score rank table verbatim."""
     from cesium_spark.operators.scoring import auc_score
-    _prep(spark)
-    ev = _read(spark, sf_dir, "events")
+    ev = _events(spark, sf_dir)
     scored = ev.select(
         (F.col("value")
          + F.when(F.col("event_type") == "purchase", F.lit(30.0))
@@ -3718,7 +3777,7 @@ def q_ts_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
                       _r(F.col("auc")).alias("auc"))
 
 
-SQL_TS_AUC = """
+SQL_TS_AUC = oracle(q_ts_auc, """
 WITH s AS (
   SELECT value + CASE WHEN event_type = 'purchase'
                       THEN 30.0 ELSE 0.0 END AS s,
@@ -3751,7 +3810,7 @@ SELECT n, n_pos, n - n_pos AS n_neg,
          / (2.0 * cast(n_pos AS double)
             * cast(n - n_pos AS double)) END, 6) + 0.0 AS auc
 FROM tot
-"""
+""")
 
 
 def q_ts_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3762,8 +3821,7 @@ def q_ts_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
     terms; total = max of the cumulative) so even the 9-term float sum
     is sequence-pinned. Full-value oracle."""
     from cesium_spark.operators.datastats import benford_test
-    _prep(spark)
-    ev = _read(spark, sf_dir, "events")
+    ev = _events(spark, sf_dir)
     out = benford_test(ev, "value", scale=100)
     return out.select("digit", "n_obs",
                       _r(F.col("frac_obs")).alias("frac_obs"),
@@ -3814,7 +3872,7 @@ FROM cum
 """
 
 
-SQL_TS_BENFORD = _benford_sql()
+SQL_TS_BENFORD = oracle(q_ts_benford, _benford_sql())
 
 
 def q_ts_welch_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3824,8 +3882,7 @@ def q_ts_welch_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
     (ANSI overflow contract), every derived float one fixed tree —
     full-value oracle restates mean/variance/t/dof verbatim."""
     from cesium_spark.operators.datastats import welch_ttest
-    _prep(spark)
-    ev = _read(spark, sf_dir, "events")
+    ev = _events(spark, sf_dir)
     planted = ev.select(
         (F.col("value")
          + F.when(F.col("event_type") == "purchase", F.lit(5.0))
@@ -3839,7 +3896,7 @@ def q_ts_welch_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
                       _r(F.col("dof")).alias("dof"))
 
 
-SQL_TS_WELCH_AB = """
+SQL_TS_WELCH_AB = oracle(q_ts_welch_ab, """
 WITH s AS (
   SELECT cast(round((value + CASE WHEN event_type = 'purchase'
                                   THEN 5.0 ELSE 0.0 END) * 100.0)
@@ -3881,7 +3938,7 @@ SELECT n_a, n_b,
                       + (vb / nbd) * (vb / nbd) / (nbd - 1.0)) END, 6)
          + 0.0 AS dof
 FROM e
-"""
+""")
 
 
 def q_doc_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3900,7 +3957,7 @@ def q_doc_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
                       _r(F.col("global_cc")).alias("global_cc"))
 
 
-SQL_DOC_TRIANGLES = """
+SQL_DOC_TRIANGLES = oracle(q_doc_triangles, """
 WITH tok AS (
   SELECT doc_id, u.t AS tok, u.pos
   FROM (SELECT doc_id,
@@ -3939,7 +3996,7 @@ SELECT n_nodes, n_edges,
          3.0 * cast(tri.n_triangles AS double)
          / cast(n_wedges AS double) END, 6) + 0.0 AS global_cc
 FROM base CROSS JOIN tri
-"""
+""")
 
 
 def q_doc_local_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3958,7 +4015,7 @@ def q_doc_local_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
                       _r(F.col("local_cc")).alias("local_cc"))
 
 
-SQL_DOC_LOCAL_CLUSTERING = """
+SQL_DOC_LOCAL_CLUSTERING = oracle(q_doc_local_clustering, """
 WITH tok AS (
   SELECT doc_id, u.t AS tok, u.pos
   FROM (SELECT doc_id,
@@ -4000,7 +4057,7 @@ SELECT d.v, cast(d.deg AS bigint) AS deg,
 FROM deg d LEFT JOIN tri_v t USING (v)
 ORDER BY d.deg DESC, d.v ASC
 LIMIT 50
-"""
+""")
 
 
 def q_ts_granger_lag1(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4012,8 +4069,7 @@ def q_ts_granger_lag1(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundary; all sufficient statistics are exact int64; both SSEs,
     b2, and F are fixed double trees restated verbatim in SQL."""
     from cesium_spark.operators.scoring import ols_granger
-    _prep(spark)
-    ev = _read(spark, sf_dir, "events")
+    ev = _events(spark, sf_dir)
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     tok = F.size(F.split(F.trim(F.col("props")), r"\s+"))
     cents = F.round(F.col("value") * 100).cast("long")
@@ -4040,7 +4096,7 @@ def q_ts_granger_lag1(spark: SparkSession, sf_dir: str) -> DataFrame:
         _r(F.col("f_stat")).alias("f_stat"))
 
 
-SQL_TS_GRANGER_LAG1 = """
+SQL_TS_GRANGER_LAG1 = oracle(q_ts_granger_lag1, """
 WITH t AS (
   SELECT len(string_split_regex(trim(props), '\\s+')) AS tok,
          lag(len(string_split_regex(trim(props), '\\s+')))
@@ -4118,7 +4174,7 @@ SELECT cast(n_int AS bigint) AS n,
              (sse_r - sse_u) / (sse_u / (n - 3.0)) END, 6) + 0.0
          AS f_stat
 FROM sse
-"""
+""")
 
 
 def q_doc_chi2_lang_source(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4140,7 +4196,7 @@ def q_doc_chi2_lang_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         _r(F.col("cramers_v")).alias("cramers_v"))
 
 
-SQL_DOC_CHI2_LANG_SOURCE = """
+SQL_DOC_CHI2_LANG_SOURCE = oracle(q_doc_chi2_lang_source, """
 WITH cells AS (
   SELECT lang AS a, source AS b, count(*) AS n_obs
   FROM documents
@@ -4188,7 +4244,7 @@ SELECT a, b, cast(n_obs AS bigint) AS n_obs,
                       cast(c_card - 1 AS double)))) END, 6) + 0.0
          AS cramers_v
 FROM h
-"""
+""")
 
 
 _CROSTON_A = 0.25
@@ -4223,7 +4279,7 @@ def q_ts_croston(spark: SparkSession, sf_dir: str) -> DataFrame:
         r6("forecast_sba").alias("forecast_sba"))
 
 
-SQL_TS_CROSTON = (
+SQL_TS_CROSTON = oracle(q_ts_croston,
     _VALUE_SERIES_SQL.replace("WITH series", "WITH RECURSIVE series", 1)
     + f"""
 , rows_ AS (
@@ -4315,11 +4371,11 @@ def q_ts_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         _r(F.col("t")).alias("t"), _r(F.col("y")).alias("y"))
 
 
-SQL_TS_STREAM_DEDUP = f"""{_VALUE_SERIES_SQL}
+SQL_TS_STREAM_DEDUP = oracle(q_ts_stream_dedup, f"""{_VALUE_SERIES_SQL}
 SELECT conv_id, turn_idx, strftime(ts, '{DUCK_TS_FMT}') AS ts,
        round(t, 6) + 0.0 AS t, round(y, 6) + 0.0 AS y
 FROM series
-"""
+""")
 
 
 _SJOIN_SPAN = "6 hours"
@@ -4376,7 +4432,7 @@ def q_ts_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         _r(F.col("y")).alias("y"))
 
 
-SQL_TS_STREAM_JOIN = f"""
+SQL_TS_STREAM_JOIN = oracle(q_ts_stream_join, f"""
 WITH t AS (
   SELECT cast(user_id AS varchar) AS conv_id, event_id, ts, value AS y
   FROM events
@@ -4393,7 +4449,7 @@ SELECT t.conv_id, t.event_id, a.alert_id,
 FROM t JOIN a ON t.conv_id = a.conv_id
   AND t.ts > a.alert_ts
   AND t.ts <= a.alert_ts + INTERVAL 6 HOUR
-"""
+""")
 
 
 _DTW_TEMPLATE = (12.0, 40.0, 25.0, 60.0, 18.0, 75.0, 30.0, 50.0)
@@ -4469,6 +4525,9 @@ FROM a JOIN ubd ON a.conv_id = ubd.conv_id
 """
 
 
+oracle(q_ts_dtw, _dtw_sql())
+
+
 _DECOMP_P = 7
 
 
@@ -4491,7 +4550,7 @@ def q_ts_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _DECOMP_HALF = (_DECOMP_P - 1) // 2
 
-SQL_TS_DECOMPOSE = f"""{_VALUE_SERIES_SQL}
+SQL_TS_DECOMPOSE = oracle(q_ts_decompose, f"""{_VALUE_SERIES_SQL}
 , o AS (
   SELECT conv_id, turn_idx, ts, t, y,
          row_number() OVER w - 1 AS rn,
@@ -4523,7 +4582,7 @@ SELECT conv_id, turn_idx, round(t, 6) + 0.0 AS t, round(y, 6) + 0.0 AS y,
        round(slot_mean - ctr, 6) + 0.0 AS seasonal,
        round(y - trend - (slot_mean - ctr), 6) + 0.0 AS resid
 FROM c
-"""
+""")
 
 
 _ROLLQ_Q, _ROLLQ_W = 0.95, 20
@@ -4544,14 +4603,14 @@ def q_ts_rolling_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
         _r(F.col("roll_q")).alias("roll_q"))
 
 
-SQL_TS_ROLLING_QUANTILE = f"""{_VALUE_SERIES_SQL}
+SQL_TS_ROLLING_QUANTILE = oracle(q_ts_rolling_quantile, f"""{_VALUE_SERIES_SQL}
 SELECT conv_id, turn_idx, round(t, 6) + 0.0 AS t, round(y, 6) + 0.0 AS y,
        round(quantile_cont(y, {_ROLLQ_Q})
                OVER (PARTITION BY conv_id ORDER BY t, turn_idx
                      ROWS BETWEEN {_ROLLQ_W - 1} PRECEDING
                            AND CURRENT ROW), 6) + 0.0 AS roll_q
 FROM series
-"""
+""")
 
 
 def q_ts_gauge_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4570,7 +4629,7 @@ def q_ts_gauge_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n").cast("long").alias("n"))
 
 
-SQL_TS_GAUGE_DELTA = f"""{_VALUE_SERIES_SQL}
+SQL_TS_GAUGE_DELTA = oracle(q_ts_gauge_delta, f"""{_VALUE_SERIES_SQL}
 , b AS (
   SELECT conv_id, date_trunc('hour', ts) AS bucket, turn_idx, y,
          lag(y) OVER w AS py,
@@ -4587,7 +4646,7 @@ SELECT conv_id, strftime(bucket, '{DUCK_TS_FMT}') AS bucket,
        count(*) AS n
 FROM b
 GROUP BY conv_id, bucket
-"""
+""")
 
 
 _XCORR_LAG = 2
@@ -4645,6 +4704,9 @@ GROUP BY conv_id
 """
 
 
+oracle(q_ts_channel_xcorr, _xcorr_sql())
+
+
 _SCORE_W = (("mean", 0.03), ("std", -0.11), ("amplitude", 0.07))
 _SCORE_B = -1.5
 
@@ -4671,14 +4733,14 @@ _SCORE_Z = (f"{_SCORE_B} + {_SCORE_W[0][1]} * avg(y) "
             f"+ {_SCORE_W[1][1]} * sqrt(greatest(avg(y*y) - avg(y)*avg(y),"
             f" 0)) + {_SCORE_W[2][1]} * ((max(y) - min(y)) / 2)")
 
-SQL_TS_SCORE_FEATURES = _VALUE_SERIES_SQL + f"""
+SQL_TS_SCORE_FEATURES = oracle(q_ts_score_features, _VALUE_SERIES_SQL + f"""
 SELECT conv_id,
        strftime(date_trunc('day', ts), '{DUCK_TS_FMT}') AS window_start,
        count(*) AS n_epochs,
        round(1.0 / (1.0 + exp(-({_SCORE_Z}))), 6) + 0.0 AS score
 FROM series
 GROUP BY 1, 2
-"""
+""")
 
 
 _CURATE_MIN_Q, _CURATE_MAX_DUP, _CURATE_MAX_TOP = 0.5, 0.34, 0.25
@@ -4755,6 +4817,9 @@ FROM kept
 """
 
 
+oracle(q_doc_curate, _curate_sql())
+
+
 def q_ts_parse_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON-lines transcript ingest roundtrip: the transcript table is
     serialized to JSON lines with native to_json and parsed back with
@@ -4775,7 +4840,7 @@ def q_ts_parse_json(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("_malformed").isNotNull().alias("is_malformed"))
 
 
-SQL_TS_PARSE_JSON = f"""
+SQL_TS_PARSE_JSON = oracle(q_ts_parse_json, f"""
 WITH t AS (
   SELECT cast(user_id AS varchar) AS conv_id,
          row_number() OVER (PARTITION BY user_id
@@ -4790,7 +4855,7 @@ SELECT conv_id, turn_idx, role, text, tool,
 FROM t
 UNION ALL
 SELECT NULL, NULL, NULL, NULL, NULL, NULL, true
-"""
+""")
 
 
 def q_doc_winnowing_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4822,12 +4887,12 @@ def q_doc_winnowing_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
                     _r(F.col("containment")).alias("containment")))
 
 
-SQL_DOC_WINNOWING_PAIRS = """
+SQL_DOC_WINNOWING_PAIRS = oracle(q_doc_winnowing_pairs, """
 SELECT doc_id AS id_a, doc_id + 100000 AS id_b, 1.0 AS containment
 FROM documents
 WHERE doc_id % 10 = 0
   AND len(string_split_regex(trim(text), '[ \\t\\n\\r\\f]+')) >= 5
-"""
+""")
 
 
 _SUBSTR_MIN_RUN = 50
@@ -4882,7 +4947,7 @@ def q_doc_substring_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "is_dup")
 
 
-SQL_DOC_SUBSTRING_PAIRS = f"""
+SQL_DOC_SUBSTRING_PAIRS = oracle(q_doc_substring_pairs, f"""
 WITH tok0 AS (
   SELECT doc_id,
          list_filter(string_split_regex(coalesce(text, ''),
@@ -4903,8 +4968,8 @@ planted AS (
 corpus AS (SELECT * FROM tok0 UNION ALL SELECT * FROM planted),
 pairs AS (SELECT doc_id AS id_a, doc_id + 200000 AS id_b FROM base),
 ta AS (
-  SELECT doc_id, unnest(toks) AS tok,
-         generate_subscripts(toks, 1) AS i
+  SELECT doc_id, unnest(toks[1:{_SUBSTR_CAP}]) AS tok,
+         generate_subscripts(toks[1:{_SUBSTR_CAP}], 1) AS i
   FROM corpus
 ),
 m AS (
@@ -4943,7 +5008,7 @@ JOIN n na ON na.doc_id = p.id_a
 JOIN n nb ON nb.doc_id = p.id_b
 LEFT JOIN (SELECT * FROM best WHERE rk = 1) b
   ON b.id_a = p.id_a AND b.id_b = p.id_b
-"""
+""")
 
 
 
@@ -4954,16 +5019,17 @@ def _int_token_series(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``{"k": <int>}``, so the integer series is the extracted k —
     a genuinely varying int64 channel (the whitespace token count of
     a JSON object is the constant 2 — degenerate for a randomness
-    test)."""
-    _prep(spark)
-    ev = _read(spark, sf_dir, "events")
+    test). Turns without a ``k`` are dropped after numbering, so
+    turn_idx keeps counting every event; ``_INT_TOKEN_SERIES_SQL`` is
+    the oracle twin."""
+    ev = _events(spark, sf_dir)
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     kv = F.get_json_object(F.col("props"), "$.k").cast("long")
     return ev.select(
         F.col("user_id").cast("string").alias("conv_id"),
         (F.row_number().over(w) - 1).cast("int").alias("turn_idx"),
         (F.row_number().over(w) - 1).cast("double").alias("t"),
-        kv.alias("y"))
+        kv.alias("y")).where(F.col("y").isNotNull())
 
 
 _INT_TOKEN_SERIES_SQL = """
@@ -4974,6 +5040,7 @@ WITH s AS (
          CAST(json_extract_string(props, '$.k') AS BIGINT) AS y
   FROM events
   WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+  QUALIFY y IS NOT NULL
 )
 """
 
@@ -4993,7 +5060,7 @@ def q_ts_von_neumann(spark: SparkSession, sf_dir: str) -> DataFrame:
         "trending_95", "oscillating_95")
 
 
-SQL_TS_VON_NEUMANN = f"""{_INT_TOKEN_SERIES_SQL},
+SQL_TS_VON_NEUMANN = oracle(q_ts_von_neumann, f"""{_INT_TOKEN_SERIES_SQL},
 l AS (
   SELECT conv_id, y, y - lag(y) OVER (PARTITION BY conv_id
                                       ORDER BY t, turn_idx) AS d
@@ -5032,7 +5099,7 @@ SELECT conv_id, n,
             THEN round((eta - mu) / sqrt(var), 6) > 1.96 END
          AS oscillating_95
 FROM e
-"""
+""")
 
 
 def q_ts_snht(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5057,7 +5124,7 @@ def q_ts_snht(spark: SparkSession, sf_dir: str) -> DataFrame:
         _r(F.col("delta_mean")).alias("delta_mean_c"))
 
 
-SQL_TS_SNHT = f"""{_VALUE_SERIES_SQL},
+SQL_TS_SNHT = oracle(q_ts_snht, f"""{_VALUE_SERIES_SQL},
 c AS (
   SELECT conv_id, t, turn_idx,
          CAST(round(y * 100) AS BIGINT) AS yc
@@ -5102,7 +5169,7 @@ SELECT conv_id, n, CAST(k AS BIGINT) AS k_snht,
              - cast(sk AS double) / cast(k AS double), 6) + 0.0
          AS delta_mean_c
 FROM best WHERE rk = 1
-"""
+""")
 
 
 _PH_DELTA, _PH_LAM = 0.5, 12.0
@@ -5173,6 +5240,9 @@ FROM a
 """
 
 
+oracle(q_ts_page_hinkley, _ph_sql())
+
+
 
 
 def q_ts_turning_points(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5190,7 +5260,7 @@ def q_ts_turning_points(spark: SparkSession, sf_dir: str) -> DataFrame:
         "trending_95", "alternating_95")
 
 
-SQL_TS_TURNING_POINTS = f"""{_INT_TOKEN_SERIES_SQL},
+SQL_TS_TURNING_POINTS = oracle(q_ts_turning_points, f"""{_INT_TOKEN_SERIES_SQL},
 l AS (
   SELECT conv_id, y,
          lag(y) OVER w2 AS yp, lead(y) OVER w2 AS yn
@@ -5226,7 +5296,7 @@ SELECT conv_id, n, n_turning,
                   / sqrt((16.0 * cast(n AS double) - 29.0) / 90.0), 6)
             > 1.96 END AS alternating_95
 FROM a
-"""
+""")
 
 
 
@@ -5252,8 +5322,7 @@ def q_ts_esd(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _esd_sql(k=_ESD_K) -> str:
     # round i: stats over rem_{i-1}, argmax by (-dev, turn), remove
-    parts = ["rem_0 AS (SELECT conv_id, turn_idx, y FROM s "
-             "WHERE y IS NOT NULL)"]
+    parts = ["rem_0 AS (SELECT conv_id, turn_idx, y FROM s)"]
     outs = []
     for i in range(1, k + 1):
         parts.append(f"""st_{i} AS (
@@ -5299,6 +5368,9 @@ pick_{i} AS (
             + f"FROM pick_1\n{joins}\n")
 
 
+oracle(q_ts_esd, _esd_sql())
+
+
 
 
 _THETA_H = 3
@@ -5335,7 +5407,7 @@ r AS (
          row_number() OVER (PARTITION BY conv_id
                             ORDER BY t, turn_idx) AS i,
          CAST(count(*) OVER (PARTITION BY conv_id) AS BIGINT) AS n
-  FROM s WHERE y IS NOT NULL AND t IS NOT NULL
+  FROM s
 ),
 st AS (
   SELECT conv_id, y, i, n,
@@ -5387,6 +5459,9 @@ FROM (SELECT conv_id, n, a, b, b_den, ses_cum AS ses
 """
 
 
+oracle(q_ts_theta, _theta_sql())
+
+
 
 
 _TBT_H = 3
@@ -5417,7 +5492,7 @@ rk AS (
          row_number() OVER (PARTITION BY conv_id
                             ORDER BY t, turn_idx) AS gi,
          CAST(count(*) OVER (PARTITION BY conv_id) AS BIGINT) AS cnt
-  FROM s WHERE y IS NOT NULL AND t IS NOT NULL
+  FROM s
 ),
 tr AS (SELECT conv_id, y, t, turn_idx FROM rk WHERE gi <= cnt - {h}),
 r AS (
@@ -5512,6 +5587,9 @@ FROM scored s LEFT JOIN naive n ON n.conv_id = s.conv_id
 """
 
 
+oracle(q_ts_theta_backtest, _theta_backtest_sql())
+
+
 
 
 def q_ts_stream_counter_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5573,6 +5651,9 @@ def q_ts_stream_counter_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n").cast("long").alias("n"))
 
 
+oracle(q_ts_stream_counter_rate, SQL_TS_COUNTER_RATE_1H)
+
+
 def q_rel_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weekly retention-cohort matrix (the classic product-analytics
     rollup): users grouped by first-activity ISO week, distinct active
@@ -5581,8 +5662,7 @@ def q_rel_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup's clustering is SATISFIED by that window's partitioning
     (exchange elided), so the whole matrix is two shrinking exchanges.
     Integer counts → exact, bit-stable; full-value oracle."""
-    _prep(spark)
-    ev = _read(spark, sf_dir, "events")
+    ev = _events(spark, sf_dir)
     w = Window.partitionBy("user_id")
     wk = F.date_trunc("week", F.col("ts"))
     cohort = F.date_trunc("week", F.min("ts").over(w))
@@ -5598,7 +5678,7 @@ def q_rel_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_REL_RETENTION = f"""
+SQL_REL_RETENTION = oracle(q_rel_retention_cohorts, f"""
 WITH a AS (
   SELECT user_id, date_trunc('week', ts) AS wk,
          date_trunc('week', min(ts) OVER (PARTITION BY user_id)) AS cw
@@ -5608,7 +5688,7 @@ SELECT strftime(cw, '{DUCK_TS_FMT}') AS cohort_week,
        cast(date_diff('day', cw, wk) / 7 AS bigint) AS week_offset,
        count(DISTINCT user_id) AS n_users
 FROM d GROUP BY cw, date_diff('day', cw, wk) / 7
-"""
+""")
 
 
 _JL_DIM, _JL_OUT = 64, 16
@@ -5633,7 +5713,7 @@ def q_ts_ar1(spark: SparkSession, sf_dir: str) -> DataFrame:
         _r(F.col("forecast")).alias("forecast"))
 
 
-SQL_TS_AR1 = f"""{_VALUE_SERIES_SQL}
+SQL_TS_AR1 = oracle(q_ts_ar1, f"""{_VALUE_SERIES_SQL}
 , l AS (
   SELECT conv_id, turn_idx, y,
          lag(y) OVER (PARTITION BY conv_id ORDER BY t, turn_idx)
@@ -5659,7 +5739,7 @@ SELECT conv_id, n, round(ybar, 6) + 0.0 AS ybar,
        round(ybar + (num / nullif(den, 0)) * (ylast - ybar), 6) + 0.0
          AS forecast
 FROM a
-"""
+""")
 
 
 def q_ts_role_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5676,7 +5756,7 @@ def q_ts_role_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
         _r(F.col("p")).alias("p"))
 
 
-SQL_TS_ROLE_TRANSITIONS = """
+SQL_TS_ROLE_TRANSITIONS = oracle(q_ts_role_transitions, """
 WITH t AS (
   SELECT cast(user_id AS varchar) AS conv_id,
          row_number() OVER w - 1 AS turn_idx, event_type AS role
@@ -5694,7 +5774,7 @@ SELECT role, next_role, count(*) AS n_trans,
          + 0.0 AS p
 FROM p WHERE role IS NOT NULL AND next_role IS NOT NULL
 GROUP BY role, next_role
-"""
+""")
 
 
 _FUNNEL_STEPS = ("view", "click", "purchase")
@@ -5714,7 +5794,7 @@ def q_ts_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
           for i in range(1, len(_FUNNEL_STEPS) + 1)])
 
 
-SQL_TS_FUNNEL = f"""
+SQL_TS_FUNNEL = oracle(q_ts_funnel, f"""
 WITH t AS (
   SELECT cast(user_id AS varchar) AS conv_id,
          row_number() OVER w - 1 AS turn_idx, event_type AS role
@@ -5748,7 +5828,7 @@ FROM (SELECT DISTINCT conv_id FROM t) c
 LEFT JOIN s1 ON c.conv_id = s1.conv_id
 LEFT JOIN s2 ON c.conv_id = s2.conv_id
 LEFT JOIN s3 ON c.conv_id = s3.conv_id
-"""
+""")
 
 
 def q_doc_lexical(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5768,7 +5848,7 @@ def q_doc_lexical(spark: SparkSession, sf_dir: str) -> DataFrame:
         _r(F.col("hapax_frac")).alias("hapax_frac"))
 
 
-SQL_DOC_LEXICAL = r"""
+SQL_DOC_LEXICAL = oracle(q_doc_lexical, r"""
 WITH tok AS (
   SELECT doc_id, nullif(t, '') AS token
   FROM (SELECT doc_id,
@@ -5798,7 +5878,7 @@ SELECT doc_id, n_tokens, n_types,
                   THEN hapax / cast(n_types AS double) END, 6) + 0.0
          AS hapax_frac
 FROM a
-"""
+""")
 
 
 _UNPIVOT_FEATS = ("mean", "std", "amplitude")
@@ -5821,7 +5901,7 @@ def q_ts_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     return unpivot_long(wide, _UNPIVOT_FEATS)
 
 
-SQL_TS_UNPIVOT = _VALUE_SERIES_SQL + f"""
+SQL_TS_UNPIVOT = oracle(q_ts_unpivot, _VALUE_SERIES_SQL + f"""
 , w AS (
   SELECT conv_id, 'value' AS channel, '1d' AS tier,
          strftime(date_trunc('day', ts), '{DUCK_TS_FMT}')
@@ -5839,7 +5919,7 @@ SELECT conv_id, channel, tier, window_start, 'std', std FROM w
 UNION ALL
 SELECT conv_id, channel, tier, window_start, 'amplitude', amplitude
 FROM w
-"""
+""")
 
 
 _Z_LOS = [0.0, 1704067200.0]           # value ≥ 0, ts ≥ 2024-01-01
@@ -5876,14 +5956,14 @@ def q_ts_zorder_box(spark: SparkSession, sf_dir: str) -> DataFrame:
         _r(F.col("value")).alias("value"))
 
 
-SQL_TS_ZORDER_BOX = f"""
+SQL_TS_ZORDER_BOX = oracle(q_ts_zorder_box, f"""
 SELECT event_id, cast(user_id AS varchar) AS conv_id,
        strftime(ts, '{DUCK_TS_FMT}') AS ts,
        round(value, 6) + 0.0 AS value
 FROM events
 WHERE value BETWEEN {_Z_BOX['value'][0]} AND {_Z_BOX['value'][1]}
   AND epoch(ts) BETWEEN {_Z_BOX['sec'][0]} AND {_Z_BOX['sec'][1]}
-"""
+""")
 
 
 _LM_ALPHA = 0.5
@@ -5906,7 +5986,7 @@ def q_doc_lm_ppl(spark: SparkSession, sf_dir: str) -> DataFrame:
         _r(F.col("ppl")).alias("ppl"))
 
 
-SQL_DOC_LM_PPL = rf"""
+SQL_DOC_LM_PPL = oracle(q_doc_lm_ppl, rf"""
 WITH d AS (
   SELECT doc_id,
          list_filter(string_split_regex(lower(coalesce(text, '')),
@@ -5944,7 +6024,7 @@ SELECT d.doc_id,
        round(sc.hsum / sc.n_bigrams, 6) + 0.0 AS cross_entropy_bits,
        round(pow(2.0, sc.hsum / sc.n_bigrams), 6) + 0.0 AS ppl
 FROM d LEFT JOIN sc USING (doc_id)
-"""
+""")
 
 
 _DRIFT_EDGES = [5.0, 10.0, 20.0, 40.0, 80.0, 160.0, 320.0]
@@ -6012,6 +6092,9 @@ GROUP BY n_ref, n_cur
 """
 
 
+oracle(q_ts_drift, _drift_sql())
+
+
 def q_emb_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JL random projection 64→16 (seeded Achlioptas ±1 matrix,
     1/√16 = 0.25 exact): pure codegen projection, zero shuffles —
@@ -6044,6 +6127,9 @@ def _jl_sql() -> str:
             f"FROM embeddings)\nSELECT vec_id,\n       {cols}\nFROM e")
 
 
+oracle(q_emb_random_projection, _jl_sql())
+
+
 _BURST_GAP = 14400.0
 _BURST_MIN_RUN = 2
 
@@ -6069,7 +6155,7 @@ def q_ts_bursts(spark: SparkSession, sf_dir: str) -> DataFrame:
         _r(F.col("duration_s")).alias("duration_s"))
 
 
-SQL_TS_BURSTS = f"""{_VALUE_SERIES_SQL}
+SQL_TS_BURSTS = oracle(q_ts_bursts, f"""{_VALUE_SERIES_SQL}
 , p AS (
   SELECT conv_id, turn_idx, t,
          lag(t) OVER w AS pt, lag(turn_idx) OVER w AS pi
@@ -6102,7 +6188,7 @@ SELECT conv_id, start_turn_idx, end_turn_idx, n_turns,
        round(t_end, 6) + 0.0 AS t_end,
        round(t_end - t_start, 6) + 0.0 AS duration_s
 FROM b WHERE n_turns >= {_BURST_MIN_RUN + 1}
-"""
+""")
 
 
 _ZIPF_RANKS = 100
@@ -6123,7 +6209,7 @@ def q_doc_zipf(spark: SparkSession, sf_dir: str) -> DataFrame:
         _r(F.col("r2")).alias("r2"))
 
 
-SQL_DOC_ZIPF = rf"""
+SQL_DOC_ZIPF = oracle(q_doc_zipf, rf"""
 WITH tok AS (
   SELECT unnest(list_filter(
            string_split_regex(lower(coalesce(text, '')),
@@ -6143,7 +6229,7 @@ SELECT cast(count(*) AS bigint) AS n_ranks,
        round(regr_r2(ln(cast(cnt AS double)),
                      ln(cast(rank AS double))), 6) + 0.0 AS r2
 FROM top
-"""
+""")
 
 
 def q_multimodal_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6163,7 +6249,7 @@ def q_multimodal_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
         _r(F.col("peak")).alias("peak"))
 
 
-SQL_MULTIMODAL_AUDIO = """
+SQL_MULTIMODAL_AUDIO = oracle(q_multimodal_audio, """
 WITH meta AS (
   SELECT doc_id, text, length(text) AS n
   FROM documents WHERE doc_id % 3 = 1
@@ -6198,7 +6284,7 @@ SELECT doc_id, cast(max(L) AS bigint) AS n_samples,
          + 0.0 AS rms,
        round(max(abs(i)) / 65536.0, 6) + 0.0 AS peak
 FROM z GROUP BY doc_id
-"""
+""")
 
 
 def q_multimodal_scenecut(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6225,7 +6311,7 @@ def q_multimodal_scenecut(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("mean_mad"))
 
 
-SQL_MULTIMODAL_SCENECUT = """
+SQL_MULTIMODAL_SCENECUT = oracle(q_multimodal_scenecut, """
 WITH meta AS (
   SELECT doc_id, text, length(text) AS n,
          16 + (length(text) % 48) AS w,
@@ -6272,7 +6358,7 @@ SELECT m.doc_id,
              / cast(a.wh * a.n_transitions AS double), 6) + 0.0
          AS mean_mad
 FROM meta m LEFT JOIN agg a USING (doc_id)
-"""
+""")
 
 
 def q_ts_linear_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6283,8 +6369,7 @@ def q_ts_linear_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     betas/R² are one fixed double tree over identical integers in both
     engines — full-value oracle restating the tree verbatim."""
     from cesium_spark.operators.scoring import ols_fit2
-    _prep(spark)
-    ev = _read(spark, sf_dir, "events")
+    ev = _events(spark, sf_dir)
     feats = (ev.groupBy("user_id")
              .agg(F.count(F.lit(1)).cast("long").alias("n_turns"),
                   F.sum(F.when(F.col("event_type") == "purchase", 1)
@@ -6297,7 +6382,7 @@ def q_ts_linear_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
                       _r(F.col("r2")).alias("r2"))
 
 
-SQL_TS_LINEAR_PROBE = """
+SQL_TS_LINEAR_PROBE = oracle(q_ts_linear_probe, """
 WITH feats AS (
   SELECT user_id,
          cast(count(*) AS bigint) AS x1,
@@ -6367,7 +6452,7 @@ SELECT n,
        round(CASE WHEN tss <> 0.0 THEN 1.0 - sse / tss END, 6) + 0.0
          AS r2
 FROM fit
-"""
+""")
 
 
 def q_ts_tool_assoc(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6378,8 +6463,7 @@ def q_ts_tool_assoc(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer min_pair_count, and each measure is one fixed division —
     full-value oracle."""
     from cesium_spark.operators.assoc import association_rules
-    _prep(spark)
-    ev = _read(spark, sf_dir, "events")
+    ev = _events(spark, sf_dir)
     baskets = ev.select(
         "user_id", F.date_trunc("day", F.col("ts")).alias("day"),
         F.col("event_type").alias("item"))
@@ -6392,7 +6476,7 @@ def q_ts_tool_assoc(spark: SparkSession, sf_dir: str) -> DataFrame:
         _r(F.col("lift")).alias("lift"))
 
 
-SQL_TS_TOOL_ASSOC = """
+SQL_TS_TOOL_ASSOC = oracle(q_ts_tool_assoc, """
 WITH b AS (
   SELECT DISTINCT user_id, date_trunc('day', ts) AS day,
          event_type AS item
@@ -6429,7 +6513,7 @@ FROM directed d
 JOIN marg ma ON ma.item = d.antecedent
 JOIN marg mc ON mc.item = d.consequent
 CROSS JOIN tot
-"""
+""")
 
 
 _KM_HORIZON = 172800.0  # 2 days
@@ -6458,7 +6542,7 @@ def q_ts_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
         _r(F.col("survival")).alias("survival"))
 
 
-SQL_TS_SURVIVAL = f"""
+SQL_TS_SURVIVAL = oracle(q_ts_survival, f"""
 WITH t AS (
   SELECT cast(user_id AS varchar) AS conv_id,
          row_number() OVER w - 1 AS turn_idx,
@@ -6510,7 +6594,7 @@ SELECT first_role, round(tt, 6) + 0.0 AS duration,
        cast(n_censored AS bigint) AS n_censored,
        round(survival, 6) + 0.0 AS survival
 FROM s
-"""
+""")
 
 
 _MAHA_THR = 9.21  # chi2_2(0.99)
@@ -6572,6 +6656,9 @@ FROM d GROUP BY conv_id
 """
 
 
+oracle(q_ts_mahalanobis, _maha_sql())
+
+
 def q_ts_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding-window (1h window / 15m hop) streaming aggregation
     replayed via availableNow; append mode emits each of the 4
@@ -6616,7 +6703,7 @@ def q_ts_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
         _r0(F.round(F.col("y_sum"), 4)).alias("y_sum"))
 
 
-SQL_TS_STREAM_SLIDING = f"""
+SQL_TS_STREAM_SLIDING = oracle(q_ts_stream_sliding, f"""
 WITH mx AS (SELECT max(ts) AS m FROM events),
 e AS (
   SELECT cast(user_id AS varchar) AS conv_id, ts, value
@@ -6638,7 +6725,7 @@ SELECT conv_id, strftime(ws, '{DUCK_TS_FMT}') AS window_start,
 FROM w, mx
 GROUP BY conv_id, ws, mx.m
 HAVING ws + INTERVAL 1 HOUR <= mx.m - INTERVAL 7000 SECONDS
-"""
+""")
 
 
 def q_ts_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6655,7 +6742,7 @@ def q_ts_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_starts", "peak_concurrency", "tier")
 
 
-SQL_TS_CONCURRENCY = f"""
+SQL_TS_CONCURRENCY = oracle(q_ts_concurrency, f"""
 WITH spans AS (
   SELECT user_id AS conv, min(ts) AS lo, max(ts) AS hi
   FROM events GROUP BY 1
@@ -6672,7 +6759,7 @@ SELECT strftime(date_trunc('hour', lo), '{DUCK_TS_FMT}')
        cast(max(c) AS bigint) AS peak_concurrency,
        '1h' AS tier
 FROM conc GROUP BY 1
-"""
+""")
 
 
 _FH_DIM = 8
@@ -6734,6 +6821,9 @@ FROM a
 """
 
 
+oracle(q_doc_hash_vectors, _hash_vectors_sql())
+
+
 _BUDGET = 60.0
 
 
@@ -6755,7 +6845,7 @@ def q_ts_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
         _r(F.col("cost_at_cross")).alias("cost_at_cross"))
 
 
-SQL_TS_BUDGET = f"""
+SQL_TS_BUDGET = oracle(q_ts_budget, f"""
 WITH t AS (
   SELECT cast(user_id AS varchar) AS conv_id,
          row_number() OVER w - 1 AS turn_idx,
@@ -6782,7 +6872,7 @@ SELECT conv_id,
        round(min(CASE WHEN cum > {_BUDGET} THEN cum END), 6) + 0.0
          AS cost_at_cross
 FROM c GROUP BY conv_id
-"""
+""")
 
 
 _BUDGET_BPE = 150.0
@@ -6839,6 +6929,9 @@ FROM c GROUP BY conv_id
 """
 
 
+oracle(q_ts_budget_bpe, _budget_bpe_sql())
+
+
 def q_ts_ks_exp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KS goodness-of-fit of inter-arrival gaps vs the exponential
     MLE (λ̂ = m/(t_last−t_first), telescoped): D⁺/D⁻ over the sorted
@@ -6854,7 +6947,7 @@ def q_ts_ks_exp(spark: SparkSession, sf_dir: str) -> DataFrame:
         "reject_95")
 
 
-SQL_TS_KS_EXP = f"""{_VALUE_SERIES_SQL}
+SQL_TS_KS_EXP = oracle(q_ts_ks_exp, f"""{_VALUE_SERIES_SQL}
 , gaps AS (
   SELECT conv_id, turn_idx,
          t - lag(t) OVER (PARTITION BY conv_id ORDER BY t, turn_idx)
@@ -6886,7 +6979,7 @@ SELECT conv_id, cast(m AS bigint) AS n_gaps,
        CASE WHEN m >= 2 AND ks IS NOT NULL
             THEN round(ks - 1.36 / sqrt(m), 6) > 0 END AS reject_95
 FROM a
-"""
+""")
 
 
 def q_ts_rank_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6911,7 +7004,7 @@ def q_ts_rank_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
         _r(F.col("pct_rank")).alias("pct_rank"))
 
 
-SQL_TS_RANK_NORMALIZE = (
+SQL_TS_RANK_NORMALIZE = oracle(q_ts_rank_normalize,
     "WITH lng AS (" + "\n".join(SQL_TS_UNPIVOT.splitlines()) + """
 )
 SELECT conv_id, channel, tier, window_start, feature,
@@ -6949,7 +7042,7 @@ def q_doc_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("rank").cast("int").alias("rank"))
 
 
-SQL_DOC_PMI = rf"""
+SQL_DOC_PMI = oracle(q_doc_pmi, rf"""
 WITH d AS (
   SELECT list_filter(string_split_regex(lower(coalesce(text, '')),
                                         '[ \t\n\r\f]+'),
@@ -6975,7 +7068,7 @@ SELECT w1, w2, cast(c12 AS bigint) AS c12, cast(c1 AS bigint) AS c1,
 FROM (SELECT *, row_number() OVER (ORDER BY pmi DESC, w1, w2) AS rank
       FROM sc)
 WHERE rank <= {_PMI_K}
-"""
+""")
 
 
 def q_ts_calendar_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7001,7 +7094,7 @@ def q_ts_calendar_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
         _r(F.col("y_sum")).alias("y_sum"))
 
 
-SQL_TS_CALENDAR_FOLD = f"""
+SQL_TS_CALENDAR_FOLD = oracle(q_ts_calendar_fold, f"""
 SELECT cast(user_id AS varchar) AS conv_id,
        strftime(date_trunc('month', ts), '{DUCK_TS_FMT}')
          AS window_start,
@@ -7011,7 +7104,7 @@ SELECT cast(user_id AS varchar) AS conv_id,
        round(sum(value), 6) + 0.0 AS y_sum
 FROM events
 GROUP BY 1, 2
-"""
+""")
 
 
 _WS_K = 10
@@ -7039,7 +7132,7 @@ def q_doc_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("sample_rank").cast("int").alias("sample_rank"))
 
 
-SQL_DOC_WEIGHTED_SAMPLE = f"""
+SQL_DOC_WEIGHTED_SAMPLE = oracle(q_doc_weighted_sample, f"""
 WITH d AS (
   SELECT doc_id, lang, n_chars,
          round(ln((('0x' || substr(md5(cast(doc_id AS varchar)
@@ -7057,7 +7150,7 @@ r AS (
 SELECT doc_id, lang, cast(n_chars AS bigint) AS n_chars,
        es_key + 0.0 AS es_key, cast(sample_rank AS int) AS sample_rank
 FROM r WHERE sample_rank <= {_WS_K}
-"""
+""")
 
 
 _BT_MIN_TRAIN = 3
@@ -7081,7 +7174,7 @@ def q_ts_ar1_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
         _r(F.col("rmse")).alias("rmse"))
 
 
-SQL_TS_AR1_BACKTEST = f"""{_VALUE_SERIES_SQL}
+SQL_TS_AR1_BACKTEST = oracle(q_ts_ar1_backtest, f"""{_VALUE_SERIES_SQL}
 , b1 AS (
   SELECT conv_id, t, turn_idx, y,
          lag(y) OVER (PARTITION BY conv_id ORDER BY t, turn_idx)
@@ -7125,7 +7218,7 @@ SELECT conv_id, cast(count(*) AS bigint) AS n,
        round(avg(abs(err)), 6) + 0.0 AS mae,
        round(sqrt(avg(err * err)), 6) + 0.0 AS rmse
 FROM b4 GROUP BY conv_id
-"""
+""")
 
 
 def q_rel_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7136,8 +7229,7 @@ def q_rel_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter on the key). Full-value oracle restates the null-safe
     lag-compare and lead-close verbatim."""
     from cesium_spark.operators.compaction import scd2_intervals
-    _prep(spark)
-    ev = _read(spark, sf_dir, "events")
+    ev = _events(spark, sf_dir)
     out = scd2_intervals(ev, "user_id", "event_type", "ts",
                          ["event_id"])
     return out.select(
@@ -7149,7 +7241,7 @@ def q_rel_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
         "is_current")
 
 
-SQL_REL_SCD2 = f"""
+SQL_REL_SCD2 = oracle(q_rel_scd2, f"""
 WITH o AS (
   SELECT user_id, event_type AS state, ts,
          (event_type IS DISTINCT FROM
@@ -7165,7 +7257,7 @@ SELECT user_id,
        cast(row_number() OVER w2 AS int) AS version,
        (lead(ts) OVER w2) IS NULL AS is_current
 FROM p WINDOW w2 AS (PARTITION BY user_id ORDER BY ts)
-"""
+""")
 
 
 def q_emb_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7207,6 +7299,9 @@ JOIN ({SQL_EMB_COSINE_TOPK}) e USING (vec_id)
 """
 
 
+oracle(q_emb_ivf_recall, _ivf_recall_sql())
+
+
 _CMS_W = 256
 _CMS_D = 4
 
@@ -7237,7 +7332,7 @@ def q_ts_cms_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("cnt").cast("long").alias("cnt"))
 
 
-SQL_TS_CMS_FOLD = f"""
+SQL_TS_CMS_FOLD = oracle(q_ts_cms_fold, f"""
 WITH cells AS (
   SELECT event_type AS role,
          date_trunc('day', ts) AS w,
@@ -7252,7 +7347,7 @@ SELECT role, strftime(w, '{DUCK_TS_FMT}') AS window_start,
        '1d' AS tier, d, cast(col AS bigint) AS col,
        cast(count(*) AS bigint) AS cnt
 FROM cells GROUP BY role, w, d, col
-"""
+""")
 
 
 _LOOP_THRESH = 0.8
@@ -7279,7 +7374,7 @@ def q_ts_loops(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("max_loop_run").cast("long").alias("max_loop_run"))
 
 
-SQL_TS_LOOPS = f"""
+SQL_TS_LOOPS = oracle(q_ts_loops, f"""
 WITH t AS (
   SELECT cast(user_id AS varchar) AS conv_id,
          row_number() OVER w - 1 AS turn_idx,
@@ -7325,7 +7420,7 @@ SELECT conv_id,
        cast(coalesce(max(run) FILTER (WHERE loop_flag), 0) AS bigint)
          AS max_loop_run
 FROM runs GROUP BY conv_id
-"""
+""")
 
 
 _TFIDF_M = 5
@@ -7350,7 +7445,7 @@ def q_doc_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("rank").cast("int").alias("rank"))
 
 
-SQL_DOC_TFIDF = rf"""
+SQL_DOC_TFIDF = oracle(q_doc_tfidf, rf"""
 WITH tok AS (
   SELECT doc_id, nullif(t, '') AS term
   FROM (SELECT doc_id,
@@ -7385,7 +7480,7 @@ SELECT doc_id, term, cast(tf_count AS bigint) AS tf_count,
        cast(doc_frequency AS bigint) AS doc_frequency,
        tfidf + 0.0 AS tfidf, cast(rank AS int) AS rank
 FROM r WHERE rank <= {_TFIDF_M}
-"""
+""")
 
 
 def q_multimodal_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7458,10 +7553,10 @@ db AS (
 ph AS (SELECT doc_id, ahash, dhash FROM ab JOIN db USING (doc_id))"""
 
 
-SQL_MULTIMODAL_PHASH = f"""
+SQL_MULTIMODAL_PHASH = oracle(q_multimodal_phash, f"""
 WITH {_phash_cte()}
 SELECT doc_id, ahash, dhash FROM ph
-"""
+""")
 
 
 def q_multimodal_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7493,7 +7588,7 @@ def q_multimodal_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
                         .alias("n_shared_bands"))
 
 
-SQL_MULTIMODAL_PHASH_PAIRS = f"""
+SQL_MULTIMODAL_PHASH_PAIRS = oracle(q_multimodal_phash_pairs, f"""
 WITH corpus AS (
   SELECT doc_id, text FROM documents
   UNION ALL
@@ -7517,7 +7612,7 @@ g AS (
   FROM j GROUP BY 1, 2
 )
 SELECT id_a, id_b, hamming, n_shared_bands FROM g WHERE hamming <= 3
-"""
+""")
 
 
 def q_ts_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7536,7 +7631,7 @@ def q_ts_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "reject_95")
 
 
-SQL_TS_RUNS = f"""{_VALUE_SERIES_SQL}
+SQL_TS_RUNS = oracle(q_ts_runs, f"""{_VALUE_SERIES_SQL}
 , d AS (
   SELECT conv_id, turn_idx, t, y - lag(y) OVER w AS dd
   FROM series WHERE t IS NOT NULL AND y IS NOT NULL
@@ -7579,7 +7674,7 @@ SELECT conv_id,
                        - 1.96, 6) > 0
        END AS reject_95
 FROM a
-"""
+""")
 
 
 def q_ts_perm_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7597,7 +7692,7 @@ def q_ts_perm_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
         _r(F.col("h_norm")).alias("h_norm"))
 
 
-SQL_TS_PERM_ENTROPY = f"""{_VALUE_SERIES_SQL}
+SQL_TS_PERM_ENTROPY = oracle(q_ts_perm_entropy, f"""{_VALUE_SERIES_SQL}
 , t3 AS (
   SELECT conv_id, y AS y0,
          lead(y, 1) OVER w AS y1,
@@ -7640,7 +7735,7 @@ SELECT conv_id,
              / cast(n_windows AS double) / log2(6.0), 6) + 0.0
          AS h_norm
 FROM a
-"""
+""")
 
 
 def q_ts_pettitt(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7661,7 +7756,7 @@ def q_ts_pettitt(spark: SparkSession, sf_dir: str) -> DataFrame:
         _r(F.col("delta_mean")).alias("delta_mean"))
 
 
-SQL_TS_PETTITT = f"""{_VALUE_SERIES_SQL}
+SQL_TS_PETTITT = oracle(q_ts_pettitt, f"""{_VALUE_SERIES_SQL}
 , r AS (
   SELECT conv_id, turn_idx, t, y,
          2 * rank() OVER (PARTITION BY conv_id ORDER BY y)
@@ -7712,7 +7807,7 @@ SELECT conv_id,
        round((sy_tot - sy) / (cast(n AS double) - k)
              - sy / cast(k AS double), 6) + 0.0 AS delta_mean
 FROM u WHERE rn = 1
-"""
+""")
 
 
 def q_ts_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7731,7 +7826,7 @@ def q_ts_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
         _r(F.col("tau_b"), 9).alias("tau_b"))
 
 
-SQL_TS_MANN_KENDALL = f"""{_VALUE_SERIES_SQL}
+SQL_TS_MANN_KENDALL = oracle(q_ts_mann_kendall, f"""{_VALUE_SERIES_SQL}
 , pairs AS (
   SELECT a.conv_id,
          sum(CASE WHEN b.y > a.y THEN 1
@@ -7773,7 +7868,7 @@ SELECT conv_id, n, s_stat, tied_pairs, var18,
                           - cast(tied_pairs AS double))
                          * ((n * (n - 1)) / 2)) END, 9) + 0.0 AS tau_b
 FROM mk
-"""
+""")
 
 
 def q_ts_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7793,7 +7888,7 @@ def q_ts_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
         _r(F.col("intercept")).alias("intercept"))
 
 
-SQL_TS_THEIL_SEN = f"""{_VALUE_SERIES_SQL}
+SQL_TS_THEIL_SEN = oracle(q_ts_theil_sen, f"""{_VALUE_SERIES_SQL}
 , b AS (
   SELECT conv_id, t, y,
          row_number() OVER wo AS k,
@@ -7830,7 +7925,7 @@ SELECT m.conv_id,
        round(s.slope, 9) + 0.0 AS slope,
        round(m.med_y - s.slope * m.med_t, 6) + 0.0 AS intercept
 FROM med m LEFT JOIN sl s ON m.conv_id = s.conv_id
-"""
+""")
 
 
 def _pq_cb() -> list:
@@ -7905,6 +8000,9 @@ def _pq_codes_sql() -> str:
             f"SELECT vec_id, {cols}, pq_code FROM packed")
 
 
+oracle(q_emb_pq_codes, _pq_codes_sql())
+
+
 def q_emb_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ADC top-10 around the vec_id=0 query under the frozen PQ
     codebooks: per-subspace lookup tables + TakeOrdered, then an exact
@@ -7960,6 +8058,9 @@ FROM top t JOIN e ON t.vec_id = e.vec_id CROSS JOIN q
 """
 
 
+oracle(q_emb_pq_topk, _pq_topk_sql())
+
+
 def q_doc_mojibake(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Encoding-damage detection over a deterministically corrupted
     copy of the corpus (the synthetic documents are clean, so the
@@ -7990,7 +8091,7 @@ def q_doc_mojibake(spark: SparkSession, sf_dir: str) -> DataFrame:
         "is_damaged")
 
 
-SQL_DOC_MOJIBAKE = r"""
+SQL_DOC_MOJIBAKE = oracle(q_doc_mojibake, r"""
 WITH c AS (
   SELECT doc_id,
          CASE
@@ -8028,7 +8129,7 @@ SELECT doc_id, n_chars, n_replacement, n_double_utf8, n_c1,
                        AS double) / cast(n_chars AS double) > 1.0
        END AS is_damaged
 FROM s
-"""
+""")
 
 
 def q_emb_dim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8049,7 +8150,7 @@ def q_emb_dim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         (_r(F.col("variance")) < F.lit(1e-6)).alias("collapsed"))
 
 
-SQL_EMB_DIM_STATS = """
+SQL_EMB_DIM_STATS = oracle(q_emb_dim_stats, """
 WITH x AS (
   SELECT u.val, u.pos
   FROM embeddings e,
@@ -8065,7 +8166,7 @@ SELECT cast(pos AS int) AS dim,
        round(max(val), 6) + 0.0 AS max_val,
        round(var_pop(val), 6) + 0.0 < 1e-6 AS collapsed
 FROM x GROUP BY pos
-"""
+""")
 
 
 def q_ts_stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8121,7 +8222,7 @@ def q_ts_stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         _r(F.col("y_max")).alias("y_max"))
 
 
-SQL_TS_STREAM_ENRICH = f"""
+SQL_TS_STREAM_ENRICH = oracle(q_ts_stream_enrich, f"""
 WITH mx AS (SELECT max(ts) AS m FROM events),
 e AS (
   SELECT c.c_mktsegment,
@@ -8138,7 +8239,7 @@ SELECT c_mktsegment,
 FROM e, mx
 GROUP BY c_mktsegment, ws, mx.m
 HAVING ws + INTERVAL 1 HOUR <= mx.m - INTERVAL 7000 SECONDS
-"""
+""")
 
 
 def q_doc_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8171,7 +8272,7 @@ def q_doc_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("doc_id", "n_lines", "n_removed", "text_clean")
 
 
-SQL_DOC_LINE_DEDUP = """
+SQL_DOC_LINE_DEDUP = oracle(q_doc_line_dedup, """
 WITH p0 AS (
   SELECT doc_id,
          CASE
@@ -8219,7 +8320,7 @@ SELECT p.doc_id,
             - coalesce(r.n_kept, 0) AS bigint) AS n_removed,
        coalesce(r.text_clean, '') AS text_clean
 FROM p LEFT JOIN rebuilt r ON p.doc_id = r.doc_id
-"""
+""")
 
 
 def _ddsketch_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8266,7 +8367,7 @@ def q_ts_ddsketch_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("cnt").cast("long").alias("cnt"))
 
 
-SQL_TS_DDSKETCH_FOLD = f"""{_VALUE_SERIES_SQL.rstrip()},
+SQL_TS_DDSKETCH_FOLD = oracle(q_ts_ddsketch_fold, f"""{_VALUE_SERIES_SQL.rstrip()},
 {_DDSKETCH_PLANT_SQL}
 SELECT conv_id,
        strftime(date_trunc('day', ts), '{DUCK_TS_FMT}') AS window_start,
@@ -8275,7 +8376,7 @@ SELECT conv_id,
 FROM planted
 WHERE y IS NOT NULL
 GROUP BY ALL
-"""
+""")
 
 
 def q_ts_ddsketch_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8313,7 +8414,7 @@ def _dd_mid_list_sql(bkt_bound: int = 700) -> str:
     return "[" + ", ".join(repr(m) for m in mids) + "]"
 
 
-SQL_TS_DDSKETCH_QUANTILE = f"""{_VALUE_SERIES_SQL.rstrip()},
+SQL_TS_DDSKETCH_QUANTILE = oracle(q_ts_ddsketch_quantile, f"""{_VALUE_SERIES_SQL.rstrip()},
 {_DDSKETCH_PLANT_SQL},
 cells AS (
   SELECT conv_id,
@@ -8352,7 +8453,7 @@ SELECT conv_id,
                       THEN est END), 6) + 0.0 AS p95_est
 FROM r
 GROUP BY conv_id, window_start
-"""
+""")
 
 
 def q_doc_ngram_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8378,7 +8479,7 @@ def q_doc_ngram_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
                       _r(F.col("dup_frac")).alias("dup_frac"), "is_dup")
 
 
-SQL_DOC_NGRAM_COVERAGE = """
+SQL_DOC_NGRAM_COVERAGE = oracle(q_doc_ngram_coverage, """
 WITH p AS (
   SELECT doc_id,
          CASE WHEN doc_id % 5 = 0
@@ -8417,7 +8518,7 @@ SELECT p.doc_id,
        coalesce(cast(per.n_dup AS double) / cast(per.n_grams AS double),
                 0.0) >= 0.1 AS is_dup
 FROM p LEFT JOIN per USING (doc_id)
-"""
+""")
 
 
 def q_doc_textrank(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8490,7 +8591,7 @@ FROM pr{k} CROSS JOIN nn
 """
 
 
-SQL_DOC_TEXTRANK = _textrank_oracle_sql(5, 0.85)
+SQL_DOC_TEXTRANK = oracle(q_doc_textrank, _textrank_oracle_sql(5, 0.85))
 
 
 def q_ts_sax_motifs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8509,7 +8610,7 @@ def q_ts_sax_motifs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "discord_word", "discord_count", "discord_pos")
 
 
-SQL_TS_SAX_MOTIFS = f"""{_VALUE_SERIES_SQL}
+SQL_TS_SAX_MOTIFS = oracle(q_ts_sax_motifs, f"""{_VALUE_SERIES_SQL}
 , lt AS (
   SELECT conv_id, t, turn_idx,
          substr('abcd',
@@ -8556,7 +8657,7 @@ SELECT conv_id,
          AS discord_pos
 FROM ranked WHERE rm = 1 OR rd = 1
 GROUP BY conv_id
-"""
+""")
 
 
 def q_rel_tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8594,7 +8695,7 @@ def q_rel_tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
         _r(F.round(F.col("revenue"), 4)).alias("revenue"))
 
 
-SQL_REL_TPCH_Q3 = """
+SQL_REL_TPCH_Q3 = oracle(q_rel_tpch_q3, """
 SELECT o.o_orderkey,
        strftime(o.o_orderdate, '%Y-%m-%d') AS o_orderdate,
        o.o_orderpriority,
@@ -8610,7 +8711,7 @@ GROUP BY o.o_orderkey, o.o_orderdate, o.o_orderpriority
 ORDER BY sum(l.l_extendedprice * (1.0 - l.l_discount)) DESC,
          o.o_orderdate, o.o_orderkey
 LIMIT 10
-"""
+""")
 
 
 def q_rel_tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8667,7 +8768,7 @@ def q_rel_tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.desc("revenue"), "n_name"))
 
 
-SQL_REL_TPCH_Q5 = """
+SQL_REL_TPCH_Q5 = oracle(q_rel_tpch_q5, """
 SELECT n.n_name,
        round(cast(sum(cast(round(l.l_extendedprice * 100.0) AS bigint)
                       * cast(round((1.0 - l.l_discount) * 100.0)
@@ -8685,7 +8786,7 @@ WHERE r.r_name = 'ASIA'
   AND o.o_orderdate < DATE '1997-01-01'
 GROUP BY n.n_name
 ORDER BY revenue DESC, n.n_name
-"""
+""")
 
 
 def q_ts_corr_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8701,7 +8802,7 @@ def q_ts_corr_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
                              min_overlap=10, top_k=20)
 
 
-SQL_TS_CORR_PAIRS = f"""{_VALUE_SERIES_SQL}
+SQL_TS_CORR_PAIRS = oracle(q_ts_corr_pairs, f"""{_VALUE_SERIES_SQL}
 , g AS (
   SELECT conv_id, date_trunc('day', ts) AS day,
          round(avg(y), 6) + 0.0 AS gv
@@ -8724,7 +8825,7 @@ FROM p
 WHERE n_days >= 10 AND r IS NOT NULL
 ORDER BY round(r, 6) + 0.0 DESC, conv_a, conv_b
 LIMIT 20
-"""
+""")
 
 
 def q_ts_disorder(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8737,8 +8838,7 @@ def q_ts_disorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     Lateness values are exact double subtractions; the quantile is
     the shared interpolation. ONE hash exchange."""
     from cesium_spark.streaming.window_delta import disorder_stats
-    _prep(spark)
-    ev = _read(spark, sf_dir, "events")
+    ev = _events(spark, sf_dir)
     sec = F.col("ts").cast("double")
     s = ev.select(
         F.col("user_id").cast("string").alias("conv_id"),
@@ -8753,7 +8853,7 @@ def q_ts_disorder(spark: SparkSession, sf_dir: str) -> DataFrame:
         _r(F.col("late_frac")).alias("late_frac"))
 
 
-SQL_TS_DISORDER = """
+SQL_TS_DISORDER = oracle(q_ts_disorder, """
 WITH s AS (
   SELECT cast(user_id AS varchar) AS conv_id,
          epoch(ts) AS t,
@@ -8777,7 +8877,7 @@ SELECT conv_id,
        round(sum(CASE WHEN late > 0 THEN 1 ELSE 0 END)
              / cast(count(*) AS double), 6) + 0.0 AS late_frac
 FROM l GROUP BY conv_id
-"""
+""")
 
 
 _HW_A, _HW_B, _HW_G, _HW_P = 0.5, 0.25, 0.25, 6
@@ -8870,6 +8970,9 @@ WHERE s.turn_idx < {p}
 """)
 
 
+oracle(q_ts_holt_winters, _hw_sql())
+
+
 def q_multimodal_phash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Image near-dup CLUSTERS: the multimodal_phash_pairs candidate
     pipeline (planted mutated rasters included) fed through the same
@@ -8936,6 +9039,9 @@ FROM lab l JOIN csz c USING (cluster_id)
 """
 
 
+oracle(q_multimodal_phash_clusters, _phash_clusters_sql())
+
+
 def q_emb_anisotropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-row corpus-geometry health: cosine distribution over
     deterministic (rank + 37) mod n pairs — mean near 0 = isotropic,
@@ -8954,7 +9060,7 @@ def q_emb_anisotropy(spark: SparkSession, sf_dir: str) -> DataFrame:
         _r(F.col("cos_p95")).alias("cos_p95"))
 
 
-SQL_EMB_ANISOTROPY = """
+SQL_EMB_ANISOTROPY = oracle(q_emb_anisotropy, """
 WITH v AS (
   SELECT vec_id,
          CAST(embedding AS DOUBLE[]) AS v,
@@ -8984,7 +9090,7 @@ SELECT cast(count(*) AS bigint) AS n_pairs,
        round(quantile_cont(c, 0.5), 6) + 0.0 AS cos_p50,
        round(quantile_cont(c, 0.95), 6) + 0.0 AS cos_p95
 FROM p
-"""
+""")
 
 
 def q_ts_forecast_score(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -9031,6 +9137,9 @@ FROM l GROUP BY conv_id
 """
 
 
+oracle(q_ts_forecast_score, _forecast_score_sql())
+
+
 _GRAPH_UND_SQL = """
 WITH RECURSIVE tok AS (
   SELECT doc_id, u.t AS tok, u.pos
@@ -9064,7 +9173,7 @@ def q_doc_graph_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("v", F.col("hop").cast("long").alias("hop"))
 
 
-SQL_DOC_GRAPH_BFS = _GRAPH_UND_SQL + """,
+SQL_DOC_GRAPH_BFS = oracle(q_doc_graph_bfs, _GRAPH_UND_SQL + """,
 sym AS (
   SELECT a, b FROM und UNION ALL SELECT b, a FROM und
 ),
@@ -9075,7 +9184,7 @@ walk AS (
   WHERE w.hop < 20
 )
 SELECT v, cast(min(hop) AS bigint) AS hop FROM walk GROUP BY v
-"""
+""")
 
 
 def q_doc_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -9094,7 +9203,7 @@ def q_doc_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
                       _r(F.col("assortativity")).alias("assortativity"))
 
 
-SQL_DOC_ASSORTATIVITY = _GRAPH_UND_SQL + """,
+SQL_DOC_ASSORTATIVITY = oracle(q_doc_assortativity, _GRAPH_UND_SQL + """,
 deg AS (
   SELECT v, cast(count(*) AS bigint) AS deg FROM (
     SELECT a AS v FROM und UNION ALL SELECT b FROM und) GROUP BY 1
@@ -9136,7 +9245,7 @@ SELECT (SELECT cast(count(DISTINCT v) AS bigint) FROM (
                   THEN cov / sqrt(vx * vy) END, 6) + 0.0
          AS assortativity
 FROM v
-"""
+""")
 
 
 def q_ts_variance_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -9148,15 +9257,7 @@ def q_ts_variance_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     verbatim in SQL (lag windows + one grouped aggregate on DuckDB).
     Constant series and n ≤ q come back NULL, never ±inf."""
     from cesium_spark.operators.seriesstats import variance_ratio
-    _prep(spark)
-    ev = _read(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    tok = F.size(F.split(F.trim(F.col("props")), r"\s+"))
-    series = ev.select(
-        F.col("user_id").cast("string").alias("conv_id"),
-        (F.row_number().over(w) - 1).cast("int").alias("turn_idx"),
-        (F.row_number().over(w) - 1).cast("double").alias("t"),
-        tok.cast("long").alias("y"))
+    series = _tok_series(spark, sf_dir)
     out = variance_ratio(series, q=4)
     return out.select(
         "conv_id", "n_points", "drift", "a_num", "c_num",
@@ -9164,14 +9265,7 @@ def q_ts_variance_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
         _r(F.col("z")).alias("z"))
 
 
-SQL_TS_VARIANCE_RATIO = """
-WITH s AS (
-  SELECT cast(user_id AS varchar) AS conv_id,
-         row_number() OVER w - 1 AS turn_idx,
-         cast(len(string_split_regex(trim(props), '\\s+')) AS bigint) AS y
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-),
+SQL_TS_VARIANCE_RATIO = oracle(q_ts_variance_ratio, _tok_series_sql() + """,
 l AS (
   SELECT conv_id, y,
          lag(y, 1) OVER w2 AS y1,
@@ -9215,7 +9309,7 @@ SELECT conv_id,
              / sqrt((2.0 * 7.0 * 3.0 / 12.0)
                     / cast(n_inc AS double)) END, 6) + 0.0 AS z
 FROM g
-"""
+""")
 
 
 def q_ts_hurst(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -9228,15 +9322,7 @@ def q_ts_hurst(spark: SparkSession, sf_dir: str) -> DataFrame:
     on both sides.  The oracle replays blocks, windows, fold, and
     slope verbatim in DuckDB."""
     from cesium_spark.operators.seriesstats import hurst_rs
-    _prep(spark)
-    ev = _read(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    tok = F.size(F.split(F.trim(F.col("props")), r"\s+"))
-    series = ev.select(
-        F.col("user_id").cast("string").alias("conv_id"),
-        (F.row_number().over(w) - 1).cast("int").alias("turn_idx"),
-        (F.row_number().over(w) - 1).cast("double").alias("t"),
-        tok.cast("long").alias("y"))
+    series = _tok_series(spark, sf_dir)
     out = hurst_rs(series, windows=(8, 16, 32, 64))
     return out.select(
         "conv_id", "n_points",
@@ -9244,15 +9330,9 @@ def q_ts_hurst(spark: SparkSession, sf_dir: str) -> DataFrame:
         _r(F.col("hurst")).alias("hurst"))
 
 
-SQL_TS_HURST = """
-WITH s AS (
-  SELECT cast(user_id AS varchar) AS conv_id,
-         row_number() OVER w - 1 AS rk,
-         cast(len(string_split_regex(trim(props), '\\s+')) AS bigint) AS y,
-         count(*) OVER (PARTITION BY user_id) AS n
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-),
+SQL_TS_HURST = oracle(q_ts_hurst, _tok_series_sql(
+    "row_number() OVER w - 1 AS rk",
+    "count(*) OVER (PARTITION BY user_id) AS n") + """,
 ex AS (
   SELECT conv_id, n, w, rk // w AS block, rk % w + 1 AS j, y
   FROM s CROSS JOIN (SELECT unnest([8, 16, 32, 64]) AS w) g
@@ -9302,7 +9382,7 @@ SELECT conv_id,
        round(CASE WHEN rs_8 IS NOT NULL AND rs_16 IS NOT NULL AND rs_32 IS NOT NULL AND rs_64 IS NOT NULL THEN
              (-0.432808512266689) * ln(rs_8) + (-0.14426950408889622) * ln(rs_16) + (0.14426950408889658) * ln(rs_32) + (0.43280851226668915) * ln(rs_64) END, 6) + 0.0 AS hurst
 FROM wide
-"""
+""")
 
 
 def q_ts_pacf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -9313,15 +9393,7 @@ def q_ts_pacf(spark: SparkSession, sf_dir: str) -> DataFrame:
     verbatim in SQL. Constant / too-short / |r1|=1 series come back
     NULL, never inf."""
     from cesium_spark.operators.seriesstats import pacf3
-    _prep(spark)
-    ev = _read(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    tok = F.size(F.split(F.trim(F.col("props")), r"\s+"))
-    series = ev.select(
-        F.col("user_id").cast("string").alias("conv_id"),
-        (F.row_number().over(w) - 1).cast("int").alias("turn_idx"),
-        (F.row_number().over(w) - 1).cast("double").alias("t"),
-        tok.cast("long").alias("y"))
+    series = _tok_series(spark, sf_dir)
     out = pacf3(series)
     return out.select(
         "conv_id", "n",
@@ -9333,14 +9405,7 @@ def q_ts_pacf(spark: SparkSession, sf_dir: str) -> DataFrame:
         _r(F.col("pacf3"), 9).alias("pacf3"))
 
 
-SQL_TS_PACF = """
-WITH s AS (
-  SELECT cast(user_id AS varchar) AS conv_id,
-         row_number() OVER w - 1 AS turn_idx,
-         cast(len(string_split_regex(trim(props), '\\s+')) AS bigint) AS y
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-),
+SQL_TS_PACF = oracle(q_ts_pacf, _tok_series_sql() + """,
 l AS (
   SELECT conv_id, y,
          lag(y, 1) OVER w2 AS l1,
@@ -9391,7 +9456,7 @@ SELECT conv_id, cast(n AS bigint) AS n,
              (r3 - p21 * r2 - pacf2 * r1)
              / (1.0 - p21 * r1 - pacf2 * r2) END, 9) + 0.0 AS pacf3
 FROM p3
-"""
+""")
 
 
 def q_doc_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -9409,7 +9474,7 @@ def q_doc_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("u", "v", "n_common", _r(F.col("aa")).alias("aa"))
 
 
-SQL_DOC_ADAMIC_ADAR = """
+SQL_DOC_ADAMIC_ADAR = oracle(q_doc_adamic_adar, """
 WITH tok AS (
   SELECT doc_id, u.t AS tok, u.pos
   FROM (SELECT doc_id,
@@ -9459,7 +9524,7 @@ SELECT u, z AS v, cast(n_common AS bigint) AS n_common,
 FROM cand
 ORDER BY round(aa, 6) DESC, u, z
 LIMIT 50
-"""
+""")
 
 
 def q_emb_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -9533,6 +9598,9 @@ FROM n LEFT JOIN rem ON n.vec_id = rem.vec_id
 """
 
 
+oracle(q_emb_semdedup, _semdedup_sql())
+
+
 def q_rel_tpch_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q6 (forecasting revenue change): the canonical
     scan-filter-aggregate — no join at all, so the WHOLE query is one
@@ -9563,7 +9631,7 @@ def q_rel_tpch_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_items")
 
 
-SQL_REL_TPCH_Q6 = """
+SQL_REL_TPCH_Q6 = oracle(q_rel_tpch_q6, """
 SELECT round(sum(cast(round(l_extendedprice * 100.0) AS bigint)
                  * cast(round(l_discount * 100.0) AS bigint))
              / 10000.0, 4) + 0.0 AS revenue,
@@ -9573,7 +9641,7 @@ WHERE l_shipdate >= timestamp '1996-01-01 00:00:00'
   AND l_shipdate < timestamp '1997-01-01 00:00:00'
   AND cast(round(l_discount * 100.0) AS bigint) BETWEEN 5 AND 7
   AND l_quantity < 24
-"""
+""")
 
 
 def q_rel_tpch_q14(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -9612,7 +9680,7 @@ def q_rel_tpch_q14(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_items")
 
 
-SQL_REL_TPCH_Q14 = """
+SQL_REL_TPCH_Q14 = oracle(q_rel_tpch_q14, """
 WITH j AS (
   SELECT cast(round(l_extendedprice * 100.0) AS bigint)
            * cast(round((1.0 - l_discount) * 100.0) AS bigint) AS rev_i,
@@ -9634,7 +9702,7 @@ SELECT round(CASE WHEN total_i > 0 THEN
        round(cast(total_i AS double) / 10000.0, 4) + 0.0 AS total_revenue,
        n_items
 FROM g
-"""
+""")
 
 
 def q_ts_spearman(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -9651,7 +9719,7 @@ def q_ts_spearman(spark: SparkSession, sf_dir: str) -> DataFrame:
         _r(F.col("rho"), 9).alias("rho"))
 
 
-SQL_TS_SPEARMAN = _SERIES_SQL + f"""
+SQL_TS_SPEARMAN = oracle(q_ts_spearman, _SERIES_SQL + f"""
 , aligned AS (
   SELECT conv_id, turn_idx,
          max(CASE WHEN channel = '{_CORR_CH[0]}' THEN y END) AS ya,
@@ -9694,7 +9762,7 @@ SELECT conv_id, cast(n_pairs AS bigint) AS n_pairs,
                        - cast(sy AS double) * cast(sy AS double)))
              END, 9) + 0.0 AS rho
 FROM g
-"""
+""")
 
 
 def q_ts_dialogue(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -9711,7 +9779,7 @@ def q_ts_dialogue(spark: SparkSession, sf_dir: str) -> DataFrame:
         "tool_turns", "tok_total", "top_role", "top_role_turns")
 
 
-SQL_TS_DIALOGUE = """
+SQL_TS_DIALOGUE = oracle(q_ts_dialogue, """
 WITH t AS (
   SELECT cast(user_id AS varchar) AS conv_id,
          row_number() OVER w - 1 AS turn_idx,
@@ -9766,7 +9834,7 @@ SELECT g.conv_id,
        tr.top_role,
        cast(top_role_turns AS bigint) AS top_role_turns
 FROM g JOIN tr USING (conv_id)
-"""
+""")
 
 
 def q_ts_role_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -9787,7 +9855,7 @@ def q_ts_role_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
         _r(F.col("perplexity"), 9).alias("perplexity"))
 
 
-SQL_TS_ROLE_ENTROPY = """
+SQL_TS_ROLE_ENTROPY = oracle(q_ts_role_entropy, """
 WITH tr AS (
   SELECT cast(user_id AS varchar) AS conv_id,
          row_number() OVER w - 1 AS turn_idx,
@@ -9843,7 +9911,7 @@ SELECT cast(g.n_transitions AS bigint) AS n_transitions,
        round(g.h_next - g.h_cond, 9) + 0.0 AS mi,
        round(exp(g.h_cond), 9) + 0.0 AS perplexity
 FROM g, s
-"""
+""")
 
 
 def q_ts_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -9852,28 +9920,13 @@ def q_ts_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     collapses to running-sum-minus-running-min, so every statistic is
     an exact int64 window expression replayed verbatim in SQL."""
     from cesium_spark.operators.seriesstats import cusum
-    _prep(spark)
-    ev = _read(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    tok = F.size(F.split(F.trim(F.col("props")), r"\s+"))
-    series = ev.select(
-        F.col("user_id").cast("string").alias("conv_id"),
-        (F.row_number().over(w) - 1).cast("int").alias("turn_idx"),
-        (F.row_number().over(w) - 1).cast("double").alias("t"),
-        tok.cast("long").alias("y"))
+    series = _tok_series(spark, sf_dir)
     out = cusum(series, target=5, slack=1, h=20)
     return out.select("conv_id", "n", "s_up_max", "s_dn_max",
                       "crossed_up", "crossed_dn", "first_up", "first_dn")
 
 
-SQL_TS_CUSUM = """
-WITH s AS (
-  SELECT cast(user_id AS varchar) AS conv_id,
-         row_number() OVER w - 1 AS turn_idx,
-         cast(len(string_split_regex(trim(props), '\\s+')) AS bigint) AS y
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-),
+SQL_TS_CUSUM = oracle(q_ts_cusum, _tok_series_sql() + """,
 a AS (
   SELECT conv_id, turn_idx,
          sum(y - 5 - 1) OVER wr AS av,
@@ -9905,7 +9958,7 @@ SELECT conv_id, cast(n AS bigint) AS n,
        cast(first_up AS int) AS first_up,
        cast(first_dn AS int) AS first_dn
 FROM g
-"""
+""")
 
 
 def q_ts_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -9914,27 +9967,13 @@ def q_ts_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     ONE terminal division, tie order provably irrelevant. Oracle
     replays rank and sums verbatim."""
     from cesium_spark.operators.seriesstats import gini_concentration
-    _prep(spark)
-    ev = _read(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    tok = F.size(F.split(F.trim(F.col("props")), r"\s+"))
-    series = ev.select(
-        F.col("user_id").cast("string").alias("conv_id"),
-        (F.row_number().over(w) - 1).cast("int").alias("turn_idx"),
-        tok.cast("long").alias("y"))
+    series = _tok_series(spark, sf_dir)
     out = gini_concentration(series)
     return out.select("conv_id", "n", "total",
                       _r(F.col("gini"), 9).alias("gini"))
 
 
-SQL_TS_GINI = """
-WITH s AS (
-  SELECT cast(user_id AS varchar) AS conv_id,
-         row_number() OVER w - 1 AS turn_idx,
-         cast(len(string_split_regex(trim(props), '\\s+')) AS bigint) AS y
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-),
+SQL_TS_GINI = oracle(q_ts_gini, _tok_series_sql() + """,
 r AS (
   SELECT conv_id, y,
          row_number() OVER (PARTITION BY conv_id
@@ -9952,7 +9991,7 @@ SELECT conv_id, cast(n AS bigint) AS n,
              cast(wsum - (n + 1) * total AS double)
              / cast(n * total AS double) END, 9) + 0.0 AS gini
 FROM g
-"""
+""")
 
 
 def q_ts_hac_se(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -9963,15 +10002,7 @@ def q_ts_hac_se(spark: SparkSession, sf_dir: str) -> DataFrame:
     clamp (greatest() skips NULLs — a too-short series must surface
     NULL, never an understated 0 error bar)."""
     from cesium_spark.operators.seriesstats import hac_mean_se
-    _prep(spark)
-    ev = _read(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    tok = F.size(F.split(F.trim(F.col("props")), r"\s+"))
-    series = ev.select(
-        F.col("user_id").cast("string").alias("conv_id"),
-        (F.row_number().over(w) - 1).cast("int").alias("turn_idx"),
-        (F.row_number().over(w) - 1).cast("double").alias("t"),
-        tok.cast("long").alias("y"))
+    series = _tok_series(spark, sf_dir)
     out = hac_mean_se(series, max_lag=3)
     return out.select(
         "conv_id", "n",
@@ -9981,14 +10012,7 @@ def q_ts_hac_se(spark: SparkSession, sf_dir: str) -> DataFrame:
         _r(F.col("inflation"), 9).alias("inflation"))
 
 
-SQL_TS_HAC_SE = """
-WITH s AS (
-  SELECT cast(user_id AS varchar) AS conv_id,
-         row_number() OVER w - 1 AS turn_idx,
-         cast(len(string_split_regex(trim(props), '\\s+')) AS bigint) AS y
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-),
+SQL_TS_HAC_SE = oracle(q_ts_hac_se, _tok_series_sql() + """,
 l AS (
   SELECT conv_id, y,
          lag(y, 1) OVER w2 AS l1,
@@ -10032,7 +10056,7 @@ SELECT conv_id, cast(n AS bigint) AS n,
              sqrt(CASE WHEN lrv_num < 0 THEN 0.0 ELSE lrv_num END
                   / cast(n0 AS double)) END, 9) + 0.0 AS inflation
 FROM e
-"""
+""")
 
 
 def q_rel_tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -10077,7 +10101,7 @@ def q_rel_tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_name", "n_items")
 
 
-SQL_REL_TPCH_Q10 = """
+SQL_REL_TPCH_Q10 = oracle(q_rel_tpch_q10, """
 WITH li AS (
   SELECT l_orderkey,
          cast(round(l_extendedprice * 100.0) AS bigint)
@@ -10104,7 +10128,7 @@ SELECT c_custkey, c_name,
        round(c_acctbal, 2) + 0.0 AS c_acctbal,
        n_name, n_items
 FROM g
-"""
+""")
 
 
 def q_emb_mmr(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -10176,6 +10200,9 @@ FROM sel{k}
     return "".join(parts)
 
 
+oracle(q_emb_mmr, _mmr_sql())
+
+
 def q_ts_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First-half vs second-half two-sample KS per conversation over
     the integer tokens-per-turn series: exact int64 ECDF-difference
@@ -10184,15 +10211,7 @@ def q_ts_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     the one-term Kolmogorov p bound. Oracle replays split, frames,
     and trees verbatim."""
     from cesium_spark.operators.seriesstats import ks_two_sample
-    _prep(spark)
-    ev = _read(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    tok = F.size(F.split(F.trim(F.col("props")), r"\s+"))
-    series = ev.select(
-        F.col("user_id").cast("string").alias("conv_id"),
-        (F.row_number().over(w) - 1).cast("int").alias("turn_idx"),
-        (F.row_number().over(w) - 1).cast("double").alias("t"),
-        tok.cast("long").alias("y"))
+    series = _tok_series(spark, sf_dir)
     out = ks_two_sample(series)
     return out.select(
         "conv_id", "n", "n1", "n2", "d_num",
@@ -10201,15 +10220,9 @@ def q_ts_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         _r(F.col("p_bound"), 9).alias("p_bound"))
 
 
-SQL_TS_KS_TWO_SAMPLE = """
-WITH s AS (
-  SELECT cast(user_id AS varchar) AS conv_id,
-         row_number() OVER w - 1 AS rk,
-         cast(len(string_split_regex(trim(props), '\\s+')) AS bigint) AS y,
-         count(*) OVER (PARTITION BY user_id) AS cnt
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-),
+SQL_TS_KS_TWO_SAMPLE = oracle(q_ts_ks_two_sample, _tok_series_sql(
+    "row_number() OVER w - 1 AS rk",
+    "count(*) OVER (PARTITION BY user_id) AS cnt") + """,
 h AS (
   SELECT conv_id, y, cnt, cnt // 2 AS n1,
          CASE WHEN rk >= cnt // 2 THEN 1 ELSE 0 END AS hh
@@ -10255,7 +10268,7 @@ SELECT conv_id, cast(n AS bigint) AS n,
                             + cast(n - n1 AS double))))))
              END, 9) + 0.0 AS p_bound
 FROM g
-"""
+""")
 
 
 def q_ts_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -10265,8 +10278,7 @@ def q_ts_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact-int six-sum Pearson over consecutive-gap pairs. Oracle
     replays grid, lead pairing, and trees verbatim."""
     from cesium_spark.operators.seriesstats import burstiness
-    _prep(spark)
-    ev = _read(spark, sf_dir, "events")
+    ev = _events(spark, sf_dir)
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     sec = F.col("ts").cast("double")
     gap = F.round(sec - F.lag(sec).over(w), 0).cast("long")
@@ -10284,7 +10296,7 @@ def q_ts_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
         _r(F.col("m"), 9).alias("m"))
 
 
-SQL_TS_BURSTINESS = """
+SQL_TS_BURSTINESS = oracle(q_ts_burstiness, """
 WITH s AS (
   SELECT cast(user_id AS varchar) AS conv_id,
          row_number() OVER w - 1 AS turn_idx,
@@ -10331,7 +10343,7 @@ SELECT conv_id, cast(n AS bigint) AS n_gaps,
                        - cast(sy AS double) * cast(sy AS double)))
              END, 9) + 0.0 AS m
 FROM a
-"""
+""")
 
 
 def q_doc_yules_k(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -10349,7 +10361,7 @@ def q_doc_yules_k(spark: SparkSession, sf_dir: str) -> DataFrame:
         _r(F.col("herdan_c"), 9).alias("herdan_c"))
 
 
-SQL_DOC_YULES_K = r"""
+SQL_DOC_YULES_K = oracle(q_doc_yules_k, r"""
 WITH tok AS (
   SELECT doc_id, nullif(t, '') AS token
   FROM (SELECT doc_id,
@@ -10381,7 +10393,7 @@ SELECT doc_id, n_tokens, n_types, sum_c2,
              ln(cast(n_types AS double)) / ln(cast(n_tokens AS double))
              END, 9) + 0.0 AS herdan_c
 FROM a
-"""
+""")
 
 
 def q_doc_fightin_words(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -10402,7 +10414,7 @@ def q_doc_fightin_words(spark: SparkSession, sf_dir: str) -> DataFrame:
                       _r(F.col("z"), 9).alias("z"))
 
 
-SQL_DOC_FIGHTIN_WORDS = r"""
+SQL_DOC_FIGHTIN_WORDS = oracle(q_doc_fightin_words, r"""
 WITH tok AS (
   SELECT nullif(t, '') AS token, source AS g
   FROM (SELECT source,
@@ -10442,7 +10454,7 @@ SELECT token, c_a, c_b,
        round(delta, 9) + 0.0 AS delta,
        round(delta / sqrt(var), 9) + 0.0 AS z
 FROM g
-"""
+""")
 
 
 def q_ts_trimmed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -10451,14 +10463,7 @@ def q_ts_trimmed(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact int64 conditional sums and boundary picks, one division
     each. Oracle replays ranks, cuts, and sums verbatim."""
     from cesium_spark.operators.seriesstats import trimmed_stats
-    _prep(spark)
-    ev = _read(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    tok = F.size(F.split(F.trim(F.col("props")), r"\s+"))
-    series = ev.select(
-        F.col("user_id").cast("string").alias("conv_id"),
-        (F.row_number().over(w) - 1).cast("int").alias("turn_idx"),
-        tok.cast("long").alias("y"))
+    series = _tok_series(spark, sf_dir)
     out = trimmed_stats(series, trim=0.1)
     return out.select(
         "conv_id", "n", "k", "lo_cut", "hi_cut",
@@ -10466,14 +10471,7 @@ def q_ts_trimmed(spark: SparkSession, sf_dir: str) -> DataFrame:
         _r(F.col("winsor_mean"), 9).alias("winsor_mean"))
 
 
-SQL_TS_TRIMMED = """
-WITH s AS (
-  SELECT cast(user_id AS varchar) AS conv_id,
-         row_number() OVER w - 1 AS turn_idx,
-         cast(len(string_split_regex(trim(props), '\\s+')) AS bigint) AS y
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-),
+SQL_TS_TRIMMED = oracle(q_ts_trimmed, _tok_series_sql() + """,
 r AS (
   SELECT conv_id, y,
          row_number() OVER (PARTITION BY conv_id
@@ -10503,7 +10501,7 @@ SELECT conv_id, cast(n AS bigint) AS n, cast(k AS bigint) AS k,
              cast(mid_sum + k * lo_cut + k * hi_cut AS double)
              / cast(n AS double) END, 9) + 0.0 AS winsor_mean
 FROM g
-"""
+""")
 
 
 def q_ts_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -10513,8 +10511,7 @@ def q_ts_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     label: micro-unit integer grid, exact per-bin counts, ordered
     ECE fold. Oracle replays grid, binning, and folds verbatim."""
     from cesium_spark.operators.scoring import calibration_bins
-    _prep(spark)
-    ev = _read(spark, sf_dir, "events")
+    ev = _events(spark, sf_dir)
     scored = ev.select(
         (F.col("value") / (F.col("value") + F.lit(50.0))).alias("score"),
         (F.col("event_type") == "purchase").alias("label"))
@@ -10529,7 +10526,7 @@ def q_ts_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         _r(F.col("brier"), 9).alias("brier"))
 
 
-SQL_TS_CALIBRATION = """
+SQL_TS_CALIBRATION = oracle(q_ts_calibration, """
 WITH b AS (
   SELECT cast(round((value / (value + 50.0)) * 1000000.0) AS bigint)
            AS s,
@@ -10574,7 +10571,7 @@ SELECT bin, cast(n AS bigint) AS n, cast(n_pos AS bigint) AS n_pos,
              / (cast(nt AS double) * 1000000000000.0), 9)
          + 0.0 AS brier
 FROM f
-"""
+""")
 
 
 def q_ts_tail_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -10585,14 +10582,7 @@ def q_ts_tail_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     consistency ratio with the constant inlined as the same Python
     float literal. Oracle replays ranks, sums, and trees verbatim."""
     from cesium_spark.operators.seriesstats import tail_stats
-    _prep(spark)
-    ev = _read(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    tok = F.size(F.split(F.trim(F.col("props")), r"\s+"))
-    series = ev.select(
-        F.col("user_id").cast("string").alias("conv_id"),
-        (F.row_number().over(w) - 1).cast("int").alias("turn_idx"),
-        tok.cast("long").alias("y"))
+    series = _tok_series(spark, sf_dir)
     out = tail_stats(series)
     return out.select(
         "conv_id", "n", "q1", "q2", "q3",
@@ -10602,14 +10592,7 @@ def q_ts_tail_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         _r(F.col("tail_ratio"), 9).alias("tail_ratio"))
 
 
-SQL_TS_TAIL_STATS = """
-WITH s AS (
-  SELECT cast(user_id AS varchar) AS conv_id,
-         row_number() OVER w - 1 AS turn_idx,
-         cast(len(string_split_regex(trim(props), '\\s+')) AS bigint) AS y
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-),
+SQL_TS_TAIL_STATS = oracle(q_ts_tail_stats, _tok_series_sql() + """,
 r AS (
   SELECT conv_id, y,
          row_number() OVER (PARTITION BY conv_id
@@ -10657,7 +10640,7 @@ SELECT conv_id, cast(n AS bigint) AS n,
              / (1.3489795003921634 * sqrt(m2 / nd)) END, 9)
          + 0.0 AS tail_ratio
 FROM m
-"""
+""")
 
 
 def q_ts_sprt(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -10667,8 +10650,7 @@ def q_ts_sprt(spark: SparkSession, sf_dir: str) -> DataFrame:
     IDENTICAL double literals on both sides, first-crossing-wins
     decision rule. Oracle replays the walk verbatim."""
     from cesium_spark.operators.seriesstats import sprt_bernoulli
-    _prep(spark)
-    ev = _read(spark, sf_dir, "events")
+    ev = _events(spark, sf_dir)
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     series = ev.select(
         F.col("user_id").cast("string").alias("conv_id"),
@@ -10683,7 +10665,7 @@ def q_ts_sprt(spark: SparkSession, sf_dir: str) -> DataFrame:
         _r(F.col("llr_final"), 9).alias("llr_final"))
 
 
-SQL_TS_SPRT = """
+SQL_TS_SPRT = oracle(q_ts_sprt, """
 WITH s AS (
   SELECT cast(user_id AS varchar) AS conv_id,
          row_number() OVER w - 1 AS turn_idx,
@@ -10718,7 +10700,7 @@ SELECT conv_id, cast(n AS bigint) AS n,
                  WHEN t0 IS NOT NULL THEN t0 END AS int) AS decided_at,
        round(llr_final, 9) + 0.0 AS llr_final
 FROM g
-"""
+""")
 
 
 def q_ts_records(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -10728,29 +10710,14 @@ def q_ts_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     as an ordered 1/i fold. Oracle replays frames and folds
     verbatim."""
     from cesium_spark.operators.seriesstats import record_stats
-    _prep(spark)
-    ev = _read(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    tok = F.size(F.split(F.trim(F.col("props")), r"\s+"))
-    series = ev.select(
-        F.col("user_id").cast("string").alias("conv_id"),
-        (F.row_number().over(w) - 1).cast("int").alias("turn_idx"),
-        (F.row_number().over(w) - 1).cast("double").alias("t"),
-        tok.cast("long").alias("y"))
+    series = _tok_series(spark, sf_dir)
     out = record_stats(series)
     return out.select("conv_id", "n", "rec_up", "rec_dn",
                       "longest_up_run", "d",
                       _r(F.col("z"), 9).alias("z"))
 
 
-SQL_TS_RECORDS = """
-WITH s AS (
-  SELECT cast(user_id AS varchar) AS conv_id,
-         row_number() OVER w - 1 AS turn_idx,
-         cast(len(string_split_regex(trim(props), '\\s+')) AS bigint) AS y
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-),
+SQL_TS_RECORDS = oracle(q_ts_records, _tok_series_sql() + """,
 r AS (
   SELECT conv_id, turn_idx, y,
          row_number() OVER wo AS i,
@@ -10798,7 +10765,7 @@ SELECT conv_id, cast(n AS bigint) AS n,
              cast(rec_up - rec_dn AS double)
              / sqrt(2.0 * (hn - 1.0)) END, 9) + 0.0 AS z
 FROM g
-"""
+""")
 
 
 def q_emb_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -10820,7 +10787,7 @@ def q_emb_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         _r(F.col("top_gap"), 9).alias("top_gap"))
 
 
-SQL_EMB_DRIFT = """
+SQL_EMB_DRIFT = oracle(q_emb_drift, """
 WITH t AS (
   SELECT CASE WHEN vec_id % 2 = 0 THEN 'a' ELSE 'b' END AS tag,
          u.pos - 1 AS pos,
@@ -10876,7 +10843,7 @@ SELECT sc.n_a, sc.n_b,
        td.top_gap_dim,
        round(sc.top_gap, 9) + 0.0 AS top_gap
 FROM sc, td
-"""
+""")
 
 
 def q_ts_hill(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -10886,14 +10853,7 @@ def q_ts_hill(spark: SparkSession, sf_dir: str) -> DataFrame:
     fold, one terminal division. Oracle replays ranks and fold
     verbatim."""
     from cesium_spark.operators.seriesstats import hill_tail
-    _prep(spark)
-    ev = _read(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    tok = F.size(F.split(F.trim(F.col("props")), r"\s+"))
-    series = ev.select(
-        F.col("user_id").cast("string").alias("conv_id"),
-        (F.row_number().over(w) - 1).cast("int").alias("turn_idx"),
-        tok.cast("long").alias("y"))
+    series = _tok_series(spark, sf_dir)
     out = hill_tail(series, k=20)
     return out.select(
         "conv_id", "n", "k", "threshold",
@@ -10901,14 +10861,7 @@ def q_ts_hill(spark: SparkSession, sf_dir: str) -> DataFrame:
         _r(F.col("alpha"), 9).alias("alpha"))
 
 
-SQL_TS_HILL = """
-WITH s AS (
-  SELECT cast(user_id AS varchar) AS conv_id,
-         row_number() OVER w - 1 AS turn_idx,
-         cast(len(string_split_regex(trim(props), '\\s+')) AS bigint) AS y
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-),
+SQL_TS_HILL = oracle(q_ts_hill, _tok_series_sql() + """,
 r AS (
   SELECT conv_id, y,
          row_number() OVER (PARTITION BY conv_id
@@ -10941,7 +10894,7 @@ SELECT conv_id, cast(n AS bigint) AS n, 20 AS k,
        round(CASE WHEN n > 20 AND thr > 0 AND sum_ln > 0 THEN
              20.0 / sum_ln END, 9) + 0.0 AS alpha
 FROM g
-"""
+""")
 
 
 def q_ts_ks_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -10954,15 +10907,7 @@ def q_ts_ks_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
     verbatim; ties at p=1.0 break by conv_id on both engines."""
     from cesium_spark.operators.scoring import bh_fdr
     from cesium_spark.operators.seriesstats import ks_two_sample
-    _prep(spark)
-    ev = _read(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    tok = F.size(F.split(F.trim(F.col("props")), r"\s+"))
-    series = ev.select(
-        F.col("user_id").cast("string").alias("conv_id"),
-        (F.row_number().over(w) - 1).cast("int").alias("turn_idx"),
-        (F.row_number().over(w) - 1).cast("double").alias("t"),
-        tok.cast("long").alias("y"))
+    series = _tok_series(spark, sf_dir)
     ks = ks_two_sample(series)
     out = bh_fdr(ks, "p_bound", "conv_id", q=0.1)
     return out.select(
@@ -10973,15 +10918,9 @@ def q_ts_ks_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
         "significant", "m")
 
 
-SQL_TS_KS_FDR = """
-WITH s AS (
-  SELECT cast(user_id AS varchar) AS conv_id,
-         row_number() OVER w - 1 AS rk,
-         cast(len(string_split_regex(trim(props), '\\s+')) AS bigint) AS y,
-         count(*) OVER (PARTITION BY user_id) AS cnt
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-),
+SQL_TS_KS_FDR = oracle(q_ts_ks_fdr, _tok_series_sql(
+    "row_number() OVER w - 1 AS rk",
+    "count(*) OVER (PARTITION BY user_id) AS cnt") + """,
 h AS (
   SELECT conv_id, y, cnt, cnt // 2 AS n1,
          CASE WHEN rk >= cnt // 2 THEN 1 ELSE 0 END AS hh
@@ -11050,7 +10989,7 @@ inval AS (
 SELECT conv_id, round(p, 9) + 0.0 AS p, rank,
        round(p_adj, 9) + 0.0 AS p_adj, significant, m
 FROM (SELECT * FROM valid UNION ALL SELECT * FROM inval)
-"""
+""")
 
 
 def q_ts_circadian(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -11068,7 +11007,7 @@ def q_ts_circadian(spark: SparkSession, sf_dir: str) -> DataFrame:
         _r(F.col("entropy_ratio"), 9).alias("entropy_ratio"))
 
 
-SQL_TS_CIRCADIAN = """
+SQL_TS_CIRCADIAN = oracle(q_ts_circadian, """
 WITH cells AS (
   SELECT cast(user_id AS varchar) AS conv_id,
          hour(ts) AS hh, count(*) AS c
@@ -11108,7 +11047,7 @@ SELECT g.conv_id,
        round(hour_entropy, 9) + 0.0 AS hour_entropy,
        round(hour_entropy / 3.1780538303479458, 9) + 0.0 AS entropy_ratio
 FROM g JOIN th USING (conv_id)
-"""
+""")
 
 
 def q_ts_leaky_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -11119,8 +11058,7 @@ def q_ts_leaky_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     test an integer comparison. Oracle replays grid, prefix windows,
     and the threshold verbatim."""
     from cesium_spark.operators.rates import leaky_bucket
-    _prep(spark)
-    ev = _read(spark, sf_dir, "events")
+    ev = _events(spark, sf_dir)
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     sec = F.col("ts").cast("double")
     gap = F.round(sec - F.lag(sec).over(w), 0).cast("long")
@@ -11135,7 +11073,7 @@ def q_ts_leaky_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
         "first_throttle")
 
 
-SQL_TS_LEAKY_BUCKET = """
+SQL_TS_LEAKY_BUCKET = oracle(q_ts_leaky_bucket, """
 WITH s AS (
   SELECT cast(user_id AS varchar) AS conv_id,
          row_number() OVER w - 1 AS turn_idx,
@@ -11171,7 +11109,7 @@ SELECT conv_id, cast(n AS bigint) AS n,
          + 0.0 AS max_queue,
        cast(first_throttle AS int) AS first_throttle
 FROM g
-"""
+""")
 
 
 def q_ts_anova_role(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -11182,15 +11120,8 @@ def q_ts_anova_role(spark: SparkSession, sf_dir: str) -> DataFrame:
     separation surfacing as eta2=1 / NULL F. Oracle replays cells,
     fold, and trees verbatim."""
     from cesium_spark.operators.seriesstats import anova_oneway
-    _prep(spark)
-    ev = _read(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    tok = F.size(F.split(F.trim(F.col("props")), r"\s+"))
-    series = ev.select(
-        F.col("user_id").cast("string").alias("conv_id"),
-        (F.row_number().over(w) - 1).cast("int").alias("turn_idx"),
-        F.col("event_type").alias("channel"),
-        tok.cast("long").alias("y"))
+    series = _tok_series(spark, sf_dir,
+                         F.col("event_type").alias("channel"))
     out = anova_oneway(series, group_col="channel")
     return out.select(
         "conv_id", "n", "k",
@@ -11200,13 +11131,8 @@ def q_ts_anova_role(spark: SparkSession, sf_dir: str) -> DataFrame:
         _r(F.col("f_stat"), 6).alias("f_stat"))
 
 
-SQL_TS_ANOVA_ROLE = """
-WITH s AS (
-  SELECT cast(user_id AS varchar) AS conv_id,
-         event_type AS g,
-         cast(len(string_split_regex(trim(props), '\\s+')) AS bigint) AS y
-  FROM events
-),
+SQL_TS_ANOVA_ROLE = oracle(q_ts_anova_role, _tok_series_sql(
+    "event_type AS g") + """,
 cells AS (
   SELECT conv_id, g, count(*) AS ng, sum(y) AS sg, sum(y * y) AS qg
   FROM s WHERE g IS NOT NULL GROUP BY 1, 2
@@ -11255,7 +11181,7 @@ SELECT conv_id, cast(n AS bigint) AS n, cast(k AS int) AS k,
              / (ssw / (cast(n AS double) - cast(k AS double)))
              END, 6) + 0.0 AS f_stat
 FROM f
-"""
+""")
 
 
 def q_ts_conv_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -11267,8 +11193,7 @@ def q_ts_conv_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     with all 16 bands shared — the doc_minhash_lsh recall contract
     lifted to the transcript grain (duplicate CONVERSATIONS are what
     a training-data pipeline actually dedupes)."""
-    _prep(spark)
-    ev = _read(spark, sf_dir, "events")
+    ev = _events(spark, sf_dir)
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     turns = ev.select(F.col("user_id").cast("long").alias("cid"),
                       F.row_number().over(w).alias("rn"),
@@ -11296,12 +11221,12 @@ def q_ts_conv_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                     .alias("n_shared_bands")))
 
 
-SQL_TS_CONV_DEDUP = """
+SQL_TS_CONV_DEDUP = oracle(q_ts_conv_dedup, """
 SELECT DISTINCT cast(user_id AS bigint) AS id_a,
        cast(user_id AS bigint) + 100000 AS id_b,
        CAST(16 AS BIGINT) AS n_shared_bands
 FROM events WHERE user_id % 10 = 0
-"""
+""")
 
 
 def q_doc_jsd_halves(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -11321,7 +11246,7 @@ def q_doc_jsd_halves(spark: SparkSession, sf_dir: str) -> DataFrame:
         _r(F.col("vocab_jaccard"), 9).alias("vocab_jaccard"))
 
 
-SQL_DOC_JSD_HALVES = r"""
+SQL_DOC_JSD_HALVES = oracle(q_doc_jsd_halves, r"""
 WITH tok AS (
   SELECT doc_id, u.pos AS rawpos, nullif(u.t, '') AS token
   FROM (SELECT doc_id,
@@ -11389,7 +11314,7 @@ SELECT doc_id, cast(n_tokens AS bigint) AS n_tokens,
              cast(inter AS double) / cast(un AS double) END, 9)
          + 0.0 AS vocab_jaccard
 FROM g
-"""
+""")
 
 
 def q_ts_role_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -11403,7 +11328,7 @@ def q_ts_role_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
                       _r(F.col("share"), 9).alias("share"))
 
 
-SQL_TS_ROLE_NGRAMS = """
+SQL_TS_ROLE_NGRAMS = oracle(q_ts_role_ngrams, """
 WITH t AS (
   SELECT cast(user_id AS varchar) AS conv_id,
          row_number() OVER w - 1 AS turn_idx,
@@ -11431,7 +11356,7 @@ SELECT gram, cast(support AS bigint) AS support,
 FROM e
 ORDER BY support DESC, gram
 LIMIT 20
-"""
+""")
 
 
 def q_ts_mix_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -11441,8 +11366,7 @@ def q_ts_mix_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer cells, ordered category folds. Oracle replays cells,
     folds, and the tie rule verbatim."""
     from cesium_spark.operators.datastats import mix_stats
-    _prep(spark)
-    ev = _read(spark, sf_dir, "events")
+    ev = _events(spark, sf_dir)
     out = mix_stats(ev, F.to_date("ts"), F.col("event_type"))
     return out.select(
         F.col("bucket").cast("string").alias("day"),
@@ -11453,7 +11377,7 @@ def q_ts_mix_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         _r(F.col("top_share"), 9).alias("top_share"))
 
 
-SQL_TS_MIX_DAILY = """
+SQL_TS_MIX_DAILY = oracle(q_ts_mix_daily, """
 WITH cells AS (
   SELECT cast(cast(ts AS date) AS varchar) AS day,
          event_type AS cat, count(*) AS c
@@ -11496,7 +11420,7 @@ SELECT g.day, cast(g.n AS bigint) AS n,
        round(cast(top_c AS double) / cast(g.n AS double), 9)
          + 0.0 AS top_share
 FROM g JOIN tc USING (day)
-"""
+""")
 
 
 def q_ts_dominant_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -11508,28 +11432,13 @@ def q_ts_dominant_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     cannot win). Oracle replays numerators and the argmax chain
     verbatim."""
     from cesium_spark.operators.seriesstats import dominant_lag
-    _prep(spark)
-    ev = _read(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    tok = F.size(F.split(F.trim(F.col("props")), r"\s+"))
-    series = ev.select(
-        F.col("user_id").cast("string").alias("conv_id"),
-        (F.row_number().over(w) - 1).cast("int").alias("turn_idx"),
-        (F.row_number().over(w) - 1).cast("double").alias("t"),
-        tok.cast("long").alias("y"))
+    series = _tok_series(spark, sf_dir)
     out = dominant_lag(series, max_lag=12)
     return out.select("conv_id", "n", "best_lag",
                       _r(F.col("r_best"), 9).alias("r_best"))
 
 
-SQL_TS_DOMINANT_LAG = """
-WITH s AS (
-  SELECT cast(user_id AS varchar) AS conv_id,
-         row_number() OVER w - 1 AS turn_idx,
-         cast(len(string_split_regex(trim(props), '\\s+')) AS bigint) AS y
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-),
+SQL_TS_DOMINANT_LAG = oracle(q_ts_dominant_lag, _tok_series_sql() + """,
 l AS (
   SELECT conv_id, y,
          lag(y, 2) OVER w2 AS l2,
@@ -11582,7 +11491,7 @@ SELECT conv_id, cast(n AS bigint) AS n,
              cast(greatest(n2, n3, n4, n5, n6, n7, n8, n9, n10, n11, n12) AS double) / cast(n0 AS double)
              END, 9) + 0.0 AS r_best
 FROM g
-"""
+""")
 
 
 def q_ts_tw_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -11592,33 +11501,19 @@ def q_ts_tw_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     denominators cleared). Oracle replays grid, holds, and cuts
     verbatim."""
     from cesium_spark.operators.seriesstats import time_weighted_quantiles
-    _prep(spark)
-    ev = _read(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     sec = F.col("ts").cast("double")
-    tok = F.size(F.split(F.trim(F.col("props")), r"\s+"))
     hold = F.round(F.lead(sec).over(w) - sec, 0).cast("long")
-    series = (ev.select(
-        F.col("user_id").cast("string").alias("conv_id"),
-        (F.row_number().over(w) - 1).cast("int").alias("turn_idx"),
-        tok.cast("long").alias("y"),
-        hold.alias("w"))
-        .where(F.col("w").isNotNull()))
+    series = (_tok_series(spark, sf_dir, hold.alias("w"))
+              .where(F.col("w").isNotNull()))
     out = time_weighted_quantiles(series)
     return out.select("conv_id", "n", "total_w",
                       "tw_q1", "tw_q2", "tw_q3")
 
 
-SQL_TS_TW_QUANTILES = """
-WITH s AS (
-  SELECT cast(user_id AS varchar) AS conv_id,
-         row_number() OVER w - 1 AS turn_idx,
-         cast(len(string_split_regex(trim(props), '\\s+')) AS bigint) AS y,
-         cast(round(lead(epoch(ts)) OVER w - epoch(ts), 0)
-              AS bigint) AS hold
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-),
+SQL_TS_TW_QUANTILES = oracle(q_ts_tw_quantiles, _tok_series_sql(
+    "cast(round(lead(epoch(ts)) OVER w - epoch(ts), 0) AS bigint)"
+    " AS hold") + """,
 c AS (
   SELECT conv_id, y,
          sum(hold) OVER (PARTITION BY conv_id ORDER BY y, turn_idx
@@ -11639,7 +11534,7 @@ SELECT conv_id, cast(n AS bigint) AS n,
        cast(CASE WHEN total_w > 0 THEN q2 END AS bigint) AS tw_q2,
        cast(CASE WHEN total_w > 0 THEN q3 END AS bigint) AS tw_q3
 FROM g
-"""
+""")
 
 
 def q_rel_prop_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -11650,8 +11545,7 @@ def q_rel_prop_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
     rates are fixed double trees replayed verbatim; a pooled rate of
     exactly 0/1 comes back NULL, never inf."""
     from cesium_spark.operators.datastats import prop_ztest
-    _prep(spark)
-    ev = _read(spark, sf_dir, "events")
+    ev = _events(spark, sf_dir)
     out = prop_ztest(
         ev.select(F.when(F.col("user_id") % 2 == 0, "even")
                   .otherwise("odd").alias("g"),
@@ -11666,7 +11560,7 @@ def q_rel_prop_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
         _r(F.col("z"), 9).alias("z"))
 
 
-SQL_REL_PROP_ZTEST = """
+SQL_REL_PROP_ZTEST = oracle(q_rel_prop_ztest, """
 WITH b AS (
   SELECT CASE WHEN user_id % 2 = 0 THEN 'even' ELSE 'odd' END AS g,
          CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS x
@@ -11704,7 +11598,7 @@ SELECT cast(n_a AS bigint) AS n_a, cast(s_a AS bigint) AS s_a,
                        + 1.0 / cast(n_b AS double))) END, 9)
          + 0.0 AS z
 FROM a
-"""
+""")
 
 
 def q_ts_endings(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -11720,7 +11614,7 @@ def q_ts_endings(spark: SparkSession, sf_dir: str) -> DataFrame:
                       "ends_after_tool", "final_gap_s", "abandoned")
 
 
-SQL_TS_ENDINGS = """
+SQL_TS_ENDINGS = oracle(q_ts_endings, """
 WITH t AS (
   SELECT cast(user_id AS varchar) AS conv_id,
          row_number() OVER w - 1 AS turn_idx,
@@ -11751,7 +11645,7 @@ SELECT conv_id, cast(n_turns AS bigint) AS n_turns, last_role,
        last_role = 'view'
          OR coalesce(last_tool_turn = last_turn, FALSE) AS abandoned
 FROM g
-"""
+""")
 
 
 def q_emb_effective_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -11770,7 +11664,7 @@ def q_emb_effective_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
         _r(F.col("effective_rank"), 6).alias("effective_rank"))
 
 
-SQL_EMB_EFFECTIVE_RANK = """
+SQL_EMB_EFFECTIVE_RANK = oracle(q_emb_effective_rank, """
 WITH e AS (
   SELECT vec_id,
          list_transform(CAST(embedding AS DOUBLE[]),
@@ -11824,7 +11718,7 @@ SELECT n, 64 AS dim,
              trace_num * trace_num / frob_num END, 6)
          + 0.0 AS effective_rank
 FROM g2
-"""
+""")
 
 
 def q_ts_kruskal(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -11834,15 +11728,8 @@ def q_ts_kruskal(spark: SparkSession, sf_dir: str) -> DataFrame:
     2-avg-rank sums and tie masses, one ordered float fold per group,
     fixed H / tie-corrected H trees replayed verbatim."""
     from cesium_spark.operators.seriesstats import kruskal_wallis
-    _prep(spark)
-    ev = _read(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    tok = F.size(F.split(F.trim(F.col("props")), r"\s+"))
-    series = ev.select(
-        F.col("user_id").cast("string").alias("conv_id"),
-        (F.row_number().over(w) - 1).cast("int").alias("turn_idx"),
-        F.col("event_type").alias("channel"),
-        tok.cast("long").alias("y"))
+    series = _tok_series(spark, sf_dir,
+                         F.col("event_type").alias("channel"))
     out = kruskal_wallis(series, group_col="channel")
     return out.select(
         "conv_id", "n", "k", "tie_mass",
@@ -11850,13 +11737,7 @@ def q_ts_kruskal(spark: SparkSession, sf_dir: str) -> DataFrame:
         _r(F.col("h_corrected"), 9).alias("h_corrected"))
 
 
-SQL_TS_KRUSKAL = """
-WITH s AS (
-  SELECT cast(user_id AS varchar) AS conv_id,
-         event_type AS g,
-         cast(len(string_split_regex(trim(props), '\\s+')) AS bigint) AS y
-  FROM events
-),
+SQL_TS_KRUSKAL = oracle(q_ts_kruskal, _tok_series_sql("event_type AS g") + """,
 r AS (
   SELECT conv_id, g,
          2 * rank() OVER (PARTITION BY conv_id ORDER BY y)
@@ -11906,7 +11787,7 @@ SELECT conv_id, cast(n AS bigint) AS n, cast(k AS int) AS k,
        round(CASE WHEN k >= 2 AND n >= 2 AND corr > 0
                   THEN h / corr END, 9) + 0.0 AS h_corrected
 FROM f
-"""
+""")
 
 
 def q_ts_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -11917,15 +11798,7 @@ def q_ts_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
     division per lag, fixed left-assoc Q tree; constant or too-short
     series NULL."""
     from cesium_spark.operators.seriesstats import ljung_box
-    _prep(spark)
-    ev = _read(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    tok = F.size(F.split(F.trim(F.col("props")), r"\s+"))
-    series = ev.select(
-        F.col("user_id").cast("string").alias("conv_id"),
-        (F.row_number().over(w) - 1).cast("int").alias("turn_idx"),
-        (F.row_number().over(w) - 1).cast("double").alias("t"),
-        tok.cast("long").alias("y"))
+    series = _tok_series(spark, sf_dir)
     out = ljung_box(series)
     return out.select(
         "conv_id", "n",
@@ -11935,14 +11808,7 @@ def q_ts_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
         _r(F.col("q_lb"), 9).alias("q_lb"))
 
 
-SQL_TS_LJUNG_BOX = """
-WITH s AS (
-  SELECT cast(user_id AS varchar) AS conv_id,
-         row_number() OVER w - 1 AS turn_idx,
-         cast(len(string_split_regex(trim(props), '\\s+')) AS bigint) AS y
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-),
+SQL_TS_LJUNG_BOX = oracle(q_ts_ljung_box, _tok_series_sql() + """,
 l AS (
   SELECT conv_id, y,
          lag(y, 1) OVER w2 AS l1,
@@ -11983,7 +11849,7 @@ SELECT conv_id, cast(n AS bigint) AS n,
                 + r3 * r3 / (cast(n AS double) - 3.0)) END, 9)
          + 0.0 AS q_lb
 FROM m
-"""
+""")
 
 
 def q_ts_allan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -12004,7 +11870,7 @@ def q_ts_allan(spark: SparkSession, sf_dir: str) -> DataFrame:
         "conv_id", "m", "n_gaps", "k_blocks", "d_sum", "avar")
 
 
-SQL_TS_ALLAN = """
+SQL_TS_ALLAN = oracle(q_ts_allan, """
 WITH s AS (
   SELECT cast(user_id AS varchar) AS conv_id,
          row_number() OVER w - 1 AS turn_idx,
@@ -12051,7 +11917,7 @@ SELECT conv_id, cast(m AS int) AS m,
              / (2.0 * cast(k_blocks - 1 AS double)
                 * cast(m * m AS double)) END AS avar
 FROM g2
-"""
+""")
 
 
 def q_doc_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -12078,7 +11944,7 @@ def q_doc_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
         _r(F.col("logw"), 9).alias("logw"))
 
 
-SQL_DOC_DSIR = """
+SQL_DOC_DSIR = oracle(q_doc_dsir, """
 WITH d AS (
   SELECT doc_id, text, source IN ('src18', 'src6') AS tgt
   FROM documents WHERE text IS NOT NULL
@@ -12146,7 +12012,7 @@ SELECT cast(rnk AS int) AS rank, doc_id,
        cast(n_items AS bigint) AS n_items, in_target,
        round(logw, 9) + 0.0 AS logw
 FROM r WHERE rnk <= 50
-"""
+""")
 
 
 def q_rel_tpch_q4(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -12176,7 +12042,7 @@ def q_rel_tpch_q4(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("o_orderpriority"))
 
 
-SQL_REL_TPCH_Q4 = """
+SQL_REL_TPCH_Q4 = oracle(q_rel_tpch_q4, """
 SELECT o_orderpriority, count(*) AS order_count
 FROM orders
 WHERE o_orderdate >= timestamp '1996-07-01 00:00:00'
@@ -12187,7 +12053,7 @@ WHERE o_orderdate >= timestamp '1996-07-01 00:00:00'
       AND l_shipdate > o_orderdate + INTERVAL 30 DAY)
 GROUP BY o_orderpriority
 ORDER BY o_orderpriority
-"""
+""")
 
 
 def q_rel_tpch_q12(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -12214,7 +12080,7 @@ def q_rel_tpch_q12(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-SQL_REL_TPCH_Q12 = """
+SQL_REL_TPCH_Q12 = oracle(q_rel_tpch_q12, """
 SELECT l_linestatus,
        CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
                      THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
@@ -12225,7 +12091,7 @@ WHERE l_shipdate >= timestamp '1996-01-01 00:00:00'
   AND l_shipdate < timestamp '1997-01-01 00:00:00'
 GROUP BY l_linestatus
 ORDER BY l_linestatus
-"""
+""")
 
 
 def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -12238,8 +12104,7 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     (idempotent once converged, verified >= peel depth at this SF).
     All integers; no float anywhere."""
     from cesium_spark.operators.graphrank import kcore
-    _prep(spark)
-    ev = _read(spark, sf_dir, "events")
+    ev = _events(spark, sf_dir)
     uh = (ev.select(F.col("user_id").alias("u"),
                     F.date_trunc("hour", F.col("ts")).alias("h"))
           .distinct())
@@ -12288,6 +12153,9 @@ GROUP BY 1 ORDER BY 1
     return "".join(parts)
 
 
+oracle(q_graph_kcore, _kcore_sql())
+
+
 def q_ts_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-conversation Kendall tau-b of latency vs tokens: exact
     int64 concordance/tie pair counts over the theil_sen-style
@@ -12303,7 +12171,7 @@ def q_ts_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
         _r(F.col("tau_b"), 9).alias("tau_b"))
 
 
-SQL_TS_KENDALL = _SERIES_SQL + f"""
+SQL_TS_KENDALL = oracle(q_ts_kendall, _SERIES_SQL + f"""
 , aligned AS (
   SELECT conv_id, turn_idx,
          max(CASE WHEN channel = '{_CORR_CH[0]}' THEN y END) AS xa,
@@ -12362,7 +12230,7 @@ SELECT conv_id, cast(n AS bigint) AS n,
                     * (p - cast(ty AS double))) END, 9)
          + 0.0 AS tau_b
 FROM j
-"""
+""")
 
 
 def q_ts_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -12380,7 +12248,7 @@ def q_ts_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
         _r(F.col("kappa"), 9).alias("kappa"))
 
 
-SQL_TS_KAPPA = """
+SQL_TS_KAPPA = oracle(q_ts_kappa, """
 WITH s AS (
   SELECT cast(user_id AS varchar) AS conv_id,
          row_number() OVER w - 1 AS turn_idx,
@@ -12423,7 +12291,7 @@ SELECT t.conv_id,
              / cast(n_pairs * n_pairs - e_sum AS double) END, 9)
          + 0.0 AS kappa
 FROM tot t JOIN e ON t.conv_id = e.conv_id
-"""
+""")
 
 
 def q_ts_lorenz(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -12434,25 +12302,11 @@ def q_ts_lorenz(spark: SparkSession, sf_dir: str) -> DataFrame:
     each share one division of exact int64, emitted UNROUNDED
     (bit-identical by construction, the ts_allan rule)."""
     from cesium_spark.operators.seriesstats import lorenz_deciles
-    _prep(spark)
-    ev = _read(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    tok = F.size(F.split(F.trim(F.col("props")), r"\s+"))
-    series = ev.select(
-        F.col("user_id").cast("string").alias("conv_id"),
-        (F.row_number().over(w) - 1).cast("int").alias("turn_idx"),
-        tok.cast("long").alias("y"))
+    series = _tok_series(spark, sf_dir)
     return lorenz_deciles(series)
 
 
-SQL_TS_LORENZ = """
-WITH s AS (
-  SELECT cast(user_id AS varchar) AS conv_id,
-         row_number() OVER w - 1 AS turn_idx,
-         cast(len(string_split_regex(trim(props), '\\s+')) AS bigint) AS y
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-),
+SQL_TS_LORENZ = oracle(q_ts_lorenz, _tok_series_sql() + """,
 o AS (
   SELECT conv_id,
          row_number() OVER wo AS rn,
@@ -12495,7 +12349,7 @@ SELECT conv_id, cast(n AS bigint) AS n, cast(tot AS bigint) AS total,
        CASE WHEN tot > 0 THEN cast(coalesce(s9, 0) AS double)
             / cast(tot AS double) END AS l90
 FROM g
-"""
+""")
 
 
 def q_ts_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -12513,7 +12367,7 @@ def q_ts_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
         _r(F.col("seasonal_strength"), 6).alias("seasonal_strength"))
 
 
-SQL_TS_STRENGTH = f"""{_VALUE_SERIES_SQL}
+SQL_TS_STRENGTH = oracle(q_ts_strength, f"""{_VALUE_SERIES_SQL}
 , o AS (
   SELECT conv_id, turn_idx, t, y,
          row_number() OVER w - 1 AS rn,
@@ -12580,7 +12434,7 @@ SELECT conv_id, cast(n_used AS bigint) AS n_used,
              greatest(1.0 - vr / vsr, 0.0) END, 6) + 0.0
          AS seasonal_strength
 FROM v
-"""
+""")
 
 
 def q_ts_sampen(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -12591,29 +12445,14 @@ def q_ts_sampen(spark: SparkSession, sf_dir: str) -> DataFrame:
     the Richman-Moorman shared template set, one -ln(A/B) tree;
     prefix cap (not thinning - templates are consecutive points)."""
     from cesium_spark.operators.seriesstats import sample_entropy
-    _prep(spark)
-    ev = _read(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    tok = F.size(F.split(F.trim(F.col("props")), r"\s+"))
-    series = ev.select(
-        F.col("user_id").cast("string").alias("conv_id"),
-        (F.row_number().over(w) - 1).cast("int").alias("turn_idx"),
-        (F.row_number().over(w) - 1).cast("double").alias("t"),
-        tok.cast("long").alias("y"))
+    series = _tok_series(spark, sf_dir)
     out = sample_entropy(series, r=2, max_n=128)
     return out.select(
         "conv_id", "n", "n_used", "capped", "b_count", "a_count",
         _r(F.col("sampen"), 9).alias("sampen"))
 
 
-SQL_TS_SAMPEN = """
-WITH s AS (
-  SELECT cast(user_id AS varchar) AS conv_id,
-         row_number() OVER w - 1 AS turn_idx,
-         cast(len(string_split_regex(trim(props), '\\s+')) AS bigint) AS y
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-),
+SQL_TS_SAMPEN = oracle(q_ts_sampen, _tok_series_sql() + """,
 b AS (
   SELECT conv_id, y,
          lead(y, 1) OVER wo AS y1,
@@ -12651,7 +12490,7 @@ SELECT c.conv_id, cast(c.n AS bigint) AS n,
              -ln(cast(p.a_count AS double)
                  / cast(p.b_count AS double)) END, 9) + 0.0 AS sampen
 FROM counts c LEFT JOIN pr p ON c.conv_id = p.conv_id
-"""
+""")
 
 
 def q_doc_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -12726,7 +12565,7 @@ FROM a{k} JOIN h{k} ON a{k}.v = h{k}.v CROSS JOIN tot
 """
 
 
-SQL_DOC_HITS = _hits_oracle_sql(4)
+SQL_DOC_HITS = oracle(q_doc_hits, _hits_oracle_sql(4))
 
 
 _BLOOM_WORDS, _BLOOM_K = 16, 4
@@ -12758,7 +12597,7 @@ def q_ts_bloom_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("bits").cast("long").alias("bits"))
 
 
-SQL_TS_BLOOM_FOLD = f"""
+SQL_TS_BLOOM_FOLD = oracle(q_ts_bloom_fold, f"""
 WITH pos AS (
   SELECT event_type AS role,
          date_trunc('day', ts) AS w,
@@ -12774,7 +12613,7 @@ SELECT role, strftime(w, '{DUCK_TS_FMT}') AS window_start,
        cast(p // 63 AS bigint) AS word_idx,
        cast(bit_or(1::BIGINT << cast(p % 63 AS int)) AS bigint) AS bits
 FROM pos GROUP BY role, w, p // 63
-"""
+""")
 
 
 def q_ts_dfa(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -12787,15 +12626,7 @@ def q_ts_dfa(spark: SparkSession, sf_dir: str) -> DataFrame:
     RSS folds, fixed-literal-weight log-log slope; constant prefix ->
     F = 0 -> NULL alpha."""
     from cesium_spark.operators.seriesstats import dfa
-    _prep(spark)
-    ev = _read(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    tok = F.size(F.split(F.trim(F.col("props")), r"\s+"))
-    series = ev.select(
-        F.col("user_id").cast("string").alias("conv_id"),
-        (F.row_number().over(w) - 1).cast("int").alias("turn_idx"),
-        (F.row_number().over(w) - 1).cast("double").alias("t"),
-        tok.cast("long").alias("y"))
+    series = _tok_series(spark, sf_dir)
     out = dfa(series, boxes=(4, 8, 16), max_n=256)
     return out.select(
         "conv_id", "n_used", "capped",
@@ -12819,21 +12650,13 @@ def _dfa_oracle_sql(bs=(4, 8, 16), max_n=256) -> str:
     outf = ",\n       ".join(
         f"round(f_{b}, 9) + 0.0 AS f_{b}" for b in bs)
     grid = ", ".join(f"({b})" for b in bs)
-    return f"""
-WITH s0 AS (
-  SELECT cast(user_id AS varchar) AS conv_id,
-         row_number() OVER w - 1 AS turn_idx,
-         cast(len(string_split_regex(trim(props), '\\s+')) AS bigint)
-           AS y
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-),
+    return f"""{_tok_series_sql()},
 pre AS (
   SELECT conv_id, y,
          row_number() OVER (PARTITION BY conv_id ORDER BY turn_idx)
            AS k,
          count(*) OVER (PARTITION BY conv_id) AS n_total
-  FROM s0
+  FROM s
 ),
 kept AS (SELECT * FROM pre WHERE k <= {max_n}),
 tot AS (SELECT conv_id, max(n_total) AS n_total FROM pre GROUP BY 1),
@@ -12903,7 +12726,7 @@ FROM wide JOIN tot USING (conv_id)
 """
 
 
-SQL_TS_DFA = _dfa_oracle_sql()
+SQL_TS_DFA = oracle(q_ts_dfa, _dfa_oracle_sql())
 
 
 def q_doc_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -12923,7 +12746,7 @@ def q_doc_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
         _r(F.col("fk_grade"), 6).alias("fk_grade"))
 
 
-SQL_DOC_READABILITY = """
+SQL_DOC_READABILITY = oracle(q_doc_readability, """
 WITH c AS (
   SELECT doc_id,
          CASE WHEN trim(text) = '' THEN 0
@@ -12949,7 +12772,7 @@ SELECT doc_id,
              + 11.8 * (cast(y AS double) / cast(w AS double))
              - 15.59 END, 6) + 0.0 AS fk_grade
 FROM c
-"""
+""")
 
 
 def q_emb_ncm(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -12969,7 +12792,7 @@ def q_emb_ncm(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_test", "n_correct", "accuracy")
 
 
-SQL_EMB_NCM = """
+SQL_EMB_NCM = oracle(q_emb_ncm, """
 WITH b AS (
   SELECT vec_id, label, embedding
   FROM embeddings
@@ -13025,7 +12848,7 @@ SELECT cast(tru AS int) AS label,
        cast(sum(CASE WHEN pred = tru THEN 1 ELSE 0 END) AS double)
          / cast(count(*) AS double) AS accuracy
 FROM pred GROUP BY tru ORDER BY tru
-"""
+""")
 
 
 def q_multimodal_sharpness(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -13044,7 +12867,7 @@ def q_multimodal_sharpness(spark: SparkSession, sf_dir: str) -> DataFrame:
                       "sharpness")
 
 
-SQL_MULTIMODAL_SHARPNESS = """
+SQL_MULTIMODAL_SHARPNESS = oracle(q_multimodal_sharpness, """
 WITH meta AS (
   SELECT doc_id, text, length(text) AS n,
          16 + (length(text) % 48) AS w,
@@ -13078,7 +12901,7 @@ SELECT doc_id,
          / cast(max(h) * (max(w) - 1) + (max(h) - 1) * max(w)
                 AS double) AS sharpness
 FROM g GROUP BY 1
-"""
+""")
 
 
 _MI_EA = (30.0, 60.0, 120.0, 300.0)      # latency seconds edges
@@ -13110,7 +12933,7 @@ def _mi_bin_sql(col: str, edges: tuple) -> str:
         f"(CASE WHEN {col} >= {e!r} THEN 1 ELSE 0 END)" for e in edges)
 
 
-SQL_TS_MI = _SERIES_SQL + f"""
+SQL_TS_MI = oracle(q_ts_mi, _SERIES_SQL + f"""
 , aligned AS (
   SELECT conv_id, turn_idx,
          max(CASE WHEN channel = '{_CORR_CH[0]}' THEN y END) AS ya,
@@ -13172,7 +12995,7 @@ SELECT conv_id, cast(n_pairs AS bigint) AS n_pairs,
        round(CASE WHEN n_pairs >= 8 AND hx > 0 AND hy > 0 THEN
              greatest(mi, 0.0) / sqrt(hx * hy) END, 9) + 0.0 AS nmi
 FROM g
-"""
+""")
 
 
 def q_rel_tpch_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -13209,7 +13032,7 @@ def q_rel_tpch_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("sum_qty").cast("long").alias("sum_qty"))
 
 
-SQL_REL_TPCH_Q18 = f"""
+SQL_REL_TPCH_Q18 = oracle(q_rel_tpch_q18, f"""
 WITH big AS (
   SELECT l_orderkey, sum(cast(l_quantity AS bigint)) AS sum_qty
   FROM lineitem GROUP BY 1
@@ -13225,7 +13048,7 @@ JOIN customer ON o_custkey = c_custkey
 ORDER BY cast(round(o_totalprice * 100.0) AS bigint) DESC,
          o_orderdate, o_orderkey
 LIMIT 100
-"""
+""")
 
 
 def q_ts_spectral_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -13236,15 +13059,7 @@ def q_ts_spectral_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     one Python literal injected into BOTH engines from
     spectral_coeffs - the textrank cannot-drift rule."""
     from cesium_spark.operators.seriesstats import spectral_entropy
-    _prep(spark)
-    ev = _read(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    tok = F.size(F.split(F.trim(F.col("props")), r"\s+"))
-    series = ev.select(
-        F.col("user_id").cast("string").alias("conv_id"),
-        (F.row_number().over(w) - 1).cast("int").alias("turn_idx"),
-        (F.row_number().over(w) - 1).cast("double").alias("t"),
-        tok.cast("long").alias("y"))
+    series = _tok_series(spark, sf_dir)
     out = spectral_entropy(series)
     return out.select(
         "conv_id", "n",
@@ -13278,15 +13093,7 @@ def _spectral_oracle_sql(n_lags: int = 6, n_freqs: int = 8) -> str:
     peak = "".join(
         f"            WHEN s{m} = greatest({gl}) THEN {m}\n"
         for m in range(1, n_freqs + 1))
-    return f"""
-WITH s AS (
-  SELECT cast(user_id AS varchar) AS conv_id,
-         row_number() OVER w - 1 AS turn_idx,
-         cast(len(string_split_regex(trim(props), '\\s+')) AS bigint)
-           AS y
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-),
+    return f"""{_tok_series_sql()},
 l AS (
   SELECT conv_id, y,
 {lags}         sum(y) OVER (PARTITION BY conv_id) AS sy,
@@ -13317,7 +13124,7 @@ FROM tt
 """
 
 
-SQL_TS_SPECTRAL = _spectral_oracle_sql()
+SQL_TS_SPECTRAL = oracle(q_ts_spectral_entropy, _spectral_oracle_sql())
 
 
 def q_ts_dispersion(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -13334,7 +13141,7 @@ def q_ts_dispersion(spark: SparkSession, sf_dir: str) -> DataFrame:
                       "dispersion", "d_stat")
 
 
-SQL_TS_DISPERSION = """
+SQL_TS_DISPERSION = oracle(q_ts_dispersion, """
 WITH c AS (
   SELECT cast(user_id AS varchar) AS conv_id,
          date_trunc('hour', ts) AS b, count(*) AS c
@@ -13367,7 +13174,7 @@ SELECT conv_id,
             * (cast(nb * q - s * s AS double)
                / cast(nb * s AS double)) END AS d_stat
 FROM a
-"""
+""")
 
 
 def q_ts_logrank(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -13390,7 +13197,7 @@ def q_ts_logrank(spark: SparkSession, sf_dir: str) -> DataFrame:
         _r(F.col("chi2"), 9).alias("chi2"))
 
 
-SQL_TS_LOGRANK = f"""
+SQL_TS_LOGRANK = oracle(q_ts_logrank, f"""
 WITH t AS (
   SELECT cast(user_id AS varchar) AS conv_id,
          row_number() OVER w - 1 AS turn_idx,
@@ -13454,7 +13261,7 @@ SELECT cast(o1 AS bigint) AS o1,
              (cast(o1 AS double) - e1) * (cast(o1 AS double) - e1)
              / v END, 9) + 0.0 AS chi2
 FROM g
-"""
+""")
 
 
 def q_rel_trend_test(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -13465,8 +13272,7 @@ def q_rel_trend_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     A/B statistics (the N-scaling clears every fraction), one fixed
     z tree; oracle replays verbatim."""
     from cesium_spark.operators.datastats import cochran_armitage
-    _prep(spark)
-    ev = _read(spark, sf_dir, "events")
+    ev = _events(spark, sf_dir)
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     wn = Window.partitionBy("user_id")
     rows = ev.select(
@@ -13479,7 +13285,7 @@ def q_rel_trend_test(spark: SparkSession, sf_dir: str) -> DataFrame:
                       _r(F.col("z"), 9).alias("z"))
 
 
-SQL_REL_TREND_TEST = """
+SQL_REL_TREND_TEST = oracle(q_rel_trend_test, """
 WITH r AS (
   SELECT (row_number() OVER w - 1) * 3
            // (count(*) OVER (PARTITION BY user_id)) AS x,
@@ -13502,7 +13308,7 @@ SELECT cast(n AS bigint) AS n, cast(s AS bigint) AS s,
                     * cast(n * xxn - xn * xn AS double)
                     / cast(n AS double)) END, 9) + 0.0 AS z
 FROM a
-"""
+""")
 
 
 def q_rel_mcnemar(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -13512,8 +13318,7 @@ def q_rel_mcnemar(spark: SparkSession, sf_dir: str) -> DataFrame:
     the halves as independent cohorts (prop_ztest) would overstate
     n. Exact integer b/c; chi2 unrounded (the ts_allan rule)."""
     from cesium_spark.operators.datastats import mcnemar_test
-    _prep(spark)
-    ev = _read(spark, sf_dir, "events")
+    ev = _events(spark, sf_dir)
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     wn = Window.partitionBy("user_id")
     half = ((F.row_number().over(w) - 1) * 2
@@ -13536,7 +13341,7 @@ def q_rel_mcnemar(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("n_pairs", "b_cnt", "c_cnt", "chi2")
 
 
-SQL_REL_MCNEMAR = """
+SQL_REL_MCNEMAR = oracle(q_rel_mcnemar, """
 WITH r AS (
   SELECT user_id,
          (row_number() OVER w - 1) * 2
@@ -13564,7 +13369,7 @@ SELECT cast(n_pairs AS bigint) AS n_pairs,
             cast((b_cnt - c_cnt) * (b_cnt - c_cnt) AS double)
             / cast(b_cnt + c_cnt AS double) END AS chi2
 FROM a
-"""
+""")
 
 
 def q_ts_brown_forsythe(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -13575,15 +13380,8 @@ def q_ts_brown_forsythe(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the doubling clears them), then the whole anova_oneway exact
     machinery runs verbatim; F is doubling-invariant."""
     from cesium_spark.operators.seriesstats import brown_forsythe
-    _prep(spark)
-    ev = _read(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    tok = F.size(F.split(F.trim(F.col("props")), r"\s+"))
-    series = ev.select(
-        F.col("user_id").cast("string").alias("conv_id"),
-        (F.row_number().over(w) - 1).cast("int").alias("turn_idx"),
-        F.col("event_type").alias("channel"),
-        tok.cast("long").alias("y"))
+    series = _tok_series(spark, sf_dir,
+                         F.col("event_type").alias("channel"))
     out = brown_forsythe(series, group_col="channel")
     return out.select(
         "conv_id", "n", "k",
@@ -13591,19 +13389,13 @@ def q_ts_brown_forsythe(spark: SparkSession, sf_dir: str) -> DataFrame:
         _r(F.col("bf_stat"), 6).alias("bf_stat"))
 
 
-SQL_TS_BROWN_FORSYTHE = """
-WITH s0 AS (
-  SELECT cast(user_id AS varchar) AS conv_id,
-         event_type AS g,
-         cast(len(string_split_regex(trim(props), '\\s+')) AS bigint)
-           AS y
-  FROM events
-),
+SQL_TS_BROWN_FORSYTHE = oracle(q_ts_brown_forsythe, _tok_series_sql(
+    "event_type AS g") + """,
 z AS (
   SELECT conv_id, g,
          abs(2 * y - cast(round(quantile_cont(y, 0.5)
                OVER (PARTITION BY conv_id, g) * 2.0) AS bigint)) AS y
-  FROM s0 WHERE g IS NOT NULL AND y IS NOT NULL
+  FROM s WHERE g IS NOT NULL AND y IS NOT NULL
 ),
 cells AS (
   SELECT conv_id, g, count(*) AS ng, sum(y) AS sg, sum(y * y) AS qg
@@ -13649,7 +13441,7 @@ SELECT conv_id, cast(n AS bigint) AS n, cast(k AS int) AS k,
              / (ssw / (cast(n AS double) - cast(k AS double)))
              END, 6) + 0.0 AS bf_stat
 FROM f
-"""
+""")
 
 
 def q_ts_grubbs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -13659,28 +13451,13 @@ def q_ts_grubbs(spark: SparkSession, sf_dir: str) -> DataFrame:
     float can reorder the pick, earliest turn on ties); G is one
     fixed tree; constant or n<3 NULL."""
     from cesium_spark.operators.seriesstats import grubbs_stat
-    _prep(spark)
-    ev = _read(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    tok = F.size(F.split(F.trim(F.col("props")), r"\s+"))
-    series = ev.select(
-        F.col("user_id").cast("string").alias("conv_id"),
-        (F.row_number().over(w) - 1).cast("int").alias("turn_idx"),
-        tok.cast("long").alias("y"))
+    series = _tok_series(spark, sf_dir)
     out = grubbs_stat(series)
     return out.select("conv_id", "n", "peak_turn",
                       _r(F.col("g_stat"), 9).alias("g_stat"))
 
 
-SQL_TS_GRUBBS = """
-WITH s AS (
-  SELECT cast(user_id AS varchar) AS conv_id,
-         row_number() OVER w - 1 AS turn_idx,
-         cast(len(string_split_regex(trim(props), '\\s+')) AS bigint)
-           AS y
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-),
+SQL_TS_GRUBBS = oracle(q_ts_grubbs, _tok_series_sql() + """,
 e AS (
   SELECT conv_id, turn_idx, y,
          sum(y) OVER wp AS sv, sum(y * y) OVER wp AS q,
@@ -13709,7 +13486,7 @@ SELECT conv_id, cast(n AS bigint) AS n,
              / sqrt(cast(n * q - sv * sv AS double)) END, 9)
          + 0.0 AS g_stat
 FROM g
-"""
+""")
 
 
 def q_ts_cusumsq(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -13719,29 +13496,14 @@ def q_ts_cusumsq(spark: SparkSession, sf_dir: str) -> DataFrame:
     doubling at a steady mean. Argmax over exact int64
     |n*C_k - k*C_n|, one terminal division; earliest k on ties."""
     from cesium_spark.operators.seriesstats import cusumsq
-    _prep(spark)
-    ev = _read(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    tok = F.size(F.split(F.trim(F.col("props")), r"\s+"))
-    series = ev.select(
-        F.col("user_id").cast("string").alias("conv_id"),
-        (F.row_number().over(w) - 1).cast("int").alias("turn_idx"),
-        (F.row_number().over(w) - 1).cast("double").alias("t"),
-        tok.cast("long").alias("y"))
+    series = _tok_series(spark, sf_dir)
     out = cusumsq(series)
     return out.select("conv_id", "n", "changepoint",
                       _r(F.col("d_stat"), 9).alias("d_stat"))
 
 
-SQL_TS_CUSUMSQ = """
-WITH s AS (
-  SELECT cast(user_id AS varchar) AS conv_id,
-         row_number() OVER w AS k,
-         cast(len(string_split_regex(trim(props), '\\s+')) AS bigint)
-           AS y
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-),
+SQL_TS_CUSUMSQ = oracle(q_ts_cusumsq, _tok_series_sql(
+    "row_number() OVER w AS k") + """,
 c AS (
   SELECT conv_id, k,
          sum(y * y) OVER (PARTITION BY conv_id ORDER BY k
@@ -13770,7 +13532,7 @@ SELECT conv_id, cast(n AS bigint) AS n,
              cast(nmax AS double)
              / cast(n * cn AS double) END, 9) + 0.0 AS d_stat
 FROM g
-"""
+""")
 
 
 def q_ts_partial_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -13782,8 +13544,7 @@ def q_ts_partial_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     from one aggregate, three fixed pairwise-r trees, one partial
     tree; |r_xc| = 1 exactly -> NULL."""
     from cesium_spark.operators.seriesstats import partial_corr
-    _prep(spark)
-    ev = _read(spark, sf_dir, "events")
+    ev = _events(spark, sf_dir)
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     sec = F.floor(F.col("ts").cast("double")).cast("long")
     lat = sec - F.lag(sec).over(w)
@@ -13807,7 +13568,7 @@ def q_ts_partial_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
         _r(F.col("r_ab_c"), 9).alias("r_ab_c"))
 
 
-SQL_TS_PARTIAL_CORR = """
+SQL_TS_PARTIAL_CORR = oracle(q_ts_partial_corr, """
 WITH t AS (
   SELECT cast(user_id AS varchar) AS conv_id,
          row_number() OVER w - 1 AS turn_idx,
@@ -13862,7 +13623,7 @@ SELECT conv_id, cast(n AS bigint) AS n_pairs,
              / sqrt((1.0 - rac * rac) * (1.0 - rbc * rbc)) END, 9)
          + 0.0 AS r_ab_c
 FROM rr
-"""
+""")
 
 
 _SMK_P = 7
@@ -13880,7 +13641,7 @@ def q_ts_seasonal_mk(spark: SparkSession, sf_dir: str) -> DataFrame:
                       _r(F.col("z"), 6).alias("z"))
 
 
-SQL_TS_SEASONAL_MK = f"""{_VALUE_SERIES_SQL}
+SQL_TS_SEASONAL_MK = oracle(q_ts_seasonal_mk, f"""{_VALUE_SERIES_SQL}
 , sl AS (
   SELECT conv_id, turn_idx, y,
          (row_number() OVER (PARTITION BY conv_id
@@ -13933,7 +13694,7 @@ SELECT conv_id, cast(n AS bigint) AS n,
                        / sqrt(cast(var18 AS double) / 18.0)
                   ELSE 0.0 END, 6) + 0.0 AS z
 FROM mk
-"""
+""")
 
 
 _GUMBEL_T = 1800
@@ -13955,7 +13716,7 @@ def q_ts_gumbel(spark: SparkSession, sf_dir: str) -> DataFrame:
         _r(F.col("p_exceed"), 9).alias("p_exceed"))
 
 
-SQL_TS_GUMBEL = f"""
+SQL_TS_GUMBEL = oracle(q_ts_gumbel, f"""
 WITH s AS (
   SELECT cast(user_id AS varchar) AS conv_id,
          row_number() OVER w - 1 AS turn_idx, ts,
@@ -14001,7 +13762,7 @@ SELECT conv_id, cast(nb AS bigint) AS n_blocks,
              1.0 - exp(-exp(-((1800.0 - mu) / beta))) END, 9)
          + 0.0 AS p_exceed
 FROM f
-"""
+""")
 
 
 def q_ts_lz76(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -14018,7 +13779,7 @@ def q_ts_lz76(spark: SparkSession, sf_dir: str) -> DataFrame:
         _r(F.col("c_norm"), 9).alias("c_norm"))
 
 
-SQL_TS_LZ76 = """
+SQL_TS_LZ76 = oracle(q_ts_lz76, """
 WITH RECURSIVE t AS (
   SELECT cast(user_id AS varchar) AS conv_id,
          row_number() OVER w - 1 AS turn_idx,
@@ -14051,7 +13812,7 @@ SELECT conv_id, cast(n AS bigint) AS n,
              cast(c AS double) * ln(cast(n AS double))
              / cast(n AS double) END, 9) + 0.0 AS c_norm
 FROM g
-"""
+""")
 
 
 def q_doc_vocab_richness(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -14066,7 +13827,7 @@ def q_doc_vocab_richness(spark: SparkSession, sf_dir: str) -> DataFrame:
     return vocab_richness(_read(spark, sf_dir, "documents"))
 
 
-SQL_DOC_VOCAB_RICHNESS = """
+SQL_DOC_VOCAB_RICHNESS = oracle(q_doc_vocab_richness, """
 WITH f AS (
   SELECT tok, count(*) AS c FROM (
     SELECT unnest(string_split_regex(trim(text), '\\s+')) AS tok
@@ -14088,7 +13849,7 @@ SELECT cast(v_obs AS bigint) AS v_obs,
            / cast(2 * (f2 + 1) AS double) AS chao1,
        1.0 - cast(f1 AS double) / cast(n_tokens AS double) AS coverage
 FROM g
-"""
+""")
 
 
 def q_doc_mix_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -14107,7 +13868,7 @@ def q_doc_mix_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         _r(F.col("boost"), 9).alias("boost"))
 
 
-SQL_DOC_MIX_WEIGHTS = """
+SQL_DOC_MIX_WEIGHTS = oracle(q_doc_mix_weights, """
 WITH per AS (
   SELECT source, count(*) AS n_docs,
          sum(cast(len(string_split_regex(trim(text), '\\s+'))
@@ -14139,7 +13900,7 @@ SELECT source,
        round(pw / zz / raw_share, 9) + 0.0 AS boost
 FROM f, z
 ORDER BY source
-"""
+""")
 
 
 def q_doc_heaps(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -14158,7 +13919,7 @@ def q_doc_heaps(spark: SparkSession, sf_dir: str) -> DataFrame:
         _r(F.col("k_coef"), 6).alias("k_coef"))
 
 
-SQL_DOC_HEAPS = """
+SQL_DOC_HEAPS = oracle(q_doc_heaps, """
 WITH ranked AS (
   SELECT doc_id,
          row_number() OVER (ORDER BY doc_id) AS r,
@@ -14226,7 +13987,7 @@ SELECT cast(d AS bigint) AS n_docs,
        round(CASE WHEN d >= 4 AND den > 0 THEN
              exp((sy - beta * sx) / 4.0) END, 6) + 0.0 AS k_coef
 FROM b
-"""
+""")
 
 
 def q_rel_tpch_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -14273,7 +14034,7 @@ def q_rel_tpch_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("totacctbal"))
 
 
-SQL_REL_TPCH_Q22 = """
+SQL_REL_TPCH_Q22 = oracle(q_rel_tpch_q22, """
 WITH base AS (
   SELECT c_custkey, c_nationkey % 5 AS cntrycode,
          cast(round(c_acctbal * 100.0) AS bigint) AS bi
@@ -14294,7 +14055,7 @@ SELECT cast(cntrycode AS int) AS cntrycode,
        cast(count(*) AS bigint) AS numcust,
        round(cast(sum(bi) AS double) / 100.0, 2) + 0.0 AS totacctbal
 FROM noord GROUP BY 1 ORDER BY 1
-"""
+""")
 
 
 def q_ts_cronbach(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -14305,8 +14066,7 @@ def q_ts_cronbach(spark: SparkSession, sf_dir: str) -> DataFrame:
     and sum-score moments (the sum is formed in integers before
     squaring), one fixed tree; constant composite NULL."""
     from cesium_spark.operators.seriesstats import cronbach_alpha
-    _prep(spark)
-    ev = _read(spark, sf_dir, "events")
+    ev = _events(spark, sf_dir)
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     sec = F.floor(F.col("ts").cast("double")).cast("long")
     lat = sec - F.lag(sec).over(w)
@@ -14330,7 +14090,7 @@ def q_ts_cronbach(spark: SparkSession, sf_dir: str) -> DataFrame:
         _r(F.col("alpha"), 9).alias("alpha"))
 
 
-SQL_TS_CRONBACH = """
+SQL_TS_CRONBACH = oracle(q_ts_cronbach, """
 WITH t AS (
   SELECT cast(user_id AS varchar) AS conv_id,
          row_number() OVER w - 1 AS turn_idx,
@@ -14376,7 +14136,7 @@ SELECT conv_id, cast(n AS bigint) AS n_turns,
        round(CASE WHEN n >= 3 AND vt > 0 THEN
              3.0 / 2.0 * (1.0 - vi / vt) END, 9) + 0.0 AS alpha
 FROM v
-"""
+""")
 
 
 def q_ts_stream_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -14423,7 +14183,7 @@ def q_ts_stream_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("bits").cast("long").alias("bits"))
 
 
-SQL_TS_STREAM_BLOOM = f"""
+SQL_TS_STREAM_BLOOM = oracle(q_ts_stream_bloom, f"""
 WITH mx AS (SELECT max(ts) AS m FROM events),
 pos AS (
   SELECT event_type AS role,
@@ -14441,7 +14201,7 @@ SELECT role, strftime(ws, '{DUCK_TS_FMT}') AS window_start,
 FROM pos, mx
 GROUP BY role, ws, p // 63, mx.m
 HAVING ws + INTERVAL 1 HOUR <= mx.m - INTERVAL 7000 SECONDS
-"""
+""")
 
 
 def q_ts_dunn(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -14451,15 +14211,8 @@ def q_ts_dunn(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranking discipline, two consumers). Consumers chain rel_bh_fdr
     for multiplicity; canonical (a < b) pair order."""
     from cesium_spark.operators.seriesstats import dunn_posthoc
-    _prep(spark)
-    ev = _read(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    tok = F.size(F.split(F.trim(F.col("props")), r"\s+"))
-    series = ev.select(
-        F.col("user_id").cast("string").alias("conv_id"),
-        (F.row_number().over(w) - 1).cast("int").alias("turn_idx"),
-        F.col("event_type").alias("channel"),
-        tok.cast("long").alias("y"))
+    series = _tok_series(spark, sf_dir,
+                         F.col("event_type").alias("channel"))
     out = dunn_posthoc(series, group_col="channel")
     return out.select(
         "conv_id", "group_a", "group_b", "n_a", "n_b",
@@ -14468,13 +14221,7 @@ def q_ts_dunn(spark: SparkSession, sf_dir: str) -> DataFrame:
         _r(F.col("z"), 9).alias("z"))
 
 
-SQL_TS_DUNN = """
-WITH s AS (
-  SELECT cast(user_id AS varchar) AS conv_id,
-         event_type AS g,
-         cast(len(string_split_regex(trim(props), '\\s+')) AS bigint) AS y
-  FROM events
-),
+SQL_TS_DUNN = oracle(q_ts_dunn, _tok_series_sql("event_type AS g") + """,
 r AS (
   SELECT conv_id, g,
          2 * rank() OVER (PARTITION BY conv_id ORDER BY y)
@@ -14520,7 +14267,7 @@ SELECT conv_id, group_a, group_b,
                                  + 1.0 / cast(nb AS double))) END, 9)
          + 0.0 AS z
 FROM q
-"""
+""")
 
 
 def q_ts_wilcoxon(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -14535,8 +14282,7 @@ def q_ts_wilcoxon(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact 2-avg-rank integers, tie-corrected variance; one fixed z
     tree."""
     from cesium_spark.operators.seriesstats import wilcoxon_signed_rank
-    _prep(spark)
-    ev = _read(spark, sf_dir, "events")
+    ev = _events(spark, sf_dir)
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     series = ev.select(
         F.col("user_id").cast("string").alias("conv_id"),
@@ -14549,7 +14295,7 @@ def q_ts_wilcoxon(spark: SparkSession, sf_dir: str) -> DataFrame:
         _r(F.col("z"), 9).alias("z"))
 
 
-SQL_TS_WILCOXON = """
+SQL_TS_WILCOXON = oracle(q_ts_wilcoxon, """
 WITH s AS (
   SELECT cast(user_id AS varchar) AS conv_id,
          row_number() OVER w AS j,
@@ -14592,7 +14338,7 @@ SELECT conv_id, cast(m AS bigint) AS n_pairs,
        round(CASE WHEN m >= 2 AND v > 0 THEN
              (tp - mu) / sqrt(v) END, 9) + 0.0 AS z
 FROM q
-"""
+""")
 
 
 def q_ts_mood(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -14603,8 +14349,7 @@ def q_ts_mood(spark: SparkSession, sf_dir: str) -> DataFrame:
     means, kruskal distributions, brown_forsythe spreads). Exact
     integer 2-median dichotomy, ordered chi2 cell fold."""
     from cesium_spark.operators.seriesstats import mood_median
-    _prep(spark)
-    ev = _read(spark, sf_dir, "events")
+    ev = _events(spark, sf_dir)
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     series = ev.select(
         F.col("user_id").cast("string").alias("conv_id"),
@@ -14617,7 +14362,7 @@ def q_ts_mood(spark: SparkSession, sf_dir: str) -> DataFrame:
         _r(F.col("chi2"), 9).alias("chi2"))
 
 
-SQL_TS_MOOD = """
+SQL_TS_MOOD = oracle(q_ts_mood, """
 WITH s AS (
   SELECT cast(user_id AS varchar) AS conv_id,
          event_type AS g,
@@ -14679,7 +14424,7 @@ SELECT conv_id, cast(n AS bigint) AS n, cast(k AS int) AS k,
        round(CASE WHEN k >= 2 AND a > 0 AND a < n
                   THEN chi2 END, 9) + 0.0 AS chi2
 FROM g2
-"""
+""")
 
 
 def q_ts_ess(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -14691,8 +14436,7 @@ def q_ts_ess(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact ACF-integer aggregate (fifth consumer); negative tau is a
     truncation artifact -> NULL ESS with tau still reported."""
     from cesium_spark.operators.seriesstats import ess_acf
-    _prep(spark)
-    ev = _read(spark, sf_dir, "events")
+    ev = _events(spark, sf_dir)
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     series = ev.select(
         F.col("user_id").cast("string").alias("conv_id"),
@@ -14706,7 +14450,7 @@ def q_ts_ess(spark: SparkSession, sf_dir: str) -> DataFrame:
         _r(F.col("ess"), 6).alias("ess"))
 
 
-SQL_TS_ESS = """
+SQL_TS_ESS = oracle(q_ts_ess, """
 WITH s AS (
   SELECT cast(user_id AS varchar) AS conv_id,
          row_number() OVER w - 1 AS turn_idx,
@@ -14747,517 +14491,8 @@ SELECT conv_id, cast(n AS bigint) AS n,
        round(CASE WHEN ok AND tau > 0 THEN
              cast(n AS double) / tau END, 6) + 0.0 AS ess
 FROM m
-"""
+""")
 
 
-QUERIES = {
-    "ts_derive_series": q_ts_derive_series,
-    "ts_rollup_1h_kernel": q_ts_rollup_1h_kernel,
-    "ts_rollup_1d_native": q_ts_rollup_1d_native,
-    "ts_tier_fold": q_ts_tier_fold,
-    "ts_calendar_fold": q_ts_calendar_fold,
-    "ts_hll_tier_fold": q_ts_hll_tier_fold,
-    "ts_gapfill_1h": q_ts_gapfill_1h,
-    "ts_gapfill_interp": q_ts_gapfill_interp,
-    "ts_asof_join": q_ts_asof_join,
-    "ts_m4_1h": q_ts_m4_1h,
-    "ts_lttb": q_ts_lttb,
-    "ts_counter_rate_1h": q_ts_counter_rate_1h,
-    "ts_quantiles_1d": q_ts_quantiles_1d,
-    "ts_acf": q_ts_acf,
-    "ts_anomaly": q_ts_anomaly,
-    "ts_rolling_1h": q_ts_rolling_1h,
-    "ts_interval_join": q_ts_interval_join,
-    "ts_concurrency": q_ts_concurrency,
-    "ts_heartbeat_1d": q_ts_heartbeat_1d,
-    "ts_cusum": q_ts_cusum,
-    "ts_gini": q_ts_gini,
-    "ts_hac_se": q_ts_hac_se,
-    "rel_tpch_q10": q_rel_tpch_q10,
-    "emb_mmr": q_emb_mmr,
-    "ts_ks_two_sample": q_ts_ks_two_sample,
-    "ts_burstiness": q_ts_burstiness,
-    "doc_yules_k": q_doc_yules_k,
-    "doc_fightin_words": q_doc_fightin_words,
-    "ts_trimmed": q_ts_trimmed,
-    "ts_calibration": q_ts_calibration,
-    "ts_tail_stats": q_ts_tail_stats,
-    "ts_sprt": q_ts_sprt,
-    "ts_records": q_ts_records,
-    "emb_drift": q_emb_drift,
-    "ts_hill": q_ts_hill,
-    "ts_ks_fdr": q_ts_ks_fdr,
-    "ts_circadian": q_ts_circadian,
-    "ts_leaky_bucket": q_ts_leaky_bucket,
-    "ts_anova_role": q_ts_anova_role,
-    "ts_kruskal": q_ts_kruskal,
-    "ts_ljung_box": q_ts_ljung_box,
-    "ts_allan": q_ts_allan,
-    "doc_dsir": q_doc_dsir,
-    "rel_tpch_q4": q_rel_tpch_q4,
-    "rel_tpch_q12": q_rel_tpch_q12,
-    "graph_kcore": q_graph_kcore,
-    "ts_kendall": q_ts_kendall,
-    "ts_kappa": q_ts_kappa,
-    "ts_lorenz": q_ts_lorenz,
-    "ts_strength": q_ts_strength,
-    "ts_sampen": q_ts_sampen,
-    "doc_hits": q_doc_hits,
-    "ts_bloom_fold": q_ts_bloom_fold,
-    "ts_dfa": q_ts_dfa,
-    "doc_readability": q_doc_readability,
-    "emb_ncm": q_emb_ncm,
-    "multimodal_sharpness": q_multimodal_sharpness,
-    "ts_mi": q_ts_mi,
-    "rel_tpch_q18": q_rel_tpch_q18,
-    "ts_spectral_entropy": q_ts_spectral_entropy,
-    "ts_dispersion": q_ts_dispersion,
-    "ts_logrank": q_ts_logrank,
-    "rel_trend_test": q_rel_trend_test,
-    "rel_mcnemar": q_rel_mcnemar,
-    "ts_brown_forsythe": q_ts_brown_forsythe,
-    "ts_grubbs": q_ts_grubbs,
-    "ts_cusumsq": q_ts_cusumsq,
-    "ts_partial_corr": q_ts_partial_corr,
-    "ts_seasonal_mk": q_ts_seasonal_mk,
-    "ts_gumbel": q_ts_gumbel,
-    "ts_lz76": q_ts_lz76,
-    "doc_vocab_richness": q_doc_vocab_richness,
-    "doc_mix_weights": q_doc_mix_weights,
-    "doc_heaps": q_doc_heaps,
-    "rel_tpch_q22": q_rel_tpch_q22,
-    "ts_cronbach": q_ts_cronbach,
-    "ts_stream_bloom": q_ts_stream_bloom,
-    "ts_dunn": q_ts_dunn,
-    "ts_wilcoxon": q_ts_wilcoxon,
-    "ts_mood": q_ts_mood,
-    "ts_ess": q_ts_ess,
-    "ts_conv_dedup": q_ts_conv_dedup,
-    "doc_jsd_halves": q_doc_jsd_halves,
-    "ts_role_ngrams": q_ts_role_ngrams,
-    "ts_mix_daily": q_ts_mix_daily,
-    "ts_dominant_lag": q_ts_dominant_lag,
-    "ts_tw_quantiles": q_ts_tw_quantiles,
-    "rel_prop_ztest": q_rel_prop_ztest,
-    "ts_endings": q_ts_endings,
-    "emb_effective_rank": q_emb_effective_rank,
-    "doc_stratified_sample": q_doc_stratified_sample,
-    "doc_weighted_sample": q_doc_weighted_sample,
-    "ts_state_agg": q_ts_state_agg,
-    "ts_channel_corr": q_ts_channel_corr,
-    "ts_mahalanobis": q_ts_mahalanobis,
-    "ts_survival": q_ts_survival,
-    "doc_contamination": q_doc_contamination,
-    "doc_repetition": q_doc_repetition,
-    "ts_hampel": q_ts_hampel,
-    "ts_holt": q_ts_holt,
-    "ts_stream_dedup": q_ts_stream_dedup,
-    "ts_dtw": q_ts_dtw,
-    "ts_decompose": q_ts_decompose,
-    "rel_retention_cohorts": q_rel_retention_cohorts,
-    "rel_scd2": q_rel_scd2,
-    "emb_random_projection": q_emb_random_projection,
-    "doc_winnowing_pairs": q_doc_winnowing_pairs,
-    "ts_rolling_quantile": q_ts_rolling_quantile,
-    "ts_gauge_delta": q_ts_gauge_delta,
-    "ts_channel_xcorr": q_ts_channel_xcorr,
-    "ts_score_features": q_ts_score_features,
-    "ts_ar1": q_ts_ar1,
-    "ts_ar1_backtest": q_ts_ar1_backtest,
-    "ts_role_transitions": q_ts_role_transitions,
-    "ts_funnel": q_ts_funnel,
-    "ts_loops": q_ts_loops,
-    "ts_budget": q_ts_budget,
-    "ts_budget_bpe": q_ts_budget_bpe,
-    "ts_bursts": q_ts_bursts,
-    "doc_lexical": q_doc_lexical,
-    "doc_tfidf": q_doc_tfidf,
-    "doc_lm_ppl": q_doc_lm_ppl,
-    "doc_pmi": q_doc_pmi,
-    "doc_hash_vectors": q_doc_hash_vectors,
-    "doc_zipf": q_doc_zipf,
-    "ts_drift": q_ts_drift,
-    "ts_unpivot": q_ts_unpivot,
-    "ts_rank_normalize": q_ts_rank_normalize,
-    "ts_zorder_box": q_ts_zorder_box,
-    "ts_parse_json": q_ts_parse_json,
-    "doc_curate": q_doc_curate,
-    "ts_upsert_latest": q_ts_upsert_latest,
-    "ts_twa_1h": q_ts_twa_1h,
-    "ts_caggs_incremental": q_ts_caggs_incremental,
-    "ts_sax": q_ts_sax,
-    "ts_ewma": q_ts_ewma,
-    "ts_histogram_fold": q_ts_histogram_fold,
-    "ts_cms_fold": q_ts_cms_fold,
-    "ts_histogram_quantile": q_ts_histogram_quantile,
-    "ts_cad_probs": q_ts_cad_probs,
-    "ts_cadence_stats": q_ts_cadence_stats,
-    "ts_ks_exp": q_ts_ks_exp,
-    "ts_runs": q_ts_runs,
-    "ts_perm_entropy": q_ts_perm_entropy,
-    "ts_pettitt": q_ts_pettitt,
-    "ts_mann_kendall": q_ts_mann_kendall,
-    "ts_granger_lag1": q_ts_granger_lag1,
-    "ts_theil_sen": q_ts_theil_sen,
-    "ts_variance_ratio": q_ts_variance_ratio,
-    "ts_hurst": q_ts_hurst,
-    "ts_pacf": q_ts_pacf,
-    "doc_adamic_adar": q_doc_adamic_adar,
-    "emb_semdedup": q_emb_semdedup,
-    "rel_tpch_q6": q_rel_tpch_q6,
-    "ts_spearman": q_ts_spearman,
-    "ts_dialogue": q_ts_dialogue,
-    "ts_role_entropy": q_ts_role_entropy,
-    "rel_tpch_q14": q_rel_tpch_q14,
-    "emb_pq_codes": q_emb_pq_codes,
-    "emb_pq_topk": q_emb_pq_topk,
-    "doc_mojibake": q_doc_mojibake,
-    "emb_dim_stats": q_emb_dim_stats,
-    "ts_stream_enrich": q_ts_stream_enrich,
-    "doc_line_dedup": q_doc_line_dedup,
-    "doc_ngram_coverage": q_doc_ngram_coverage,
-    "ts_ddsketch_fold": q_ts_ddsketch_fold,
-    "ts_ddsketch_quantile": q_ts_ddsketch_quantile,
-    "doc_textrank": q_doc_textrank,
-    "emb_ivf_filtered": q_emb_ivf_filtered,
-    "ts_linear_probe": q_ts_linear_probe,
-    "ts_tool_assoc": q_ts_tool_assoc,
-    "ts_stream_ddsketch": q_ts_stream_ddsketch,
-    "ts_croston": q_ts_croston,
-    "doc_vocab_novelty": q_doc_vocab_novelty,
-    "ts_auc": q_ts_auc,
-    "ts_benford": q_ts_benford,
-    "ts_welch_ab": q_ts_welch_ab,
-    "doc_triangles": q_doc_triangles,
-    "doc_chi2_lang_source": q_doc_chi2_lang_source,
-    "doc_local_clustering": q_doc_local_clustering,
-    "doc_graph_bfs": q_doc_graph_bfs,
-    "doc_assortativity": q_doc_assortativity,
-    "ts_sax_motifs": q_ts_sax_motifs,
-    "rel_tpch_q3": q_rel_tpch_q3,
-    "rel_tpch_q5": q_rel_tpch_q5,
-    "ts_corr_pairs": q_ts_corr_pairs,
-    "ts_disorder": q_ts_disorder,
-    "ts_holt_winters": q_ts_holt_winters,
-    "multimodal_phash_clusters": q_multimodal_phash_clusters,
-    "emb_anisotropy": q_emb_anisotropy,
-    "ts_forecast_score": q_ts_forecast_score,
-    "ts_max_slope": q_ts_max_slope,
-    "ts_percent_beyond_1_std": q_ts_percent_beyond_1_std,
-    "ts_sessionize": q_ts_sessionize,
-    "ts_top3_per_type": q_ts_top3_per_type,
-    "ts_gorilla_roundtrip": q_ts_gorilla_roundtrip,
-    "ts_features_with_meta": q_ts_features_with_meta,
-    "ts_rollup_multi": q_ts_rollup_multi,
-    "ts_parse_csv": q_ts_parse_csv,
-    "ts_stream_moments": q_ts_stream_moments,
-    "ts_stream_sessions": q_ts_stream_sessions,
-    "ts_stream_stateful": q_ts_stream_stateful,
-    "ts_stream_join": q_ts_stream_join,
-    "ts_stream_sliding": q_ts_stream_sliding,
-    "rel_tpch_q1": q_rel_tpch_q1,
-    "rel_nation_revenue": q_rel_nation_revenue,
-    "rel_customers_without_orders": q_rel_customers_without_orders,
-    "rel_rollup_sets": q_rel_rollup_sets,
-    "rel_approx_distinct": q_rel_approx_distinct,
-    "rel_except_all": q_rel_except_all,
-    "doc_dedup_exact": q_doc_dedup_exact,
-    "doc_bm25": q_doc_bm25,
-    "doc_hash_split": q_doc_hash_split,
-    "doc_redact_pii": q_doc_redact_pii,
-    "doc_dedup_resolve": q_doc_dedup_resolve,
-    "doc_pack": q_doc_pack,
-    "doc_pack_bpe": q_doc_pack_bpe,
-    "doc_substring_pairs": q_doc_substring_pairs,
-    "ts_von_neumann": q_ts_von_neumann,
-    "ts_snht": q_ts_snht,
-    "ts_page_hinkley": q_ts_page_hinkley,
-    "ts_turning_points": q_ts_turning_points,
-    "ts_esd": q_ts_esd,
-    "ts_theta": q_ts_theta,
-    "ts_theta_backtest": q_ts_theta_backtest,
-    "ts_stream_counter_rate": q_ts_stream_counter_rate,
-    "doc_fingerprint": q_doc_fingerprint,
-    "doc_token_stats": q_doc_token_stats,
-    "doc_vocab_topk": q_doc_vocab_topk,
-    "doc_quality": q_doc_quality,
-    "doc_jaccard_pairs": q_doc_jaccard_pairs,
-    "doc_dedup_clusters": q_doc_dedup_clusters,
-    "doc_lang_id": q_doc_lang_id,
-    "emb_cosine_topk": q_emb_cosine_topk,
-    "emb_cosine_pairs": q_emb_cosine_pairs,
-    "multimodal_meta": q_multimodal_meta,
-    # invariant-oracle queries (kernel not SQL-expressible, but a
-    # deterministic invariant of its output is — see each docstring)
-    "doc_minhash_lsh": q_doc_minhash_lsh,
-    "doc_simhash": q_doc_simhash,
-    "doc_simhash_pairs": q_doc_simhash_pairs,
-    "emb_lsh_topk": q_emb_lsh_topk,
-    "emb_ivf_topk": q_emb_ivf_topk,
-    "emb_ivf_recall": q_emb_ivf_recall,
-    "doc_winnowing": q_doc_winnowing,
-    "multimodal_features": q_multimodal_features,
-    "multimodal_resize": q_multimodal_resize,
-    "multimodal_audio": q_multimodal_audio,
-    "multimodal_phash": q_multimodal_phash,
-    "multimodal_scenecut": q_multimodal_scenecut,
-    "multimodal_phash_pairs": q_multimodal_phash_pairs,
-    # whole-series model fits: invariant oracles since round 3 (exact
-    # value checks live in pytest layer 2)
-    "ts_lomb_scargle_conv": q_ts_lomb_scargle_conv,
-    "ts_qso_conv": q_ts_qso_conv,
-}
-
-ORACLE_SQL = {
-    "ts_derive_series": SQL_TS_DERIVE,
-    "ts_rollup_1h_kernel": SQL_TS_ROLLUP_1H,
-    "ts_rollup_1d_native": SQL_TS_ROLLUP_1D,
-    "ts_tier_fold": SQL_TS_TIER_FOLD,
-    "ts_hll_tier_fold": SQL_TS_HLL_TIER_FOLD,
-    "ts_gapfill_1h": SQL_TS_GAPFILL_1H,
-    "ts_gapfill_interp": SQL_TS_GAPFILL_INTERP,
-    "ts_asof_join": SQL_TS_ASOF_JOIN,
-    "ts_m4_1h": SQL_TS_M4_1H,
-    "ts_lttb": SQL_TS_LTTB,
-    "ts_counter_rate_1h": SQL_TS_COUNTER_RATE_1H,
-    "ts_quantiles_1d": SQL_TS_QUANTILES_1D,
-    "ts_acf": SQL_TS_ACF,
-    "ts_anomaly": SQL_TS_ANOMALY,
-    "ts_rolling_1h": SQL_TS_ROLLING_1H,
-    "ts_interval_join": SQL_TS_INTERVAL_JOIN,
-    "ts_heartbeat_1d": SQL_TS_HEARTBEAT_1D,
-    "ts_cusum": SQL_TS_CUSUM,
-    "ts_gini": SQL_TS_GINI,
-    "ts_hac_se": SQL_TS_HAC_SE,
-    "rel_tpch_q10": SQL_REL_TPCH_Q10,
-    "emb_mmr": _mmr_sql(),
-    "ts_ks_two_sample": SQL_TS_KS_TWO_SAMPLE,
-    "ts_burstiness": SQL_TS_BURSTINESS,
-    "doc_yules_k": SQL_DOC_YULES_K,
-    "doc_fightin_words": SQL_DOC_FIGHTIN_WORDS,
-    "ts_trimmed": SQL_TS_TRIMMED,
-    "ts_calibration": SQL_TS_CALIBRATION,
-    "ts_tail_stats": SQL_TS_TAIL_STATS,
-    "ts_sprt": SQL_TS_SPRT,
-    "ts_records": SQL_TS_RECORDS,
-    "emb_drift": SQL_EMB_DRIFT,
-    "ts_hill": SQL_TS_HILL,
-    "ts_ks_fdr": SQL_TS_KS_FDR,
-    "ts_circadian": SQL_TS_CIRCADIAN,
-    "ts_leaky_bucket": SQL_TS_LEAKY_BUCKET,
-    "ts_anova_role": SQL_TS_ANOVA_ROLE,
-    "ts_kruskal": SQL_TS_KRUSKAL,
-    "ts_ljung_box": SQL_TS_LJUNG_BOX,
-    "ts_allan": SQL_TS_ALLAN,
-    "doc_dsir": SQL_DOC_DSIR,
-    "rel_tpch_q4": SQL_REL_TPCH_Q4,
-    "rel_tpch_q12": SQL_REL_TPCH_Q12,
-    "graph_kcore": _kcore_sql(),
-    "ts_kendall": SQL_TS_KENDALL,
-    "ts_kappa": SQL_TS_KAPPA,
-    "ts_lorenz": SQL_TS_LORENZ,
-    "ts_strength": SQL_TS_STRENGTH,
-    "ts_sampen": SQL_TS_SAMPEN,
-    "doc_hits": SQL_DOC_HITS,
-    "ts_bloom_fold": SQL_TS_BLOOM_FOLD,
-    "ts_dfa": SQL_TS_DFA,
-    "doc_readability": SQL_DOC_READABILITY,
-    "emb_ncm": SQL_EMB_NCM,
-    "multimodal_sharpness": SQL_MULTIMODAL_SHARPNESS,
-    "ts_mi": SQL_TS_MI,
-    "rel_tpch_q18": SQL_REL_TPCH_Q18,
-    "ts_spectral_entropy": SQL_TS_SPECTRAL,
-    "ts_dispersion": SQL_TS_DISPERSION,
-    "ts_logrank": SQL_TS_LOGRANK,
-    "rel_trend_test": SQL_REL_TREND_TEST,
-    "rel_mcnemar": SQL_REL_MCNEMAR,
-    "ts_brown_forsythe": SQL_TS_BROWN_FORSYTHE,
-    "ts_grubbs": SQL_TS_GRUBBS,
-    "ts_cusumsq": SQL_TS_CUSUMSQ,
-    "ts_partial_corr": SQL_TS_PARTIAL_CORR,
-    "ts_seasonal_mk": SQL_TS_SEASONAL_MK,
-    "ts_gumbel": SQL_TS_GUMBEL,
-    "ts_lz76": SQL_TS_LZ76,
-    "doc_vocab_richness": SQL_DOC_VOCAB_RICHNESS,
-    "doc_mix_weights": SQL_DOC_MIX_WEIGHTS,
-    "doc_heaps": SQL_DOC_HEAPS,
-    "rel_tpch_q22": SQL_REL_TPCH_Q22,
-    "ts_cronbach": SQL_TS_CRONBACH,
-    "ts_stream_bloom": SQL_TS_STREAM_BLOOM,
-    "ts_dunn": SQL_TS_DUNN,
-    "ts_wilcoxon": SQL_TS_WILCOXON,
-    "ts_mood": SQL_TS_MOOD,
-    "ts_ess": SQL_TS_ESS,
-    "ts_conv_dedup": SQL_TS_CONV_DEDUP,
-    "doc_jsd_halves": SQL_DOC_JSD_HALVES,
-    "ts_role_ngrams": SQL_TS_ROLE_NGRAMS,
-    "ts_mix_daily": SQL_TS_MIX_DAILY,
-    "ts_dominant_lag": SQL_TS_DOMINANT_LAG,
-    "ts_tw_quantiles": SQL_TS_TW_QUANTILES,
-    "rel_prop_ztest": SQL_REL_PROP_ZTEST,
-    "ts_endings": SQL_TS_ENDINGS,
-    "emb_effective_rank": SQL_EMB_EFFECTIVE_RANK,
-    "doc_stratified_sample": _stratified_sample_sql(),
-    "ts_state_agg": SQL_TS_STATE_AGG,
-    "ts_channel_corr": SQL_TS_CHANNEL_CORR,
-    "doc_contamination": SQL_DOC_CONTAMINATION,
-    "doc_repetition": SQL_DOC_REPETITION,
-    "ts_hampel": SQL_TS_HAMPEL,
-    "ts_holt": SQL_TS_HOLT,
-    "ts_stream_dedup": SQL_TS_STREAM_DEDUP,
-    "ts_dtw": _dtw_sql(),
-    "ts_decompose": SQL_TS_DECOMPOSE,
-    "rel_retention_cohorts": SQL_REL_RETENTION,
-    "emb_random_projection": _jl_sql(),
-    "doc_winnowing_pairs": SQL_DOC_WINNOWING_PAIRS,
-    "ts_rolling_quantile": SQL_TS_ROLLING_QUANTILE,
-    "ts_gauge_delta": SQL_TS_GAUGE_DELTA,
-    "ts_channel_xcorr": _xcorr_sql(),
-    "ts_score_features": SQL_TS_SCORE_FEATURES,
-    "ts_ar1": SQL_TS_AR1,
-    "ts_role_transitions": SQL_TS_ROLE_TRANSITIONS,
-    "ts_funnel": SQL_TS_FUNNEL,
-    "doc_lexical": SQL_DOC_LEXICAL,
-    "doc_tfidf": SQL_DOC_TFIDF,
-    "ts_loops": SQL_TS_LOOPS,
-    "ts_cms_fold": SQL_TS_CMS_FOLD,
-    "emb_ivf_recall": _ivf_recall_sql(),
-    "rel_scd2": SQL_REL_SCD2,
-    "ts_ar1_backtest": SQL_TS_AR1_BACKTEST,
-    "doc_weighted_sample": SQL_DOC_WEIGHTED_SAMPLE,
-    "ts_calendar_fold": SQL_TS_CALENDAR_FOLD,
-    "doc_pmi": SQL_DOC_PMI,
-    "ts_rank_normalize": SQL_TS_RANK_NORMALIZE,
-    "ts_ks_exp": SQL_TS_KS_EXP,
-    "ts_runs": SQL_TS_RUNS,
-    "ts_perm_entropy": SQL_TS_PERM_ENTROPY,
-    "ts_pettitt": SQL_TS_PETTITT,
-    "ts_mann_kendall": SQL_TS_MANN_KENDALL,
-    "ts_granger_lag1": SQL_TS_GRANGER_LAG1,
-    "ts_theil_sen": SQL_TS_THEIL_SEN,
-    "ts_variance_ratio": SQL_TS_VARIANCE_RATIO,
-    "ts_hurst": SQL_TS_HURST,
-    "ts_pacf": SQL_TS_PACF,
-    "doc_adamic_adar": SQL_DOC_ADAMIC_ADAR,
-    "emb_semdedup": _semdedup_sql(),
-    "rel_tpch_q6": SQL_REL_TPCH_Q6,
-    "ts_spearman": SQL_TS_SPEARMAN,
-    "ts_dialogue": SQL_TS_DIALOGUE,
-    "ts_role_entropy": SQL_TS_ROLE_ENTROPY,
-    "rel_tpch_q14": SQL_REL_TPCH_Q14,
-    "emb_pq_codes": _pq_codes_sql(),
-    "emb_pq_topk": _pq_topk_sql(),
-    "doc_mojibake": SQL_DOC_MOJIBAKE,
-    "emb_dim_stats": SQL_EMB_DIM_STATS,
-    "ts_stream_enrich": SQL_TS_STREAM_ENRICH,
-    "doc_line_dedup": SQL_DOC_LINE_DEDUP,
-    "doc_ngram_coverage": SQL_DOC_NGRAM_COVERAGE,
-    "ts_ddsketch_fold": SQL_TS_DDSKETCH_FOLD,
-    "ts_ddsketch_quantile": SQL_TS_DDSKETCH_QUANTILE,
-    "doc_textrank": SQL_DOC_TEXTRANK,
-    "emb_ivf_filtered": SQL_EMB_IVF_FILTERED,
-    "ts_linear_probe": SQL_TS_LINEAR_PROBE,
-    "ts_tool_assoc": SQL_TS_TOOL_ASSOC,
-    "ts_stream_ddsketch": SQL_TS_STREAM_DDSKETCH,
-    "ts_croston": SQL_TS_CROSTON,
-    "doc_vocab_novelty": SQL_DOC_VOCAB_NOVELTY,
-    "ts_auc": SQL_TS_AUC,
-    "ts_benford": SQL_TS_BENFORD,
-    "ts_welch_ab": SQL_TS_WELCH_AB,
-    "doc_triangles": SQL_DOC_TRIANGLES,
-    "doc_chi2_lang_source": SQL_DOC_CHI2_LANG_SOURCE,
-    "doc_local_clustering": SQL_DOC_LOCAL_CLUSTERING,
-    "doc_graph_bfs": SQL_DOC_GRAPH_BFS,
-    "doc_assortativity": SQL_DOC_ASSORTATIVITY,
-    "ts_sax_motifs": SQL_TS_SAX_MOTIFS,
-    "rel_tpch_q3": SQL_REL_TPCH_Q3,
-    "rel_tpch_q5": SQL_REL_TPCH_Q5,
-    "ts_corr_pairs": SQL_TS_CORR_PAIRS,
-    "ts_disorder": SQL_TS_DISORDER,
-    "ts_holt_winters": _hw_sql(),
-    "multimodal_phash_clusters": _phash_clusters_sql(),
-    "emb_anisotropy": SQL_EMB_ANISOTROPY,
-    "ts_forecast_score": _forecast_score_sql(),
-    "ts_budget": SQL_TS_BUDGET,
-    "ts_budget_bpe": _budget_bpe_sql(),
-    "doc_hash_vectors": _hash_vectors_sql(),
-    "ts_concurrency": SQL_TS_CONCURRENCY,
-    "ts_stream_sliding": SQL_TS_STREAM_SLIDING,
-    "ts_mahalanobis": _maha_sql(),
-    "ts_survival": SQL_TS_SURVIVAL,
-    "multimodal_audio": SQL_MULTIMODAL_AUDIO,
-    "multimodal_phash": SQL_MULTIMODAL_PHASH,
-    "multimodal_scenecut": SQL_MULTIMODAL_SCENECUT,
-    "multimodal_phash_pairs": SQL_MULTIMODAL_PHASH_PAIRS,
-    "doc_zipf": SQL_DOC_ZIPF,
-    "ts_bursts": SQL_TS_BURSTS,
-    "doc_lm_ppl": SQL_DOC_LM_PPL,
-    "ts_drift": _drift_sql(),
-    "ts_unpivot": SQL_TS_UNPIVOT,
-    "ts_zorder_box": SQL_TS_ZORDER_BOX,
-    "ts_parse_json": SQL_TS_PARSE_JSON,
-    "doc_curate": _curate_sql(),
-    "ts_upsert_latest": SQL_TS_UPSERT_LATEST,
-    "ts_twa_1h": SQL_TS_TWA_1H,
-    "ts_caggs_incremental": SQL_TS_CAGGS_INCREMENTAL,
-    "ts_sax": SQL_TS_SAX,
-    "ts_ewma": SQL_TS_EWMA,
-    "ts_histogram_fold": SQL_TS_HISTOGRAM_FOLD,
-    "ts_histogram_quantile": SQL_TS_HISTOGRAM_QUANTILE,
-    "ts_cad_probs": SQL_TS_CAD_PROBS,
-    "ts_cadence_stats": SQL_TS_CADENCE_STATS,
-    "ts_max_slope": SQL_TS_MAX_SLOPE,
-    "ts_percent_beyond_1_std": SQL_TS_PB1S,
-    "ts_sessionize": SQL_TS_SESSIONIZE,
-    "ts_top3_per_type": SQL_TS_TOP3,
-    "ts_gorilla_roundtrip": SQL_TS_GORILLA,
-    "ts_features_with_meta": SQL_TS_FEATURES_WITH_META,
-    "ts_rollup_multi": SQL_TS_ROLLUP_MULTI,
-    "ts_parse_csv": SQL_TS_PARSE_CSV,
-    "ts_stream_moments": SQL_TS_STREAM_MOMENTS,
-    "ts_stream_sessions": SQL_TS_STREAM_SESSIONS,
-    "ts_stream_stateful": SQL_TS_STREAM_STATEFUL,
-    "ts_stream_join": SQL_TS_STREAM_JOIN,
-    "rel_tpch_q1": SQL_REL_TPCH_Q1,
-    "rel_nation_revenue": SQL_REL_NATION_REVENUE,
-    "rel_customers_without_orders": SQL_REL_ANTI,
-    "rel_rollup_sets": SQL_REL_ROLLUP_SETS,
-    "rel_approx_distinct": SQL_REL_APPROX_DISTINCT,
-    "rel_except_all": SQL_REL_EXCEPT_ALL,
-    "doc_dedup_exact": SQL_DOC_DEDUP_EXACT,
-    "doc_bm25": _bm25_sql(),
-    "doc_hash_split": _hash_split_sql(),
-    "doc_redact_pii": _redact_sql(),
-    "doc_dedup_resolve": SQL_DOC_DEDUP_RESOLVE,
-    "doc_pack": SQL_DOC_PACK,
-    "doc_pack_bpe": _pack_bpe_sql(),
-    "doc_substring_pairs": SQL_DOC_SUBSTRING_PAIRS,
-    "ts_von_neumann": SQL_TS_VON_NEUMANN,
-    "ts_snht": SQL_TS_SNHT,
-    "ts_page_hinkley": _ph_sql(),
-    "ts_turning_points": SQL_TS_TURNING_POINTS,
-    "ts_esd": _esd_sql(),
-    "ts_theta": _theta_sql(),
-    "ts_theta_backtest": _theta_backtest_sql(),
-    "ts_stream_counter_rate": SQL_TS_COUNTER_RATE_1H,
-    "doc_fingerprint": SQL_DOC_FINGERPRINT,
-    "doc_token_stats": SQL_DOC_TOKEN_STATS,
-    "doc_vocab_topk": SQL_DOC_VOCAB_TOPK,
-    "doc_quality": SQL_DOC_QUALITY,
-    "doc_jaccard_pairs": SQL_DOC_JACCARD,
-    "doc_dedup_clusters": SQL_DOC_DEDUP_CLUSTERS,
-    "doc_lang_id": SQL_DOC_LANG_ID,
-    "emb_cosine_topk": SQL_EMB_COSINE_TOPK,
-    "emb_cosine_pairs": SQL_EMB_COSINE_PAIRS,
-    "multimodal_meta": SQL_MULTIMODAL_META,
-    "doc_minhash_lsh": SQL_DOC_MINHASH_LSH,
-    "doc_simhash": SQL_DOC_SIMHASH,
-    "doc_simhash_pairs": SQL_DOC_SIMHASH_PAIRS,
-    "emb_lsh_topk": _lsh_topk_sql(),
-    "emb_ivf_topk": _ivf_topk_sql(),
-    "doc_winnowing": SQL_DOC_WINNOWING,
-    "multimodal_features": SQL_MULTIMODAL_FEATURES,
-    "multimodal_resize": SQL_MULTIMODAL_RESIZE,
-    "ts_lomb_scargle_conv": SQL_TS_LOMB_SCARGLE,
-    "ts_qso_conv": SQL_TS_QSO,
-}
+QUERIES = {name: fn for name, (fn, _) in _REGISTRY.items()}
+ORACLE_SQL = {name: sql for name, (_, sql) in _REGISTRY.items()}

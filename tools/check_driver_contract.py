@@ -1,8 +1,10 @@
 """Local replica of the driver's correctness gate: run every
 queries() entry on Spark and its oracle_sql() on DuckDB at sf0.01,
 compare row count + order-insensitive values (columns sorted by name).
+The session takes get_spark()'s host defaults (the CPUs in the
+affinity mask).
 
-Usage: python tools/check_driver_contract.py [sf_dir]
+Usage: python tools/check_driver_contract.py [sf_dir] [name,name,...]
 """
 
 from __future__ import annotations
@@ -85,8 +87,7 @@ def main(sf_dir: str = "/root/testdata/sf0.01", only: list[str] | None = None):
     import __spark_entry__ as entrymod
     from cesium_spark.session import get_spark
 
-    spark = get_spark(master="local[8]", shuffle_partitions=8,
-                      app_name="contract_check",
+    spark = get_spark(app_name="contract_check",
                       extra_conf={"spark.ui.showConsoleProgress": "false"})
     con = duckdb.connect()
     for t in TABLES:
@@ -95,21 +96,15 @@ def main(sf_dir: str = "/root/testdata/sf0.01", only: list[str] | None = None):
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     failures = {}
-    for name, fn in qs.items():
-        if only and name not in only:
-            continue
+    names = [n for n in qs if not only or n in only]
+    for name in names:
+        fn = qs[name]
         t0 = time.time()
         try:
             got = fn(spark, sf_dir).toPandas()
         except Exception as ex:
             failures[name] = [f"SPARK ERROR: {ex}"]
             print(f"✗ {name}: spark error {str(ex)[:200]}")
-            continue
-        if name not in oracles:
-            status = "rows-only"
-            ok = len(got) >= 0
-            print(f"• {name}: {len(got)} rows ({status}) "
-                  f"[{time.time()-t0:.1f}s]")
             continue
         try:
             rel = con.sql(oracles[name])
@@ -138,9 +133,9 @@ def main(sf_dir: str = "/root/testdata/sf0.01", only: list[str] | None = None):
         print(f"entry(): {n} rows")
     spark.stop()
     if failures:
-        print(f"\nFAILED: {len(failures)}: {list(failures)}")
+        print(f"\nFAILED: {len(failures)}/{len(names)}: {list(failures)}")
         sys.exit(1)
-    print("\nALL MATCH")
+    print(f"\nALL MATCH {len(names)}/{len(names)}")
 
 
 if __name__ == "__main__":
