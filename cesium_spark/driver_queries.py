@@ -3178,7 +3178,7 @@ WHERE slot_std > 0
 # stratified sampling
 # ---------------------------------------------------------------------------
 
-_ROLL_SPAN_S = 3600.0
+_ROLL_WINDOW_S = 3600.0
 
 
 def q_ts_rolling_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3188,7 +3188,7 @@ def q_ts_rolling_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     cannot diverge). One window exchange, no UDF; full-value oracle
     replays the identical RANGE frame."""
     from cesium_spark.operators.intervals import rolling_window
-    out = rolling_window(_value_series(spark, sf_dir), _ROLL_SPAN_S)
+    out = rolling_window(_value_series(spark, sf_dir), _ROLL_WINDOW_S)
     return out.select(
         "conv_id", F.col("turn_idx").cast("long").alias("turn_idx"),
         _r(F.col("t")).alias("t"),
@@ -3209,7 +3209,7 @@ SQL_TS_ROLLING_1H = oracle(q_ts_rolling_1h, f"""{_VALUE_SERIES_SQL}
   FROM (SELECT *, cast(floor(t * 1000 + 0.5) AS bigint) AS tms
         FROM series)
   WINDOW w AS (PARTITION BY conv_id ORDER BY tms
-               RANGE BETWEEN {int(_ROLL_SPAN_S * 1000)} PRECEDING
+               RANGE BETWEEN {int(_ROLL_WINDOW_S * 1000)} PRECEDING
                      AND CURRENT ROW)
 )
 SELECT conv_id, turn_idx, round(t, 6) + 0.0 AS t, round(y, 6) + 0.0 AS y,

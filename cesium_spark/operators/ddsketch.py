@@ -47,9 +47,8 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from cesium_spark.operators.rollup import TIERS
-
-_FOLD_TARGETS = {"1h": "hour", "1d": "day"}
+from cesium_spark.operators.fold import fold_tier
+from cesium_spark.operators.rollup import tier_window
 
 
 def gamma_of(alpha: float) -> float:
@@ -88,14 +87,11 @@ def ddsketch_build(series: DataFrame, tier: str, key_cols: list[str],
     up front — same convention as the CMS/histogram tiers). ONE hash
     exchange: per-row bucket assignment is pure codegen, then one
     two-phase count whose partials collapse map-side."""
-    if tier not in TIERS:
-        raise ValueError(f"unknown tier {tier!r}; expected one of {list(TIERS)}")
+    window = tier_window("ts", tier)
     store, bkt = _checked_bucket(value_col, alpha, boundary_margin)
     return (series
             .where(F.col(value_col).isNotNull())
-            .select(*key_cols,
-                    F.date_trunc(TIERS[tier], F.col("ts"))
-                    .alias("window_start"),
+            .select(*key_cols, window.alias("window_start"),
                     store.alias("store"), bkt.alias("bkt"))
             .groupBy(*key_cols, "window_start", "store", "bkt")
             .agg(F.count(F.lit(1)).alias("cnt"))
@@ -109,15 +105,9 @@ def ddsketch_fold(fine: DataFrame, target_tier: str,
     cell-by-cell addition IS the sketch of the union; estimates after
     folding equal direct coarse-tier estimates, integer-exact). One
     shuffle of the small cell table, never raw turns."""
-    if target_tier not in _FOLD_TARGETS:
-        raise ValueError(f"can only fold to {list(_FOLD_TARGETS)}")
-    unit = TIERS[target_tier]
-    return (fine
-            .withColumn("window_start",
-                        F.date_trunc(unit, F.col("window_start")))
-            .groupBy(*key_cols, "window_start", "store", "bkt")
-            .agg(F.sum("cnt").alias("cnt"))
-            .withColumn("tier", F.lit(target_tier)))
+    return fold_tier(fine, target_tier,
+                     [*key_cols, "window_start", "store", "bkt"],
+                     F.sum("cnt").alias("cnt"))
 
 
 def midpoint_literals(alpha: float, bkt_bound: int = 700) -> list[float]:

@@ -26,20 +26,19 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from cesium_spark.operators.rollup import TIERS
+from cesium_spark.operators.rollup import tier_window
 
 
 def m4_downsample(series: DataFrame, tier: str) -> DataFrame:
     """Returns (conv_id, channel, bucket, y_min, y_max, y_first,
     y_last, t_first, t_last, n) — the M4 tuple per tier bucket."""
-    if tier not in TIERS:
-        raise ValueError(f"unknown tier {tier!r}")
+    bucket = tier_window("ts", tier)
     # order key: (t, turn_idx) packed in a struct — struct ordering is
     # lexicographic, so equal-t ties fall back to turn order
     okey = F.struct(F.col("t"), F.col("turn_idx"))
     return (
         series
-        .withColumn("bucket", F.date_trunc(TIERS[tier], F.col("ts")))
+        .withColumn("bucket", bucket)
         .groupBy("conv_id", "channel", "bucket")
         .agg(
             F.min("y").alias("y_min"),

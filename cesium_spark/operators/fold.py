@@ -1,23 +1,56 @@
-"""Tier folding: 1m → 1h → 1d continuous-aggregate maintenance for the
-exactly-mergeable statistics (SURVEY.md §2.9 — TimescaleDB-style cagg
-fold; no reference counterpart).
+"""Tier folding: continuous-aggregate maintenance up the one tier ladder
+(``rollup.LADDER``: 1m → 1h → 1d, then the calendar tiers 1w and 1mo;
+SURVEY.md §2.9 — TimescaleDB-style cagg fold; no reference counterpart).
+
+:func:`fold_tier` is the single fold every mergeable tier family uses:
+truncate the fine tier's ``window_start`` to the target tier, re-group
+on the family's cell key, and merge with the family's aggregates — one
+JVM-only shuffle of the small tier table, never of raw turns. The
+families: moments (here), HLL distinct sketches (here), Count-Min and
+Bloom cells (sketches.py), DDSketch cells (ddsketch.py) and fixed-edge
+histograms (histogram.py). Any ladder tier above 1m is a fold target.
 
 Folding reuses the fine tier's moments instead of rescanning raw turns:
 count/min/max merge exactly; float sums (Σy, Σy², Σy³) merge
 associatively but not bit-stably, so folded mean/std/skew are the FAST
 path only — order-sensitive features (median, percentiles, Stetson,
 Lomb–Scargle) are recomputed from the coarser tier's raw slice by the
-kernel path (SURVEY.md §4.3).
+kernel path (SURVEY.md §4.3). The sketch and histogram families are
+integer (or bitwise) cells, so their folds equal direct builds exactly.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from cesium_spark.operators.rollup import TIERS
+from cesium_spark.operators.rollup import (
+    LADDER,
+    MOMENTS_SCHEMA_COLS,
+    moments_merge_aggs,
+    tier_window,
+)
 
-_FOLD_TARGETS = {"1h": "hour", "1d": "day", "1w": "week", "1mo": "month"}
+# every ladder tier above the finest is a fold target
+FOLD_LADDER = list(LADDER)[1:]
+
+
+def fold_tier(fine: DataFrame, target: str, keys: list[str],
+              *merge_aggs: Column) -> DataFrame:
+    """Fold a finer tier table up to ``target``: ``window_start`` is
+    truncated to the target tier, rows re-group on ``keys`` (the
+    family's full cell key, ``window_start`` included; its order is the
+    output's column order) and merge with ``merge_aggs``; a ``tier``
+    column names the target."""
+    if target not in FOLD_LADDER:
+        raise ValueError(f"can only fold to {FOLD_LADDER}")
+    return (
+        fine
+        .withColumn("window_start", tier_window("window_start", target))
+        .groupBy(*keys)
+        .agg(*merge_aggs)
+        .withColumn("tier", F.lit(target))
+    )
 
 
 def fold_moments(fine_moments: DataFrame, target_tier: str) -> DataFrame:
@@ -25,25 +58,9 @@ def fold_moments(fine_moments: DataFrame, target_tier: str) -> DataFrame:
     One JVM-only shuffle on the (smaller) moments table — at 10^12 turns
     this touches 1m-window counts (~10^9 rows), not raw turns.
     """
-    if target_tier not in _FOLD_TARGETS:
-        raise ValueError(f"can only fold to {list(_FOLD_TARGETS)}")
-    unit = TIERS[target_tier]
-    return (
-        fine_moments
-        .withColumn("window_start", F.date_trunc(unit, F.col("window_start")))
-        .groupBy("conv_id", "channel", "window_start")
-        .agg(
-            F.sum("n").alias("n"),
-            F.min("y_min").alias("y_min"),
-            F.max("y_max").alias("y_max"),
-            F.sum("y_sum").alias("y_sum"),
-            F.sum("y_sum2").alias("y_sum2"),
-            F.sum("y_sum3").alias("y_sum3"),
-            F.min("t_min").alias("t_min"),
-            F.max("t_max").alias("t_max"),
-        )
-        .withColumn("tier", F.lit(target_tier))
-    )
+    return fold_tier(fine_moments, target_tier,
+                     ["conv_id", "channel", "window_start"],
+                     *moments_merge_aggs())
 
 
 def rollup_distinct_sketches(df: DataFrame, tier: str, key_cols: list[str],
@@ -56,10 +73,8 @@ def rollup_distinct_sketches(df: DataFrame, tier: str, key_cols: list[str],
     from lower by sketch UNION instead of rescanning raw (exact
     distinct is a full re-shuffle of raw values per tier — the thing
     that does NOT scale to 10^12 turns)."""
-    if tier not in TIERS:
-        raise ValueError(f"unknown tier {tier!r}")
     return (
-        df.withColumn("window_start", F.date_trunc(TIERS[tier], F.col("ts")))
+        df.withColumn("window_start", tier_window("ts", tier))
         .groupBy(*key_cols, "window_start")
         .agg(F.hll_sketch_agg(value_col, F.lit(lgk)).alias("sketch"),
              F.count(F.lit(1)).alias("n"))
@@ -75,19 +90,10 @@ def fold_distinct_sketches(fine: DataFrame, target_tier: str,
     sketches is, by the sketch algebra, the sketch of the unioned
     windows, so estimates after folding equal estimates computed
     directly at the coarse tier (pytest + driver invariant)."""
-    if target_tier not in _FOLD_TARGETS:
-        raise ValueError(f"can only fold to {list(_FOLD_TARGETS)}")
-    unit = TIERS[target_tier]
-    return (
-        fine
-        .withColumn("window_start", F.date_trunc(unit, F.col("window_start")))
-        .groupBy(*key_cols, "window_start")
-        .agg(F.hll_union_agg("sketch").alias("sketch"),
-             F.sum("n").alias("n"))
-        .withColumn("tier", F.lit(target_tier))
-        .withColumn("distinct_est",
-                    F.hll_sketch_estimate("sketch").cast("long"))
-    )
+    return fold_tier(
+        fine, target_tier, [*key_cols, "window_start"],
+        F.hll_union_agg("sketch").alias("sketch"), F.sum("n").alias("n"),
+    ).withColumn("distinct_est", F.hll_sketch_estimate("sketch").cast("long"))
 
 
 def merge_moments(base: DataFrame, delta: DataFrame) -> DataFrame:
@@ -117,8 +123,8 @@ def merge_moments(base: DataFrame, delta: DataFrame) -> DataFrame:
     a subset of the merge keys — plan-asserted in pytest: 2 exchanges
     total, both on the INPUT rollups, zero on the merge).
     """
-    cols = ["conv_id", "channel", "window_start", "n", "y_min", "y_max",
-            "y_sum", "y_sum2", "y_sum3", "t_min", "t_max", "tier"]
+    cols = ["conv_id", "channel", "window_start", *MOMENTS_SCHEMA_COLS,
+            "tier"]
     missing = [c for c in cols if c not in base.columns
                or c not in delta.columns]
     if missing:
@@ -126,15 +132,6 @@ def merge_moments(base: DataFrame, delta: DataFrame) -> DataFrame:
     return (
         base.select(*cols).unionByName(delta.select(*cols))
         .groupBy("conv_id", "channel", "window_start", "tier")
-        .agg(
-            F.sum("n").alias("n"),
-            F.min("y_min").alias("y_min"),
-            F.max("y_max").alias("y_max"),
-            F.sum("y_sum").alias("y_sum"),
-            F.sum("y_sum2").alias("y_sum2"),
-            F.sum("y_sum3").alias("y_sum3"),
-            F.min("t_min").alias("t_min"),
-            F.max("t_max").alias("t_max"),
-        )
+        .agg(*moments_merge_aggs())
         .select(*cols)
     )

@@ -31,10 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from cesium_spark.operators.rollup import TIERS
-
-_INTERVALS = {"1m": "interval 1 minute", "1h": "interval 1 hour",
-              "1d": "interval 1 day"}
+from cesium_spark.operators.rollup import LADDER, tier_window
 
 FILL_POLICIES = ("null", "zero", "ffill", "interp")
 
@@ -42,17 +39,17 @@ FILL_POLICIES = ("null", "zero", "ffill", "interp")
 def gapfill(series: DataFrame, tier: str, policy: str = "ffill") -> DataFrame:
     """Returns grid(conv_id, channel, bucket timestamp, y double,
     filled boolean)."""
-    if tier not in TIERS:
-        raise ValueError(f"unknown tier {tier!r}")
+    bucket = tier_window("ts", tier)
     if policy not in FILL_POLICIES:
         raise ValueError(f"unknown policy {policy!r}")
-    unit = TIERS[tier]
-    interval = _INTERVALS[tier]
+    # one ladder step; calendar steps (1 week, 1 month) keep the grid on
+    # date_trunc's ISO Mondays and month starts
+    interval = f"interval 1 {LADDER[tier].unit}"
 
     # 1. last observation per bucket (max turn_idx wins — stable ordering)
     bucketed = (
         series
-        .withColumn("bucket", F.date_trunc(unit, F.col("ts")))
+        .withColumn("bucket", bucket)
         .groupBy("conv_id", "channel", "bucket")
         .agg(F.max_by("y", "turn_idx").alias("y_obs"))
     )

@@ -38,9 +38,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from cesium_spark.operators.rollup import TIERS
-
-_FOLD_TARGETS = {"1h": "hour", "1d": "day"}
+from cesium_spark.operators.fold import fold_tier
+from cesium_spark.operators.rollup import tier_window
 
 
 def _check_edges(edges: list[float]) -> None:
@@ -69,11 +68,9 @@ def rollup_histogram(series: DataFrame, tier: str, key_cols: list[str],
     over (key…, window_start, bucket). One hash exchange; partial
     counts combine map-side, so the shuffle carries at most
     groups × (n_edges+1) rows regardless of raw row count."""
-    if tier not in TIERS:
-        raise ValueError(f"unknown tier {tier!r}; expected one of {list(TIERS)}")
     return (
         series
-        .withColumn("window_start", F.date_trunc(TIERS[tier], F.col("ts")))
+        .withColumn("window_start", tier_window("ts", tier))
         .withColumn("bucket", bucket_expr(value_col, edges))
         .where(F.col("bucket").isNotNull())
         .groupBy(*key_cols, "window_start", "bucket")
@@ -89,16 +86,8 @@ def fold_histogram(fine: DataFrame, target_tier: str,
     the counts computed directly at the coarse tier, which is the
     driver oracle's full-value check. Shuffles the histogram table
     only, never raw turns."""
-    if target_tier not in _FOLD_TARGETS:
-        raise ValueError(f"can only fold to {list(_FOLD_TARGETS)}")
-    unit = TIERS[target_tier]
-    return (
-        fine
-        .withColumn("window_start", F.date_trunc(unit, F.col("window_start")))
-        .groupBy(*key_cols, "window_start", "bucket")
-        .agg(F.sum("cnt").alias("cnt"))
-        .withColumn("tier", F.lit(target_tier))
-    )
+    return fold_tier(fine, target_tier, [*key_cols, "window_start", "bucket"],
+                     F.sum("cnt").alias("cnt"))
 
 
 def histogram_quantile(hist: DataFrame, key_cols: list[str],

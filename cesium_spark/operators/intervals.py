@@ -42,7 +42,7 @@ from typing import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from cesium_spark.operators.rollup import TIERS
+from cesium_spark.operators.rollup import tier_window
 
 
 def rolling_window(series: DataFrame, span_s: float) -> DataFrame:
@@ -166,8 +166,7 @@ def heartbeat_uptime(series: DataFrame, tier: str,
     partition count / shuffle order. ``None`` keeps the float sum for
     off-grid ``t``.
     """
-    if tier not in TIERS:
-        raise ValueError(f"unknown tier {tier!r}")
+    bucket = tier_window("ts", tier)
     if heartbeat_s <= 0:
         raise ValueError(f"heartbeat_s must be positive, got {heartbeat_s}")
     w = Window.partitionBy("conv_id", "channel").orderBy("t", "turn_idx")
@@ -191,7 +190,7 @@ def heartbeat_uptime(series: DataFrame, tier: str,
         dead_s = F.sum("__dead")
     return (
         series
-        .withColumn("bucket", F.date_trunc(TIERS[tier], F.col("ts")))
+        .withColumn("bucket", bucket)
         .withColumn("__live", live)
         .withColumn("__dead", dead)
         .withColumn("__gapped", (gap > hb).cast("long"))
@@ -302,8 +301,7 @@ def state_agg(turns: DataFrame, state_col: str, tier: str,
     the 1/t_grid-second lattice (1_000_000 for µs precision), so spans
     sum as exact int64 lattice units with one terminal division.
     """
-    if tier not in TIERS:
-        raise ValueError(f"unknown tier {tier!r}")
+    bucket = tier_window(ts_col, tier)
     w = Window.partitionBy(key).orderBy(ts_col, order_col)
     if t_grid is not None:
         g = float(t_grid)
@@ -317,7 +315,7 @@ def state_agg(turns: DataFrame, state_col: str, tier: str,
         dur_s = F.sum("__dur")
     return (
         turns
-        .withColumn("bucket", F.date_trunc(TIERS[tier], F.col(ts_col)))
+        .withColumn("bucket", bucket)
         .withColumn("__dur", dur)
         .withColumn("__closed", nxt.isNotNull().cast("long"))
         .groupBy(key, "bucket", F.col(state_col).alias("state"))
@@ -413,9 +411,7 @@ def peak_concurrency(transcripts: DataFrame, tier: str = "1h",
     the scan); explode = span/bucket_s rows per span, guarded by
     ``max_span_s``; the join is a hash equi-join on the bucket.
     """
-    from cesium_spark.operators.rollup import TIERS
-    if tier not in TIERS:
-        raise ValueError(f"unknown tier {tier!r}")
+    window = tier_window("ts", tier)
     spans = (transcripts.groupBy("conv_id")
              .agg(F.min("ts").alias("lo"), F.max("ts").alias("hi"))
              .withColumn("hi_x", F.expr(
@@ -437,8 +433,7 @@ def peak_concurrency(transcripts: DataFrame, tier: str = "1h",
     conc = (pairs.groupBy("start_conv", "ts")
             .agg(F.count(F.lit(1)).alias("conc")))
     return (conc
-            .withColumn("window_start",
-                        F.date_trunc(TIERS[tier], F.col("ts")))
+            .withColumn("window_start", window)
             .groupBy("window_start")
             .agg(F.count(F.lit(1)).cast("long").alias("n_starts"),
                  F.max("conc").cast("long").alias("peak_concurrency"))

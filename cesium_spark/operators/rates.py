@@ -21,9 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from cesium_spark.operators.rollup import TIERS
-
-_SPAN_S = {"1m": 60.0, "1h": 3600.0, "1d": 86400.0}
+from cesium_spark.operators.rollup import tier_span_s, tier_window
 
 
 def counter_rate(series: DataFrame, tier: str,
@@ -38,10 +36,10 @@ def counter_rate(series: DataFrame, tier: str,
     ONCE at the end — the §4.3 exact-sufficient-statistics discipline
     (welch/allan precedent), making the aggregate independent of
     partition count and shuffle order at the bit level. ``None`` keeps
-    the native float sum for off-grid values.
+    the native float sum for off-grid values; ValueError for the
+    calendar tiers, whose buckets have no fixed span to divide by.
     """
-    if tier not in TIERS:
-        raise ValueError(f"unknown tier {tier!r}")
+    span = F.lit(tier_span_s(tier))
     w = Window.partitionBy("conv_id", "channel").orderBy("t", "turn_idx")
     if grid is not None:
         yc = F.round(F.col("y") * F.lit(float(grid))).cast("long")
@@ -52,7 +50,7 @@ def counter_rate(series: DataFrame, tier: str,
         reset = (prev.isNotNull() & (yc < prev)).cast("long")
         g = F.lit(float(grid))
         increase = F.sum("__inc").cast("double") / g
-        rate = F.sum("__inc").cast("double") / g / F.lit(_SPAN_S[tier])
+        rate = F.sum("__inc").cast("double") / g / span
     else:
         prev = F.lag("y").over(w)
         inc = F.when(prev.isNull(), F.lit(None)) \
@@ -60,10 +58,10 @@ def counter_rate(series: DataFrame, tier: str,
                .otherwise(F.col("y"))
         reset = (prev.isNotNull() & (F.col("y") < prev)).cast("long")
         increase = F.sum("__inc")
-        rate = F.sum("__inc") / F.lit(_SPAN_S[tier])
+        rate = F.sum("__inc") / span
     return (
         series
-        .withColumn("bucket", F.date_trunc(TIERS[tier], F.col("ts")))
+        .withColumn("bucket", tier_window("ts", tier))
         .withColumn("__inc", inc)
         .withColumn("__reset", reset)
         .groupBy("conv_id", "channel", "bucket")
@@ -102,13 +100,12 @@ def time_weighted_avg(series: DataFrame, tier: str,
     Rows with NULL y are dropped up front (an integral over NULL is
     undefined; gap-fill first if NULLs are meaningful).
     """
-    if tier not in TIERS:
-        raise ValueError(f"unknown tier {tier!r}")
+    bucket = tier_window("ts", tier)
     if method not in ("locf", "linear"):
         raise ValueError(f"method must be 'locf' or 'linear', got {method!r}")
     s = (series
          .where(F.col("y").isNotNull() & F.col("t").isNotNull())
-         .withColumn("bucket", F.date_trunc(TIERS[tier], F.col("ts"))))
+         .withColumn("bucket", bucket))
     w = (Window.partitionBy("conv_id", "channel", "bucket")
          .orderBy("t", "turn_idx"))
     nxt_t = F.lead("t").over(w)
@@ -152,20 +149,19 @@ def gauge_delta(series: DataFrame, tier: str) -> DataFrame:
     too, divergence documented: we report the in-bucket observed
     delta, not an extrapolation to bucket edges).
     """
-    if tier not in TIERS:
-        raise ValueError(f"unknown tier {tier!r}")
+    bucket = tier_window("ts", tier)
     w = Window.partitionBy("conv_id", "channel").orderBy("t", "turn_idx")
     prev = F.lag("y").over(w)
     prev_ts = F.lag("ts").over(w)
     ordk = F.struct(F.col("t"), F.col("turn_idx"))
     return (
         series
-        .withColumn("bucket", F.date_trunc(TIERS[tier], F.col("ts")))
+        .withColumn("bucket", bucket)
         # an adjacent pair only counts when BOTH its points are in this
         # bucket — otherwise a single-point bucket would report a
         # cross-boundary idelta it doesn't own
         .withColumn("__adj", F.when(
-            F.date_trunc(TIERS[tier], prev_ts) == F.col("bucket"),
+            tier_window(prev_ts, tier) == F.col("bucket"),
             F.col("y") - prev))
         .groupBy("conv_id", "channel", "bucket")
         .agg(

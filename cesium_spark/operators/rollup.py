@@ -40,10 +40,11 @@ deterministic thinning cap above FAST_MAX_N points.
 from __future__ import annotations
 
 from collections.abc import Iterable
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from cesium_spark.arrow_stream import stream_groups
@@ -55,44 +56,95 @@ from cesium_spark.functions.registry import (
     validate,
 )
 
-# tier name -> date_trunc unit; 'conv' = whole-conversation series
-TIERS = {"1m": "minute", "1h": "hour", "1d": "day",
-         # calendar tiers: fold targets for long-horizon retention —
-         # irregular spans (weeks cross months, months vary 28-31 d),
-         # which is exactly what date_trunc handles; both Spark and
-         # DuckDB truncate weeks to ISO Monday
-         "1w": "week", "1mo": "month"}
+
+class Tier(NamedTuple):
+    unit: str              # date_trunc unit
+    span_s: float | None   # fixed span in seconds; None = calendar tier
+
+
+# The tier ladder: the one table of retention tiers. Every per-tier
+# value (numpy truncation, gap-fill step, rate divisor, streaming window,
+# pandas floor) derives from a row. 'conv' (whole-conversation series) is
+# not a ladder tier.
+LADDER = {"1m": Tier("minute", 60.0), "1h": Tier("hour", 3600.0),
+          "1d": Tier("day", 86400.0),
+          # calendar tiers: fold targets for long-horizon retention —
+          # irregular spans (weeks cross months, months vary 28-31 d),
+          # which is exactly what date_trunc handles; both Spark and
+          # DuckDB truncate weeks to ISO Monday
+          "1w": Tier("week", None), "1mo": Tier("month", None)}
+
+FIXED_TIERS = [tier for tier, row in LADDER.items() if row.span_s is not None]
 
 # windowed-tier group key = (conv, channel, floor(days/SPAN)): bounds a
 # whale conversation's group at SPAN days while amortizing per-group
 # Arrow/pandas fixed cost over ~SPAN days of windows (see rollup_wide)
 GROUP_SPAN_DAYS = 4
 
-# exact-kernel tiers -> numpy datetime64 truncation unit
-_TIER_NP_UNIT = {"1m": "m", "1h": "h", "1d": "D"}
+# moments column, the aggregate that builds it from raw rows, that
+# aggregate's input expression, and the aggregate that merges moments
+# rows: the one definition rollup_moments, fold_moments, merge_moments
+# and stream_rollup_moments share
+_MOMENTS = (("n", F.count, "y", F.sum),
+            ("y_min", F.min, "y", F.min),
+            ("y_max", F.max, "y", F.max),
+            ("y_sum", F.sum, "y", F.sum),
+            ("y_sum2", F.sum, "y * y", F.sum),
+            ("y_sum3", F.sum, "y * y * y", F.sum),
+            ("t_min", F.min, "t", F.min),
+            ("t_max", F.max, "t", F.max))
 
-MOMENTS_SCHEMA_COLS = [
-    "n", "y_min", "y_max", "y_sum", "y_sum2", "y_sum3", "t_min", "t_max",
-]
+MOMENTS_SCHEMA_COLS = [name for name, *_ in _MOMENTS]
+
+
+def moments_build_aggs() -> list[Column]:
+    """Aggregates of raw (y, t) rows into one moments row per group."""
+    return [build(F.expr(x)).alias(name) for name, build, x, _ in _MOMENTS]
+
+
+def moments_merge_aggs() -> list[Column]:
+    """Aggregates of moments rows into one moments row per group."""
+    return [merge(name).alias(name) for name, _, _, merge in _MOMENTS]
+
+
+def _ladder_row(tier: str) -> Tier:
+    if tier not in LADDER:
+        raise ValueError(
+            f"unknown tier {tier!r}; expected one of {list(LADDER)}")
+    return LADDER[tier]
+
+
+def tier_window(col: Column | str, tier: str) -> Column:
+    """``col`` truncated to its ``tier`` window start (date_trunc);
+    ValueError for a tier not on the ladder."""
+    return F.date_trunc(_ladder_row(tier).unit, col)
+
+
+def tier_span_s(tier: str) -> float:
+    """Fixed span of ``tier`` in seconds; ValueError for a calendar tier
+    (1w/1mo have no fixed span) or a tier not on the ladder."""
+    span = _ladder_row(tier).span_s
+    if span is None:
+        raise ValueError(f"calendar tier {tier!r} has no fixed span; "
+                         f"expected one of {FIXED_TIERS}")
+    return span
 
 
 def _with_window(series: DataFrame, tier: str) -> DataFrame:
-    if tier in TIERS:
-        return series.withColumn("window_start", F.date_trunc(TIERS[tier], F.col("ts")))
     if tier == "conv":
         return series.withColumn(
             "window_start", F.to_timestamp(F.lit("1970-01-01 00:00:00")))
-    raise ValueError(f"unknown tier {tier!r}; expected one of {list(TIERS)} or 'conv'")
+    return series.withColumn("window_start", tier_window("ts", tier))
 
 
 def _kernel_tiers(tiers: Iterable[str]) -> list[str]:
     tiers = list(tiers)
-    calendar = [t for t in tiers if t in TIERS and t not in _TIER_NP_UNIT]
+    calendar = [t for t in tiers if t in LADDER and t not in FIXED_TIERS]
     if calendar:
         raise ValueError(f"calendar tiers {calendar} have no exact kernel; "
                          "use rollup_moments + fold_moments")
-    if tiers != ["conv"] and (not tiers or not set(tiers) <= set(_TIER_NP_UNIT)):
-        raise ValueError(f"tiers must be a subset of {list(_TIER_NP_UNIT)} "
+    if tiers != ["conv"] and (not tiers or not set(tiers) <= set(FIXED_TIERS)):
+        raise ValueError(f"tiers must be a subset of {FIXED_TIERS} "
                          f"or ['conv'] alone, got {tiers!r}")
     return tiers
 
@@ -146,6 +198,9 @@ def rollup_wide(series: DataFrame, tiers: Iterable[str],
     # snapshot registered custom features into the kernel closure —
     # executors import the registry fresh and would see it empty
     custom = custom_snapshot(feats)
+    # whole-second numpy units floor like date_trunc for fixed tiers
+    np_units = [None if t == "conv" else f"datetime64[{tier_span_s(t):.0f}s]"
+                for t in tiers]
     # registry names cannot hold a backtick, so quoting is safe; tier is
     # NOT NULL as the F.lit tier of the long tables' parquet schema was
     schema = ("conv_id string, channel string, tier string not null, "
@@ -162,12 +217,11 @@ def rollup_wide(series: DataFrame, tiers: Iterable[str],
         y = pdf["y"].to_numpy(np.float64)
         e = pdf["e"].to_numpy(np.float64)
         outs = []
-        for tier in tiers:
+        for tier, unit in zip(tiers, np_units):
             if tier == "conv":
                 w = np.zeros(len(pdf), dtype="datetime64[us]")
             else:
-                w = (ts.astype(f"datetime64[{_TIER_NP_UNIT[tier]}]")
-                     .astype("datetime64[us]"))
+                w = ts.astype(unit).astype("datetime64[us]")
             # stable: rows arrive turn_idx-sorted per group, so each
             # window slice stays turn_idx-sorted even where ts steps back
             order = np.lexsort((w, gid))
@@ -321,16 +375,7 @@ def rollup_moments(series: DataFrame, tier: str) -> DataFrame:
     return (
         _with_window(series, tier)
         .groupBy("conv_id", "channel", "window_start")
-        .agg(
-            F.count("y").alias("n"),
-            F.min("y").alias("y_min"),
-            F.max("y").alias("y_max"),
-            F.sum("y").alias("y_sum"),
-            F.sum(F.col("y") * F.col("y")).alias("y_sum2"),
-            F.sum(F.col("y") * F.col("y") * F.col("y")).alias("y_sum3"),
-            F.min("t").alias("t_min"),
-            F.max("t").alias("t_max"),
-        )
+        .agg(*moments_build_aggs())
         .withColumn("tier", F.lit(tier))
     )
 
@@ -376,15 +421,14 @@ def rollup_quantiles(series: DataFrame, tier: str,
       accuracy but NOT restatable in DuckDB; it is verified against
       the exact path by bounded-rank-error pytest instead.
     """
-    if tier not in TIERS:
-        raise ValueError(f"unknown tier {tier!r}")
+    window = tier_window("ts", tier)
     if not qs or any(not 0.0 <= q <= 1.0 for q in qs):
         raise ValueError(f"quantiles must lie in [0,1], got {qs!r}")
     arr = F.array(*[F.lit(float(q)) for q in qs])
     agg = (F.percentile_approx("y", arr, F.lit(accuracy)) if approx
            else F.percentile("y", arr))
     g = (
-        _with_window(series, tier)
+        series.withColumn("window_start", window)
         .groupBy("conv_id", "channel", "window_start")
         .agg(F.count("y").alias("n"), agg.alias("__qs"))
     )

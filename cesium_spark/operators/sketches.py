@@ -29,9 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cesium_spark.operators.rollup import TIERS
-
-_FOLD_TARGETS = {"1h": "hour", "1d": "day"}
+from cesium_spark.operators.fold import fold_tier
+from cesium_spark.operators.rollup import tier_window
 
 
 def _cms_col(item_col, d: int, width: int):
@@ -66,8 +65,7 @@ def cms_build(df: DataFrame, tier: str, key_cols: list[str],
     partition, ≤ d·w per group however many raw rows collapsed into
     them. ONE hash exchange.
     """
-    if tier not in TIERS:
-        raise ValueError(f"unknown tier {tier!r}")
+    window = tier_window("ts", tier)
     _check(width, depth)
     pairs = F.array(*[
         F.struct(F.lit(d).alias("d"),
@@ -75,8 +73,7 @@ def cms_build(df: DataFrame, tier: str, key_cols: list[str],
         for d in range(depth)])
     return (
         df.where(F.col(item_col).isNotNull())
-        .withColumn("window_start",
-                    F.date_trunc(TIERS[tier], F.col("ts")))
+        .withColumn("window_start", window)
         .select(*key_cols, "window_start",
                 F.explode(pairs).alias("__p"))
         .groupBy(*key_cols, "window_start",
@@ -95,17 +92,9 @@ def cms_fold(fine: DataFrame, target_tier: str,
     folded sketch IS the sketch of the unioned window, so estimates
     after folding equal direct coarse-tier estimates, integer-exact).
     One shuffle of the SMALL cell table, never of raw turns."""
-    if target_tier not in _FOLD_TARGETS:
-        raise ValueError(f"can only fold to {list(_FOLD_TARGETS)}")
-    unit = TIERS[target_tier]
-    return (
-        fine
-        .withColumn("window_start",
-                    F.date_trunc(unit, F.col("window_start")))
-        .groupBy(*key_cols, "window_start", "d", "col")
-        .agg(F.sum("cnt").alias("cnt"))
-        .withColumn("tier", F.lit(target_tier))
-    )
+    return fold_tier(fine, target_tier,
+                     [*key_cols, "window_start", "d", "col"],
+                     F.sum("cnt").alias("cnt"))
 
 
 def cms_estimate(sketch: DataFrame, items: list[str], key_cols: list[str],
@@ -183,16 +172,14 @@ def bloom_build(df: DataFrame, tier: str, key_cols: list[str],
     engine.  ONE hash exchange (explode k positions, bit_or-collapse
     map-side).
     """
-    if tier not in TIERS:
-        raise ValueError(f"unknown tier {tier!r}")
+    window = tier_window("ts", tier)
     _bloom_check(words, k)
     m_bits = 63 * words
     pos = F.array(*[_bloom_pos(F.col(item_col), j, m_bits)
                     for j in range(k)])
     return (
         df.where(F.col(item_col).isNotNull())
-        .withColumn("window_start",
-                    F.date_trunc(TIERS[tier], F.col("ts")))
+        .withColumn("window_start", window)
         .select(*key_cols, "window_start", F.explode(pos).alias("__p"))
         # explicit floor — Spark's double→long cast truncates but
         # DuckDB's rounds (the ts_allan lesson); // replays floor.
@@ -215,17 +202,9 @@ def bloom_fold(fine: DataFrame, target_tier: str,
     so membership after folding equals direct coarse-tier membership
     bit-for-bit.  One shuffle of the small word table, never of raw
     turns."""
-    if target_tier not in _FOLD_TARGETS:
-        raise ValueError(f"can only fold to {list(_FOLD_TARGETS)}")
-    unit = TIERS[target_tier]
-    return (
-        fine
-        .withColumn("window_start",
-                    F.date_trunc(unit, F.col("window_start")))
-        .groupBy(*key_cols, "window_start", "word_idx")
-        .agg(F.bit_or("bits").alias("bits"))
-        .withColumn("tier", F.lit(target_tier))
-    )
+    return fold_tier(fine, target_tier,
+                     [*key_cols, "window_start", "word_idx"],
+                     F.bit_or("bits").alias("bits"))
 
 
 def bloom_contains(sketch: DataFrame, items: list[str],

@@ -125,14 +125,9 @@ class TableIO:
               .createOrReplaceTempView(view)
             self.spark.sql(overwrite_partitions_sql(name, view))
             return
-        if not self.exists(name):
-            self.write(df, name, mode="overwrite", partition_by=partition_by)
-            return
         # requires spark.sql.sources.partitionOverwriteMode=dynamic
-        # (set in session.get_spark); cluster by partition value first
-        # (see write() — REBALANCE so big partitions can still fan out)
-        (df.hint("rebalance", *partition_by).write.mode("overwrite")
-         .partitionBy(*partition_by).parquet(self.path(name)))
+        # (set in session.get_spark); on a new table this is a plain write
+        self.write(df, name, mode="overwrite", partition_by=partition_by)
 
     def delete_where(self, name: str, predicate: str) -> int:
         """Retention delete: keep rows NOT matching ``predicate``.

@@ -51,6 +51,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from cesium_spark.operators.rollup import tier_span_s
+
 OUT_SCHEMA = ("conv_id string, channel string, n long, "
               "y_sum double, y_min double, y_max double")
 EVICT_SCHEMA = OUT_SCHEMA + ", is_final boolean"
@@ -173,8 +175,6 @@ RATE_SCHEMA = ("conv_id string, channel string, bucket timestamp, "
                "inc_units long, n_resets long, n long")
 RATE_STATE_SCHEMA = "last_yc long"
 
-_RATE_FLOOR = {"1m": "min", "1h": "h", "1d": "D"}
-
 
 def stateful_counter_rate(series_stream: DataFrame, tier: str = "1h",
                           grid: int = 100) -> DataFrame:
@@ -204,12 +204,9 @@ def stateful_counter_rate(series_stream: DataFrame, tier: str = "1h",
     State: one int64 per key, no timestamps, no per-bucket state —
     O(active keys), the minimum any reset-aware rate can hold.
     """
-    if tier not in _RATE_FLOOR:
-        raise ValueError(f"unknown streaming tier {tier!r}; "
-                         f"expected one of {list(_RATE_FLOOR)}")
+    freq = f"{tier_span_s(tier):.0f}s"  # ValueError for calendar tiers
     if grid < 1:
         raise ValueError(f"grid must be >= 1, got {grid}")
-    freq = _RATE_FLOOR[tier]
     g = float(grid)
 
     def update(key: tuple, pdfs: Iterable[pd.DataFrame],

@@ -2,10 +2,10 @@
 aggregates (SURVEY.md §2.10).
 
 The engine's continuous aggregates are batch-incremental by design:
-idempotent per-partition MERGE of exactly-mergeable window moments
-(operators/fold.py + TableIO.merge_overwrite_partitions). This module
-reifies the documented seam where a ``readStream`` slots into the SAME
-moment schema:
+exactly-mergeable window moments (operators/fold.py) written by
+per-partition overwrite (TableIO.merge_overwrite_partitions). This
+module reifies the documented seam where a ``readStream`` slots into
+the SAME moment schema:
 
 - :func:`stream_rollup_moments` is the streaming twin of
   ``rollup_moments`` — identical columns (asserted by tests), computed
@@ -18,16 +18,21 @@ moment schema:
   ``window_date``. Exactly-once per window + the streaming checkpoint
   directory give the same resume semantics the batch ledger provides.
 
-Scale/late-data contract: the stream handles in-watermark lateness;
-anything later belongs to the batch backfill path (re-MERGE of the
-affected windows), which is the standard lambda-style split for
-10^12-turn tables. The shuffle is the same single hash exchange on
+Scale/late-data contract: the stream handles in-watermark lateness.
+Rows later than the watermark go to the batch side, where what exists
+today is ``fold.merge_moments``: it merges the moments of a late batch
+into an existing moments table without rescanning raw turns. The batch
+pipeline does not re-merge: ``run_pipeline`` overwrites the ``series``
+dates a batch touches and skips every (tier, date) its ledger already
+marks done, so features on a shared date keep the first batch's values
+(ROADMAP direction 1). The shuffle is the same single hash exchange on
 (conv_id, channel, window) as the batch path, with partial aggregation
-state in the state store instead of map-side combiners.
+state in the state store instead of map-side combiners. Streaming
+windows are fixed-span: the calendar tiers (1w/1mo) raise ValueError.
 
 The exact kernel path (numpy features) deliberately has NO streaming
 twin: bit-for-bit feature values require whole-window recomputation
-(SURVEY.md §4.3), which is the batch MERGE's job.
+(SURVEY.md §4.3), which only a batch rollup of the window provides.
 """
 
 from __future__ import annotations
@@ -35,10 +40,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from cesium_spark.operators.rollup import TIERS
+from cesium_spark.operators.rollup import (
+    MOMENTS_SCHEMA_COLS,
+    moments_build_aggs,
+    tier_span_s,
+)
 from cesium_spark.sources.table_io import TableIO
 
-_TIER_DURATION = {"1m": "1 minute", "1h": "1 hour", "1d": "1 day"}
+
+def _window(tier: str):
+    """Tumbling event-time window of a fixed-span ladder tier. The
+    calendar tiers raise: ``F.window`` has no months, and its weeks
+    start on the epoch's Thursday, not date_trunc's ISO Monday."""
+    return F.window("ts", f"{tier_span_s(tier):.0f} seconds")
 
 
 def stream_rollup_moments(series_stream: DataFrame, tier: str = "1m",
@@ -46,27 +60,14 @@ def stream_rollup_moments(series_stream: DataFrame, tier: str = "1m",
     """Streaming twin of ``rollup_moments``: same mergeable moment
     columns over a ``readStream`` series (conv_id, channel, ts, y, t).
     Windows finalize once the event-time watermark passes their end."""
-    if tier not in TIERS:
-        raise ValueError(f"unknown streaming tier {tier!r}; "
-                         f"expected one of {list(_TIER_DURATION)}")
-    win = F.window("ts", _TIER_DURATION[tier])
+    win = _window(tier)
     return (
         series_stream.withWatermark("ts", watermark)
         .groupBy(F.col("conv_id"), F.col("channel"), win)
-        .agg(
-            F.count("y").alias("n"),
-            F.min("y").alias("y_min"),
-            F.max("y").alias("y_max"),
-            F.sum("y").alias("y_sum"),
-            F.sum(F.col("y") * F.col("y")).alias("y_sum2"),
-            F.sum(F.col("y") * F.col("y") * F.col("y")).alias("y_sum3"),
-            F.min("t").alias("t_min"),
-            F.max("t").alias("t_max"),
-        )
+        .agg(*moments_build_aggs())
         .select("conv_id", "channel",
                 F.col("window.start").alias("window_start"),
-                "n", "y_min", "y_max", "y_sum", "y_sum2", "y_sum3",
-                "t_min", "t_max")
+                *MOMENTS_SCHEMA_COLS)
         .withColumn("tier", F.lit(tier))
     )
 
@@ -88,11 +89,8 @@ def stream_ddsketch_cells(series_stream: DataFrame, tier: str = "1h",
     bucket assignment (including the ln boundary-margin guard) is the
     batch expression, a pure projection before the windowed count."""
     from cesium_spark.operators.ddsketch import _checked_bucket
-    if tier not in _TIER_DURATION:
-        raise ValueError(f"unknown streaming tier {tier!r}; "
-                         f"expected one of {list(_TIER_DURATION)}")
+    win = _window(tier)
     store, bkt = _checked_bucket(value_col, alpha, 1e-9)
-    win = F.window("ts", _TIER_DURATION[tier])
     return (
         series_stream.where(F.col(value_col).isNotNull())
         .select("conv_id", "ts", store.alias("store"), bkt.alias("bkt"))
@@ -288,13 +286,11 @@ def stream_enriched_counts(stream: DataFrame, dim: DataFrame,
     usual append-mode watermark finalization. The aggregation keys
     shrink the stream to |attr| × windows rows — the state store
     holds attribute-level, not conversation-level, state."""
-    if tier not in _TIER_DURATION:
-        raise ValueError(f"unknown tier {tier!r}; expected one of "
-                         f"{list(_TIER_DURATION)}")
+    win = _window(tier)
     enriched = stream_static_enrich(stream, dim, on)
     return (
         enriched.withWatermark("ts", watermark)
-        .groupBy(F.col(attr), F.window("ts", _TIER_DURATION[tier]))
+        .groupBy(F.col(attr), win)
         .agg(F.count(F.lit(1)).alias("n"),
              F.sum("y").alias("y_sum"),
              F.min("y").alias("y_min"),
@@ -366,14 +362,11 @@ def stream_bloom_cells(events_stream: DataFrame, tier: str = "1h",
     ``bloom_contains`` run verbatim on the union of batch history
     and streamed present."""
     from cesium_spark.operators.sketches import _bloom_check, _bloom_pos
-    if tier not in _TIER_DURATION:
-        raise ValueError(f"unknown streaming tier {tier!r}; "
-                         f"expected one of {list(_TIER_DURATION)}")
+    win = _window(tier)
     _bloom_check(words, k)
     m_bits = 63 * words
     pos = F.array(*[_bloom_pos(F.col(item_col), j, m_bits)
                     for j in range(k)])
-    win = F.window("ts", _TIER_DURATION[tier])
     return (
         events_stream.where(F.col(item_col).isNotNull())
         .select(key_col, "ts", F.explode(pos).alias("__p"))

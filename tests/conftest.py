@@ -13,8 +13,7 @@ from cesium_spark.sources.synth import generate_transcripts_pandas
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(master="local[8]", app_name="cesium_spark_tests",
-                  shuffle_partitions=8)
+    s = get_spark(app_name="cesium_spark_tests")
     yield s
     s.stop()
 

@@ -3,14 +3,14 @@
 The north_rule's deployment contract: the engine runs via
 ``spark-submit --py-files cesium_spark.zip`` on a multi-executor
 cluster, at N and 4N executors, with >=0.8 throughput scaling
-efficiency. In-sandbox the two cluster sizes are evidenced as two
-parallelism levels on the same host (driver instruction; BASELINE.md):
+efficiency. On one host, Spark's ``local-cluster[executors,cores,MB]``
+master starts real executor JVMs, so the zip is shipped and the
+executor env applies; from the repo root:
 
-    cd /root/repo && python tools/make_pyfiles.py   # -> dist/cesium_spark.zip
-    spark-submit --master local[8]  --py-files dist/cesium_spark.zip \
-        tools/submit_pipeline.py --input /tmp/transcripts --out /tmp/out8
-    spark-submit --master local[32] --py-files dist/cesium_spark.zip \
-        tools/submit_pipeline.py --input /tmp/transcripts --out /tmp/out32
+    python tools/make_pyfiles.py   # -> dist/cesium_spark.zip
+    spark-submit --master "local-cluster[2,1,1536]" \
+        --py-files dist/cesium_spark.zip tools/submit_pipeline.py \
+        --gen-convs 300 --input /tmp/transcripts --out /tmp/out
 
 On a real cluster the same command takes --master yarn/k8s:// and
 --num-executors N; nothing in the job body changes (session config is
