@@ -208,6 +208,88 @@ WITH s AS (
 )"""
 
 
+def _triple_series(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The (latency, tokens, tool) channel triple per turn as one int64
+    series (conv_id, turn_idx, channel, y): latency in floored whole
+    seconds since the previous turn (NULL on the first turn; squares
+    stay int64-safe where micros would wrap), whitespace tokens of
+    ``props``, and the 0/1 purchase flag. Oracle twin:
+    ``_triple_series_sql``."""
+    ev = _events(spark, sf_dir)
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    sec = F.floor(F.col("ts").cast("double")).cast("long")
+    tok = F.size(F.split(F.trim(F.col("props")), r"\s+"))
+    tool = F.when(F.col("event_type") == "purchase", 1).otherwise(0)
+    base = ev.select(
+        F.col("user_id").cast("string").alias("conv_id"),
+        (F.row_number().over(w) - 1).cast("int").alias("turn_idx"),
+        (sec - F.lag(sec).over(w)).alias("__lat"),
+        tok.cast("long").alias("__tok"), tool.cast("long").alias("__tool"))
+    return base.selectExpr(
+        "conv_id", "turn_idx",
+        "stack(3, 'latency', __lat, 'tokens', __tok, "
+        "'tool', __tool) AS (channel, y)")
+
+
+def _triple_series_sql() -> str:
+    """DuckDB twin of ``_triple_series`` in wide form: CTE ``t`` with
+    conv_id, turn_idx and the channels as a (latency), b (tokens), c
+    (tool)."""
+    return """
+WITH t AS (
+  SELECT cast(user_id AS varchar) AS conv_id,
+         row_number() OVER w - 1 AS turn_idx,
+         cast(floor(epoch(ts)) AS bigint)
+           - lag(cast(floor(epoch(ts)) AS bigint)) OVER w AS a,
+         cast(len(string_split_regex(trim(props), '\\s+')) AS bigint)
+           AS b,
+         CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS c
+  FROM events
+  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+)"""
+
+
+def _acf_sums_sql(lags) -> str:
+    """DuckDB twin of ``exact.acf_sums``: CTEs ``l`` and ``g`` appended
+    to a WITH whose CTE ``s`` has conv_id, turn_idx, t and int64 y.
+    ``g`` has conv_id, n, sy (Σy), n0 and n{k} for each k in ``lags``,
+    with the engine's rules (NULL y or t dropped, lags in (t,
+    turn_idx) order, NULL n{k} when a lag has no pairs)."""
+    lags = list(lags)
+    lag_cols = "".join(f"         lag(y, {k}) OVER w2 AS l{k},\n"
+                       for k in lags)
+    nks = "".join(f",\n         sum(CASE WHEN l{k} IS NOT NULL THEN "
+                  f"(cnt * y - sy) * (cnt * l{k} - sy) END) AS n{k}"
+                  for k in lags)
+    return f""",
+l AS (
+  SELECT conv_id, y,
+{lag_cols}         sum(y) OVER (PARTITION BY conv_id) AS sy,
+         count(*) OVER (PARTITION BY conv_id) AS cnt
+  FROM s WHERE y IS NOT NULL AND t IS NOT NULL
+  WINDOW w2 AS (PARTITION BY conv_id ORDER BY t, turn_idx)
+),
+g AS (
+  SELECT conv_id, max(cnt) AS n, max(sy) AS sy,
+         sum((cnt * y - sy) * (cnt * y - sy)) AS n0{nks}
+  FROM l GROUP BY 1
+)"""
+
+
+def _ties_sql(value: str) -> str:
+    """DuckDB twin of ``exact.ties``: the RANGE current-row peers of
+    ``value`` within its conversation."""
+    return (f"count(*) OVER (PARTITION BY conv_id ORDER BY {value} "
+            "RANGE BETWEEN CURRENT ROW AND CURRENT ROW)")
+
+
+def _midrank2_sql(value: str) -> str:
+    """DuckDB twin of ``exact.midrank2``: 2·rank + ties − 1 of
+    ``value`` within its conversation."""
+    return (f"2 * rank() OVER (PARTITION BY conv_id ORDER BY {value}) "
+            f"+ {_ties_sql(value)} - 1")
+
+
 # ---------------------------------------------------------------------------
 # time-series engine queries
 # ---------------------------------------------------------------------------
@@ -3724,7 +3806,7 @@ def q_doc_vocab_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cesium_spark.operators.textstats import vocab_novelty
     _prep(spark)
     ev = _read(spark, sf_dir, "events").select("ts", "props")
-    out = vocab_novelty(ev, time_col="ts", text_col="props", tier="day")
+    out = vocab_novelty(ev, time_col="ts", text_col="props", tier="1d")
     return out.select(
         F.date_format("bucket", TS_FMT).alias("bucket"),
         "n_tokens", "n_new", _r(F.col("new_frac")).alias("new_frac"),
@@ -7759,10 +7841,7 @@ def q_ts_pettitt(spark: SparkSession, sf_dir: str) -> DataFrame:
 SQL_TS_PETTITT = oracle(q_ts_pettitt, f"""{_VALUE_SERIES_SQL}
 , r AS (
   SELECT conv_id, turn_idx, t, y,
-         2 * rank() OVER (PARTITION BY conv_id ORDER BY y)
-         + count(*) OVER (PARTITION BY conv_id ORDER BY y
-                          RANGE BETWEEN CURRENT ROW AND CURRENT ROW)
-         - 1 AS r2
+         {_midrank2_sql("y")} AS r2
   FROM series WHERE t IS NOT NULL AND y IS NOT NULL
 ),
 c0 AS (
@@ -9405,28 +9484,8 @@ def q_ts_pacf(spark: SparkSession, sf_dir: str) -> DataFrame:
         _r(F.col("pacf3"), 9).alias("pacf3"))
 
 
-SQL_TS_PACF = oracle(q_ts_pacf, _tok_series_sql() + """,
-l AS (
-  SELECT conv_id, y,
-         lag(y, 1) OVER w2 AS l1,
-         lag(y, 2) OVER w2 AS l2,
-         lag(y, 3) OVER w2 AS l3,
-         sum(y) OVER (PARTITION BY conv_id) AS sy,
-         count(*) OVER (PARTITION BY conv_id) AS cnt
-  FROM s
-  WINDOW w2 AS (PARTITION BY conv_id ORDER BY turn_idx)
-),
-g AS (
-  SELECT conv_id, max(cnt) AS n,
-         sum((cnt * y - sy) * (cnt * y - sy)) AS n0,
-         sum(CASE WHEN l1 IS NOT NULL THEN
-             (cnt * y - sy) * (cnt * l1 - sy) END) AS n1,
-         sum(CASE WHEN l2 IS NOT NULL THEN
-             (cnt * y - sy) * (cnt * l2 - sy) END) AS n2,
-         sum(CASE WHEN l3 IS NOT NULL THEN
-             (cnt * y - sy) * (cnt * l3 - sy) END) AS n3
-  FROM l GROUP BY 1
-),
+SQL_TS_PACF = oracle(q_ts_pacf, _tok_series_sql() + _acf_sums_sql(
+    (1, 2, 3)) + """,
 r AS (
   SELECT conv_id, n,
          CASE WHEN n0 > 0 THEN
@@ -9733,12 +9792,8 @@ pairs AS (
 ),
 ranked AS (
   SELECT conv_id,
-         cast(2 * rank() OVER (PARTITION BY conv_id ORDER BY ya)
-              + count(*) OVER (PARTITION BY conv_id, ya) - 1
-              AS bigint) AS ra,
-         cast(2 * rank() OVER (PARTITION BY conv_id ORDER BY yb)
-              + count(*) OVER (PARTITION BY conv_id, yb) - 1
-              AS bigint) AS rb
+         {_midrank2_sql("ya")} AS ra,
+         {_midrank2_sql("yb")} AS rb
   FROM pairs
 ),
 g AS (
@@ -10012,28 +10067,8 @@ def q_ts_hac_se(spark: SparkSession, sf_dir: str) -> DataFrame:
         _r(F.col("inflation"), 9).alias("inflation"))
 
 
-SQL_TS_HAC_SE = oracle(q_ts_hac_se, _tok_series_sql() + """,
-l AS (
-  SELECT conv_id, y,
-         lag(y, 1) OVER w2 AS l1,
-         lag(y, 2) OVER w2 AS l2,
-         lag(y, 3) OVER w2 AS l3,
-         sum(y) OVER (PARTITION BY conv_id) AS sy,
-         count(*) OVER (PARTITION BY conv_id) AS cnt
-  FROM s
-  WINDOW w2 AS (PARTITION BY conv_id ORDER BY turn_idx)
-),
-g AS (
-  SELECT conv_id, max(cnt) AS n, max(sy) AS sy,
-         sum((cnt * y - sy) * (cnt * y - sy)) AS n0,
-         sum(CASE WHEN l1 IS NOT NULL THEN
-             (cnt * y - sy) * (cnt * l1 - sy) END) AS n1,
-         sum(CASE WHEN l2 IS NOT NULL THEN
-             (cnt * y - sy) * (cnt * l2 - sy) END) AS n2,
-         sum(CASE WHEN l3 IS NOT NULL THEN
-             (cnt * y - sy) * (cnt * l3 - sy) END) AS n3
-  FROM l GROUP BY 1
-),
+SQL_TS_HAC_SE = oracle(q_ts_hac_se, _tok_series_sql() + _acf_sums_sql(
+    (1, 2, 3)) + """,
 e AS (
   SELECT conv_id, n, sy, n0, n1, n2, n3,
          cast(n0 AS double)
@@ -11438,41 +11473,8 @@ def q_ts_dominant_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
                       _r(F.col("r_best"), 9).alias("r_best"))
 
 
-SQL_TS_DOMINANT_LAG = oracle(q_ts_dominant_lag, _tok_series_sql() + """,
-l AS (
-  SELECT conv_id, y,
-         lag(y, 2) OVER w2 AS l2,
-         lag(y, 3) OVER w2 AS l3,
-         lag(y, 4) OVER w2 AS l4,
-         lag(y, 5) OVER w2 AS l5,
-         lag(y, 6) OVER w2 AS l6,
-         lag(y, 7) OVER w2 AS l7,
-         lag(y, 8) OVER w2 AS l8,
-         lag(y, 9) OVER w2 AS l9,
-         lag(y, 10) OVER w2 AS l10,
-         lag(y, 11) OVER w2 AS l11,
-         lag(y, 12) OVER w2 AS l12,
-         sum(y) OVER (PARTITION BY conv_id) AS sy,
-         count(*) OVER (PARTITION BY conv_id) AS cnt
-  FROM s
-  WINDOW w2 AS (PARTITION BY conv_id ORDER BY turn_idx)
-),
-g AS (
-  SELECT conv_id, max(cnt) AS n,
-         sum((cnt * y - sy) * (cnt * y - sy)) AS n0,
-         sum(CASE WHEN l2 IS NOT NULL THEN (cnt * y - sy) * (cnt * l2 - sy) END) AS n2,
-         sum(CASE WHEN l3 IS NOT NULL THEN (cnt * y - sy) * (cnt * l3 - sy) END) AS n3,
-         sum(CASE WHEN l4 IS NOT NULL THEN (cnt * y - sy) * (cnt * l4 - sy) END) AS n4,
-         sum(CASE WHEN l5 IS NOT NULL THEN (cnt * y - sy) * (cnt * l5 - sy) END) AS n5,
-         sum(CASE WHEN l6 IS NOT NULL THEN (cnt * y - sy) * (cnt * l6 - sy) END) AS n6,
-         sum(CASE WHEN l7 IS NOT NULL THEN (cnt * y - sy) * (cnt * l7 - sy) END) AS n7,
-         sum(CASE WHEN l8 IS NOT NULL THEN (cnt * y - sy) * (cnt * l8 - sy) END) AS n8,
-         sum(CASE WHEN l9 IS NOT NULL THEN (cnt * y - sy) * (cnt * l9 - sy) END) AS n9,
-         sum(CASE WHEN l10 IS NOT NULL THEN (cnt * y - sy) * (cnt * l10 - sy) END) AS n10,
-         sum(CASE WHEN l11 IS NOT NULL THEN (cnt * y - sy) * (cnt * l11 - sy) END) AS n11,
-         sum(CASE WHEN l12 IS NOT NULL THEN (cnt * y - sy) * (cnt * l12 - sy) END) AS n12
-  FROM l GROUP BY 1
-)
+SQL_TS_DOMINANT_LAG = oracle(q_ts_dominant_lag, _tok_series_sql()
+                             + _acf_sums_sql(range(2, 13)) + """
 SELECT conv_id, cast(n AS bigint) AS n,
        cast(CASE WHEN n0 > 0 AND greatest(n2, n3, n4, n5, n6, n7, n8, n9, n10, n11, n12) IS NOT NULL THEN
             CASE WHEN n2 IS NOT NULL AND n2 = greatest(n2, n3, n4, n5, n6, n7, n8, n9, n10, n11, n12) THEN 2
@@ -11737,12 +11739,11 @@ def q_ts_kruskal(spark: SparkSession, sf_dir: str) -> DataFrame:
         _r(F.col("h_corrected"), 9).alias("h_corrected"))
 
 
-SQL_TS_KRUSKAL = oracle(q_ts_kruskal, _tok_series_sql("event_type AS g") + """,
+SQL_TS_KRUSKAL = oracle(q_ts_kruskal, _tok_series_sql("event_type AS g") + f""",
 r AS (
   SELECT conv_id, g,
-         2 * rank() OVER (PARTITION BY conv_id ORDER BY y)
-           + count(*) OVER (PARTITION BY conv_id, y) - 1 AS r2,
-         count(*) OVER (PARTITION BY conv_id, y) AS t
+         {_midrank2_sql("y")} AS r2,
+         {_ties_sql("y")} AS t
   FROM s WHERE g IS NOT NULL AND y IS NOT NULL
 ),
 cells AS (
@@ -11808,34 +11809,14 @@ def q_ts_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
         _r(F.col("q_lb"), 9).alias("q_lb"))
 
 
-SQL_TS_LJUNG_BOX = oracle(q_ts_ljung_box, _tok_series_sql() + """,
-l AS (
-  SELECT conv_id, y,
-         lag(y, 1) OVER w2 AS l1,
-         lag(y, 2) OVER w2 AS l2,
-         lag(y, 3) OVER w2 AS l3,
-         sum(y) OVER (PARTITION BY conv_id) AS sy,
-         count(*) OVER (PARTITION BY conv_id) AS cnt
-  FROM s
-  WINDOW w2 AS (PARTITION BY conv_id ORDER BY turn_idx)
-),
-g AS (
-  SELECT conv_id, max(cnt) AS n,
-         sum((cnt * y - sy) * (cnt * y - sy)) AS n0,
-         sum(CASE WHEN l1 IS NOT NULL
-                  THEN (cnt * y - sy) * (cnt * l1 - sy) END) AS nk1,
-         sum(CASE WHEN l2 IS NOT NULL
-                  THEN (cnt * y - sy) * (cnt * l2 - sy) END) AS nk2,
-         sum(CASE WHEN l3 IS NOT NULL
-                  THEN (cnt * y - sy) * (cnt * l3 - sy) END) AS nk3
-  FROM l GROUP BY 1
-),
+SQL_TS_LJUNG_BOX = oracle(q_ts_ljung_box, _tok_series_sql() + _acf_sums_sql(
+    (1, 2, 3)) + """,
 m AS (
   SELECT conv_id, n,
          n > 3 AND n0 > 0 AS ok,
-         cast(nk1 AS double) / cast(n0 AS double) AS r1,
-         cast(nk2 AS double) / cast(n0 AS double) AS r2,
-         cast(nk3 AS double) / cast(n0 AS double) AS r3
+         cast(n1 AS double) / cast(n0 AS double) AS r1,
+         cast(n2 AS double) / cast(n0 AS double) AS r2,
+         cast(n3 AS double) / cast(n0 AS double) AS r3
   FROM g
 )
 SELECT conv_id, cast(n AS bigint) AS n,
@@ -13071,16 +13052,9 @@ def _spectral_oracle_sql(n_lags: int = 6, n_freqs: int = 8) -> str:
     import math
     from cesium_spark.operators.seriesstats import spectral_coeffs
     coeffs = spectral_coeffs(n_lags, n_freqs)
-    lags = "".join(
-        f"         lag(y, {k}) OVER w2 AS l{k},\n"
-        for k in range(1, n_lags + 1))
-    nks = ",\n".join(
-        f"         sum(CASE WHEN l{k} IS NOT NULL THEN "
-        f"(cnt * y - sy) * (cnt * l{k} - sy) END) AS nk{k}"
-        for k in range(1, n_lags + 1))
     specs = ",\n".join(
         "  greatest(cast(n0 AS double)"
-        + "".join(f" + {coeffs[m][k - 1]!r} * cast(nk{k} AS double)"
+        + "".join(f" + {coeffs[m][k - 1]!r} * cast(n{k} AS double)"
                   for k in range(1, n_lags + 1))
         + f", 0.0) AS s{m + 1}"
         for m in range(n_freqs))
@@ -13093,20 +13067,7 @@ def _spectral_oracle_sql(n_lags: int = 6, n_freqs: int = 8) -> str:
     peak = "".join(
         f"            WHEN s{m} = greatest({gl}) THEN {m}\n"
         for m in range(1, n_freqs + 1))
-    return f"""{_tok_series_sql()},
-l AS (
-  SELECT conv_id, y,
-{lags}         sum(y) OVER (PARTITION BY conv_id) AS sy,
-         count(*) OVER (PARTITION BY conv_id) AS cnt
-  FROM s
-  WINDOW w2 AS (PARTITION BY conv_id ORDER BY turn_idx)
-),
-g AS (
-  SELECT conv_id, max(cnt) AS n,
-         sum((cnt * y - sy) * (cnt * y - sy)) AS n0,
-{nks}
-  FROM l GROUP BY 1
-),
+    return f"""{_tok_series_sql()}{_acf_sums_sql(range(1, n_lags + 1))},
 sp AS (
   SELECT conv_id, n, n0,
 {specs}
@@ -13544,22 +13505,8 @@ def q_ts_partial_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     from one aggregate, three fixed pairwise-r trees, one partial
     tree; |r_xc| = 1 exactly -> NULL."""
     from cesium_spark.operators.seriesstats import partial_corr
-    ev = _events(spark, sf_dir)
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    sec = F.floor(F.col("ts").cast("double")).cast("long")
-    lat = sec - F.lag(sec).over(w)
-    tok = F.size(F.split(F.trim(F.col("props")), r"\s+"))
-    tool = F.when(F.col("event_type") == "purchase", 1).otherwise(0)
-    base = ev.select(
-        F.col("user_id").cast("string").alias("conv_id"),
-        (F.row_number().over(w) - 1).cast("int").alias("turn_idx"),
-        lat.alias("__lat"), tok.cast("long").alias("__tok"),
-        tool.cast("long").alias("__tool"))
-    series = (base.selectExpr(
-        "conv_id", "turn_idx",
-        "stack(3, 'latency', __lat, 'tokens', __tok, "
-        "'tool', __tool) AS (channel, y)"))
-    out = partial_corr(series, "latency", "tokens", "tool")
+    out = partial_corr(_triple_series(spark, sf_dir),
+                       "latency", "tokens", "tool")
     return out.select(
         "conv_id", "n_pairs",
         _r(F.col("r_ab"), 9).alias("r_ab"),
@@ -13568,18 +13515,7 @@ def q_ts_partial_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
         _r(F.col("r_ab_c"), 9).alias("r_ab_c"))
 
 
-SQL_TS_PARTIAL_CORR = oracle(q_ts_partial_corr, """
-WITH t AS (
-  SELECT cast(user_id AS varchar) AS conv_id,
-         row_number() OVER w - 1 AS turn_idx,
-         cast(floor(epoch(ts)) AS bigint)
-           - lag(cast(floor(epoch(ts)) AS bigint)) OVER w AS a,
-         cast(len(string_split_regex(trim(props), '\\s+')) AS bigint)
-           AS b,
-         CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS c
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-),
+SQL_TS_PARTIAL_CORR = oracle(q_ts_partial_corr, _triple_series_sql() + """,
 al AS (
   SELECT conv_id, a, b, c FROM t
   WHERE a IS NOT NULL AND b IS NOT NULL AND c IS NOT NULL
@@ -14066,22 +14002,7 @@ def q_ts_cronbach(spark: SparkSession, sf_dir: str) -> DataFrame:
     and sum-score moments (the sum is formed in integers before
     squaring), one fixed tree; constant composite NULL."""
     from cesium_spark.operators.seriesstats import cronbach_alpha
-    ev = _events(spark, sf_dir)
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    sec = F.floor(F.col("ts").cast("double")).cast("long")
-    lat = sec - F.lag(sec).over(w)
-    tok = F.size(F.split(F.trim(F.col("props")), r"\s+"))
-    tool = F.when(F.col("event_type") == "purchase", 1).otherwise(0)
-    base = ev.select(
-        F.col("user_id").cast("string").alias("conv_id"),
-        (F.row_number().over(w) - 1).cast("int").alias("turn_idx"),
-        lat.alias("__lat"), tok.cast("long").alias("__tok"),
-        tool.cast("long").alias("__tool"))
-    series = base.selectExpr(
-        "conv_id", "turn_idx",
-        "stack(3, 'latency', __lat, 'tokens', __tok, "
-        "'tool', __tool) AS (channel, y)")
-    out = cronbach_alpha(series)
+    out = cronbach_alpha(_triple_series(spark, sf_dir))
     # variance columns UNROUNDED: fixed trees over exact ints are
     # bit-identical, while round-6 at 1e9 magnitude is where engine
     # round() implementations diverge by ulps (the ts_allan rule)
@@ -14090,18 +14011,7 @@ def q_ts_cronbach(spark: SparkSession, sf_dir: str) -> DataFrame:
         _r(F.col("alpha"), 9).alias("alpha"))
 
 
-SQL_TS_CRONBACH = oracle(q_ts_cronbach, """
-WITH t AS (
-  SELECT cast(user_id AS varchar) AS conv_id,
-         row_number() OVER w - 1 AS turn_idx,
-         cast(floor(epoch(ts)) AS bigint)
-           - lag(cast(floor(epoch(ts)) AS bigint)) OVER w AS a,
-         cast(len(string_split_regex(trim(props), '\\s+')) AS bigint)
-           AS b,
-         CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS c
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-),
+SQL_TS_CRONBACH = oracle(q_ts_cronbach, _triple_series_sql() + """,
 al AS (
   SELECT conv_id, a, b, c, a + b + c AS tt FROM t
   WHERE a IS NOT NULL AND b IS NOT NULL AND c IS NOT NULL
@@ -14221,12 +14131,11 @@ def q_ts_dunn(spark: SparkSession, sf_dir: str) -> DataFrame:
         _r(F.col("z"), 9).alias("z"))
 
 
-SQL_TS_DUNN = oracle(q_ts_dunn, _tok_series_sql("event_type AS g") + """,
+SQL_TS_DUNN = oracle(q_ts_dunn, _tok_series_sql("event_type AS g") + f""",
 r AS (
   SELECT conv_id, g,
-         2 * rank() OVER (PARTITION BY conv_id ORDER BY y)
-           + count(*) OVER (PARTITION BY conv_id, y) - 1 AS r2,
-         count(*) OVER (PARTITION BY conv_id, y) AS t
+         {_midrank2_sql("y")} AS r2,
+         {_ties_sql("y")} AS t
   FROM s WHERE g IS NOT NULL AND y IS NOT NULL
 ),
 cells AS (
@@ -14295,7 +14204,7 @@ def q_ts_wilcoxon(spark: SparkSession, sf_dir: str) -> DataFrame:
         _r(F.col("z"), 9).alias("z"))
 
 
-SQL_TS_WILCOXON = oracle(q_ts_wilcoxon, """
+SQL_TS_WILCOXON = oracle(q_ts_wilcoxon, f"""
 WITH s AS (
   SELECT cast(user_id AS varchar) AS conv_id,
          row_number() OVER w AS j,
@@ -14312,9 +14221,8 @@ pairs AS (
 ),
 r AS (
   SELECT conv_id, d,
-         2 * rank() OVER (PARTITION BY conv_id ORDER BY abs(d))
-           + count(*) OVER (PARTITION BY conv_id, abs(d)) - 1 AS r2,
-         count(*) OVER (PARTITION BY conv_id, abs(d)) AS t
+         {_midrank2_sql("abs(d)")} AS r2,
+         {_ties_sql("abs(d)")} AS t
   FROM pairs
 ),
 g AS (
@@ -14454,36 +14362,16 @@ SQL_TS_ESS = oracle(q_ts_ess, """
 WITH s AS (
   SELECT cast(user_id AS varchar) AS conv_id,
          row_number() OVER w - 1 AS turn_idx,
+         cast(row_number() OVER w - 1 AS double) AS t,
          cast(round(value * 100.0) AS bigint) AS y
   FROM events
   WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-),
-l AS (
-  SELECT conv_id, y,
-         lag(y, 1) OVER w2 AS l1,
-         lag(y, 2) OVER w2 AS l2,
-         lag(y, 3) OVER w2 AS l3,
-         sum(y) OVER (PARTITION BY conv_id) AS sy,
-         count(*) OVER (PARTITION BY conv_id) AS cnt
-  FROM s
-  WINDOW w2 AS (PARTITION BY conv_id ORDER BY turn_idx)
-),
-g AS (
-  SELECT conv_id, max(cnt) AS n,
-         sum((cnt * y - sy) * (cnt * y - sy)) AS n0,
-         sum(CASE WHEN l1 IS NOT NULL
-                  THEN (cnt * y - sy) * (cnt * l1 - sy) END) AS nk1,
-         sum(CASE WHEN l2 IS NOT NULL
-                  THEN (cnt * y - sy) * (cnt * l2 - sy) END) AS nk2,
-         sum(CASE WHEN l3 IS NOT NULL
-                  THEN (cnt * y - sy) * (cnt * l3 - sy) END) AS nk3
-  FROM l GROUP BY 1
-),
+)""" + _acf_sums_sql((1, 2, 3)) + """,
 m AS (
   SELECT conv_id, n, n > 3 AND n0 > 0 AS ok,
-         1.0 + 2.0 * (cast(nk1 AS double) / cast(n0 AS double)
-                      + cast(nk2 AS double) / cast(n0 AS double)
-                      + cast(nk3 AS double) / cast(n0 AS double)) AS tau
+         1.0 + 2.0 * (cast(n1 AS double) / cast(n0 AS double)
+                      + cast(n2 AS double) / cast(n0 AS double)
+                      + cast(n3 AS double) / cast(n0 AS double)) AS tau
   FROM g
 )
 SELECT conv_id, cast(n AS bigint) AS n,

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from cesium_spark.operators.exact import require_int
 from cesium_spark.operators.rollup import tier_span_s, tier_window
 
 
@@ -211,11 +212,7 @@ def leaky_bucket(series: DataFrame, rate_num: int, rate_den: int,
             raise ValueError(f"leaky_bucket: {name} must be a "
                              f"{'non-negative' if name == 'burst' else 'positive'} "
                              f"int, got {v!r}")
-    t = dict(series.dtypes).get("y")
-    if t not in ("int", "bigint", "smallint", "tinyint"):
-        raise ValueError(
-            f"leaky_bucket: gap column 'y' has type {t}; pre-grid gaps "
-            "to integer seconds explicitly")
+    require_int(series, "leaky_bucket", "y")
     w_ord = Window.partitionBy("conv_id").orderBy("turn_idx")
     w_run = w_ord.rowsBetween(Window.unboundedPreceding, 0)
     gap = F.coalesce(F.col("y").cast("long"), F.lit(0))

@@ -15,6 +15,8 @@ from typing import Mapping
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from cesium_spark.operators.exact import require_int
+
 
 def score_linear(features: DataFrame, weights: Mapping[str, float],
                  intercept: float = 0.0,
@@ -125,13 +127,7 @@ def ols_fit2(df: DataFrame, y_col: str, x1_col: str,
 
     Output (one row): n, b0, b1, b2, r2.
     """
-    for c in (y_col, x1_col, x2_col):
-        t = dict(df.dtypes).get(c)
-        if t not in ("int", "bigint", "smallint", "tinyint"):
-            raise ValueError(
-                f"ols_fit2: column {c!r} has type {t}; the exact-"
-                "sufficient-statistics contract needs integer inputs "
-                "(pre-grid floats to integers explicitly)")
+    require_int(df, "ols_fit2", y_col, x1_col, x2_col)
     y = F.col(y_col).cast("long")
     x1 = F.col(x1_col).cast("long")
     x2 = F.col(x2_col).cast("long")
@@ -243,13 +239,7 @@ def ols_granger(df: DataFrame, y_col: str, x1_col: str,
     Output (one row): n, b2 (the tested coefficient), sse_r, sse_u,
     f_stat.
     """
-    for c in (y_col, x1_col, x2_col):
-        t = dict(df.dtypes).get(c)
-        if t not in ("int", "bigint", "smallint", "tinyint"):
-            raise ValueError(
-                f"ols_granger: column {c!r} has type {t}; the exact-"
-                "sufficient-statistics contract needs integer inputs "
-                "(pre-grid floats to integers explicitly)")
+    require_int(df, "ols_granger", y_col, x1_col, x2_col)
     y = F.col(y_col).cast("long")
     x1 = F.col(x1_col).cast("long")
     x2 = F.col(x2_col).cast("long")

@@ -1,19 +1,32 @@
-"""Series diagnostics: autocorrelation and seasonal anomaly scoring
-(SURVEY.md §2.9 family — monitoring-stack operators over the same
-per-conversation series the rollups consume; no reference counterpart:
-cesium's periodicity features go through Lomb–Scargle, which remains
-the irregular-cadence path — ACF here is the cheap regular-lag twin).
+"""Series statistics per conversation: autocorrelation, changepoint,
+rank, dispersion, tail and randomness tests over the same
+per-conversation series the rollups consume (SURVEY.md §2.9 family;
+cesium's periodicity features stay on the Lomb–Scargle path).
 
-Both operators are pure native expressions with ONE hash exchange on
-the series' natural (conv_id, channel) key (plan-asserted in pytest):
-the lag/baseline windows partition by the group key and the following
-aggregation/projection reuses that partitioning.
+The exact-integer rule: an operator that promises bit-for-bit results
+takes integer ``y``, forms exact int64 sums and makes one division at
+the end, in a fixed double tree its oracle restates verbatim.  The
+shared pieces of that rule live in ``operators/exact.py``:
+``require_int`` (the input check), ``acf_sums`` (the ACF numerators
+behind pacf3, hac_mean_se, dominant_lag, ljung_box, spectral_entropy
+and ess_acf), ``midrank2`` (the integer 2·mid-rank behind pettitt,
+spearman_channels, kruskal_wallis, dunn_posthoc and
+wilcoxon_signed_rank) and ``ties`` (the tie-block size behind the
+midrank and the tie masses).
+
+Operators are windows and aggregates keyed by the conversation (the
+Mann–Kendall pair alone runs a grouped pandas kernel); each docstring
+states its hash-exchange count, and tests/test_plan_shapes.py pins
+those counts against the executed plan.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from cesium_spark.operators.exact import (acf_sums, midrank2, require_int,
+                                          ties)
 
 
 def acf(series: DataFrame, max_lag: int) -> DataFrame:
@@ -750,10 +763,6 @@ def pettitt(series: DataFrame) -> DataFrame:
     exchange), time-cumulative windows on the same key, one
     row_number argmax filter → ONE hash exchange, no join, no UDF.
     """
-    wv = Window.partitionBy("conv_id").orderBy("y")
-    # count of rows tied with this one: RANGE frame (0,0) on the value
-    # ordering keeps the partition key conv_id (no extra exchange)
-    wties = wv.rangeBetween(0, 0)
     wo = Window.partitionBy("conv_id").orderBy("t", "turn_idx")
     wcum = wo.rowsBetween(Window.unboundedPreceding, 0)
     wall = wo.rowsBetween(Window.unboundedPreceding,
@@ -761,10 +770,7 @@ def pettitt(series: DataFrame) -> DataFrame:
     base = (series
             .where(F.col("t").isNotNull() & F.col("y").isNotNull())
             .select("conv_id", "turn_idx", "t", "y",
-                    # 2*midrank as exact bigint
-                    (F.lit(2) * F.rank().over(wv)
-                     + F.count(F.lit(1)).over(wties) - F.lit(1))
-                    .cast("long").alias("__r2")))
+                    midrank2("y").alias("__r2")))
     stat = (
         base
         .withColumn("__k", F.row_number().over(wo).cast("long"))
@@ -1063,12 +1069,7 @@ def variance_ratio(series: DataFrame, q: int = 4) -> DataFrame:
     """
     if not isinstance(q, int) or q < 2:
         raise ValueError(f"variance_ratio: q must be an int >= 2, got {q!r}")
-    t = dict(series.dtypes).get("y")
-    if t not in ("int", "bigint", "smallint", "tinyint"):
-        raise ValueError(
-            f"variance_ratio: column 'y' has type {t}; the exact-"
-            "sufficient-statistics contract needs integer levels "
-            "(pre-grid floats to integers explicitly)")
+    require_int(series, "variance_ratio", "y")
     w_ord = Window.partitionBy("conv_id").orderBy("t", "turn_idx")
     w_all = Window.partitionBy("conv_id")
     y = F.col("y").cast("long")
@@ -1160,12 +1161,7 @@ def hurst_rs(series: DataFrame,
     if len(ws) < 2 or any(w < 2 for w in ws) or len(set(ws)) != len(ws):
         raise ValueError(f"hurst_rs: need >=2 distinct window sizes >= 2, "
                          f"got {windows!r}")
-    t = dict(series.dtypes).get("y")
-    if t not in ("int", "bigint", "smallint", "tinyint"):
-        raise ValueError(
-            f"hurst_rs: column 'y' has type {t}; the exact-sufficient-"
-            "statistics contract needs integer levels "
-            "(pre-grid floats to integers explicitly)")
+    require_int(series, "hurst_rs", "y")
     import math
     lw = [math.log(w) for w in ws]
     mlw = sum(lw) / len(lw)
@@ -1274,35 +1270,8 @@ def pacf3(series: DataFrame) -> DataFrame:
     Plan: three lag windows + two unordered windows + ONE hash
     aggregate, all keyed by conv_id → one exchange, no UDF, no join.
     """
-    t = dict(series.dtypes).get("y")
-    if t not in ("int", "bigint", "smallint", "tinyint"):
-        raise ValueError(
-            f"pacf3: column 'y' has type {t}; the exact-sufficient-"
-            "statistics contract needs integer levels "
-            "(pre-grid floats to integers explicitly)")
-    w_ord = Window.partitionBy("conv_id").orderBy("t", "turn_idx")
-    w_all = Window.partitionBy("conv_id")
-    y = F.col("y").cast("long")
-    s = (series
-         .where(F.col("y").isNotNull() & F.col("t").isNotNull())
-         .select("conv_id", y.alias("__y"),
-                 F.lag(y, 1).over(w_ord).alias("__l1"),
-                 F.lag(y, 2).over(w_ord).alias("__l2"),
-                 F.lag(y, 3).over(w_ord).alias("__l3"),
-                 F.sum(y).over(w_all).alias("__s"),
-                 F.count(F.lit(1)).over(w_all).alias("__n")))
-    dev = F.col("__n") * F.col("__y") - F.col("__s")
-
-    def _num(lagc):
-        lagdev = F.col("__n") * F.col(lagc) - F.col("__s")
-        return F.sum(F.when(F.col(lagc).isNotNull(), dev * lagdev))
-
-    agg = (s.groupBy("conv_id")
-           .agg(F.max("__n").alias("n"),
-                F.sum(dev * dev).alias("n0"),
-                _num("__l1").alias("n1"),
-                _num("__l2").alias("n2"),
-                _num("__l3").alias("n3")))
+    require_int(series, "pacf3", "y")
+    agg = acf_sums(series, (1, 2, 3))
     nz = F.col("n0") > 0
     r1 = F.when(nz, F.col("n1").cast("double") / F.col("n0").cast("double"))
     r2 = F.when(nz, F.col("n2").cast("double") / F.col("n0").cast("double"))
@@ -1368,19 +1337,8 @@ def spearman_channels(series: DataFrame, ch_a: str,
              .alias("__yb"))
         .where(F.col("__ya").isNotNull() & F.col("__yb").isNotNull())
     )
-    wa = Window.partitionBy("conv_id").orderBy("__ya")
-    wb = Window.partitionBy("conv_id").orderBy("__yb")
-    ca = Window.partitionBy("conv_id", "__ya")
-    cb = Window.partitionBy("conv_id", "__yb")
-    # 2 * average rank = 2*rank + multiplicity - 1: exact integers
-    ranked = aligned.select(
-        "conv_id",
-        (F.lit(2) * F.rank().over(wa)
-         + F.count(F.lit(1)).over(ca) - F.lit(1))
-        .cast("long").alias("__ra"),
-        (F.lit(2) * F.rank().over(wb)
-         + F.count(F.lit(1)).over(cb) - F.lit(1))
-        .cast("long").alias("__rb"))
+    ranked = aligned.select("conv_id", midrank2("__ya").alias("__ra"),
+                            midrank2("__yb").alias("__rb"))
     x, y = F.col("__ra"), F.col("__rb")
     g = ranked.groupBy("conv_id").agg(
         F.count(F.lit(1)).alias("n_pairs"),
@@ -1439,11 +1397,7 @@ def cusum(series: DataFrame, target: int, slack: int = 0,
                              f"floats explicitly), got {v!r}")
     if h is not None and (not isinstance(h, int) or h <= 0):
         raise ValueError(f"cusum: h must be a positive int, got {h!r}")
-    t = dict(series.dtypes).get("y")
-    if t not in ("int", "bigint", "smallint", "tinyint"):
-        raise ValueError(
-            f"cusum: column 'y' has type {t}; the exact-sufficient-"
-            "statistics contract needs integer levels")
+    require_int(series, "cusum", "y")
     w_ord = Window.partitionBy("conv_id").orderBy("t", "turn_idx")
     w_run = w_ord.rowsBetween(Window.unboundedPreceding, 0)
     y = F.col("y").cast("long")
@@ -1509,11 +1463,7 @@ def gini_concentration(series: DataFrame) -> DataFrame:
     Plan: one rank window + one hash aggregate, both keyed by conv_id
     → ONE exchange, no UDF, no join (plan-asserted).
     """
-    t = dict(series.dtypes).get("y")
-    if t not in ("int", "bigint", "smallint", "tinyint"):
-        raise ValueError(
-            f"gini_concentration: column 'y' has type {t}; the exact-"
-            "sufficient-statistics contract needs integer values")
+    require_int(series, "gini_concentration", "y")
     w_ord = Window.partitionBy("conv_id").orderBy("y", "turn_idx")
     y = F.col("y").cast("long")
     checked = F.when(
@@ -1571,34 +1521,10 @@ def hac_mean_se(series: DataFrame, max_lag: int = 3) -> DataFrame:
     if not isinstance(max_lag, int) or not (1 <= max_lag <= 8):
         raise ValueError(f"hac_mean_se: max_lag must be an int in "
                          f"[1, 8], got {max_lag!r}")
-    t = dict(series.dtypes).get("y")
-    if t not in ("int", "bigint", "smallint", "tinyint"):
-        raise ValueError(
-            f"hac_mean_se: column 'y' has type {t}; the exact-"
-            "sufficient-statistics contract needs integer levels")
-    w_ord = Window.partitionBy("conv_id").orderBy("t", "turn_idx")
-    w_all = Window.partitionBy("conv_id")
-    y = F.col("y").cast("long")
-    cols = [F.lag(y, l).over(w_ord).alias(f"__l{l}")
-            for l in range(1, max_lag + 1)]
-    s = (series
-         .where(F.col("y").isNotNull() & F.col("t").isNotNull())
-         .select("conv_id", y.alias("__y"), *cols,
-                 F.sum(y).over(w_all).alias("__s"),
-                 F.count(F.lit(1)).over(w_all).alias("__n")))
-    dev = F.col("__n") * F.col("__y") - F.col("__s")
-
-    def _num(l):
-        lagdev = F.col("__n") * F.col(f"__l{l}") - F.col("__s")
-        return F.sum(F.when(F.col(f"__l{l}").isNotNull(), dev * lagdev))
-
-    agg = (s.groupBy("conv_id")
-           .agg(F.max("__n").alias("n"),
-                F.max("__s").alias("__sum"),
-                F.sum(dev * dev).alias("n0"),
-                *[_num(l).alias(f"n{l}") for l in range(1, max_lag + 1)]))
+    require_int(series, "hac_mean_se", "y")
+    agg = acf_sums(series, range(1, max_lag + 1))
     nd = F.col("n").cast("double")
-    mean = F.col("__sum").cast("double") / nd
+    mean = F.col("s").cast("double") / nd
     wsum = None
     for l in range(1, max_lag + 1):
         term = F.lit(1.0 - l / (max_lag + 1.0)) \
@@ -1652,11 +1578,7 @@ def ks_two_sample(series: DataFrame) -> DataFrame:
     (ECDF counts), one hash aggregate — all keyed by conv_id, ONE
     exchange, no UDF, no join (plan-asserted).
     """
-    t = dict(series.dtypes).get("y")
-    if t not in ("int", "bigint", "smallint", "tinyint"):
-        raise ValueError(
-            f"ks_two_sample: column 'y' has type {t}; the exact-"
-            "sufficient-statistics contract needs integer values")
+    require_int(series, "ks_two_sample", "y")
     w_ord = Window.partitionBy("conv_id").orderBy("t", "turn_idx")
     w_all = Window.partitionBy("conv_id")
     y = F.col("y").cast("long")
@@ -1724,11 +1646,7 @@ def burstiness(series: DataFrame) -> DataFrame:
     Plan: one lead window + one hash aggregate, conv-keyed → ONE
     exchange, no UDF, no join.
     """
-    t = dict(series.dtypes).get("y")
-    if t not in ("int", "bigint", "smallint", "tinyint"):
-        raise ValueError(
-            f"burstiness: column 'y' has type {t}; pre-grid gaps to "
-            "integers explicitly (e.g. whole seconds)")
+    require_int(series, "burstiness", "y")
     w_ord = Window.partitionBy("conv_id").orderBy("t", "turn_idx")
     y = F.col("y").cast("long")
     checked = F.when(
@@ -1794,11 +1712,7 @@ def trimmed_stats(series: DataFrame, trim: float = 0.1) -> DataFrame:
     if not (0.0 <= trim < 0.5):
         raise ValueError(f"trimmed_stats: trim must be in [0, 0.5), "
                          f"got {trim!r}")
-    t = dict(series.dtypes).get("y")
-    if t not in ("int", "bigint", "smallint", "tinyint"):
-        raise ValueError(
-            f"trimmed_stats: column 'y' has type {t}; the exact-"
-            "sufficient-statistics contract needs integer values")
+    require_int(series, "trimmed_stats", "y")
     w_ord = Window.partitionBy("conv_id").orderBy("y", "turn_idx")
     w_all = Window.partitionBy("conv_id")
     y = F.col("y").cast("long")
@@ -1863,11 +1777,7 @@ def tail_stats(series: DataFrame) -> DataFrame:
     Plan: one rank window + one hash aggregate, conv-keyed → ONE
     exchange, no UDF.
     """
-    t = dict(series.dtypes).get("y")
-    if t not in ("int", "bigint", "smallint", "tinyint"):
-        raise ValueError(
-            f"tail_stats: column 'y' has type {t}; the exact-"
-            "sufficient-statistics contract needs integer values")
+    require_int(series, "tail_stats", "y")
     w_ord = Window.partitionBy("conv_id").orderBy("y", "turn_idx")
     w_all = Window.partitionBy("conv_id")
     y = F.col("y").cast("long")
@@ -1959,11 +1869,7 @@ def sprt_bernoulli(series: DataFrame, p0: float, p1: float,
     l0 = math.log((1.0 - p1) / (1.0 - p0))
     a_bound = math.log((1.0 - beta) / alpha)
     b_bound = math.log(beta / (1.0 - alpha))
-    t = dict(series.dtypes).get("y")
-    if t not in ("int", "bigint", "smallint", "tinyint"):
-        raise ValueError(
-            f"sprt_bernoulli: column 'y' has type {t}; need 0/1 "
-            "integer outcomes")
+    require_int(series, "sprt_bernoulli", "y")
     w_ord = Window.partitionBy("conv_id").orderBy("t", "turn_idx")
     w_run = w_ord.rowsBetween(Window.unboundedPreceding, 0)
     y = F.col("y").cast("long")
@@ -2030,11 +1936,7 @@ def record_stats(series: DataFrame) -> DataFrame:
     Plan: one ordered window pass + one hash aggregate, conv-keyed →
     ONE exchange, no UDF, no join.
     """
-    t = dict(series.dtypes).get("y")
-    if t not in ("int", "bigint", "smallint", "tinyint"):
-        raise ValueError(
-            f"record_stats: column 'y' has type {t}; the exact-"
-            "sufficient-statistics contract needs integer values")
+    require_int(series, "record_stats", "y")
     w_ord = Window.partitionBy("conv_id").orderBy("t", "turn_idx")
     w_prev = w_ord.rowsBetween(Window.unboundedPreceding, -1)
     w_run = w_ord.rowsBetween(Window.unboundedPreceding, 0)
@@ -2109,11 +2011,7 @@ def hill_tail(series: DataFrame, k: int = 20) -> DataFrame:
     """
     if not isinstance(k, int) or k < 2:
         raise ValueError(f"hill_tail: k must be an int >= 2, got {k!r}")
-    t = dict(series.dtypes).get("y")
-    if t not in ("int", "bigint", "smallint", "tinyint"):
-        raise ValueError(
-            f"hill_tail: column 'y' has type {t}; the exact-"
-            "sufficient-statistics contract needs integer values")
+    require_int(series, "hill_tail", "y")
     w_ord = Window.partitionBy("conv_id").orderBy(
         F.desc("y"), F.desc("turn_idx"))
     w_all = Window.partitionBy("conv_id")
@@ -2174,11 +2072,7 @@ def anova_oneway(series: DataFrame, group_col: str = "channel") -> DataFrame:
     per conv), one ordered fold over the k cells, one final conv
     aggregate — two shrinking exchanges, no UDF, no join.
     """
-    t = dict(series.dtypes).get("y")
-    if t not in ("int", "bigint", "smallint", "tinyint"):
-        raise ValueError(
-            f"anova_oneway: column 'y' has type {t}; the exact-"
-            "sufficient-statistics contract needs integer values")
+    require_int(series, "anova_oneway", "y")
     y = F.col("y").cast("long")
     cells = (series
              .where(F.col("y").isNotNull()
@@ -2233,8 +2127,8 @@ def dominant_lag(series: DataFrame, max_lag: int = 12) -> DataFrame:
     integers: r_l = N_l/N₀ shares the positive denominator N₀, so
 
         best_lag = argmax_l  N_l,
-        N_l = Σ (n·y_t − S)(n·y_{t−l} − S)   (exact int64, the pacf3
-                                              numerators)
+        N_l = Σ (n·y_t − S)(n·y_{t−l} − S)   (exact int64,
+                                              ``exact.acf_sums``)
 
     — the argmax compares exact integers, ties break to the LOWEST
     lag, and no float ever enters the decision (the one place a
@@ -2254,37 +2148,14 @@ def dominant_lag(series: DataFrame, max_lag: int = 12) -> DataFrame:
     → NULL best_lag.
 
     Plan: max_lag−1 lag windows + two unordered windows + ONE
-    conv-keyed aggregate (the pacf3 plan) — one exchange, no UDF.
+    conv-keyed aggregate (``acf_sums``) — one exchange, no UDF.
     """
     if not isinstance(max_lag, int) or not (2 <= max_lag <= 24):
         raise ValueError(f"dominant_lag: max_lag must be an int in "
                          f"[2, 24], got {max_lag!r}")
-    t = dict(series.dtypes).get("y")
-    if t not in ("int", "bigint", "smallint", "tinyint"):
-        raise ValueError(
-            f"dominant_lag: column 'y' has type {t}; the exact-"
-            "sufficient-statistics contract needs integer levels")
-    w_ord = Window.partitionBy("conv_id").orderBy("t", "turn_idx")
-    w_all = Window.partitionBy("conv_id")
-    y = F.col("y").cast("long")
+    require_int(series, "dominant_lag", "y")
     lags = list(range(2, max_lag + 1))
-    s = (series
-         .where(F.col("y").isNotNull() & F.col("t").isNotNull())
-         .select("conv_id", y.alias("__y"),
-                 *[F.lag(y, l).over(w_ord).alias(f"__l{l}")
-                   for l in lags],
-                 F.sum(y).over(w_all).alias("__s"),
-                 F.count(F.lit(1)).over(w_all).alias("__n")))
-    dev = F.col("__n") * F.col("__y") - F.col("__s")
-
-    def _num(l):
-        lagdev = F.col("__n") * F.col(f"__l{l}") - F.col("__s")
-        return F.sum(F.when(F.col(f"__l{l}").isNotNull(), dev * lagdev))
-
-    agg = (s.groupBy("conv_id")
-           .agg(F.max("__n").alias("n"),
-                F.sum(dev * dev).alias("n0"),
-                *[_num(l).alias(f"n{l}") for l in lags]))
+    agg = acf_sums(series, lags)
     best_val = F.greatest(*[F.col(f"n{l}") for l in lags])
     best_lag = None
     for l in lags:  # lowest lag wins ties: first match in order
@@ -2326,12 +2197,7 @@ def time_weighted_quantiles(series: DataFrame) -> DataFrame:
     Plan: one value-ordered window + one hash aggregate, conv-keyed
     → ONE exchange, no UDF, no join.
     """
-    for c in ("y", "w"):
-        t = dict(series.dtypes).get(c)
-        if t not in ("int", "bigint", "smallint", "tinyint"):
-            raise ValueError(
-                f"time_weighted_quantiles: column {c!r} has type {t}; "
-                "pre-grid values and durations to integers explicitly")
+    require_int(series, "time_weighted_quantiles", "y", "w")
     w_ord = Window.partitionBy("conv_id").orderBy("y", "turn_idx")
     w_run = w_ord.rowsBetween(Window.unboundedPreceding, 0)
     w_all = Window.partitionBy("conv_id")
@@ -2380,7 +2246,7 @@ def kruskal_wallis(series: DataFrame, group_col: str = "channel") -> DataFrame:
 
     Exactness: mid-ranks arrive as the INTEGER 2·avg-rank (the
     spearman_channels contract): a tie block occupying positions
-    a..a+t−1 has 2·avg = 2a+t−1 via rank() + per-value count, so the
+    a..a+t−1 has 2·avg = 2a+t−1 via rank() + ``ties``, so the
     per-group rank sums 2R_g and the tie masses Σ(t³−t) are exact
     int64 and the only float work is one Σ_g (2R_g)²/(4n_g) term per
     group, folded in ORDERED group sequence (the anova cum_b
@@ -2399,23 +2265,14 @@ def kruskal_wallis(series: DataFrame, group_col: str = "channel") -> DataFrame:
     fold) and one final conv aggregate — one hash exchange on
     conv_id reused throughout, no UDF, no join (plan-asserted).
     """
-    t = dict(series.dtypes).get("y")
-    if t not in ("int", "bigint", "smallint", "tinyint"):
-        raise ValueError(
-            f"kruskal_wallis: column 'y' has type {t}; the exact-"
-            "2·avg-rank contract needs integer values")
+    require_int(series, "kruskal_wallis", "y")
     y = F.col("y").cast("long")
     base = (series
             .where(F.col("y").isNotNull() & F.col(group_col).isNotNull())
             .select("conv_id", F.col(group_col).alias("__g"), y.alias("__y")))
-    w_rank = Window.partitionBy("conv_id").orderBy("__y")
-    w_val = Window.partitionBy("conv_id", "__y")
     ranked = base.select(
-        "conv_id", "__g",
-        # 2·avg-rank of a tie block at positions a..a+t−1 is 2a+t−1
-        (F.lit(2) * F.rank().over(w_rank)
-         + F.count(F.lit(1)).over(w_val) - F.lit(1)).alias("__r2"),
-        F.count(F.lit(1)).over(w_val).alias("__t"))
+        "conv_id", "__g", midrank2("__y").alias("__r2"),
+        ties("__y").alias("__t"))
     cells = ranked.groupBy("conv_id", "__g").agg(
         F.count(F.lit(1)).alias("ng"),
         F.sum("__r2").alias("r2g"),
@@ -2465,7 +2322,7 @@ def ljung_box(series: DataFrame) -> DataFrame:
 
     Exactness: the autocorrelation numerators N_k = Σ (n·y_t − S)
     (n·y_{t−k} − S) and denominator N₀ = Σ (n·y_t − S)² are exact
-    int64 (the pacf3/dominant_lag sufficient-statistics contract);
+    int64 (``exact.acf_sums``);
     each ρ̂_k = N_k/N₀ is one division and Q is a fixed left-assoc
     double tree restated verbatim in SQL.  Degenerates NULL: n ≤ 3
     (lag-3 pairs or residual df missing) or N₀ = 0 (constant series
@@ -2475,34 +2332,11 @@ def ljung_box(series: DataFrame) -> DataFrame:
     Plan: 3 lag windows + one unordered window + ONE conv aggregate —
     one hash exchange on conv_id, no UDF, no join.
     """
-    t = dict(series.dtypes).get("y")
-    if t not in ("int", "bigint", "smallint", "tinyint"):
-        raise ValueError(
-            f"ljung_box: column 'y' has type {t}; the exact-"
-            "sufficient-statistics contract needs integer values")
-    w_ord = Window.partitionBy("conv_id").orderBy("t", "turn_idx")
-    w_all = Window.partitionBy("conv_id")
-    y = F.col("y").cast("long")
-    s = (series
-         .where(F.col("y").isNotNull() & F.col("t").isNotNull())
-         .select("conv_id", y.alias("__y"),
-                 *[F.lag(y, k).over(w_ord).alias(f"__l{k}")
-                   for k in (1, 2, 3)],
-                 F.sum(y).over(w_all).alias("__s"),
-                 F.count(F.lit(1)).over(w_all).alias("__n")))
-    dev = F.col("__n") * F.col("__y") - F.col("__s")
-
-    def _num(k):
-        lagdev = F.col("__n") * F.col(f"__l{k}") - F.col("__s")
-        return F.sum(F.when(F.col(f"__l{k}").isNotNull(), dev * lagdev))
-
-    agg = (s.groupBy("conv_id")
-           .agg(F.max("__n").alias("n"),
-                F.sum(dev * dev).alias("n0"),
-                *[_num(k).alias(f"nk{k}") for k in (1, 2, 3)]))
+    require_int(series, "ljung_box", "y")
+    agg = acf_sums(series, (1, 2, 3))
     nd = F.col("n").cast("double")
     ok = (F.col("n") > 3) & (F.col("n0") > 0)
-    r = {k: F.col(f"nk{k}").cast("double") / F.col("n0").cast("double")
+    r = {k: F.col(f"n{k}").cast("double") / F.col("n0").cast("double")
          for k in (1, 2, 3)}
     q = (nd * (nd + F.lit(2.0))
          * (r[1] * r[1] / (nd - F.lit(1.0))
@@ -2716,11 +2550,7 @@ def lorenz_deciles(series: DataFrame) -> DataFrame:
     Plan: one ordered conv window + one conv aggregate — one hash
     exchange, no UDF, no join.
     """
-    t = dict(series.dtypes).get("y")
-    if t not in ("int", "bigint", "smallint", "tinyint"):
-        raise ValueError(
-            f"lorenz_deciles: column 'y' has type {t}; the exact-"
-            "integer-share contract needs integer values")
+    require_int(series, "lorenz_deciles", "y")
     y_raw = F.col("y").cast("long")
     y = F.when(
         y_raw < 0,
@@ -2875,11 +2705,7 @@ def sample_entropy(series: DataFrame, r: int, max_n: int = 256) -> DataFrame:
     if not (8 <= max_n <= 4096):
         raise ValueError(f"sample_entropy: max_n must be in "
                          f"[8, 4096], got {max_n}")
-    t = dict(series.dtypes).get("y")
-    if t not in ("int", "bigint", "smallint", "tinyint"):
-        raise ValueError(
-            f"sample_entropy: column 'y' has type {t}; the exact-"
-            "integer-match contract needs integer values")
+    require_int(series, "sample_entropy", "y")
     wo = Window.partitionBy("conv_id").orderBy("t", "turn_idx")
     wall = wo.rowsBetween(Window.unboundedPreceding,
                           Window.unboundedFollowing)
@@ -2973,11 +2799,7 @@ def dfa(series: DataFrame, boxes: tuple = (4, 8, 16),
                          f"got {boxes!r}")
     if not (32 <= max_n <= 8192):
         raise ValueError(f"dfa: max_n must be in [32, 8192], got {max_n}")
-    t = dict(series.dtypes).get("y")
-    if t not in ("int", "bigint", "smallint", "tinyint"):
-        raise ValueError(
-            f"dfa: column 'y' has type {t}; the exact-profile "
-            "contract needs integer values")
+    require_int(series, "dfa", "y")
     import math
     lb = [math.log(b) for b in bs]
     mlb = sum(lb) / len(lb)
@@ -3221,45 +3043,20 @@ def spectral_entropy(series: DataFrame, n_lags: int = 6,
     if not (2 <= n_lags <= 24) or not (2 <= n_freqs <= 64):
         raise ValueError(f"spectral_entropy: bad grid "
                          f"({n_lags}, {n_freqs})")
-    t = dict(series.dtypes).get("y")
-    if t not in ("int", "bigint", "smallint", "tinyint"):
-        raise ValueError(
-            f"spectral_entropy: column 'y' has type {t}; the exact-"
-            "sufficient-statistics contract needs integer values")
+    require_int(series, "spectral_entropy", "y")
     import math
     coeffs = spectral_coeffs(n_lags, n_freqs)
-    w_ord = Window.partitionBy("conv_id").orderBy("t", "turn_idx")
-    w_all = Window.partitionBy("conv_id")
-    y = F.col("y").cast("long")
-    s = (series
-         .where(F.col("y").isNotNull() & F.col("t").isNotNull())
-         .select("conv_id", y.alias("__y"),
-                 *[F.lag(y, k).over(w_ord).alias(f"__l{k}")
-                   for k in range(1, n_lags + 1)],
-                 F.sum(y).over(w_all).alias("__s"),
-                 F.count(F.lit(1)).over(w_all).alias("__n")))
-    dev = F.col("__n") * F.col("__y") - F.col("__s")
-
-    def _num(k):
-        lagdev = F.col("__n") * F.col(f"__l{k}") - F.col("__s")
-        return F.sum(F.when(F.col(f"__l{k}").isNotNull(), dev * lagdev))
-
-    agg = (s.groupBy("conv_id")
-           .agg(F.max("__n").alias("n"),
-                F.sum(dev * dev).alias("n0"),
-                *[_num(k).alias(f"nk{k}")
-                  for k in range(1, n_lags + 1)]))
+    agg = acf_sums(series, range(1, n_lags + 1))
     spec = []
     for m in range(n_freqs):
         sm = F.col("n0").cast("double")
         for k in range(1, n_lags + 1):
             sm = sm + F.lit(coeffs[m][k - 1]) \
-                * F.col(f"nk{k}").cast("double")
+                * F.col(f"n{k}").cast("double")
         spec.append(F.when(sm < 0, F.lit(0.0)).otherwise(sm))
     agg = agg.select("conv_id", "n", "n0",
                      *[sp.alias(f"s{m + 1}")
-                       for m, sp in enumerate(spec)],
-                     *[F.col(f"nk{k}") for k in range(1, n_lags + 1)])
+                       for m, sp in enumerate(spec)])
     tot = None
     for m in range(1, n_freqs + 1):
         c = F.col(f"s{m}")
@@ -3370,11 +3167,7 @@ def brown_forsythe(series: DataFrame,
     window on the SAME key the ANOVA already exchanges on — still
     effectively one conv-keyed exchange family, no UDF, no join.
     """
-    t = dict(series.dtypes).get("y")
-    if t not in ("int", "bigint", "smallint", "tinyint"):
-        raise ValueError(
-            f"brown_forsythe: column 'y' has type {t}; the exact-"
-            "2-median contract needs integer values")
+    require_int(series, "brown_forsythe", "y")
     y = F.col("y").cast("long")
     w_g = Window.partitionBy("conv_id", group_col)
     med2 = F.round(F.percentile(y, F.lit(0.5)).over(w_g)
@@ -3410,11 +3203,7 @@ def grubbs_stat(series: DataFrame) -> DataFrame:
     Plan: one unordered conv window + one conv aggregate — one
     exchange, no UDF, no join.
     """
-    t = dict(series.dtypes).get("y")
-    if t not in ("int", "bigint", "smallint", "tinyint"):
-        raise ValueError(
-            f"grubbs_stat: column 'y' has type {t}; the exact-"
-            "sufficient-statistics contract needs integer values")
+    require_int(series, "grubbs_stat", "y")
     y = F.col("y").cast("long")
     w_all = Window.partitionBy("conv_id")
     s = (series
@@ -3468,11 +3257,7 @@ def cusumsq(series: DataFrame) -> DataFrame:
     Plan: one ordered conv window (the cumsum) + one conv
     aggregate — one exchange, no UDF, no join.
     """
-    t = dict(series.dtypes).get("y")
-    if t not in ("int", "bigint", "smallint", "tinyint"):
-        raise ValueError(
-            f"cusumsq: column 'y' has type {t}; the exact-"
-            "integer-cumsum contract needs integer values")
+    require_int(series, "cusumsq", "y")
     y = F.col("y").cast("long")
     w_ord = Window.partitionBy("conv_id").orderBy("t", "turn_idx")
     w_all = Window.partitionBy("conv_id")
@@ -3531,11 +3316,7 @@ def partial_corr(series: DataFrame, ch_a: str, ch_b: str,
     """
     if len({ch_a, ch_b, ch_c}) != 3:
         raise ValueError("partial_corr: channels must be distinct")
-    t = dict(series.dtypes).get("y")
-    if t not in ("int", "bigint", "smallint", "tinyint"):
-        raise ValueError(
-            f"partial_corr: column 'y' has type {t}; the exact-"
-            "sufficient-statistics contract needs integer values")
+    require_int(series, "partial_corr", "y")
     y = F.col("y").cast("long")
     aligned = (
         series
@@ -3757,11 +3538,7 @@ def cronbach_alpha(series: DataFrame,
     if len(channels) < 2 or len(set(channels)) != len(channels):
         raise ValueError(f"cronbach_alpha: need >= 2 distinct "
                          f"channels, got {channels!r}")
-    t = dict(series.dtypes).get("y")
-    if t not in ("int", "bigint", "smallint", "tinyint"):
-        raise ValueError(
-            f"cronbach_alpha: column 'y' has type {t}; the exact-"
-            "sufficient-statistics contract needs integer values")
+    require_int(series, "cronbach_alpha", "y")
     k = len(channels)
     y = F.col("y").cast("long")
     aligned = (
@@ -3837,23 +3614,15 @@ def dunn_posthoc(series: DataFrame,
     cell self-join bounded by k²/2 pairs (k = #groups, single
     digits) — all exchanges on conv_id.
     """
-    t = dict(series.dtypes).get("y")
-    if t not in ("int", "bigint", "smallint", "tinyint"):
-        raise ValueError(
-            f"dunn_posthoc: column 'y' has type {t}; the exact-"
-            "2·avg-rank contract needs integer values")
+    require_int(series, "dunn_posthoc", "y")
     y = F.col("y").cast("long")
     base = (series
             .where(F.col("y").isNotNull() & F.col(group_col).isNotNull())
             .select("conv_id", F.col(group_col).alias("__g"),
                     y.alias("__y")))
-    w_rank = Window.partitionBy("conv_id").orderBy("__y")
-    w_val = Window.partitionBy("conv_id", "__y")
     ranked = base.select(
-        "conv_id", "__g",
-        (F.lit(2) * F.rank().over(w_rank)
-         + F.count(F.lit(1)).over(w_val) - F.lit(1)).alias("__r2"),
-        F.count(F.lit(1)).over(w_val).alias("__t"))
+        "conv_id", "__g", midrank2("__y").alias("__r2"),
+        ties("__y").alias("__t"))
     cells = ranked.groupBy("conv_id", "__g").agg(
         F.count(F.lit(1)).alias("ng"),
         F.sum("__r2").alias("r2g"),
@@ -3919,11 +3688,7 @@ def wilcoxon_signed_rank(series: DataFrame) -> DataFrame:
     (conv, j + half)), one rank window over pairs, one conv
     aggregate — all exchanges on conv_id.
     """
-    t = dict(series.dtypes).get("y")
-    if t not in ("int", "bigint", "smallint", "tinyint"):
-        raise ValueError(
-            f"wilcoxon_signed_rank: column 'y' has type {t}; the "
-            "exact-2·avg-rank contract needs integer values")
+    require_int(series, "wilcoxon_signed_rank", "y")
     y = F.col("y").cast("long")
     w_ord = Window.partitionBy("conv_id").orderBy("t", "turn_idx")
     w_all = Window.partitionBy("conv_id")
@@ -3946,13 +3711,9 @@ def wilcoxon_signed_rank(series: DataFrame) -> DataFrame:
              .select("conv_id",
                      (F.col("__y2") - F.col("__y1")).alias("__d"))
              .where(F.col("__d") != 0))
-    w_rank = Window.partitionBy("conv_id").orderBy(F.abs(F.col("__d")))
-    w_vald = Window.partitionBy("conv_id", F.abs(F.col("__d")))
     ranked = pairs.select(
-        "conv_id", "__d",
-        (F.lit(2) * F.rank().over(w_rank)
-         + F.count(F.lit(1)).over(w_vald) - F.lit(1)).alias("__r2"),
-        F.count(F.lit(1)).over(w_vald).alias("__t"))
+        "conv_id", "__d", midrank2(F.abs(F.col("__d"))).alias("__r2"),
+        ties(F.abs(F.col("__d"))).alias("__t"))
     g = ranked.groupBy("conv_id").agg(
         F.count(F.lit(1)).alias("m"),
         F.sum(F.when(F.col("__d") > 0, F.col("__r2"))
@@ -4002,11 +3763,7 @@ def mood_median(series: DataFrame,
     + one ordered fold — all on the conv key family, no UDF, no
     join.
     """
-    t = dict(series.dtypes).get("y")
-    if t not in ("int", "bigint", "smallint", "tinyint"):
-        raise ValueError(
-            f"mood_median: column 'y' has type {t}; the exact-"
-            "2-median contract needs integer values")
+    require_int(series, "mood_median", "y")
     y = F.col("y").cast("long")
     w_conv = Window.partitionBy("conv_id")
     base = (series
@@ -4069,8 +3826,8 @@ def ess_acf(series: DataFrame) -> DataFrame:
         τ_int = 1 + 2(ρ₁ + ρ₂ + ρ₃),    ESS = n / τ_int.
 
     ρ_k are single divisions of the family's exact int64 ACF
-    numerators (the ljung_box aggregate verbatim — one sufficient-
-    statistics discipline, five consumers now); τ and ESS are fixed
+    numerators (``exact.acf_sums``, shared by the whole ACF
+    family); τ and ESS are fixed
     trees.  τ ≤ 0 (strong anti-correlation at this truncation) →
     NULL ESS with τ still reported — ESS > n is a real phenomenon
     for antithetic sequences but a NEGATIVE τ is a truncation
@@ -4078,33 +3835,10 @@ def ess_acf(series: DataFrame) -> DataFrame:
 
     Plan: the ljung_box single-aggregate shape — ONE exchange.
     """
-    t = dict(series.dtypes).get("y")
-    if t not in ("int", "bigint", "smallint", "tinyint"):
-        raise ValueError(
-            f"ess_acf: column 'y' has type {t}; the exact-"
-            "sufficient-statistics contract needs integer values")
-    w_ord = Window.partitionBy("conv_id").orderBy("t", "turn_idx")
-    w_all = Window.partitionBy("conv_id")
-    y = F.col("y").cast("long")
-    s = (series
-         .where(F.col("y").isNotNull() & F.col("t").isNotNull())
-         .select("conv_id", y.alias("__y"),
-                 *[F.lag(y, k).over(w_ord).alias(f"__l{k}")
-                   for k in (1, 2, 3)],
-                 F.sum(y).over(w_all).alias("__s"),
-                 F.count(F.lit(1)).over(w_all).alias("__n")))
-    dev = F.col("__n") * F.col("__y") - F.col("__s")
-
-    def _num(k):
-        lagdev = F.col("__n") * F.col(f"__l{k}") - F.col("__s")
-        return F.sum(F.when(F.col(f"__l{k}").isNotNull(), dev * lagdev))
-
-    agg = (s.groupBy("conv_id")
-           .agg(F.max("__n").alias("n"),
-                F.sum(dev * dev).alias("n0"),
-                *[_num(k).alias(f"nk{k}") for k in (1, 2, 3)]))
+    require_int(series, "ess_acf", "y")
+    agg = acf_sums(series, (1, 2, 3))
     ok = (F.col("n") > 3) & (F.col("n0") > 0)
-    r = {k: F.col(f"nk{k}").cast("double") / F.col("n0").cast("double")
+    r = {k: F.col(f"n{k}").cast("double") / F.col("n0").cast("double")
          for k in (1, 2, 3)}
     tau = (F.lit(1.0)
            + F.lit(2.0) * (r[1] + r[2] + r[3]))
@@ -4148,12 +3882,7 @@ def von_neumann(series: DataFrame) -> DataFrame:
     Plan: one lag window + one hash aggregate on conv_id → ONE
     exchange, no join, no UDF.
     """
-    t = dict(series.dtypes).get("y")
-    if t not in ("int", "bigint", "smallint", "tinyint"):
-        raise ValueError(
-            f"von_neumann: column 'y' has type {t}; the exact-"
-            "sufficient-statistics contract needs integer levels "
-            "(pre-grid floats to integers explicitly)")
+    require_int(series, "von_neumann", "y")
     w = Window.partitionBy("conv_id").orderBy("t", "turn_idx")
     y = F.col("y").cast("long")
     d = y - F.lag(y).over(w)
@@ -4224,12 +3953,7 @@ def snht(series: DataFrame) -> DataFrame:
     Plan: one ordered-cumsum window + one argmax aggregate on
     conv_id → ONE exchange, no join, no UDF.
     """
-    t = dict(series.dtypes).get("y")
-    if t not in ("int", "bigint", "smallint", "tinyint"):
-        raise ValueError(
-            f"snht: column 'y' has type {t}; the exact-sufficient-"
-            "statistics contract needs integer levels "
-            "(pre-grid floats to integers explicitly)")
+    require_int(series, "snht", "y")
     w_ord = Window.partitionBy("conv_id").orderBy("t", "turn_idx")
     w_all = Window.partitionBy("conv_id")
     y = F.col("y").cast("long")
@@ -4320,12 +4044,7 @@ def page_hinkley(series: DataFrame, delta: float = 0.0,
         raise ValueError(
             f"page_hinkley: delta ({delta}) and lam ({lam}) must sit "
             f"on the 1/{grid} lattice (pass a matching grid=)")
-    t = dict(series.dtypes).get("y")
-    if t not in ("int", "bigint", "smallint", "tinyint"):
-        raise ValueError(
-            f"page_hinkley: column 'y' has type {t}; the exact-"
-            "sufficient-statistics contract needs integer levels "
-            "(pre-grid floats to integers explicitly)")
+    require_int(series, "page_hinkley", "y")
     dg = int(round(delta * grid))
     lg = int(round(lam * grid))
     g = int(grid)
@@ -4469,11 +4188,7 @@ def esd_outliers(series: DataFrame, k: int = 3) -> DataFrame:
     if not isinstance(k, int) or not (1 <= k <= 8):
         raise ValueError(f"esd_outliers: k must be an int in [1, 8], "
                          f"got {k!r}")
-    t = dict(series.dtypes).get("y")
-    if t not in ("int", "bigint", "smallint", "tinyint"):
-        raise ValueError(
-            f"esd_outliers: column 'y' has type {t}; the exact-"
-            "sufficient-statistics contract needs integer values")
+    require_int(series, "esd_outliers", "y")
     base = (series
             .where(F.col("y").isNotNull())
             .select("conv_id", "turn_idx",

@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from cesium_spark.operators.exact import require_int
+
 EWMA_SCHEMA = ("conv_id string, channel string, turn_idx long, "
                "t double, y double, y_smooth double")
 
@@ -507,11 +509,7 @@ def theta_forecast(series: DataFrame, h: int = 3) -> DataFrame:
     if not isinstance(h, int) or not (1 <= h <= 24):
         raise ValueError(f"theta_forecast: h must be an int in "
                          f"[1, 24], got {h!r}")
-    t = dict(series.dtypes).get("y")
-    if t not in ("int", "bigint", "smallint", "tinyint"):
-        raise ValueError(
-            f"theta_forecast: column 'y' has type {t}; the exact-"
-            "sufficient-statistics contract needs integer values")
+    require_int(series, "theta_forecast", "y")
     w_ord = Window.partitionBy("conv_id", "channel") \
                   .orderBy("t", "turn_idx")
     w_all = Window.partitionBy("conv_id", "channel")
@@ -613,11 +611,7 @@ def theta_backtest(series: DataFrame, h: int = 3) -> DataFrame:
     if not isinstance(h, int) or not (1 <= h <= 24):
         raise ValueError(f"theta_backtest: h must be an int in "
                          f"[1, 24], got {h!r}")
-    t = dict(series.dtypes).get("y")
-    if t not in ("int", "bigint", "smallint", "tinyint"):
-        raise ValueError(
-            f"theta_backtest: column 'y' has type {t}; the exact-"
-            "sufficient-statistics contract needs integer values")
+    require_int(series, "theta_backtest", "y")
     w_ord = Window.partitionBy("conv_id", "channel") \
                   .orderBy("t", "turn_idx")
     w_all = Window.partitionBy("conv_id", "channel")

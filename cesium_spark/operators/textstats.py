@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from cesium_spark.functions.tokenizer import TOKENIZERS, token_count, ws_split, ws_tokens
+from cesium_spark.operators.rollup import tier_window
 
 STOPWORDS = ("the", "a", "of", "to", "and", "in", "for", "on", "with")
 
@@ -93,7 +94,7 @@ def vocab_topk(docs: DataFrame, k: int, id_col: str = "doc_id",
 
 def vocab_novelty(stream: DataFrame, time_col: str = "ts",
                   text_col: str = "text",
-                  tier: str = "day") -> DataFrame:
+                  tier: str = "1d") -> DataFrame:
     """Vocabulary-novelty drift: per time bucket, how much of the
     bucket's distinct vocabulary is seen for the FIRST time — the
     corpus-freshness monitor next to the value-distribution drift op
@@ -101,6 +102,9 @@ def vocab_novelty(stream: DataFrame, time_col: str = "ts",
     stops discovering (new_frac → 0) or a pipeline suddenly ingesting
     a new domain/language (new_frac spike) shows up here before any
     quality score moves.
+
+    Buckets are ``tier`` windows of the rollup ladder (1m/1h/1d/1w/1mo;
+    ValueError for any other name).
 
     Output per bucket: (bucket, n_tokens, n_new, new_frac,
     vocab_cum) — n_tokens = distinct tokens in the bucket, n_new =
@@ -116,7 +120,7 @@ def vocab_novelty(stream: DataFrame, time_col: str = "ts",
     bucket-cardinality rows. Counts exact integers; new_frac one
     division — full-value SQL-restatable."""
     bt = (stream
-          .select(F.date_trunc(tier, F.col(time_col)).alias("bucket"),
+          .select(tier_window(F.col(time_col), tier).alias("bucket"),
                   F.explode(F.split(F.trim(F.lower(F.col(text_col))),
                                     r"\s+")).alias("token"))
           .where(F.col("token") != "")

@@ -373,15 +373,25 @@ def int_series(spark):
 
 
 def test_r5_randomness_family_one_exchange(int_series):
-    """r5 ops each claim ONE hash exchange (window + agg share the
-    conv_id partitioning) — pinned against the executed plan."""
+    """r5 ops, the six exact-ACF operators (``exact.acf_sums``) and the
+    conv-keyed mid-rank operators (``exact.midrank2``) each claim ONE
+    hash exchange (window + agg share the conv_id partitioning) —
+    pinned against the executed plan."""
+    from pyspark.sql import functions as F
+
     from cesium_spark.operators.seriesstats import (
-        page_hinkley, snht, turning_points, von_neumann)
-    for op in (von_neumann, snht, turning_points):
-        s = _shape(op(int_series))
-        assert s["hash"] == 1 and not s["cartesian"], op.__name__
-    s = _shape(page_hinkley(int_series, delta=0.25, lam=5.0))
-    assert s["hash"] == 1 and not s["cartesian"]
+        dominant_lag, ess_acf, hac_mean_se, kruskal_wallis, ljung_box,
+        pacf3, page_hinkley, pettitt, snht, spectral_entropy,
+        turning_points, von_neumann)
+    plans = {op.__name__: op(int_series) for op in (
+        von_neumann, snht, turning_points, pacf3, hac_mean_se,
+        dominant_lag, ljung_box, spectral_entropy, ess_acf, pettitt)}
+    plans["page_hinkley"] = page_hinkley(int_series, delta=0.25, lam=5.0)
+    plans["kruskal_wallis"] = kruskal_wallis(
+        int_series.withColumn("g", F.col("turn_idx") % 3), "g")
+    for name, df in plans.items():
+        s = _shape(df)
+        assert s["hash"] == 1 and not s["cartesian"], name
 
 
 def test_theta_one_exchange(spark):

@@ -42,6 +42,7 @@ from cesium_spark.operators.sketches import (
     cms_build,
     cms_fold,
 )
+from cesium_spark.operators.textstats import vocab_novelty
 from cesium_spark.streaming.stateful import stateful_counter_rate
 from cesium_spark.streaming.window_delta import (
     stream_bloom_cells,
@@ -107,6 +108,7 @@ OPERATORS = {
     "stream_enriched_counts": lambda s, t: stream_enriched_counts(
         s, _dims(s.sparkSession), "conv_id", "team", t),
     "stateful_counter_rate": lambda s, t: stateful_counter_rate(s, t),
+    "vocab_novelty": lambda s, t: vocab_novelty(s, text_col="item", tier=t),
 }
 
 
@@ -193,3 +195,24 @@ def test_fold_from_1h_equals_direct_build(ladder_series, family, target):
     direct = build(s, target)
     assert folded.columns == direct.columns
     assert _rows(folded) == _rows(direct)
+
+
+def test_vocab_novelty_buckets_on_the_ladder(spark):
+    """Two days of text: ``"1d"`` gives one midnight bucket per day
+    (what the date_trunc unit ``"day"`` gave before), and a name off the
+    ladder raises instead of bucketing everything into NULL."""
+    df = spark.createDataFrame(pd.DataFrame({
+        "ts": pd.to_datetime(["2024-03-01 09:00", "2024-03-01 17:30",
+                              "2024-03-02 08:15"]),
+        "text": ["a b", "b c", "c d e"]}))
+    got = [tuple(r) for r in vocab_novelty(df, tier="1d")
+           .orderBy("bucket").collect()]
+    day = [r.d for r in df.select(F.date_trunc("day", "ts").alias("d"))
+           .distinct().orderBy("d").collect()]
+    assert got == [(day[0], 3, 3, 1.0, 3), (day[1], 3, 2, 2 / 3, 5)]
+    assert day[1] - day[0] == pd.Timedelta(days=1)
+    assert (vocab_novelty(df).collect()
+            == vocab_novelty(df, tier="1d").collect())
+    for bad in ("day", "2d"):
+        with pytest.raises(ValueError, match="unknown tier"):
+            vocab_novelty(df, tier=bad)
