@@ -11,7 +11,12 @@ chunk_size, so kernel memory is O(chunk) and Arrow batches stay small.
 Each chunk row carries a header (n, ts_min, ts_max, crc32) for
 partition pruning and integrity, plus three bit-packed blobs:
 timestamps (DoD), turn indices (DoD — mostly Δ=1 → ~1 bit/turn), and
-values (Gorilla XOR). ``decode_chunks`` restores the exact rows —
+values (Gorilla XOR). Each blob starts with a layout tag byte and a
+LEB128 point count; the DoD blobs then hold t0 (8 B), d0 (zigzag
+LEB128) and the blob's own 3-byte bucket ladder, the value blob v0
+(8 B), then the token stream (layout in codecs/gorilla.py). A table
+written by an earlier blob layout fails ``decode_chunks`` with a
+ValueError rather than decoding to wrong rows. ``decode_chunks`` restores the exact rows —
 bitwise for y, exact int64 µs for ts — which together with the raw
 table's text column satisfies the per-turn invariant
 (tests/test_passthrough.py).

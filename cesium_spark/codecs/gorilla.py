@@ -1,9 +1,17 @@
 """Gorilla-style codecs (Pelkonen et al., VLDB 2015 §4.1/§4.2), numpy.
 
-- Timestamps: delta-of-delta with the paper's bucket ladder
-  ('0' | '10'+7b | '110'+9b | '1110'+12b | '11110'+64b). The final
-  bucket is widened from the paper's 32 bits to 64 so arbitrary
-  microsecond jumps (conversation restarts) round-trip exactly.
+- Timestamps: delta-of-delta with Gorilla's token shape — '0' for
+  dod == 0, unary-prefixed buckets '10' | '110' | '1110' | '11110' +
+  w_k payload bits, and the escape '11111' + 64 bits, so any int64 dod
+  round-trips. The payload is zigzag(dod). The bucket widths are not
+  fixed: each blob picks its own ladder w_1..w_4 from its own dod bit
+  lengths (their quartiles, the last one the maximum, capped at 63)
+  and stores it in a 3-byte header. The paper's fixed 7/9/12/32-bit
+  ladder fits second-resolution scrape intervals; conversation turn
+  gaps jitter by 2^19-2^23 µs, so any fixed small ladder sends nearly
+  every dod to the escape. Per-blob widths follow "Two-Level Data Compression using Machine
+  Learning in Time Series Database" (ICDE 2020): choose the encoding
+  per block from that block's own statistics.
 - Values: XOR with the previous float; '0' for identical bits, else
   '1' + 5-bit leading-zero count + 6-bit meaningful-bit length +
   meaningful bits. This is the paper's scheme with the
@@ -21,13 +29,26 @@ codes serialize only the *positions* of tokens, not their payloads, so
 the decoder (a) follows the position chain for all chunks of a batch
 in lockstep — one vectorized step per token *index* across chunks,
 decoding each step's token width from a 2-3-byte gather + control-bit
-LUT at the visited positions only (O(tokens) total, independent of
-stream bit-length) — then (b) extracts all payloads with 9-byte window
-gathers and (c) reconstructs series with prefix scans
-(np.cumsum / np.bitwise_xor.accumulate with per-chunk offset
-subtraction, exact because +/xor are associative mod 2^64). The
+LUT (for timestamps, a control code looked up in the blob's own row
+of the token-width table) at the visited positions only (O(tokens)
+total, independent of stream bit-length) — then (b) extracts all
+payloads with 9-byte window gathers and (c) reconstructs series with
+prefix scans (np.cumsum / np.bitwise_xor.accumulate with per-chunk
+offset subtraction, exact because +/xor are associative mod 2^64). The
 original per-token readers are kept as ``*_scalar`` references and the
 test suite asserts batch ≡ scalar bit-for-bit.
+
+Blob layouts (t0 and v0 little-endian, the ladder's widths packed
+w_1 first; a field is present only when n reaches it):
+
+- timestamps / turn indices: [tag 0xD2][n: LEB128][t0: 8 B int64]
+  [d0: zigzag LEB128][ladder: 3 B, four 6-bit widths][dod tokens]
+- values: [tag 0xC2][n: LEB128][v0: 8 B float64 bits][xor tokens]
+
+Token streams are zero-padded to a whole byte. The decoders reject
+(ValueError) a blob whose tag differs — including the earlier layout,
+which began with a uint32 n — or whose header and tokens do not fill
+it exactly.
 
 Bitwise roundtrip is asserted for every IEEE-754 payload including
 ±0.0, subnormals and NaN payloads (tests/test_codecs.py, hypothesis).
@@ -38,8 +59,6 @@ from __future__ import annotations
 import threading
 
 import numpy as np
-
-_TS_MAGIC_EMPTY = b""
 
 
 def _pack_tokens(values: np.ndarray, widths: np.ndarray) -> bytes:
@@ -99,76 +118,185 @@ class _BitReader:
 
 
 # ---------------------------------------------------------------------------
+# blob headers
+# ---------------------------------------------------------------------------
+
+# Layout tags: the first byte of every blob. The previous layout began
+# with a little-endian uint32 n, whose first byte can be any value, so
+# the decoders also require the header and the token stream to fill
+# the blob exactly; an earlier-layout blob fails one of the two checks
+# with a ValueError instead of decoding to wrong values.
+_DOD_TAG = 0xD2
+_XOR_TAG = 0xC2
+
+
+def _varint(x: int) -> bytes:
+    """Unsigned LEB128 of a non-negative int < 2**64."""
+    out = bytearray()
+    while x >= 0x80:
+        out.append((x & 0x7F) | 0x80)
+        x >>= 7
+    out.append(x)
+    return bytes(out)
+
+
+def _read_varint(b: bytes, i: int) -> tuple[int, int]:
+    x = shift = 0
+    while True:
+        if i >= len(b) or shift > 63:
+            raise ValueError(
+                "malformed blob header: truncated or overlong varint")
+        c = b[i]
+        i += 1
+        x |= (c & 0x7F) << shift
+        if c < 0x80:
+            if x >> 64:
+                raise ValueError(
+                    "malformed blob header: varint exceeds 64 bits")
+            return x, i
+        shift += 7
+
+
+def _zigzag(v: int) -> int:
+    """int64 → uint64 with small magnitudes near zero (Python ints)."""
+    return ((v << 1) ^ (v >> 63)) & _M64
+
+
+def _unzigzag(z: int) -> int:
+    return (z >> 1) ^ -(z & 1)
+
+
+def _check_tag(b: bytes, tag: int, kind: str) -> None:
+    if not b or b[0] != tag:
+        raise ValueError(
+            f"not a {kind} blob of this codec layout (first byte "
+            f"{b[0] if b else None!r}, expected {tag}); blobs written by an "
+            "earlier layout must be re-encoded")
+
+
+def _check_stream(b: bytes, start: int, tokens: int, kind: str) -> None:
+    """The header must end inside the blob, and the stream after it
+    must hold at least one bit per token and be empty without tokens."""
+    left = len(b) - start
+    if left < 0 or (tokens == 0 and left) or tokens > 8 * left:
+        raise ValueError(
+            f"malformed {kind} blob: header and stream do not fill it "
+            f"({len(b)} bytes, {tokens} tokens from byte {start})")
+
+
+def _check_end(end_bits, stream_bytes, kind: str) -> None:
+    """Token streams are zero-padded to a whole byte, so the bit just
+    past the last token lands in the stream's last byte."""
+    if np.any((np.asarray(end_bits) + 7) >> 3 != np.asarray(stream_bytes)):
+        raise ValueError(
+            f"malformed {kind} blob: its tokens do not end at the end of "
+            "its stream (not this codec layout, or corrupt)")
+
+
+def _dod_header(b: bytes):
+    """(n, t0, d0, ladder widths, stream start byte) of a timestamp blob."""
+    _check_tag(b, _DOD_TAG, "timestamp")
+    n, i = _read_varint(b, 1)
+    t0 = d0 = 0
+    widths = (0, 0, 0, 0)
+    if n >= 1:
+        t0 = int.from_bytes(b[i:i + 8], "little", signed=True)
+        i += 8
+    if n >= 2:
+        z, i = _read_varint(b, i)
+        d0 = _unzigzag(z)
+    if n >= 3:
+        w = int.from_bytes(b[i:i + 3], "big")
+        widths = (w >> 18, (w >> 12) & 63, (w >> 6) & 63, w & 63)
+        i += 3
+    _check_stream(b, i, max(n - 2, 0), "timestamp")
+    return n, t0, d0, widths, i
+
+
+def _xor_header(b: bytes):
+    """(n, v0 bits, stream start byte) of a value blob."""
+    _check_tag(b, _XOR_TAG, "value")
+    n, i = _read_varint(b, 1)
+    v0 = 0
+    if n >= 1:
+        v0 = int.from_bytes(b[i:i + 8], "little")
+        i += 8
+    _check_stream(b, i, max(n - 1, 0), "value")
+    return n, v0, i
+
+
+# ---------------------------------------------------------------------------
 # delta-of-delta timestamps (µs int64)
 # ---------------------------------------------------------------------------
 
-_DOD_BUCKETS = (  # (low, high, control, control_bits, payload_bits, bias)
-    (-63, 64, 0b10, 2, 7, 63),
-    (-255, 256, 0b110, 3, 9, 255),
-    (-2047, 2048, 0b1110, 4, 12, 2047),
-)
+# Token by control code: 0 is '0' (dod == 0), 1-4 are the ladder's
+# buckets '10', '110', '1110', '11110' + w_k payload bits, 5 is the
+# escape '11111' + 64 bits. Payloads are zigzag(dod), so a w-bit bucket
+# holds every dod in [-2**(w-1), 2**(w-1) - 1].
+_CTRL_VAL = np.array([0b0, 0b10, 0b110, 0b1110, 0b11110, 0b11111],
+                     dtype=np.uint64)
+_CTRL_BITS = np.array([1, 2, 3, 4, 5, 5], dtype=np.int64)
+
+
+def _ladder(bitlen: np.ndarray) -> np.ndarray:
+    """The blob's four bucket widths: the quartiles of its nonzero
+    zigzag(dod) bit lengths, the last one their maximum, each capped
+    at 63 (a 6-bit header field; a 64-bit dod takes the escape)."""
+    nz = np.sort(bitlen[bitlen > 0])
+    if nz.size == 0:
+        return np.zeros(4, dtype=np.int64)
+    return np.minimum(nz[(np.arange(1, 5) * nz.size + 3) // 4 - 1], 63)
+
+
+def _payload_widths(ladder: np.ndarray) -> np.ndarray:
+    """Payload bits by control code, from (..., 4) ladder widths."""
+    out = np.zeros(ladder.shape[:-1] + (6,), dtype=np.int64)
+    out[..., 1:5] = ladder
+    out[..., 5] = 64
+    return out
 
 
 def encode_timestamps(ts_us: np.ndarray) -> bytes:
     """int64 µs array (non-decreasing not required) → bytes.
-    Layout: [n:uint32][t0:int64][d0:int64][dod bitstream for points 2..n-1].
+    Layout: [tag 0xD2][n: LEB128][t0: int64 LE][d0: zigzag LEB128]
+    [ladder: 3 B, four 6-bit bucket widths][dod bitstream for points
+    2..n-1]; each field is present only when n reaches it.
     """
     ts = np.ascontiguousarray(ts_us, dtype=np.int64)
     n = ts.size
-    header = np.empty(0, dtype=np.int64)
-    out = [np.uint32(n).tobytes()]
-    if n == 0:
-        return out[0]
-    out.append(ts[:1].tobytes())
-    if n == 1:
-        return b"".join(out)
-    d = np.diff(ts)
-    out.append(d[:1].tobytes())
-    if n == 2:
-        return b"".join(out)
-    dod = np.diff(d)
-
-    vals = np.zeros(dod.size, dtype=np.uint64)
-    widths = np.zeros(dod.size, dtype=np.int64)
-    # extra token slot for the 64-bit payload of the largest bucket
-    vals2 = np.zeros(dod.size, dtype=np.uint64)
-    widths2 = np.zeros(dod.size, dtype=np.int64)
-
-    done = dod == 0
-    vals[done] = 0b0
-    widths[done] = 1
-    for low, high, ctrl, cbits, pbits, bias in _DOD_BUCKETS:
-        sel = (~done) & (dod >= low) & (dod <= high)
-        vals[sel] = (np.uint64(ctrl) << np.uint64(pbits)) | (
-            (dod[sel] + bias).astype(np.uint64))
-        widths[sel] = cbits + pbits
-        done |= sel
-    big = ~done
-    vals[big] = 0b11110
-    widths[big] = 5
-    vals2[big] = dod[big].astype(np.uint64)  # two's complement
-    widths2[big] = 64
-
-    inter_v = np.empty(dod.size * 2, dtype=np.uint64)
-    inter_w = np.empty(dod.size * 2, dtype=np.int64)
-    inter_v[0::2], inter_v[1::2] = vals, vals2
-    inter_w[0::2], inter_w[1::2] = widths, widths2
-    out.append(_pack_tokens(inter_v, inter_w))
+    out = [bytes((_DOD_TAG,)), _varint(n)]
+    if n >= 1:
+        out.append(int(ts[0]).to_bytes(8, "little", signed=True))
+    if n >= 2:
+        d = np.diff(ts)
+        out.append(_varint(_zigzag(int(d[0]))))
+    if n >= 3:
+        dod = np.diff(d)
+        u = (dod.view(np.uint64) << np.uint64(1)) ^ (dod >> 63).view(np.uint64)
+        bitlen = 64 - _clz64(u)
+        w = _ladder(bitlen)
+        out.append(int((w[0] << 18) | (w[1] << 12) | (w[2] << 6) | w[3])
+                   .to_bytes(3, "big"))
+        code = np.where(bitlen == 0, 0, np.searchsorted(w, bitlen) + 1)
+        vals = np.empty(dod.size * 2, dtype=np.uint64)
+        widths = np.empty(dod.size * 2, dtype=np.int64)
+        vals[0::2], vals[1::2] = _CTRL_VAL[code], u
+        widths[0::2] = _CTRL_BITS[code]
+        widths[1::2] = _payload_widths(w)[code]
+        out.append(_pack_tokens(vals, widths))
     return b"".join(out)
 
 
 def decode_timestamps_scalar(buf: bytes) -> np.ndarray:
     """Reference per-token decoder (word-level peek reader). Kept as the
     differential-testing baseline for the vectorized batch decoder."""
-    n = int(np.frombuffer(buf[:4], dtype=np.uint32)[0])
+    n, t0, d0, ladder, start = _dod_header(buf)
     if n == 0:
         return np.empty(0, dtype=np.int64)
-    t0 = int(np.frombuffer(buf[4:12], dtype=np.int64)[0])
-    if n == 1:
-        return np.array([t0], dtype=np.int64)
-    d0 = int(np.frombuffer(buf[12:20], dtype=np.int64)[0])
     ts = np.empty(n, dtype=np.int64)
     ts[0] = t0
+    if n == 1:
+        return ts
     # all arithmetic in Python ints with explicit two's-complement wrap:
     # np.int64 + 2**63 silently promotes to float64 under legacy numpy
     # promotion and corrupts the wraparound
@@ -176,33 +304,31 @@ def decode_timestamps_scalar(buf: bytes) -> np.ndarray:
     ts[1] = t
     if n == 2:
         return ts
-    r = _BitReader(buf[20:])
-    d = int(d0)
+    nbits = 8 * (len(buf) - start)
+    r = _BitReader(buf[start:])
+    d = d0
     for i in range(2, n):
-        # one 64-bit peek decodes control + payload of every bucket
+        # the control code is the run of leading ones, at most five
         w = r.peek64()
-        if w >> 63 == 0:
+        ones = 0
+        while ones < 5 and (w >> (63 - ones)) & 1:
+            ones += 1
+        if ones == 0:
             dod = 0
             r.skip(1)
-        elif (w >> 62) & 1 == 0:                    # '10' + 7 bits
-            dod = ((w >> 55) & 0x7F) - 63
-            r.skip(9)
-        elif (w >> 61) & 1 == 0:                    # '110' + 9 bits
-            dod = ((w >> 52) & 0x1FF) - 255
-            r.skip(12)
-        elif (w >> 60) & 1 == 0:                    # '1110' + 12 bits
-            dod = ((w >> 48) & 0xFFF) - 2047
-            r.skip(16)
-        else:                                       # '11110' + 64 bits
-            r.skip(5)
-            raw = r.read(64)
-            dod = raw - (1 << 64) if raw >= (1 << 63) else raw
+        else:
+            r.skip(ones + 1 if ones < 5 else 5)
+            z = r.read(ladder[ones - 1] if ones < 5 else 64)
+            dod = _unzigzag(z)
+        if r.pos > nbits:  # ran past the stream: raises
+            _check_end(r.pos, nbits // 8, "timestamp")
         # two's-complement wraparound, matching numpy int64 arithmetic
         # on the encode side (real µs timestamps never overflow; the
         # wrap only matters for adversarial property-test inputs)
         d = (d + dod + 2**63) % 2**64 - 2**63
         t = (t + d + 2**63) % 2**64 - 2**63
         ts[i] = t
+    _check_end(r.pos, nbits // 8, "timestamp")
     return ts
 
 
@@ -239,14 +365,14 @@ def _ctz64(x: np.ndarray) -> np.ndarray:
 
 
 def encode_values(y: np.ndarray) -> bytes:
-    """float64 array → bytes. Layout: [n:uint32][v0:64b][xor stream]."""
+    """float64 array → bytes.
+    Layout: [tag 0xC2][n: LEB128][v0: 8 B LE][xor stream]."""
     v = np.ascontiguousarray(y, dtype=np.float64).view(np.uint64)
     n = v.size
-    out = [np.uint32(n).tobytes()]
-    if n == 0:
-        return out[0]
-    out.append(v[:1].tobytes())
-    if n == 1:
+    out = [bytes((_XOR_TAG,)), _varint(n)]
+    if n >= 1:
+        out.append(int(v[0]).to_bytes(8, "little"))
+    if n <= 1:
         return b"".join(out)
     x = v[1:] ^ v[:-1]
 
@@ -278,29 +404,32 @@ def encode_values(y: np.ndarray) -> bytes:
 
 def decode_values_scalar(buf: bytes) -> np.ndarray:
     """Reference per-token decoder; see decode_timestamps_scalar."""
-    n = int(np.frombuffer(buf[:4], dtype=np.uint32)[0])
-    if n == 0:
-        return np.empty(0, dtype=np.float64)
+    n, v0, start = _xor_header(buf)
     v = np.empty(n, dtype=np.uint64)
-    v[0] = np.frombuffer(buf[4:12], dtype=np.uint64)[0]
-    r = _BitReader(buf[12:])
-    prev = int(v[0])
-    vals = v  # local alias
+    if n == 0:
+        return v.view(np.float64)
+    v[0] = v0
+    nbits = 8 * (len(buf) - start)
+    r = _BitReader(buf[start:])
+    prev = v0
     for i in range(1, n):
         w = r.peek64()
         if w >> 63 == 0:
             r.skip(1)
-            vals[i] = prev
-            continue
-        lz = (w >> 58) & 0x1F
-        sig = (w >> 52) & 0x3F
-        if sig == 0:
-            sig = 64
-        r.skip(12)
-        x = r.read(sig) << (64 - lz - sig)
-        prev = (prev ^ x) & _M64
-        vals[i] = prev
-    return vals.view(np.float64)
+        else:
+            lz = (w >> 58) & 0x1F
+            sig = (w >> 52) & 0x3F
+            if sig == 0:
+                sig = 64
+            r.skip(12)
+            x = r.read(sig) << (64 - lz - sig)
+            prev = (prev ^ x) & _M64
+        if r.pos > nbits:  # ran past the stream: raises
+            _check_end(r.pos, nbits // 8, "value")
+        v[i] = prev
+    if n > 1:
+        _check_end(r.pos, nbits // 8, "value")
+    return v.view(np.float64)
 
 
 # ---------------------------------------------------------------------------
@@ -373,20 +502,11 @@ class _Arena:
 
 _arena = _Arena()
 
-# token width by the leading 5 bits (DoD ladder); 0b11111 never starts
-# a valid token — mapped to 69 (harmless: unreachable on valid input)
-_DOD_WIDTH_LUT = np.empty(32, dtype=np.uint8)
+# DoD control code by the leading 5 bits: the run of leading ones
+# ('0' → 0, '10' → 1, ..., '11110' → 4, '11111' → 5, the escape)
+_DOD_CODE_LUT = np.empty(32, dtype=np.uint8)
 for _c in range(32):
-    if _c < 0b10000:
-        _DOD_WIDTH_LUT[_c] = 1
-    elif _c < 0b11000:
-        _DOD_WIDTH_LUT[_c] = 2 + 7
-    elif _c < 0b11100:
-        _DOD_WIDTH_LUT[_c] = 3 + 9
-    elif _c < 0b11110:
-        _DOD_WIDTH_LUT[_c] = 4 + 12
-    else:
-        _DOD_WIDTH_LUT[_c] = 5 + 64
+    _DOD_CODE_LUT[_c] = 5 - len(format(_c, "05b").lstrip("1"))
 
 # token width by the leading 12 bits (XOR values): '0' → 1, else
 # '1' + 5b lz + 6b sig-mod-64 → 12 + (sig or 64)
@@ -445,33 +565,38 @@ def _win64_at(u8: np.ndarray, pos: np.ndarray, key: str) -> np.ndarray:
 
 
 def _chain_positions(u8: np.ndarray, start_bits: np.ndarray,
-                     counts: np.ndarray, kind: str) -> np.ndarray:
-    """Follow p += width(p) for every chunk in lockstep; returns the
-    chunk-major flat array of realized token bit positions. Widths are
+                     counts: np.ndarray, dod_widths: np.ndarray | None = None):
+    """Follow p += width(p) for every chunk in lockstep. Widths are
     decoded at VISITED positions only (a 2-3 byte gather + control-bit
     LUT per step, vectorized across chunks): total work is O(tokens),
     independent of stream bit-length. The only per-token Python
     iteration left in the codec — one iteration per token *index*, not
-    per token per chunk."""
-    if counts.size == 0 or counts.max() == 0:
-        return np.empty(0, dtype=np.int64)
+    per token per chunk.
+
+    ``dod_widths`` is given for DoD streams: each chunk's token width by
+    its leading 5 bits, one row per chunk, since each blob carries its
+    own bucket ladder; without it the stream is XOR values (one shared
+    12-bit LUT). Returns the chunk-major flat token bit positions and
+    each chunk's end bit (just past its last token)."""
     maxn = int(counts.max())
     nch = counts.size
     last = (u8.size - 10) * 8  # keep all gathers in the padded buffer
     pos = start_bits.copy()
-    out = _arena("chain", nch * maxn, np.int64).reshape(nch, maxn)
+    out = _arena("chain", nch * (maxn + 1), np.int64).reshape(nch, maxn + 1)
     i = _arena("ch_i", nch, np.int64)
     sh = _arena("ch_sh", nch, np.int64)
     b8 = _arena("ch_b8", nch, np.uint8)
     wstep = _arena("ch_w", nch, np.uint8)
-    if kind == "dod":
+    if dod_widths is not None:
         t = _arena("ch_t16", nch, np.uint16)
-        lut, topbits, mask = _DOD_WIDTH_LUT, 5, np.uint16(0x1F)
-        nbytes, shbase = 2, 11
+        mask, nbytes, shbase = np.uint16(0x1F), 2, 11
+        lut = np.ascontiguousarray(dod_widths, dtype=np.uint8).ravel()
+        k = _arena("ch_k", nch, np.int64)
+        rowbase = np.arange(nch, dtype=np.int64) * 32
     else:
         t = _arena("ch_t32", nch, np.uint32)
-        lut, topbits, mask = _VAL_WIDTH_LUT, 12, np.uint32(0xFFF)
-        nbytes, shbase = 3, 12
+        mask, nbytes, shbase = np.uint32(0xFFF), 3, 12
+        lut = _VAL_WIDTH_LUT
     sh_t = _arena("ch_sht", nch, t.dtype)
     for s in range(maxn):
         out[:, s] = pos
@@ -489,11 +614,19 @@ def _chain_positions(u8: np.ndarray, start_bits: np.ndarray,
         np.copyto(sh_t, sh, casting="unsafe")
         np.right_shift(t, sh_t, out=t)
         np.bitwise_and(t, mask, out=t)
-        np.take(lut, t, out=wstep)
+        if dod_widths is None:
+            np.take(lut, t, out=wstep)
+        else:
+            np.add(rowbase, t, out=k)
+            np.take(lut, k, out=wstep)
         # exhausted chunks idle forward through pad/garbage, clamped
         pos += wstep
         np.minimum(pos, last, out=pos)
-    return out[np.arange(maxn)[None, :] < counts[:, None]]
+    out[:, maxn] = pos
+    keep = np.arange(maxn)[None, :] < counts[:, None]
+    return out[:, :maxn][keep], out[np.arange(nch), counts]
+
+
 def _segment_starts(counts: np.ndarray) -> np.ndarray:
     starts = np.zeros(counts.size, dtype=np.int64)
     np.cumsum(counts[:-1], out=starts[1:])
@@ -540,27 +673,32 @@ def decode_timestamps_many(bufs) -> tuple[np.ndarray, np.ndarray]:
     Returns ``(flat, n)``: the concatenated int64 series in input order
     and per-blob lengths (``np.split(flat, np.cumsum(n)[:-1])`` gives
     the per-blob arrays). Sub-batches by stream bytes to bound memory.
+    Raises ValueError on a blob that is not of this layout.
     """
-    n = np.array([int(np.frombuffer(b[:4], dtype=np.uint32)[0])
-                  for b in bufs], dtype=np.int64)
-    t0 = np.zeros(n.size, dtype=np.int64)
-    d0 = np.zeros(n.size, dtype=np.int64)
+    m = len(bufs)
+    n = np.empty(m, dtype=np.int64)
+    t0 = np.zeros(m, dtype=np.int64)
+    d0 = np.zeros(m, dtype=np.int64)
+    ladder = np.zeros((m, 4), dtype=np.int64)
+    start = np.empty(m, dtype=np.int64)
     for j, b in enumerate(bufs):
-        if n[j] >= 1:
-            t0[j] = np.frombuffer(b[4:12], dtype=np.int64)[0]
-        if n[j] >= 2:
-            d0[j] = np.frombuffer(b[12:20], dtype=np.int64)[0]
+        n[j], t0[j], d0[j], ladder[j], start[j] = _dod_header(b)
     t1 = t0 + d0  # array op: wraps mod 2^64 like the scalar decoder
+    pw = _payload_widths(ladder)
+    # token width by the leading 5 bits, per blob
+    widths32 = (pw + _CTRL_BITS)[:, _DOD_CODE_LUT]
 
     counts = np.maximum(n - 2, 0)
+    nbytes = np.array([len(b) for b in bufs], dtype=np.int64) - start
     body = np.empty(int(counts.sum()), dtype=np.int64)
     bpos = 0
-    for sel in _byte_subbatches(bufs, counts, hdr=20):
-        streams = [bufs[j][20:] for j in sel]
-        u8, starts_bits = _concat_streams(streams)
-        flat_pos = _chain_positions(u8, starts_bits, counts[sel], "dod")
-        dod = _dod_payloads(u8, flat_pos)
+    for sel in _byte_subbatches(nbytes, counts):
+        u8, starts_bits = _concat_streams(
+            [bufs[j][start[j]:] for j in sel])
         c = counts[sel]
+        flat_pos, ends = _chain_positions(u8, starts_bits, c, widths32[sel])
+        _check_end(ends - starts_bits, nbytes[sel], "timestamp")
+        dod = _dod_payloads(u8, flat_pos, pw[sel], c)
         d = np.repeat(d0[sel], c) + _segmented_cumsum(dod, c)
         seg = np.repeat(t1[sel], c) + _segmented_cumsum(d, c)
         body[bpos:bpos + seg.size] = seg
@@ -569,40 +707,44 @@ def decode_timestamps_many(bufs) -> tuple[np.ndarray, np.ndarray]:
     return flat, n
 
 
-def _dod_payloads(u8, flat_pos) -> np.ndarray:
-    win = _win64_at(u8, flat_pos, "win")
-    dod = np.zeros(flat_pos.size, dtype=np.int64)
-    c1 = (win >> np.uint64(62)) == 0b10
-    c2 = (win >> np.uint64(61)) == 0b110
-    c3 = (win >> np.uint64(60)) == 0b1110
-    c4 = (win >> np.uint64(59)) == 0b11110
-    dod[c1] = ((win[c1] >> np.uint64(55)) & np.uint64(0x7F)).view(np.int64) - 63
-    dod[c2] = ((win[c2] >> np.uint64(52)) & np.uint64(0x1FF)).view(np.int64) - 255
-    dod[c3] = ((win[c3] >> np.uint64(48)) & np.uint64(0xFFF)).view(np.int64) - 2047
-    if c4.any():
-        # 64-bit two's-complement payload starts 5 bits in
-        dod[c4] = _win64_at(u8, flat_pos[c4] + 5, "win2").view(np.int64)
-    return dod
+def _dod_payloads(u8, flat_pos, pw, counts) -> np.ndarray:
+    """dod of every token: its control code is read at its position,
+    its payload width from its blob's ladder row of ``pw`` at that
+    code; the payload (zigzag) starts right after the control bits."""
+    i = flat_pos >> 3
+    top = ((u8[i].astype(np.uint16) << 8) | u8[i + 1]) >> (
+        11 - (flat_pos & 7)).astype(np.uint16)
+    codes = _DOD_CODE_LUT[top & 0x1F]
+    w = pw[np.repeat(np.arange(counts.size), counts), codes]
+    win = _win64_at(u8, flat_pos + _CTRL_BITS[codes], "win")
+    # a 0-bit payload (code 0) cannot shift by 64: take 63, then clear
+    z = win >> np.minimum(64 - w, 63).astype(np.uint64)
+    z[w == 0] = 0
+    return ((z >> np.uint64(1)).view(np.int64)
+            ^ -(z & np.uint64(1)).view(np.int64))
 
 
 def decode_values_many(bufs) -> tuple[np.ndarray, np.ndarray]:
-    """Vectorized decode of many value blobs → ``(flat float64, n)``."""
-    n = np.array([int(np.frombuffer(b[:4], dtype=np.uint32)[0])
-                  for b in bufs], dtype=np.int64)
-    v0 = np.zeros(n.size, dtype=np.uint64)
+    """Vectorized decode of many value blobs → ``(flat float64, n)``.
+    Raises ValueError on a blob that is not of this layout."""
+    m = len(bufs)
+    n = np.empty(m, dtype=np.int64)
+    v0 = np.zeros(m, dtype=np.uint64)
+    start = np.empty(m, dtype=np.int64)
     for j, b in enumerate(bufs):
-        if n[j] >= 1:
-            v0[j] = np.frombuffer(b[4:12], dtype=np.uint64)[0]
+        n[j], v0[j], start[j] = _xor_header(b)
 
     counts = np.maximum(n - 1, 0)
+    nbytes = np.array([len(b) for b in bufs], dtype=np.int64) - start
     body = np.empty(int(counts.sum()), dtype=np.uint64)
     bpos = 0
-    for sel in _byte_subbatches(bufs, counts, hdr=12):
-        streams = [bufs[j][12:] for j in sel]
-        u8, starts_bits = _concat_streams(streams)
-        flat_pos = _chain_positions(u8, starts_bits, counts[sel], "val")
-        x = _xor_payloads(u8, flat_pos)
+    for sel in _byte_subbatches(nbytes, counts):
+        u8, starts_bits = _concat_streams(
+            [bufs[j][start[j]:] for j in sel])
         c = counts[sel]
+        flat_pos, ends = _chain_positions(u8, starts_bits, c)
+        _check_end(ends - starts_bits, nbytes[sel], "value")
+        x = _xor_payloads(u8, flat_pos)
         seg = np.repeat(v0[sel], c) ^ _segmented_cumxor(x, c)
         body[bpos:bpos + seg.size] = seg
         bpos += seg.size
@@ -624,10 +766,11 @@ def _xor_payloads(u8, flat_pos) -> np.ndarray:
     return x
 
 
-def _byte_subbatches(bufs, counts, hdr: int):
+def _byte_subbatches(nbytes, counts):
     """Yield index arrays grouping CONTIGUOUS runs of blobs into
     sub-batches (contiguity keeps the body-buffer layout sequential)
-    bounded four ways: summed stream bytes (_MAX_STREAM_BYTES), summed
+    bounded four ways: summed stream bytes (_MAX_STREAM_BYTES, from the
+    per-blob stream sizes ``nbytes``), summed
     token counts (_MAX_STREAM_TOKENS), and the lockstep-chain cell
     count max(counts)*len(group) — both absolutely (_MAX_CHAIN_CELLS)
     and relative to useful tokens (_CHAIN_WASTE), so a token-count-
@@ -635,13 +778,12 @@ def _byte_subbatches(bufs, counts, hdr: int):
     can't inflate chain work/scratch beyond O(tokens). At least one
     blob per group — a single over-cap blob still decodes, its scratch
     is inherently O(its own tokens). Skips blobs with no tokens."""
-    idx = [j for j in range(len(bufs)) if counts[j] > 0]
     group: list[int] = []
     size = 0
     toks = 0
     maxtok = 0
-    for j in idx:
-        b = len(bufs[j]) - hdr
+    for j in np.flatnonzero(counts > 0):
+        b = int(nbytes[j])
         t = int(counts[j])
         cells = max(maxtok, t) * (len(group) + 1)
         if group and (size + b > _MAX_STREAM_BYTES

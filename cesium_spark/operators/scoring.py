@@ -57,7 +57,7 @@ def auc_score(df: DataFrame, score_col: str, label_col: str) -> DataFrame:
     with ties given their AVERAGE rank (the exact tie-corrected
     estimator — identical to sklearn's roc_auc_score). All arithmetic
     is INTEGER until one terminal division: ranks are computed per
-    DISTINCT score (group counts + a cumulative window over the
+    DISTINCT score (group counts + a cumulative count over the
     distinct-score table), the average rank is carried DOUBLED
     (2·cum_before + cnt + 1 — always an exact integer, dodging the
     half-integer), and the rank sum is an exact int64 — so the AUC is
@@ -65,11 +65,17 @@ def auc_score(df: DataFrame, score_col: str, label_col: str) -> DataFrame:
 
     Scale shape: one hash aggregate to distinct scores (the corpus
     shuffle carries one row per distinct score — gridded/quantized
-    scores collapse massively), one ordered window over that distinct
-    table, one single-row fold. Rows with NULL score or NULL label
-    cannot be ranked and are dropped, REPORTED via n vs the caller's
-    count. Degenerate labels (no positives or no negatives) yield
-    NULL, not garbage.
+    scores collapse massively), then a two-phase rank over that
+    distinct table, since continuous scores are nearly all distinct
+    and one global ordered window would rank them all in one task
+    (the partition-offset scheme of textstats.heaps_fit): a range
+    repartition on the score, per-partition cumulative counts and
+    rank sums, then exclusive per-partition offsets on num-partitions
+    rows, added to the rank sums in the same lineage (no join back,
+    so the sampled range bounds are drawn once). Then one single-row
+    fold. Rows with NULL score or NULL label cannot be ranked and are
+    dropped, REPORTED via n vs the caller's count. Degenerate labels
+    (no positives or no negatives) yield NULL, not garbage.
 
     Output (one row): n, n_pos, n_neg, auc.
     """
@@ -80,18 +86,32 @@ def auc_score(df: DataFrame, score_col: str, label_col: str) -> DataFrame:
     g = s.groupBy("s").agg(
         F.count(F.lit(1)).alias("cnt"),
         F.sum(F.when(F.col("lab"), 1).otherwise(0)).alias("pos"))
-    w = Window.orderBy("s")
-    cum_before = (F.coalesce(
-        F.sum("cnt").over(w.rowsBetween(Window.unboundedPreceding, -1)),
-        F.lit(0)))
-    # doubled average rank of a tie group: 2·cum_before + cnt + 1
-    ranked = g.withColumn(
-        "r2", (F.lit(2) * cum_before + F.col("cnt") + F.lit(1))
-        .cast("long"))
-    tot = ranked.agg(
-        F.sum("cnt").cast("long").alias("n"),
-        F.sum("pos").cast("long").alias("n_pos"),
-        F.sum(F.col("pos") * F.col("r2")).cast("long").alias("r2_pos"))
+    # phase 1: range partitions hold disjoint, ascending score ranges;
+    # the doubled average rank of a tie group inside its partition is
+    # 2·cum_before + cnt + 1, summed over positives per partition
+    part = g.repartitionByRange("s").withColumn("pid", F.spark_partition_id())
+    before = Window.partitionBy("pid").orderBy("s").rowsBetween(
+        Window.unboundedPreceding, -1)
+    lr2 = (F.lit(2) * F.coalesce(F.sum("cnt").over(before), F.lit(0))
+           + F.col("cnt") + F.lit(1))
+    ptot = (part.withColumn("lr2", lr2.cast("long"))
+            .groupBy("pid")
+            .agg(F.sum("cnt").cast("long").alias("pcnt"),
+                 F.sum("pos").cast("long").alias("ppos"),
+                 F.sum(F.col("pos") * F.col("lr2")).cast("long")
+                 .alias("pr2")))
+    # phase 2: every rank in a partition shifts by the rows of the
+    # earlier partitions (an exclusive prefix over num-partitions rows,
+    # the only ordered global window), so each positive's doubled rank
+    # gains 2·offset. One lineage: no join back to the ranked rows.
+    wo = Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)
+    off = F.coalesce(F.sum("pcnt").over(wo), F.lit(0))
+    tot = ptot.select(
+        "pcnt", "ppos",
+        (F.col("pr2") + F.lit(2) * F.col("ppos") * off).alias("r2")).agg(
+        F.sum("pcnt").cast("long").alias("n"),
+        F.sum("ppos").cast("long").alias("n_pos"),
+        F.sum("r2").cast("long").alias("r2_pos"))
     npos = F.col("n_pos").cast("double")
     nneg = (F.col("n") - F.col("n_pos")).cast("double")
     auc = ((F.col("r2_pos").cast("double")

@@ -802,6 +802,45 @@ def test_auc_anchors_and_degenerate(spark):
     assert withnull["n"] == 2
 
 
+def test_auc_bit_equal_rank_sum_across_partitions(spark):
+    """The two-phase rank (range partitions + exclusive partition
+    offsets) gives the AUC bit for bit as a numpy rank-sum reference
+    with the same integer carry and terminal division, on 12k rows with
+    continuous scores and tie groups (including -0.0 == 0.0), at 1 and
+    8 shuffle partitions; partition coalescing is off so the 8-way run
+    really ranks across partitions."""
+    from cesium_spark.operators.scoring import auc_score
+    rng = np.random.default_rng(21)
+    n = 12_000
+    labels = rng.random(n) < 0.4
+    scores = rng.normal(0, 1, n) + labels * 0.5
+    tied = rng.random(n) < 0.5
+    scores[tied] = np.round(scores[tied], 2)
+    scores[:40] = 0.0
+    scores[40:80] = -0.0
+    vals, inv, cnt = np.unique(scores, return_inverse=True,
+                               return_counts=True)
+    pos = np.bincount(inv[labels], minlength=vals.size)
+    r2 = 2 * (np.cumsum(cnt) - cnt) + cnt + 1
+    r2_pos = int((pos * r2).sum())
+    npos, nneg = float(labels.sum()), float(n - labels.sum())
+    exp = (float(r2_pos) - npos * (npos + 1.0)) / (2.0 * npos * nneg)
+    df = _auc_df(spark, scores, labels)
+    keys = ("spark.sql.shuffle.partitions",
+            "spark.sql.adaptive.coalescePartitions.enabled")
+    orig = [spark.conf.get(k) for k in keys]
+    try:
+        spark.conf.set(keys[1], "false")
+        for parts in (1, 8):
+            spark.conf.set(keys[0], str(parts))
+            r = auc_score(df, "score", "label").collect()[0]
+            assert (r["n"], r["n_pos"]) == (n, int(npos))
+            assert r["auc"] == exp, (parts, r["auc"], exp)
+    finally:
+        for k, v in zip(keys, orig):
+            spark.conf.set(k, v)
+
+
 # --- Benford + Welch -----------------------------------------------------------
 
 def test_benford_hand_counts_and_chi2(spark):
