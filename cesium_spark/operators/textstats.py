@@ -1361,12 +1361,15 @@ def heaps_fit(docs: DataFrame, id_col: str = "doc_id",
     Plan (scale contract: NO global single-partition window ever sees
     the corpus — the q_doc_dsir rule): doc rank and the ordered token
     cumsum run as a distributed two-phase scheme — range-repartition
-    on doc id, per-PARTITION row_number + cumsum, then per-partition
-    (count, token-sum) totals fold into prefix offsets on
-    partition-cardinality rows and broadcast back.  The corpus-sized
-    exchanges are the range repartition and the token-grain
-    min-aggregate; every global window runs on ≤ num-partitions or
-    checkpoint-cardinality rows.
+    on doc id, per-partition (id range, count, token-sum) totals fold
+    into prefix offsets on partition-cardinality rows; each doc joins
+    the broadcast range that holds its id and takes row_number +
+    cumsum inside that range.  Ranks depend on the ranges' values, not
+    on task ids, so they are exact however often the range exchange is
+    evaluated.  The corpus-sized exchanges are the range repartition,
+    the per-range window and the token-grain min-aggregate; every
+    global window runs on ≤ num-partitions or checkpoint-cardinality
+    rows.
     """
     base = (docs
             .where(F.col(text_col).isNotNull()
@@ -1376,31 +1379,36 @@ def heaps_fit(docs: DataFrame, id_col: str = "doc_id",
                     .alias("__toks")))
     # total doc count: plain aggregate (map-side partials), no window
     dtot = base.agg(F.count(F.lit(1)).alias("d"))
-    # phase 1: per-partition local rank + local token cumsum
-    part = (base.repartitionByRange("__id")
-            .withColumn("__pid", F.spark_partition_id()))
-    wp = Window.partitionBy("__pid").orderBy("__id")
-    local = part.select(
-        "__pid", "__toks",
-        F.row_number().over(wp).alias("__lr"),
-        F.sum(F.size("__toks")).over(
-            wp.rowsBetween(Window.unboundedPreceding, 0))
-        .cast("long").alias("__lcum"))
-    # phase 2: fold per-partition totals into exclusive prefix offsets
-    # (num-partitions rows — the only ordered global window, bounded)
-    ptot = local.groupBy("__pid").agg(
-        F.max("__lr").alias("__pc"),
-        F.max("__lcum").alias("__ps"))
+    # phase 1 (one lineage, the auc_score scheme): range partitions hold
+    # disjoint ascending __id ranges; each one's id range, doc count and
+    # token sum fold into exclusive prefix offsets (num-partitions rows —
+    # the only ordered global window, bounded)
+    ptot = (base.repartitionByRange("__id")
+            .withColumn("__pid", F.spark_partition_id())
+            .groupBy("__pid")
+            .agg(F.min("__id").alias("__lo"), F.max("__id").alias("__hi"),
+                 F.max(F.col("__id").isNull()).alias("__nulls"),
+                 F.count(F.lit(1)).alias("__pc"),
+                 F.sum(F.size("__toks")).alias("__ps")))
     wo = (Window.orderBy("__pid")
           .rowsBetween(Window.unboundedPreceding, -1))
     off = ptot.select(
-        "__pid",
+        "__pid", "__lo", "__hi", "__nulls",
         F.coalesce(F.sum("__pc").over(wo), F.lit(0)).alias("__roff"),
         F.coalesce(F.sum("__ps").over(wo), F.lit(0)).alias("__soff"))
-    with_cum = (local.join(F.broadcast(off), "__pid")
-                .select((F.col("__lr") + F.col("__roff")).alias("__r"),
-                        (F.col("__lcum") + F.col("__soff"))
-                        .cast("long").alias("__cum"),
+    # phase 2: each doc finds its range by VALUE, not by the task that
+    # read it, then ranks inside it. Spark samples range bounds per
+    # exchange evaluation, so ranks joined back by spark_partition_id
+    # would be wrong wherever two evaluations drew different bounds;
+    # any one drawing of the ranges gives the same global ranks here.
+    inside = ((F.col("__id") >= F.col("__lo")) & (F.col("__id") <= F.col("__hi"))
+              | F.col("__id").isNull() & F.col("__nulls"))
+    wp = Window.partitionBy("__pid").orderBy("__id")
+    with_cum = (base.join(F.broadcast(off), inside)
+                .select((F.row_number().over(wp) + F.col("__roff")).alias("__r"),
+                        (F.sum(F.size("__toks")).over(
+                            wp.rowsBetween(Window.unboundedPreceding, 0))
+                         + F.col("__soff")).cast("long").alias("__cum"),
                         "__toks"))
     cps = with_cum.crossJoin(F.broadcast(dtot)).agg(
         F.max("d").alias("d"),

@@ -1,13 +1,20 @@
 """_ledger + _metrics tables: per-partition lineage and checkpoint/resume.
 
 Work unit (the planner's IR, SURVEY.md §3.4): ``(stage, tier,
-window_date)``. The ledger records one row per *completed* unit with
-its row counts and a content checksum; the resume planner anti-joins
-pending units against completed ones (``left_anti`` — SURVEY.md §2.11)
-so a restarted run recomputes only unfinished partitions. Output writes
-are idempotent per partition (dynamic partition overwrite / Iceberg
-MERGE), so a crash between data-write and ledger-append only causes a
-harmless recompute of that partition — never duplication.
+window_date)``; the compress stage is one unit with NULL tier and date.
+The ledger is append-only. A finished unit appends a ``done`` row with
+its row counts and a content checksum. When a unit's input changes (a
+pipeline pass rewrites ``series`` on its date), the pass appends a
+``stale`` row for it *before* it rewrites anything. A unit is pending
+unless its LATEST row (by ``updated_at``; a tie counts as ``stale``) is
+``done``: ``unit_states``, ``completed_units`` and ``pending`` all read
+the ledger by that rule, so a restarted run recomputes exactly the
+unfinished or invalidated partitions. Retention expiry records its
+watermark as one more done unit, ``(expire_raw, NULL, watermark)``.
+Output writes are idempotent per partition (dynamic partition
+overwrite / Iceberg MERGE), so a crash between data-write and
+ledger-append only causes a harmless recompute of that partition —
+never duplication.
 
 Metric rows are buffered and written to ``_metrics`` in ONE append per
 pipeline pass (``flush_metrics``, from the pass's ``finally``), so a
@@ -46,6 +53,10 @@ METRICS_SCHEMA = (
     "updated_at timestamp"
 )
 
+# what ``record_done`` takes per finished unit
+UNIT_SCHEMA = ("tier string, window_date date, in_count long, "
+               "out_count long, checksum long")
+
 
 def new_run_id() -> str:
     return uuid.uuid4().hex[:16]
@@ -64,28 +75,49 @@ class Ledger:
         self.spark = io.spark
         self._metric_rows: list[tuple] = []
 
+    def _latest(self) -> DataFrame:
+        """(stage, tier, window_date, state): each unit's latest row.
+        On equal ``updated_at`` the max of (updated_at, state) picks
+        ``stale`` over ``done``, so a tie recomputes."""
+        last = F.max(F.struct("updated_at", "state")).alias("last")
+        # the ledger is small: one partition aggregates without a shuffle
+        return (self.io.read(LEDGER_TABLE).coalesce(1)
+                .groupBy("stage", "tier", "window_date").agg(last)
+                .select("stage", "tier", "window_date",
+                        F.col("last.state").alias("state")))
+
     def completed_units(self, stage: str) -> DataFrame:
-        """(tier, window_date) units already finished by ANY run —
-        checkpoint state survives process death."""
+        """(tier, window_date) units of ``stage`` whose latest row is
+        done, by ANY run — checkpoint state survives process death."""
         if not self.io.exists(LEDGER_TABLE):
             return self.spark.createDataFrame([], "tier string, window_date date")
-        return (self.io.read(LEDGER_TABLE)
+        return (self._latest()
                 .where((F.col("stage") == stage) & (F.col("state") == "done"))
-                .select("tier", "window_date").distinct())
+                .select("tier", "window_date"))
 
-    def done_units(self) -> set[tuple]:
-        """(stage, tier, window_date) of every unit finished by any run,
-        from one ledger scan: the pipeline's resume plan for a pass."""
+    def unit_states(self) -> dict[tuple, str]:
+        """(stage, tier, window_date) → its latest state, ``done`` or
+        ``stale``, for every unit in the ledger, from one scan: the
+        pipeline's resume plan for a pass."""
         if not self.io.exists(LEDGER_TABLE):
-            return set()
-        return {tuple(r) for r in self.io.read(LEDGER_TABLE)
-                .where(F.col("state") == "done")
-                .select("stage", "tier", "window_date").collect()}
+            return {}
+        return {(r["stage"], r["tier"], r["window_date"]): r["state"]
+                for r in self._latest().collect()}
 
     def pending(self, units: DataFrame, stage: str) -> DataFrame:
         """Resume planner: anti-join the work list against completed."""
         return units.join(self.completed_units(stage),
                           ["tier", "window_date"], "left_anti")
+
+    def record_stale(self, run_id: str, units: list[tuple]) -> None:
+        """Appends a ``stale`` row per (stage, tier, window_date) unit,
+        making it pending until a later ``done`` row; no-op when empty."""
+        if units:
+            now = datetime.now(timezone.utc)
+            rows = [(run_id, stage, tier, date, "stale", None, None, None,
+                     None, now) for stage, tier, date in units]
+            self.io.write(self.spark.createDataFrame(rows, LEDGER_SCHEMA),
+                          LEDGER_TABLE, mode="append")
 
     def record_done(self, run_id: str, stage: str, per_unit: DataFrame,
                     wall_ms: int) -> None:

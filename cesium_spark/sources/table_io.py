@@ -16,7 +16,10 @@ Semantics provided to the engine:
   continuous-aggregate semantics (SURVEY.md §2.9/§2.10);
 - ``delete_where`` — retention expiry: Iceberg ``DELETE FROM``;
   parquet re-writes the surviving rows (sandbox scale) or drops whole
-  partitions when the predicate aligns with partitioning.
+  partitions when the predicate aligns with partitioning;
+- ``replace`` / ``partition_values`` / ``drop_partitions`` — a staged
+  whole-table rewrite of a frame that reads the table, the partitions a
+  table holds, and removal of emptied partitions.
 
 Partition layout for scale: feature/chunk tables are partitioned by
 ``(tier, window_date)`` — partition pruning makes incremental MERGE and
@@ -129,7 +132,8 @@ class TableIO:
         # (set in session.get_spark); on a new table this is a plain write
         self.write(df, name, mode="overwrite", partition_by=partition_by)
 
-    def delete_where(self, name: str, predicate: str) -> int:
+    def delete_where(self, name: str, predicate: str,
+                     partition_by: list[str] | None = None) -> int:
         """Retention delete: keep rows NOT matching ``predicate``.
         Returns number of rows deleted. Iceberg: DELETE FROM …;
         parquet: rewrite survivors (or partition drop when aligned)."""
@@ -142,12 +146,38 @@ class TableIO:
             return 0
         df = self.read(name)
         before = df.count()
-        survivors = df.filter(f"NOT ({predicate})")
-        tmp = self.path(name) + "__tmp_delete"
-        survivors.write.mode("overwrite").parquet(tmp)
-        shutil.rmtree(self.path(name))
-        os.rename(tmp, self.path(name))
+        self.replace(df.filter(f"NOT ({predicate})"), name, partition_by)
         return before - self.read(name).count()
+
+    def replace(self, df: DataFrame, name: str,
+                partition_by: list[str] | None = None) -> None:
+        """Overwrites a whole table with a frame that may read it:
+        writes a staging copy, then swaps it in (a static overwrite
+        would delete the files the frame still reads)."""
+        tmp = self.path(name) + "__tmp_replace"
+        w = df.write.mode("overwrite")
+        if partition_by:
+            w = w.partitionBy(*partition_by)
+        w.parquet(tmp)
+        shutil.rmtree(self.path(name), ignore_errors=True)
+        os.rename(tmp, self.path(name))
+
+    def partition_values(self, name: str, column: str) -> list[str]:
+        """The ``column`` values a partitioned table holds a partition
+        for, from a directory listing (no Spark job); none when the
+        table is absent. Iceberg: the table's partitions metadata."""
+        if not self.exists(name):
+            return []
+        key = f"{column}="
+        return sorted(e[len(key):] for e in os.listdir(self.path(name))
+                      if e.startswith(key))
+
+    def drop_partitions(self, name: str, column: str, values) -> None:
+        """Removes the ``column=value`` partitions of a table; absent
+        ones are skipped. Iceberg: DELETE FROM … WHERE column IN (…)."""
+        for v in values:
+            shutil.rmtree(os.path.join(self.path(name), f"{column}={v}"),
+                          ignore_errors=True)
 
     def drop(self, name: str) -> None:
         if self.exists(name):

@@ -19,16 +19,18 @@ the SAME moment schema:
   directory give the same resume semantics the batch ledger provides.
 
 Scale/late-data contract: the stream handles in-watermark lateness.
-Rows later than the watermark go to the batch side, where what exists
-today is ``fold.merge_moments``: it merges the moments of a late batch
-into an existing moments table without rescanning raw turns. The batch
-pipeline does not re-merge: ``run_pipeline`` overwrites the ``series``
-dates a batch touches and skips every (tier, date) its ledger already
-marks done, so features on a shared date keep the first batch's values
-(ROADMAP direction 1). The shuffle is the same single hash exchange on
-(conv_id, channel, window) as the batch path, with partial aggregation
-state in the state store instead of map-side combiners. Streaming
-windows are fixed-span: the calendar tiers (1w/1mo) raise ValueError.
+Rows later than the watermark go to the batch side. There,
+``fold.merge_moments`` merges the moments of a late batch into an
+existing moments table without rescanning raw turns, and
+``run_pipeline`` re-merges the affected windows: a batch carrying a
+late turn re-derives that whole conversation (its input fingerprint
+changed), rewrites only the ``series`` dates it covers, old and new,
+and marks those (tier, date) ledger units stale, so their features are
+recomputed over every conversation on the date. The shuffle is the
+same single hash exchange on (conv_id, channel, window) as the batch
+path, with partial aggregation state in the state store instead of
+map-side combiners. Streaming windows are fixed-span: the calendar
+tiers (1w/1mo) raise ValueError.
 
 The exact kernel path (numpy features) deliberately has NO streaming
 twin: bit-for-bit feature values require whole-window recomputation

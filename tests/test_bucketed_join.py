@@ -2,7 +2,9 @@
 joins' requirement, made checkable): two tables bucketed on the same
 key and count must join with ZERO shuffle exchanges, while the same
 join on plain parquet shuffles both sides. Also: a groupBy on the
-bucket key rides the bucketing (no exchange)."""
+bucket key rides the bucketing (no exchange), and a canary pins where
+``repartition(n, key)`` over a bucketed table really co-locates each
+key in one task — checked by task id, not by the plan text."""
 
 from __future__ import annotations
 
@@ -10,6 +12,7 @@ import re
 
 import pandas as pd
 import pytest
+from pyspark import TaskContext
 
 from cesium_spark.sources.table_io import TableIO
 
@@ -71,3 +74,36 @@ def test_bucketed_roundtrip_values(spark, bucketed):
     assert a == b
     with pytest.raises(ValueError):
         io.write_bucketed(io.read("pmeta"), "x", 4, [])
+
+
+def _split_keys(df) -> int:
+    """conv_ids whose rows reach ``mapInPandas`` in more than one task.
+    Counted on the driver: an aggregate over the probe's output would
+    change the plan under test."""
+    def tag(batches):
+        pid = TaskContext.get().partitionId()
+        for b in batches:
+            yield pd.DataFrame({"conv_id": b["conv_id"].unique(), "pid": pid})
+    seen = df.mapInPandas(tag, "conv_id string, pid int").toPandas()
+    return int((seen.groupby("conv_id")["pid"].nunique() > 1).sum())
+
+
+@pytest.mark.parametrize("n", [
+    5,
+    pytest.param(8, marks=pytest.mark.xfail(strict=True, reason=(
+        "pyspark 4.1.2: repartition(n, key) with n equal to the bucket "
+        "count drops its exchange as satisfied by the bucketing, then the "
+        "planner disables the bucketed scan, so files of one bucket are "
+        "read by different tasks and keys split"))),
+])
+def test_repartition_over_bucketed_colocates_keys(spark, bucketed, n):
+    """Task-id probe: with files small enough to be split across tasks,
+    every conv_id must reach mapInPandas in exactly one task."""
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "256")
+    try:
+        df = bucketed.read_table("bturns").repartition(n, "conv_id")
+        assert _split_keys(df) == 0
+    finally:
+        spark.conf.set(key, old)

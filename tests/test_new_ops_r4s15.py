@@ -1,4 +1,6 @@
 """Session-15 operators: Kruskal–Wallis and friends."""
+import math
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -1662,6 +1664,58 @@ def test_heaps_degenerate(spark):
     few = spark.createDataFrame(pd.DataFrame(
         {"doc_id": [1, 2], "text": ["a b", "c d"]}))
     assert heaps_fit(few).collect()[0]["beta"] is None
+
+
+def _heaps_reference(pdf):
+    """n_i, V_i at the doc-order quartile checkpoints, then β and K by
+    the operator's own expression tree, in pandas/Python floats."""
+    pdf = pdf.sort_values("doc_id", kind="stable")
+    toks = pdf["text"].str.strip().str.split(r"\s+", regex=True)
+    d = len(pdf)
+    cum = toks.str.len().cumsum().to_numpy()
+    first = toks.explode().reset_index(drop=True)
+    rank = np.repeat(np.arange(1, d + 1), toks.str.len().to_numpy())
+    first_rank = pd.Series(rank).groupby(first.to_numpy()).min()
+    ks = [(d * i) // 4 for i in (1, 2, 3, 4)]
+    ns = [int(cum[k - 1]) for k in ks]
+    vs = [int((first_rank <= k).sum()) for k in ks]
+    xs = [math.log(float(n)) for n in ns]
+    ys = [math.log(float(v)) for v in vs]
+    sx = xs[0] + xs[1] + xs[2] + xs[3]
+    sy = ys[0] + ys[1] + ys[2] + ys[3]
+    sxx = xs[0] * xs[0] + xs[1] * xs[1] + xs[2] * xs[2] + xs[3] * xs[3]
+    sxy = xs[0] * ys[0] + xs[1] * ys[1] + xs[2] * ys[2] + xs[3] * ys[3]
+    beta = (4.0 * sxy - sx * sy) / (4.0 * sxx - sx * sx)
+    return ns, vs, beta, math.exp((sy - beta * sx) / 4.0)
+
+
+@pytest.mark.parametrize("partitions", [1, 8])
+def test_heaps_shuffled_input_bit_equal(spark, partitions):
+    """The doc ranks must not depend on which task reads a doc: with the
+    input coming out of a shuffle (its row order within a task varies
+    between evaluations) and enough docs that range-bound sampling is
+    not exhaustive, n_i, V_i, β and K equal the reference bit for bit."""
+    from cesium_spark.operators.textstats import heaps_fit
+    rng = np.random.RandomState(11)
+    pdf = pd.DataFrame({
+        "doc_id": rng.permutation(3000),
+        "text": [" ".join(f"w{int(z)}" for z in rng.zipf(1.5, 1 + i % 9) % 5000)
+                 for i in range(3000)]})
+    ns, vs, beta, k = _heaps_reference(pdf)
+    conf = {"spark.sql.shuffle.partitions": str(partitions),
+            "spark.sql.adaptive.coalescePartitions.enabled": "false"}
+    old = {key: spark.conf.get(key) for key in conf}
+    try:
+        for key, v in conf.items():
+            spark.conf.set(key, v)
+        docs = spark.createDataFrame(pdf).repartition(5, "text")
+        row = heaps_fit(docs).collect()[0]
+    finally:
+        for key, v in old.items():
+            spark.conf.set(key, v)
+    assert [row[f"n{i}"] for i in (1, 2, 3, 4)] == ns
+    assert [row[f"v{i}"] for i in (1, 2, 3, 4)] == vs
+    assert row["beta"] == beta and row["k_coef"] == k
 
 
 # --- TPC-H Q22 --------------------------------------------------------------

@@ -5,7 +5,9 @@ partitions skipped."""
 from __future__ import annotations
 
 import shutil
+from pathlib import Path
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -110,11 +112,18 @@ def test_pipeline_records_compression_metrics(spark, tiny_transcripts,
 
 
 # Spark jobs one resumed pass may start (rollup_1h done, rollup_1d and
-# compress pending): the data writes plus one ledger scan, the 1d
-# checksum read-back and ledger append, and one _metrics append (18
-# today; 41 when every metric was its own append and every count its own
-# job). A CI guard so bookkeeping jobs cannot creep back.
+# compress pending): the fingerprint job, one ledger scan, the data
+# writes, the 1d checksum read-back and ledger appends, and one
+# _metrics append (22 today; 41 when every metric was its own append
+# and every count its own job). A CI guard so bookkeeping jobs cannot
+# creep back.
 RESUME_JOB_BUDGET = 24
+
+# Spark jobs a pass over an unchanged, complete root may start: the
+# fingerprint job, one ledger scan and the _metrics append (7 today,
+# counting the schema reads of _inputs and _ledger and one job per
+# shuffle stage of the fingerprint aggregate).
+RERUN_JOB_BUDGET = 8
 
 
 @pytest.fixture(scope="module")
@@ -174,3 +183,134 @@ def test_second_pass_over_replaced_root(spark, tiny_transcripts,
         assert report["stages"]["rollup_1h"] == {"skipped": True}
         sums.append(_table_checksum(io, "features_1d"))
     assert sums[0] == sums[1]
+
+
+@pytest.fixture(scope="module")
+def complete_root(spark, tiny_transcripts, tmp_path_factory):
+    """A table root left by one uninterrupted pass."""
+    io = TableIO(spark, str(tmp_path_factory.mktemp("complete") / "root"))
+    run_pipeline(io, tiny_transcripts, tiers=("1h", "1d"), features=FEATS)
+    return io.root
+
+
+def _files(root, tables):
+    return {(p.relative_to(root).as_posix(), p.stat().st_mtime_ns)
+            for t in tables for p in (Path(root) / t).rglob("*") if p.is_file()}
+
+
+def test_unchanged_input_rewrites_nothing(spark, tiny_transcripts,
+                                          complete_root, tmp_path):
+    """A second pass over the same input: no file under series, chunks
+    or _inputs is created or rewritten, every rollup and the compress
+    unit are skipped, and the pass appends nothing to the ledger."""
+    root = str(tmp_path / "root")
+    _restore(complete_root, root)
+    tables = ("series", "chunks", "_inputs")
+    before = _files(root, tables)
+    sc = spark.sparkContext
+    group = f"rerun-budget-{tmp_path.name}"
+    sc.setJobGroup(group, "unchanged run_pipeline pass")
+    try:
+        report = run_pipeline(TableIO(spark, root), tiny_transcripts,
+                              tiers=("1h", "1d"), features=FEATS)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert _files(root, tables) == before
+    assert report["stages"]["rollup_1h"] == {"skipped": True}
+    assert report["stages"]["rollup_1d"] == {"skipped": True}
+    assert "compression" not in report          # compress unit skipped
+    assert isinstance(report["stages"]["compress"], int)
+    assert isinstance(report["stages"]["derive"], int)
+    assert report["turns"] == tiny_transcripts.count()
+    entries = Ledger(TableIO(spark, root)).entries()
+    assert entries.where(F.col("run_id") == report["run_id"]).count() == 0
+    assert 0 < jobs <= RERUN_JOB_BUDGET
+
+
+def test_rerun_after_expiry_keeps_dates_expired(spark, tiny_transcripts,
+                                                complete_root, tmp_path):
+    root = str(tmp_path / "root")
+    _restore(complete_root, root)
+    io = TableIO(spark, root)
+    cutoff = io.read("series").agg(F.max("window_date")).collect()[0][0]
+    expire_raw(io, str(cutoff))
+    left = io.read("series").count()
+    # expiry keeps series partitioned by date, so later passes can
+    # rewrite single dates of it
+    top = [p.name for p in Path(root, "series").iterdir()
+           if not p.name.startswith((".", "_"))]
+    assert top and all(n.startswith("window_date=") for n in top)
+    run_pipeline(io, tiny_transcripts, tiers=("1h", "1d"), features=FEATS)
+    series = io.read("series")
+    assert series.count() == left
+    assert series.agg(F.min("window_date")).collect()[0][0] == cutoff
+
+
+def _sum(df, cols):
+    return tuple(content_checksum(df, cols)
+                 .agg(F.sum("row_crc"), F.count("*")).collect()[0])
+
+
+FEATURE_COLS = ["conv_id", "channel", "window_start", "feature", "value"]
+SERIES_COLS = ["conv_id", "channel", "turn_idx", "ts", "y"]
+CHUNK_COLS = ["conv_id", "channel", "chunk_idx", "n", "ts_min", "ts_max", "crc"]
+
+
+def test_edit_after_expiry_keeps_expired_dates(spark, tiny_transcripts_pdf,
+                                               tmp_path):
+    """After expire_raw, a pass in which a conversation spanning the
+    watermark changed rewrites only dates from the watermark on: every
+    feature before it, the other conversations' series rows and every
+    chunk holding a point before it stay as they were; from the
+    watermark on, series and features equal a one-shot build of the
+    edited input."""
+    pdf = tiny_transcripts_pdf
+    dates = sorted(pdf["ts"].dt.date.unique())
+    cutoff = dates[len(dates) // 2]
+    # conv gets a late turn two days after the cutoff, so it spans it
+    conv = pdf.loc[pdf["ts"].dt.date < cutoff, "conv_id"].iloc[0]
+    late = pdf[pdf["conv_id"] == conv].tail(1).copy()
+    late["turn_idx"] += 1
+    late["ts"] = pd.Timestamp(cutoff) + pd.Timedelta(days=2, hours=3)
+    base = pd.concat([pdf, late], ignore_index=True)
+    edited = base.copy()
+    row = edited.index[edited["conv_id"] == conv][0]
+    edited.loc[row, "text"] = edited.loc[row, "text"] + " edited"
+
+    io = TableIO(spark, str(tmp_path / "root"))
+    run_pipeline(io, spark.createDataFrame(base), tiers=("1h", "1d"),
+                 features=FEATS)
+    before_wm = F.col("window_date") < F.lit(cutoff)
+    others = F.col("conv_id") != conv
+
+    def frozen():
+        return ({t: _sum(io.read(f"features_{t}").where(before_wm), FEATURE_COLS)
+                 for t in ("1h", "1d")},
+                _sum(io.read("series").where(others), SERIES_COLS),
+                _sum(io.read("chunks").where(others), CHUNK_COLS),
+                # conv's one chunk per channel starts before the watermark
+                _sum(io.read("chunks").where(~others), CHUNK_COLS))
+
+    expire_raw(io, str(cutoff))
+    before = frozen()
+    report = run_pipeline(io, spark.createDataFrame(edited),
+                          tiers=("1h", "1d"), features=FEATS)
+    assert "compression" in report      # compress ran, and kept the chunks
+    assert frozen() == before
+    assert io.read("series").agg(F.min("window_date")).collect()[0][0] == cutoff
+    stale = (Ledger(io).entries()
+             .where((F.col("run_id") == report["run_id"])
+                    & (F.col("state") == "stale")
+                    & F.col("window_date").isNotNull()))
+    assert stale.count() > 0
+    assert stale.where(before_wm).count() == 0
+
+    ref = TableIO(spark, str(tmp_path / "ref"))
+    run_pipeline(ref, spark.createDataFrame(edited), tiers=("1h", "1d"),
+                 features=FEATS, compress=False)
+    after_wm = F.col("window_date") >= F.lit(cutoff)
+    for name, cols in [("series", SERIES_COLS), ("features_1h", FEATURE_COLS),
+                       ("features_1d", FEATURE_COLS)]:
+        assert (_sum(io.read(name).where(after_wm), cols)
+                == _sum(ref.read(name).where(after_wm), cols)), name
